@@ -39,27 +39,25 @@ def incremental_filter(
     cursor_ts: str = "last_observed_at",
     broadcast_cursors: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
-    """Return (fresh_rows ∪ malformed_rows, pending_cursor_updates).
+    """Return (fresh_or_malformed_rows, pending_cursor_updates).
 
-    fresh = well-formed rows with ts strictly newer than their cursor
-    (rows with no cursor are all fresh). Malformed rows — null in any key
-    column or in ts — bypass filtering entirely, mirroring reference
-    app/main.py:223-231.
+    One left join and one filter, so the batch is scanned once: a row is
+    kept if it has no cursor, a ts strictly newer than its cursor, or is
+    malformed — null in any key column or in ts — which bypasses the
+    cursor (reference app/main.py:223-231). Updates are the max ts per
+    key over the kept well-formed rows.
     """
     is_malformed = reduce(
         or_, [F.col(k).isNull() for k in keys], F.col(ts_col).isNull()
     )
-    malformed = batch.where(is_malformed)
-    well = batch.where(~is_malformed)
-
+    newer = F.col(cursor_ts).isNull() | (F.col(ts_col) > F.col(cursor_ts))
     cur = F.broadcast(cursors) if broadcast_cursors else cursors
-    fresh = (
-        well.join(cur, list(keys), "left")
-        .where(F.col(cursor_ts).isNull() | (F.col(ts_col) > F.col(cursor_ts)))
+    out = (
+        batch.join(cur, list(keys), "left")
+        .where(is_malformed | newer)
         .drop(cursor_ts)
     )
-    out = fresh.unionByName(malformed)
-    updates = fresh.groupBy(*keys).agg(F.max(ts_col).alias(cursor_ts))
+    updates = out.where(~is_malformed).groupBy(*keys).agg(F.max(ts_col).alias(cursor_ts))
     return out, updates
 
 

@@ -40,7 +40,9 @@ def measurements_job(
     cursors: DataFrame,
 ) -> CycleResult:
     """Single-cycle measurement job (de/nl/pl_measurements analog):
-    bronze -> silver -> payload + pending cursors. The caller emits
+    bronze -> silver -> payload + pending cursors. The bronze is read
+    once, here; the payload is materialized and the pending cursors are
+    the max ts per key over it. The caller emits
     kafka_payload(result.payload) and, on success, commits
     commit_cursors(cursors, result.pending_cursors) — the reference's
     commit-after-emit ordering (app/main.py:1342-1347)."""

@@ -4,12 +4,13 @@ as one declarative batch plan:
   per-source bronze frames -> ragged unionByName -> null-value filter ->
   pollutant normalization -> broadcast catalog enrichment (J1) ->
   incremental cursor filter with malformed passthrough (F5/J3) ->
-  deterministic first-wins dedup (A4) -> Kafka-shaped JSON payload (K1),
-  pending cursor updates committed only after a successful emit (K3).
+  deterministic first-wins dedup (A4), materialized once -> Kafka-shaped
+  JSON payload (K1) and pending cursors (K3), the max over that payload,
+  committed only after a successful emit (app/main.py:1342-1347).
 
 Every stage is a stock DataFrame op; Catalyst fuses the filters and
-projections into the scans, the catalog join broadcasts, and the only
-shuffles are the cursor-update aggregate and the dedup window.
+projections into the scans, the catalog and cursor joins broadcast, and
+the source is read once per cycle.
 """
 
 from __future__ import annotations
@@ -32,8 +33,8 @@ from airquality_data_pipeline_spark.operators.dedup import first_wins_dedup
 
 @dataclass
 class CycleResult:
-    payload: DataFrame          # deduped canonical records, enriched
-    pending_cursors: DataFrame  # max ts per key, to commit post-emit
+    payload: DataFrame          # deduped canonical records, materialized
+    pending_cursors: DataFrame  # max ts per key over payload, commit post-emit
 
 
 def isolated_bronze(
@@ -69,7 +70,7 @@ def silver_measurements(
     stations: DataFrame,
     cursors: DataFrame,
 ) -> CycleResult:
-    """Bronze -> silver: the full cycle minus the sinks."""
+    """Bronze -> silver: the full cycle minus the sinks, run eagerly."""
     raw = canonical_union(bronze_frames)
     # F1: drop null readings (reference app/main.py:752-753, 1130-1131)
     # F4: normalize + allowlist pollutant codes (app/main.py:1045-1056)
@@ -96,18 +97,27 @@ def silver_measurements(
         .withColumn("lon", F.coalesce("lon", "_cat_lon"))
         .drop("_cat_city", "_cat_location_name", "_cat_lat", "_cat_lon")
     )
-    # F5/J3: incremental high-watermark filter + pending updates
-    fresh, pending = incremental_filter(
+    # F5/J3: incremental high-watermark filter, malformed rows pass
+    fresh, _ = incremental_filter(
         enriched,
         cursors,
         keys=("station_id", "pollutant"),
         ts_col="timestamp",
     )
-    # A4: first-wins dedup on the composite key, deterministic order
+    # A4: first-wins dedup on the composite key, deterministic order.
+    # Cut the lineage here: recomputing it for the emit and the cursor
+    # commit would read the live source again, and rows that arrived in
+    # between would move a cursor past rows never emitted.
     deduped = first_wins_dedup(
         fresh,
         keys=["station_id", "pollutant", "timestamp"],
         order_by=["source"],
+    ).localCheckpoint()
+    # K3: pending cursors are the max ts per key over the emitted rows
+    pending = (
+        deduped.dropna(subset=["station_id", "pollutant", "timestamp"])
+        .groupBy("station_id", "pollutant")
+        .agg(F.max("timestamp").alias("last_observed_at"))
     )
     return CycleResult(payload=deduped, pending_cursors=pending)
 

@@ -20,15 +20,7 @@ import time
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 
-try:  # Spark 4 Python DataSource API
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-    _HAS_DATASOURCE_API = True
-except ImportError:  # pragma: no cover - older Spark
-    DataSource = object
-    DataSourceReader = object
-    InputPartition = object
-    _HAS_DATASOURCE_API = False
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 # Transport: (url, params) -> parsed JSON body. Injectable for tests;
 # a live deployment passes a requests-backed callable with timeouts.
@@ -45,12 +37,6 @@ class RestSourceConfig:
     max_retries: int = 5             # reference app/main.py:472-481
     backoff_step_s: float = 0.5
     inter_request_sleep_s: float = 0.0
-
-
-class BudgetExceeded(RuntimeError):
-    """Kept for API compatibility; fetch_paginated no longer raises it —
-    budget exhaustion returns partial results like the reference
-    (app/main.py:465-470 logs and returns what it has)."""
 
 
 def fetch_paginated(
@@ -97,98 +83,102 @@ class RateLimited(RuntimeError):
     """HTTP 429 analog raised by the transport."""
 
 
-if _HAS_DATASOURCE_API:
+class _PagePartition(InputPartition):
+    def __init__(self, first_page: int, last_page: int, request_budget: int):
+        self.first_page = first_page
+        self.last_page = last_page
+        self.request_budget = request_budget
 
-    class _PagePartition(InputPartition):
-        def __init__(self, first_page: int, last_page: int):
-            self.first_page = first_page
-            self.last_page = last_page
 
-    class RestMeasurementsReader(DataSourceReader):
-        """Plans one partition per page shard so pages fetch in
-        parallel, each shard fetching only its own page range.
+class RestMeasurementsReader(DataSourceReader):
+    """Plans one partition per page shard so pages fetch in
+    parallel, each shard fetching only its own page range.
 
-        The whole Python DataSource (planning included) runs in worker
-        processes, so a driver-side registry cannot be seen here. The
-        transport arrives through the string-only options channel as
-        either:
-          - 'transport_pickle': base64(cloudpickle(fn)) — see
-            transport_option(); closures (recorded fixtures) ship fine;
-          - 'transport_factory': 'module:attr' imported at read time —
-            for live deployments (e.g. a requests-backed factory)."""
+    The whole Python DataSource (planning included) runs in worker
+    processes, so a driver-side registry cannot be seen here. The
+    transport arrives through the string-only options channel as
+    either:
+      - 'transport_pickle': base64(cloudpickle(fn)) — see
+        transport_option(); closures (recorded fixtures) ship fine;
+      - 'transport_factory': 'module:attr' imported at read time —
+        for live deployments (e.g. a requests-backed factory)."""
 
-        def __init__(self, options: dict):
-            self.options = options
-            pickled = options.get("transport_pickle", "")
-            factory = options.get("transport_factory", "")
-            if pickled:
-                import base64
+    def __init__(self, options: dict):
+        self.options = options
+        pickled = options.get("transport_pickle", "")
+        factory = options.get("transport_factory", "")
+        if pickled:
+            import base64
 
-                from pyspark import cloudpickle
+            from pyspark import cloudpickle
 
-                self.transport = cloudpickle.loads(base64.b64decode(pickled))
-            elif factory:
-                import importlib
+            self.transport = cloudpickle.loads(base64.b64decode(pickled))
+        elif factory:
+            import importlib
 
-                mod_name, attr = factory.split(":")
-                self.transport = getattr(importlib.import_module(mod_name), attr)()
-            else:
-                raise NotImplementedError(
-                    "offline environment: pass option('transport_pickle', "
-                    "rest.transport_option(fn)) or option('transport_factory', "
-                    "'module:attr')"
-                )
-
-        def partitions(self):
-            max_pages = int(self.options.get("max_pages", "10"))
-            shards = int(self.options.get("num_shards", "4"))
-            per = max(max_pages // shards, 1)
-            parts = [
-                _PagePartition(i * per + 1, min((i + 1) * per, max_pages))
-                for i in range(shards)
-                if i * per + 1 <= max_pages
-            ]
-            # remainder pages go to the last shard
-            if parts and parts[-1].last_page < max_pages:
-                parts[-1].last_page = max_pages
-            return parts
-
-        def read(self, partition):
-            opt = self.options
-            cfg = RestSourceConfig(
-                base_url=opt.get("base_url", ""),
-                page_param=opt.get("page_param", "page"),
-                max_pages=partition.last_page,
-                request_budget=int(opt.get("request_budget", "280")),
-                max_retries=int(opt.get("max_retries", "5")),
-                backoff_step_s=float(opt.get("backoff_step_s", "0.5")),
-                inter_request_sleep_s=float(
-                    opt.get("inter_request_sleep_s", "0.0")
-                ),
+            mod_name, attr = factory.split(":")
+            self.transport = getattr(importlib.import_module(mod_name), attr)()
+        else:
+            raise NotImplementedError(
+                "offline environment: pass option('transport_pickle', "
+                "rest.transport_option(fn)) or option('transport_factory', "
+                "'module:attr')"
             )
-            for row in fetch_paginated(
-                cfg, self.transport, first_page=partition.first_page
-            ):
-                yield (
-                    row.get("station_id"),
-                    row.get("pollutant"),
-                    row.get("value"),
-                    row.get("timestamp"),
-                )
 
-    class RestMeasurementsSource(DataSource):
-        """spark.dataSource.register(RestMeasurementsSource); then
-        spark.read.format('rest_measurements').option(...).load()."""
+    def partitions(self):
+        """Page shards. Each gets a share of the read's request budget in
+        proportion to its pages; the shares sum to request_budget."""
+        max_pages = int(self.options.get("max_pages", "10"))
+        shards = int(self.options.get("num_shards", "4"))
+        budget = int(self.options.get("request_budget", "280"))
+        per = max(max_pages // shards, 1)
+        firsts = [i * per + 1 for i in range(shards) if i * per + 1 <= max_pages]
+        # remainder pages go to the last shard
+        lasts = [first - 1 for first in firsts[1:]] + [max_pages]
+        return [
+            _PagePartition(
+                first, last, budget * last // max_pages - budget * (first - 1) // max_pages
+            )
+            for first, last in zip(firsts, lasts)
+        ]
 
-        @classmethod
-        def name(cls):
-            return "rest_measurements"
+    def read(self, partition):
+        opt = self.options
+        cfg = RestSourceConfig(
+            base_url=opt.get("base_url", ""),
+            page_param=opt.get("page_param", "page"),
+            max_pages=partition.last_page,
+            request_budget=partition.request_budget,
+            max_retries=int(opt.get("max_retries", "5")),
+            backoff_step_s=float(opt.get("backoff_step_s", "0.5")),
+            inter_request_sleep_s=float(
+                opt.get("inter_request_sleep_s", "0.0")
+            ),
+        )
+        for row in fetch_paginated(
+            cfg, self.transport, first_page=partition.first_page
+        ):
+            yield (
+                row.get("station_id"),
+                row.get("pollutant"),
+                row.get("value"),
+                row.get("timestamp"),
+            )
 
-        def schema(self):
-            return "station_id string, pollutant string, value double, timestamp string"
 
-        def reader(self, schema):
-            return RestMeasurementsReader(self.options)
+class RestMeasurementsSource(DataSource):
+    """spark.dataSource.register(RestMeasurementsSource); then
+    spark.read.format('rest_measurements').option(...).load()."""
+
+    @classmethod
+    def name(cls):
+        return "rest_measurements"
+
+    def schema(self):
+        return "station_id string, pollutant string, value double, timestamp string"
+
+    def reader(self, schema):
+        return RestMeasurementsReader(self.options)
 
 
 def transport_option(fn: Transport) -> str:

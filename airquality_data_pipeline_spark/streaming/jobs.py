@@ -17,7 +17,9 @@ format('kafka') with the same downstream plan.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,6 +42,8 @@ def _stage_dir(sf_dir: str) -> str:
     the single events parquet file (no copy)."""
     if sf_dir not in _STREAM_DIRS:
         d = tempfile.mkdtemp(prefix="events_stream_")
+        # removed at exit, not before: a stream reads its dir while it runs
+        atexit.register(shutil.rmtree, d, ignore_errors=True)
         os.symlink(f"{sf_dir}/events.parquet", f"{d}/events.parquet")
         _STREAM_DIRS[sf_dir] = d
     return _STREAM_DIRS[sf_dir]
@@ -85,6 +89,7 @@ def read_documents_stream(
     corpus repeatedly across micro-batches (maxFilesPerTrigger=1) —
     the re-delivery scenario a streaming dedup must absorb."""
     d = tempfile.mkdtemp(prefix="docs_stream_")
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
     for i in range(copies):
         os.symlink(f"{sf_dir}/documents.parquet", f"{d}/documents_{i}.parquet")
     return (

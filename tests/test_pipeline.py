@@ -227,6 +227,44 @@ def test_rest_datasource_end_to_end(spark):
     assert all(r.pollutant == "pm25" for r in got)
 
 
+def test_rest_budget_holds_per_read(spark, tmp_path):
+    """The request budget bounds the whole read, not each page shard: 4
+    shards over 1,000 pages keep to NL's 280 requests per cycle
+    (reference app/main.py:416)."""
+    log = str(tmp_path / "calls.log")
+    rows = [
+        {"station_id": f"s{i}", "pollutant": "no2", "value": float(i),
+         "timestamp": "2024-03-01T06:00:00Z"}
+        for i in range(1000)
+    ]
+    served = rest.fake_transport_from_rows(rows, page_size=1)
+
+    def counting(url, params):
+        with open(log, "a") as f:
+            f.write("call\n")
+        return served(url, params)
+
+    opts = {
+        "transport_pickle": rest.transport_option(counting),
+        "base_url": "replay://nl",
+        "max_pages": "1000",
+        "num_shards": "4",
+        "request_budget": "280",
+    }
+    spark.dataSource.register(rest.RestMeasurementsSource)
+    got = spark.read.format("rest_measurements").options(**opts).load().collect()
+    assert len(got) == 280
+    assert len(open(log).read().split()) == 280
+
+    # uneven shards: the shares still cover every page and sum to the budget
+    reader = rest.RestMeasurementsReader(
+        {**opts, "max_pages": "10", "num_shards": "3", "request_budget": "7"}
+    )
+    parts = reader.partitions()
+    assert [(p.first_page, p.last_page) for p in parts] == [(1, 3), (4, 6), (7, 10)]
+    assert [p.request_budget for p in parts] == [2, 2, 3]
+
+
 def test_rest_requests_transport_live_http(spark):
     """Roadmap gap 1 closed: the requests-backed transport_factory
     drives the DataSource over real HTTP (local server), including a

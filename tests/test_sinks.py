@@ -4,12 +4,15 @@ full cycle: load cursors -> filter -> emit -> commit -> next cycle."""
 
 from __future__ import annotations
 
+import json
 import sqlite3
 import tempfile
 
 from pyspark.sql import functions as F
 
-from airquality_data_pipeline_spark.plans import pipeline
+from airquality_data_pipeline_spark import io
+from airquality_data_pipeline_spark.plans import jobs, pipeline
+from airquality_data_pipeline_spark.sources import rest
 from airquality_data_pipeline_spark.sources.synthetic import synthetic_measurements
 from airquality_data_pipeline_spark.streaming import sinks
 
@@ -83,6 +86,96 @@ def test_two_cycle_roundtrip(spark):
     second = one_cycle()
     assert first > 0
     assert second == 0  # everything already covered by committed cursors
+
+
+PAGES, PAGE_ROWS = 8, 4
+
+
+def _logging_transport(log: str, grow: bool):
+    """Replay transport over PAGES pages that appends one line per call to
+    `log`: its calls run in Spark's Python workers, so a file is the
+    counter. With grow, every read of a page after its first also serves
+    a row newer than any before, as a live API would."""
+    rows = [
+        {"station_id": f"NL{p:02d}", "pollutant": ("pm25", "no2")[j % 2],
+         "value": float(p + j), "timestamp": f"2024-03-01T{j:02d}:00:00Z"}
+        for p in range(PAGES) for j in range(PAGE_ROWS)
+    ]
+    served = rest.fake_transport_from_rows(rows, page_size=PAGE_ROWS)
+
+    def transport(url, params):
+        page = str(params["page"])
+        with open(log, "a+") as f:
+            f.seek(0)
+            seen = f.read().split().count(page)
+            f.write(page + "\n")
+        body = served(url, params)
+        if grow and seen:
+            newer = f"2024-03-02T00:{seen:02d}:00Z"
+            body["data"].append(dict(body["data"][0], timestamp=newer))
+        return body
+
+    return transport
+
+
+def _rest_cycle(spark, tmp_path, grow: bool = False):
+    """One producer cycle over the REST source: emit the payload to a
+    parquet sink, then commit the cursors. Returns the transport calls
+    after the emit and after the commit, the committed cursors and the
+    max timestamp per key over the written payload."""
+    log, db, sink = (str(tmp_path / n) for n in ("calls.log", "state.db", "sink"))
+    open(log, "w").close()
+    spark.dataSource.register(rest.RestMeasurementsSource)
+    feed = (
+        spark.read.format("rest_measurements")
+        .option("transport_pickle", rest.transport_option(_logging_transport(log, grow)))
+        .option("base_url", "replay://nl")
+        .option("max_pages", str(PAGES))
+        .option("num_shards", "2")
+        .load()
+        .withColumn("source", F.lit("nl"))
+    )
+    bronze = pipeline.canonical_union(
+        [spark.createDataFrame([], io.MEASUREMENT_SCHEMA), feed]
+    )
+    result = jobs.measurements_job(
+        bronze, spark.createDataFrame([], io.STATION_SCHEMA),
+        sinks.load_cursors(db, "nl", spark),
+    )
+    pipeline.kafka_payload(result.payload).write.parquet(sink)
+    calls_after_emit = len(open(log).read().split())
+    sinks.commit_cursor_batch(db, result.pending_cursors, source="nl")
+    calls_after_commit = len(open(log).read().split())
+
+    emitted: dict[tuple[str, str], str] = {}
+    for r in spark.read.parquet(sink).collect():
+        m = json.loads(r.value)
+        key = (m["station_id"], m["pollutant"])
+        emitted[key] = max(emitted.get(key, ""), m["timestamp"])
+    committed = {
+        (s, p): ts for s, p, ts in sqlite3.connect(db).execute(
+            "SELECT station_id, pollutant, last_observed_at FROM ingestion_cursors"
+        )
+    }
+    return calls_after_emit, calls_after_commit, committed, emitted
+
+
+def test_cycle_reads_each_page_once(spark, tmp_path):
+    """The emit and the cursor commit share one read of the source: the
+    transport serves each page once per cycle, as the reference's poll
+    does (app/main.py:1213-1354)."""
+    after_emit, after_commit, _, _ = _rest_cycle(spark, tmp_path)
+    assert after_emit == PAGES
+    assert after_commit == PAGES
+
+
+def test_committed_cursors_are_max_over_emitted_rows(spark, tmp_path):
+    """Commit-after-emit (reference app/main.py:1342-1347): with a source
+    whose rows change between reads, the committed cursor of every key is
+    the newest emitted row, never a row the emit did not send."""
+    _, _, committed, emitted = _rest_cycle(spark, tmp_path, grow=True)
+    assert len(emitted) == 2 * PAGES
+    assert committed == emitted
 
 
 def test_postgres_dialect_sql_text():

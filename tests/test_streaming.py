@@ -527,3 +527,22 @@ def test_blocklist_screen_composes_with_streaming(spark, sf_dir):
     assert len(got) == len(batch)
     for r in got:
         assert (r.n_hits, r.verdict) == batch[r.doc_id], r.doc_id
+
+
+def test_stage_dir_removed_at_exit(tmp_path):
+    """Staged stream dirs live while the interpreter does, then go."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = (
+        "from airquality_data_pipeline_spark.streaming import jobs; "
+        f"print(jobs._stage_dir({str(tmp_path)!r}))"
+    )
+    staged = subprocess.run(
+        [sys.executable, "-c", code], cwd=Path(__file__).resolve().parents[1],
+        capture_output=True, text=True, check=True,
+    ).stdout.strip()
+    assert os.path.basename(staged).startswith("events_stream_")
+    assert not os.path.exists(staged)
