@@ -37,7 +37,6 @@ def incremental_filter(
     keys: tuple[str, ...] = ("station_id", "pollutant"),
     ts_col: str = "timestamp",
     cursor_ts: str = "last_observed_at",
-    broadcast_cursors: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Return (fresh_or_malformed_rows, pending_cursor_updates).
 
@@ -51,9 +50,8 @@ def incremental_filter(
         or_, [F.col(k).isNull() for k in keys], F.col(ts_col).isNull()
     )
     newer = F.col(cursor_ts).isNull() | (F.col(ts_col) > F.col(cursor_ts))
-    cur = F.broadcast(cursors) if broadcast_cursors else cursors
     out = (
-        batch.join(cur, list(keys), "left")
+        batch.join(F.broadcast(cursors), list(keys), "left")
         .where(is_malformed | newer)
         .drop(cursor_ts)
     )

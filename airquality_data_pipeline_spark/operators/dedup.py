@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from airquality_data_pipeline_spark.functions.expr import let
+from airquality_data_pipeline_spark.operators import fan_out
 
 
 def shingle_array(toks: Column, n: int) -> Column:
@@ -79,13 +80,11 @@ def word_shingles(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> Data
     Tokenization is whitespace split; shingle = n consecutive tokens
     joined by a single space. All JVM-side array ops.
 
-    The input is fanned out to full parallelism first: a compact corpus
-    file arrives as one partition, and the tokenize+explode expansion is
-    CPU-bound — without the repartition the whole stage runs on one core
-    (same reasoning at cluster scale: expansion parallelism should track
-    cores, not input splits).
+    The input goes through fan_out first: a compact corpus file arrives
+    as one partition, and the tokenize+explode expansion is CPU-bound —
+    without the repartition the whole stage runs on one core.
     """
-    df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    df = fan_out(df)
     toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     # bind the split once per row — referencing it inside the shingle
     # lambda would re-split per position (see shingle_array docstring)
@@ -288,11 +287,9 @@ def simhash(
     """
     assert bits <= 64
     if n == 1:
-        # fan the compact corpus out to full parallelism before the
-        # CPU-bound tokenize+explode; the n>1 path delegates to
-        # word_shingles, which performs the same fan-out itself —
-        # repartitioning here too would add a redundant full exchange
-        df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+        # fan out before the CPU-bound tokenize+explode; the n>1 path
+        # delegates to word_shingles, which fans out itself
+        df = fan_out(df)
         toks = df.select(
             F.col(id_col).alias("id"),
             F.explode(

@@ -181,15 +181,14 @@ def pagerank_fixed_point(
 
     `edges` must be DIRECTED rows (src, dst) with every node appearing
     as a src (undirected graphs: emit both directions). The narrow
-    (src, dst) edge list is localCheckpoint-materialized once,
-    hash-partitioned on src (lineage cut + a partitioning every
-    src-keyed consumer reuses: the unrolled iterations would otherwise
-    re-derive the caller's edge build 3x AND re-shuffle the edges per
-    round); out-degrees are a node-cardinality frame materialized once
-    from it — per iteration the plan is one keyed join of the
-    persisted edges against the node-scale share vector (r div deg,
-    pre-divided on the small frame) plus a groupBy(dst)
-    re-aggregation: the standard distributed PageRank layout. NO broadcast hint touches
+    (src, dst) edge list is localCheckpoint-materialized once (a
+    lineage cut: the unrolled iterations would otherwise re-derive the
+    caller's edge build each round); out-degrees are a
+    node-cardinality frame materialized once from it — per iteration
+    the plan is one keyed join of the persisted edges against the
+    node-scale share vector (r div deg, pre-divided on the small frame)
+    plus a groupBy(dst) re-aggregation: the standard distributed
+    PageRank layout. NO broadcast hint touches
     the rank or degree frames (both are node-cardinality — a forced
     broadcast is an executor OOM at 10^8+ nodes, the r9 verdict's
     `weak`); the join is planned size-based, so AQE still broadcasts
@@ -211,16 +210,11 @@ def pagerank_fixed_point(
     # fundamentally needs. Per-edge integers are unchanged
     # (r div deg joined-then-divided == divided-then-joined), so the
     # fixed-point trajectory is bit-identical.
-    # materialize the narrow edge list HASH-PARTITIONED ON src: the
-    # checkpointed partitioning is visible to Catalyst (LogicalRDD
-    # keeps outputPartitioning), so deg's groupBy(src) and every
-    # iteration's equi-join on src plan with ZERO additional exchange
-    # on the edge-cardinality side — only the node-scale share vector
-    # moves per iteration (guide §2.4 "two operations keyed the same
-    # way share one exchange"). r12 shipped a keyless checkpoint blind;
-    # measured r13 (idle box, warm JVM, min-of-3): keyless 1.46 s vs
-    # src-partitioned 0.90 s at sf0.1.
-    e = edges.select("src", "dst").repartition("src").localCheckpoint()
+    # The checkpointed scan reports UnknownPartitioning (localCheckpoint
+    # keeps no partitioning), so deg's groupBy(src) and every
+    # iteration's join on src each plan their own exchange of the edge
+    # list; shuffling on src before the checkpoint would add one more.
+    e = edges.select("src", "dst").localCheckpoint()
     # deg is NODE-cardinality: materialize it once (cheap checkpoint)
     # instead of re-deriving the edge-scale groupBy inside every
     # iteration's plan — r12 shipped the lazy version blind, and the

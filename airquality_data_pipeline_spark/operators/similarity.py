@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.operators import fan_out
+
 
 def _dot(a: Column, b: Column) -> Column:
     """Sequential left-fold dot product over two array<double> columns."""
@@ -27,31 +29,18 @@ def _dot(a: Column, b: Column) -> Column:
 
 
 def with_norm(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    persist: bool = False,
+    df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
 ) -> DataFrame:
     """Project to (id, v: array<double>, nrm: double).
 
-    Fans the input out to full parallelism: embedding fixtures arrive as
+    The input goes through fan_out first: embedding fixtures arrive as
     one parquet split, and everything downstream (pairwise folds) is
-    CPU-bound — partition count must track cores, not input splits.
-
-    Caching is opt-in (persist=True) and the CALLER owns the lifetime
-    (must unpersist): the default used to persist unconditionally, which
-    leaked one cached frame per similarity query into the shared session
-    (r1 ADVICE). Catalog queries run each plan once, so recomputing the
-    projection costs one extra scan of a frame the small side of which
-    is broadcast anyway.
+    CPU-bound.
     """
-    df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    return _norm_projection(df, vec_col, id_col, persist)
+    return _norm_projection(fan_out(df), vec_col, id_col)
 
 
-def _norm_projection(
-    df: DataFrame, vec_col: str, id_col: str, persist: bool = False
-) -> DataFrame:
+def _norm_projection(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
     """with_norm's projection without the fan-out exchange — for
     bounded side-inputs (centroid seeds) where a full-corpus
     repartition ahead of a pushed-down filter would be wasted.
@@ -64,12 +53,11 @@ def _norm_projection(
     `WHERE nrm > 0`. cosine() additionally uses try_divide — see its
     docstring for why the filter alone is not a sound ANSI guard."""
     v = F.col(vec_col).cast("array<double>")
-    out = df.select(
+    return df.select(
         F.col(id_col).alias("id"),
         v.alias("v"),
         F.sqrt(_dot(v, v)).alias("nrm"),
     ).where(F.col("nrm") > 0)
-    return out.persist() if persist else out
 
 
 def cosine(a_v: Column, a_n: Column, b_v: Column, b_n: Column, scale: int = 6) -> Column:

@@ -14,6 +14,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.operators import fan_out
+
 # Stopword marker sets per language (word-boundary regexes). Deliberately
 # tiny: the operator demonstrates the n-gram/stopword-scoring shape;
 # swap in real profiles (e.g. fastText-style char n-grams) for production.
@@ -117,10 +119,10 @@ def token_counts(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 def term_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Corpus term statistics — the integer substrate of TF-IDF:
     per-term document frequency, total term frequency, max in-doc tf.
-    Explode fans out to full parallelism; both aggregations are
-    map-side partial. The idf-weighted vectors (which need log()) build
-    on this in tfidf_vectors()."""
-    df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    The input goes through fan_out before the explode; both
+    aggregations are map-side partial. The idf-weighted vectors (which
+    need log()) build on this in tfidf_vectors()."""
+    df = fan_out(df)
     toks = df.select(
         F.col(id_col).alias("id"),
         F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("term"),
@@ -142,7 +144,7 @@ def tfidf_vectors(
     (q62) rounds the weight to 6 decimals — engines agree to ~1e-16
     relative, far inside that grain; the exact-integer substrate is
     separately oracle-checked via term_stats (q54)."""
-    df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    df = fan_out(df)
     toks = df.select(
         F.col(id_col).alias("id"),
         F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("term"),

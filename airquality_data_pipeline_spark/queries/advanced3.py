@@ -22,9 +22,9 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.operators import fan_out
 from airquality_data_pipeline_spark.queries.common import (
     dec,
-    fan_out,
     finite,
     roundq,
     sql_finite,
@@ -865,9 +865,7 @@ def q199_calibration_bins(spark, sf_dir):
     # instead of running on one (guide §2.3 + §2.5; r12 flagged q199
     # as a 13x outlier at 8 cores — a single-task first stage cannot
     # use any core count). Scale-guarded no-op at 100 TB.
-    scored = fan_out(
-        ev.select(p.alias("p"), y.alias("y")), spark, sf_dir, "events"
-    )
+    scored = fan_out(ev.select(p.alias("p"), y.alias("y")))
     b = F.least(F.floor(F.col("p") * 10), F.lit(9)).cast("long")
     return scored.groupBy(b.alias("bin")).agg(
         F.count(F.lit(1)).alias("n"),

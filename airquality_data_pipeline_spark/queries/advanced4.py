@@ -20,9 +20,9 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.operators import fan_out
 from airquality_data_pipeline_spark.queries.common import (
     dec,
-    fan_out,
     finite,
     roundq,
     sql_finite,
@@ -495,10 +495,7 @@ def q207_table_profile(spark, sf_dir):
     o = fan_out(
         table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"
-        ),
-        spark,
-        sf_dir,
-        "orders",
+        )
     )
     m = o.agg(
         F.count(F.lit(1)).alias("n"),

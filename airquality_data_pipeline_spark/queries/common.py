@@ -105,103 +105,6 @@ def utc(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
-    """Parse a byte-size conf value ('134217728', '128m', '1g')."""
-    raw = str(spark.conf.get(key, str(default))).strip().lower()
-    mult = 1
-    for suffix, m in (
-        ("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-        ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1),
-    ):
-        if raw.endswith(suffix):
-            raw, mult = raw[: -len(suffix)], m
-            break
-    try:
-        return int(raw) * mult
-    except ValueError:
-        return default
-
-
-def _path_bytes(path: str) -> int:
-    """Local filesystem size of a file or (recursively) a directory.
-    Returns 0 for anything unstat-able — remote schemes (s3://, hdfs://),
-    permission errors, missing paths. Callers must treat 0 as UNKNOWN,
-    not as small (fan_out fails closed to a no-op on 0 — r12 ADVICE:
-    failing open round-robin-shuffled the full fact table exactly where
-    the guard exists to prevent it)."""
-    import os
-
-    try:
-        if os.path.isdir(path):
-            # os.walk, not listdir: partitioned/nested parquet layouts
-            # (date=…/part-*.parquet) would otherwise count only the
-            # top-level directory entries (size ~4 KB each) and wildly
-            # undercount the input (r12 ADVICE)
-            return sum(
-                os.stat(os.path.join(root, f)).st_size
-                for root, _dirs, files in os.walk(path)
-                for f in files
-            )
-        return os.stat(path).st_size
-    except OSError:
-        return 0
-
-
-_FAN_OUT_LOGGED: set = set()
-
-
-def fan_out(
-    df: DataFrame, spark: SparkSession, sf_dir: str, *names: str
-) -> DataFrame:
-    """Round-robin repartition to defaultParallelism — ONLY when the
-    source files named can't feed the scan at full parallelism anyway.
-
-    Why (guide §2.5 "input skew"): the fixtures are single-row-group
-    parquet files, so every scan stage plans as ONE task no matter what
-    maxPartitionBytes says (parquet splits at row-group boundaries),
-    and all CPU-heavy work Catalyst fuses into the scan stage —
-    explodes, md5, decimal casts, HLL updates, map-side partial
-    aggregation — runs on one core. The repartition moves a few MB once
-    and buys a fully parallel first stage.
-
-    Scale-adaptive, not local-tuned: the repartition fires only while
-    the combined input is smaller than one ~maxPartitionBytes split per
-    core (os.stat only — no Spark job at plan build). At 100 TB the
-    scan is already parallel, the condition is false, and this is a
-    no-op — an unconditional repartition there would be a full extra
-    shuffle of the fact table. Callers should project/filter BEFORE
-    fanning out so the exchange carries only the needed columns
-    (guide §2.3). Use for CPU-bound first stages; a plain
-    scan->narrow-aggregate query does not need it."""
-    par = spark.sparkContext.defaultParallelism
-    split = _conf_bytes(
-        spark, "spark.sql.files.maxPartitionBytes", 128 << 20
-    )
-    total = sum(_path_bytes(f"{sf_dir}/{n}.parquet") for n in names)
-    if total <= 0:
-        # size unknown (remote scheme / unstatable path): FAIL CLOSED to
-        # the unmodified plan — an unconditional round-robin shuffle of
-        # an unknown-size input is the 100 TB regression this guard
-        # exists to prevent (r12 ADVICE)
-        return df
-    if total >= par * split:
-        return df
-    key = (sf_dir, names)
-    if key not in _FAN_OUT_LOGGED:
-        # one stderr line per (dir, tables): plan shape depends on
-        # driver-local file sizes, so make any environment-dependent
-        # explain()/snapshot divergence attributable (r12 ADVICE)
-        _FAN_OUT_LOGGED.add(key)
-        import sys
-
-        print(
-            f"fan_out: repartition({par}) fires for {names} "
-            f"({total} bytes < {par} cores x {split} split)",
-            file=sys.stderr,
-        )
-    return df.repartition(par)
-
-
 _INF = float("inf")
 
 

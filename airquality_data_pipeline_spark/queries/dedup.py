@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.operators import fan_out
 from airquality_data_pipeline_spark.operators.dedup import (
     MINHASH_P,
     MINHASH_PARAMS,
@@ -357,8 +358,7 @@ def q63_ml_minhash_lsh(spark, sf_dir):
         .limit(20)
         .select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
     )
-    docs = base.unionByName(planted)
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
+    docs = fan_out(base.unionByName(planted))
     tok = Tokenizer(inputCol="text", outputCol="words")
     # 3-gram shingles, matching q41: single tokens are degenerate on a
     # small-vocabulary corpus (every doc contains nearly every word, so

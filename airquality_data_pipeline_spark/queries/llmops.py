@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.operators import fan_out
 from airquality_data_pipeline_spark.operators.similarity import (
     cosine,
     ivf_assign,
@@ -27,7 +28,6 @@ from airquality_data_pipeline_spark.operators.similarity import (
 )
 from airquality_data_pipeline_spark.queries.common import (
     decq,
-    fan_out,
     roundq,
     sql_roundq,
     table,
@@ -539,7 +539,7 @@ def q132_incremental_dedup(spark, sf_dir):
     # per shingle) is the query's CPU; fan the single-row-group scan
     # out so it runs at full parallelism (guide §2.5) — scale-guarded,
     # no-op at 100 TB
-    docs = fan_out(docs, spark, sf_dir, "documents")
+    docs = fan_out(docs)
     bucket = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
         .cast("long")
@@ -719,7 +719,7 @@ def q135_char_entropy(spark, sf_dir):
     # single-row-group scan: fan out first (guide §2.5; scale-guarded
     # no-op at 100 TB). Measured at sf0.1 (warm, min-of-3):
     # 6.2 -> 2.7 s
-    docs = fan_out(docs.select("doc_id", "text"), spark, sf_dir, "documents")
+    docs = fan_out(docs.select("doc_id", "text"))
     # length > 0 guard: Spark's sequence(1, 0) infers a DESCENDING
     # step and yields [1, 0] — an empty doc would contribute two
     # phantom empty-string chars (n=2, entropy 0) while DuckDB's

@@ -21,9 +21,9 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.operators import fan_out
 from airquality_data_pipeline_spark.queries.common import (
     dec,
-    fan_out,
     roundq,
     sql_roundq,
     table,
@@ -290,10 +290,7 @@ def q252_bpe_pair_stats(spark, sf_dir):
     # column, then fan out (guide §2.3 + §2.5; scale-guarded no-op at
     # 100 TB). Measured at sf0.1 (warm, min-of-3): 3.1 -> 0.9 s
     base = fan_out(
-        docs.select(F.lower("text").alias("t")).where(F.length("t") >= 2),
-        spark,
-        sf_dir,
-        "documents",
+        docs.select(F.lower("text").alias("t")).where(F.length("t") >= 2)
     )
     pairs = (
         base

@@ -13,11 +13,11 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.operators import fan_out
 from airquality_data_pipeline_spark.queries.common import (
     davg,
     dec,
     dsum,
-    fan_out,
     sql_davg,
     sql_dsum,
     sql_floor_ms,
@@ -71,10 +71,7 @@ def q01_pricing_summary(spark, sf_dir):
             "l_extendedprice",
             "l_discount",
             "l_tax",
-        ),
-        spark,
-        sf_dir,
-        "lineitem",
+        )
     )
     return (
         filtered.groupBy("l_returnflag", "l_linestatus")
@@ -459,12 +456,7 @@ def q12_rollup(spark, sf_dir):
     # columns and fan out first (guide §2.3 + §2.5; measured warm
     # min-of-3 at sf0.1: 1.23 -> 1.05 s). Scale-guarded no-op at
     # 100 TB.
-    li = fan_out(
-        li.select("l_returnflag", "l_linestatus", "l_quantity"),
-        spark,
-        sf_dir,
-        "lineitem",
-    )
+    li = fan_out(li.select("l_returnflag", "l_linestatus", "l_quantity"))
     return li.rollup("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n_rows"), dsum("l_quantity", "sum_qty")
     )

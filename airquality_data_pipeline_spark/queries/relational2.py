@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.operators import fan_out
 from airquality_data_pipeline_spark.operators.joins import (
     asof_join,
     bucketed_range_join,
@@ -15,7 +16,6 @@ from airquality_data_pipeline_spark.operators.joins import (
 from airquality_data_pipeline_spark.queries.common import (
     davg,
     dsum,
-    fan_out,
     sql_davg,
     sql_dsum,
     sql_floor_ms,
@@ -862,10 +862,7 @@ def q60_approx_distinct(spark, sf_dir):
     li = fan_out(
         table(spark, sf_dir, "lineitem").select(
             "l_returnflag", "l_partkey", "l_orderkey"
-        ),
-        spark,
-        sf_dir,
-        "lineitem",
+        )
     )
 
     def rel_err(approx, exact):

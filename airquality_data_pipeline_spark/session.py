@@ -1,8 +1,10 @@
 """SparkSession factory.
 
-Local-mode defaults tuned for the test harness (local[N] on one JVM), but
-every setting here is the one you'd also want on a 1000-executor cluster:
-AQE for runtime re-planning (skew join, partition coalescing), UTC session
+Local-mode defaults fit the box they run on: local[N] over all cores and a
+driver heap of a quarter of physical RAM (the JVM's own default), unless
+SPARK_GRAFT_CPUS / SPARK_DRIVER_MEMORY say otherwise. Every other setting
+here is the one you'd also want on a 1000-executor cluster: AQE for
+runtime re-planning (skew join, partition coalescing), UTC session
 timezone (oracle parity + sanity), Arrow for any Pandas-UDF boundary.
 """
 
@@ -19,7 +21,9 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    heap = os.environ.get("SPARK_DRIVER_MEMORY") or f"{max(ram // 4 >> 20, 1024)}m"
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
     builder = (
@@ -31,7 +35,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
@@ -73,13 +77,3 @@ def cluster_conf(
         "spark.shuffle.compress": "true",
         "spark.sql.parquet.compression.codec": "zstd",
     }
-
-
-def ensure_utc(spark: SparkSession) -> None:
-    """Pin session timezone to UTC (runtime-settable).
-
-    Called at the top of every catalog query builder so results are
-    deterministic regardless of the caller's session configuration —
-    date_trunc / window() truncate in session-local time otherwise.
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")

@@ -31,7 +31,6 @@ Transport = Callable[[str, dict], dict]
 class RestSourceConfig:
     base_url: str
     page_param: str = "page"
-    page_size: int = 100
     max_pages: int = 10
     request_budget: int = 280        # reference app/main.py:416
     max_retries: int = 5             # reference app/main.py:472-481

@@ -402,9 +402,7 @@ def run_to_memory(
     q.awaitTermination()
 
 
-def foreach_batch_cursor_commit(
-    events: DataFrame, cursor_store: dict, delay: str = "30 minutes"
-) -> None:
+def foreach_batch_cursor_commit(events: DataFrame, cursor_store: dict) -> None:
     """K3 commit-after-emit ordering inside foreachBatch: the cursor
     merge runs only after the batch's sink write succeeds, exactly the
     reference's `else:` branch (app/main.py:1342-1347). cursor_store is
@@ -414,18 +412,17 @@ def foreach_batch_cursor_commit(
         payload = batch_df.select(
             F.to_json(F.struct(*batch_df.columns)).alias("value")
         )
-        emitted = payload.count()  # the "emit" action; raises on failure
-        if emitted >= 0:
-            updates = (
-                batch_df.groupBy("user_id", "event_type")
-                .agg(F.max("ts").alias("last_observed_at"))
-                .collect()
-            )
-            for r in updates:
-                k = (r["user_id"], r["event_type"])
-                prev = cursor_store.get(k)
-                ts = r["last_observed_at"]
-                cursor_store[k] = ts if prev is None or ts > prev else prev
+        payload.count()  # the "emit" action; raises on failure
+        updates = (
+            batch_df.groupBy("user_id", "event_type")
+            .agg(F.max("ts").alias("last_observed_at"))
+            .collect()
+        )
+        for r in updates:
+            k = (r["user_id"], r["event_type"])
+            prev = cursor_store.get(k)
+            ts = r["last_observed_at"]
+            cursor_store[k] = ts if prev is None or ts > prev else prev
 
     q = (
         events.writeStream.foreachBatch(commit)

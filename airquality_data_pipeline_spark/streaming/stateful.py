@@ -72,72 +72,6 @@ def cursor_filter_stream(events: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# The same cursor operator on Spark 4's transformWithState API — the
-# successor to applyInPandasWithState: typed state handles (ValueState /
-# ListState / MapState), timers, and TTL, all backed by the RocksDB
-# state store (this operator REQUIRES the RocksDB provider — pair with
-# jobs.rocksdb_state_conf()).
-# ---------------------------------------------------------------------------
-try:  # Spark 4+ only
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    _HAS_TWS = True
-except ImportError:  # pragma: no cover - older Spark
-    StatefulProcessor = object
-    StatefulProcessorHandle = object
-    _HAS_TWS = False
-
-
-class CursorProcessor(StatefulProcessor):
-    """Per-key high-watermark cursor as a typed StatefulProcessor:
-    ValueState holds last_observed_at micros; each batch emits rows
-    strictly newer than the cursor, then advances it (GREATEST merge —
-    replays never move it backwards), mirroring the reference's
-    ON CONFLICT GREATEST upsert (app/main.py:263-267)."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self.cursor = handle.getValueState("cursor", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        held = self.cursor.get()
-        last_us = held[0] if held is not None else None
-        max_us = last_us
-        for pdf in rows:
-            ts_us = pdf["ts"].astype("int64") // 1000
-            keep = pdf if last_us is None else pdf[ts_us > last_us]
-            if len(keep):
-                yield keep[["event_id", "user_id", "event_type", "ts", "value"]]
-                batch_max = int(ts_us.max())
-                if max_us is None or batch_max > max_us:
-                    max_us = batch_max
-        if max_us is not None and max_us != last_us:
-            self.cursor.update((max_us,))
-
-    def close(self) -> None:
-        pass
-
-
-def cursor_filter_stream_tws(events: DataFrame) -> DataFrame:
-    """cursor_filter_stream on the transformWithState API (Spark 4,
-    RocksDB-backed typed state)."""
-    if not _HAS_TWS:  # pragma: no cover
-        raise NotImplementedError("transformWithState needs Spark 4+")
-    return (
-        events.select("event_id", "user_id", "event_type", "ts", "value")
-        .groupBy("user_id", "event_type")
-        .transformWithStateInPandas(
-            statefulProcessor=CursorProcessor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
 # Streaming EWMA: per-user exponential smoothing state — the numeric-
 # accumulator shape of custom state (the cursor above is the watermark
 # shape). State holds (last EWMA, last event position); each batch

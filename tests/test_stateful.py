@@ -8,8 +8,6 @@ import os
 import tempfile
 import uuid
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from airquality_data_pipeline_spark.queries.common import table, utc
@@ -189,73 +187,6 @@ def test_cursor_state_on_rocksdb(spark, sf_dir):
             .count()
         )
         assert spark.sql(f"SELECT * FROM {name}").count() == b1.count() + b2_pass
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
-def test_cursor_transform_with_state(spark, sf_dir):
-    """Spark 4 transformWithState twin: typed ValueState cursor on
-    RocksDB (the API requires that provider); semantics must match the
-    applyInPandasWithState operator exactly.
-
-    Skipped where google.protobuf is unavailable: Spark's
-    TransformWithStateInPySpark runner speaks protobuf to the JVM, so
-    the operator cannot execute without it (the operator itself is
-    plain DataFrame API and needs nothing extra)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState runner requires protobuf",
-    )
-    from airquality_data_pipeline_spark.streaming.stateful import (
-        cursor_filter_stream_tws,
-    )
-
-    utc(spark)
-    src = _stage_two_batches(spark, sf_dir)
-    saved = {k: spark.conf.get(k, None) for k in jobs.rocksdb_state_conf()}
-    for k, v in jobs.rocksdb_state_conf().items():
-        spark.conf.set(k, v)
-    try:
-        stream = (
-            spark.readStream.schema(
-                "event_id long, ts timestamp, user_id long, event_type string, "
-                "value double, props string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        name = f"tws_{uuid.uuid4().hex[:8]}"
-        jobs.run_to_memory(cursor_filter_stream_tws(stream), name)
-        got = spark.sql(f"SELECT * FROM {name}")
-
-        ev = table(spark, sf_dir, "events")
-        cut = F.lit("2024-01-15 00:00:00").cast("timestamp")
-        b1 = ev.where(F.col("ts") < cut)
-        cursors = b1.groupBy("user_id", "event_type").agg(F.max("ts").alias("c"))
-        b2_pass = (
-            ev.where(F.col("ts") >= cut)
-            .join(cursors, ["user_id", "event_type"], "left")
-            .where(F.col("c").isNull() | (F.col("ts") > F.col("c")))
-            .count()
-        )
-        assert got.count() == b1.count() + b2_pass
-        out_max = {
-            (r.user_id, r.event_type): r.m
-            for r in got.groupBy("user_id", "event_type")
-            .agg(F.max("ts").alias("m"))
-            .collect()
-        }
-        truth = {
-            (r.user_id, r.event_type): r.m
-            for r in ev.groupBy("user_id", "event_type")
-            .agg(F.max("ts").alias("m"))
-            .collect()
-        }
-        assert out_max == truth
     finally:
         for k, v in saved.items():
             if v is None:
