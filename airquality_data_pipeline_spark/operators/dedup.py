@@ -259,7 +259,7 @@ def ngram_jaccard_pairs(
 
 
 def simhash(
-    df: DataFrame, text_col: str, id_col: str, bits: int = 32, n: int = 1
+    df: DataFrame, text_col: str, id_col: str, bits: int = 64, n: int = 3
 ) -> DataFrame:
     """SimHash fingerprint: for each of `bits` positions, the majority
     vote over the document's distinct features of one md5 bit (the high
@@ -267,11 +267,12 @@ def simhash(
     bits 32-63 come from a second, salted digest md5(feature || '#2'),
     so up to 64 bits). Output: id + `simhash` bit-string column.
 
-    Fingerprint width is the banding-collision dial: with 4 bands,
-    random pairs collide per band at 2^-(bits/4) — 1/256 at 32 bits
-    (fine to ~10^4 docs) vs 1/65536 at 64 bits (the Manku production
-    width, holds verified candidates to the true near-dup mass into the
-    multi-million-doc regime; measured in PLANS.md).
+    The defaults (64 bits over word 3-grams) are q117's registered
+    form. Fingerprint width is the banding-collision dial: with 4
+    bands, random pairs collide per band at 2^-(bits/4) — 1/65536 at
+    64 bits (the Manku production width, holds verified candidates to
+    the true near-dup mass into the multi-million-doc regime) vs 1/256
+    at 32 bits (measured in PLANS.md).
 
     n picks the feature granularity: 1 votes over distinct TOKENS, n>1
     over distinct word n-grams. Token-level simhash DEGENERATES on a
@@ -333,12 +334,12 @@ def simhash(
 
 def simhash_band_candidates(
     sigs: DataFrame,
-    bits: int = 32,
     n_bands: int = 4,
     max_hamming: int = 3,
 ) -> DataFrame:
     """SimHash near-dup pairs the Manku/Google-webcrawl way: split the
-    `bits`-bit fingerprint into `n_bands` equal bands; any pair within
+    fingerprint into `n_bands` equal bands of length(simhash) div
+    n_bands bits, read from the fingerprint itself; any pair within
     hamming distance <= n_bands - 1 must agree on at least ONE band
     (pigeonhole), so candidate generation is an equi-join on
     (band_idx, band_value) — never an all-pairs scan — with 100% recall
@@ -350,17 +351,14 @@ def simhash_band_candidates(
     (q41) and sign-LSH banding (q45). Verification touches candidates
     only and is a per-row zip_with fold (JVM codegen). Random band
     collisions between unrelated docs occur at ~n_bands * 2^-band_bits
-    per pair, so candidate volume is ~C(n,2) * 4/256 at the 32-bit
-    defaults — at larger corpora use bits=64 (simhash's salted second
-    digest; Manku's production width), which drops the per-pair rate to
-    4/65536 and keeps buckets bounded into the multi-million-doc
-    regime. Feed signatures built over n-gram features, not tokens:
+    per pair: 4/65536 for simhash's default 64-bit fingerprint, which
+    keeps buckets bounded into the multi-million-doc regime, vs 4/256
+    at 32 bits. Feed signatures built over n-gram features, not tokens:
     see simhash's degeneracy note.
 
     Input: (id, simhash) from `simhash`. Output: (id_a, id_b, hamming)
     with id_a < id_b and hamming <= max_hamming.
     """
-    assert bits % n_bands == 0, "bits must split evenly into bands"
     assert max_hamming <= n_bands - 1, (
         "pigeonhole guarantee needs max_hamming <= n_bands - 1"
     )
@@ -370,7 +368,7 @@ def simhash_band_candidates(
     # same §3.3 plan-truncation as minhash_candidate_pairs. Measured
     # q117 at sf0.1 (warm, min-of-3): 2.49 -> 0.75 s.
     sigs = sigs.localCheckpoint()
-    band_bits = bits // n_bands
+    band_bits = (F.length("simhash") / n_bands).cast("int")  # floor
     bands = sigs.select(
         "id",
         F.col("simhash"),

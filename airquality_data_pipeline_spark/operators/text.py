@@ -9,8 +9,6 @@ from __future__ import annotations
 
 from functools import reduce
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -311,7 +309,7 @@ def pii_scrub(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     UDF): embarrassingly parallel, zero shuffle at any scale. The
     redacted text is returned as an md5 digest + length so the output
     stays narrow (the full redacted column would be the same width as
-    the corpus; callers wanting it take `redact_text` instead)."""
+    the corpus)."""
     cur = F.col(text_col)
     counts = []
     for name, pat, _repl in PII_RULES:
@@ -323,14 +321,6 @@ def pii_scrub(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         F.length(cur).alias("n_chars_redacted"),
         F.md5(cur).alias("redacted_digest"),
     )
-
-
-def redact_text(text: Column) -> Column:
-    """The full redacted text column (same rule chain as pii_scrub)."""
-    cur = text
-    for _name, pat, repl in PII_RULES:
-        cur = F.regexp_replace(cur, pat, repl)
-    return cur
 
 
 def chunk_fingerprints(
@@ -433,24 +423,21 @@ def bloom_contamination(
     is exactly `p IN (distinct positions)` — the hash relation IS the
     bloom membership test (same false-positive behavior: collisions
     happen in position space, mod m), so results are bit-identical to
-    the bitmap form and to the SQL oracle's `IN (SELECT pos ...)`.
+    the SQL oracle's `IN (SELECT pos ...)`.
 
     Scale shape: the k probes are k broadcast LEFT joins over the SAME
     build plan (one BroadcastExchange, k-1 ReusedExchange — verified in
     the executed plan), so NO shuffle touches the train shingles before
     the per-doc aggregate. Broadcast size is min(k * |bench n-grams|,
-    m) distinct longs — benchmark-bounded, never train-bounded. For
-    benchmarks large enough that a hash relation of that many longs
-    outgrows executor memory, `bloom_contamination_bitmap` keeps the
-    fixed-size O(m)-bytes bitmap variant (at the cost of an eager
-    plan-build collect).
+    m) distinct longs — benchmark-bounded, never train-bounded, and
+    never more than 2^24 (`_bloom_pos` asserts m <= 2^24).
 
     Guarantee: no false negatives (every truly contaminated doc is
     flagged); false positives at ~(1-e^{{-kn/m}})^k. The production
     pattern is bloom-gate first, exact `ngram_contamination` re-check
     on the (tiny) flagged subset. No-false-negative containment vs the
-    exact operator, bitmap-vs-join equality, and full cross-engine
-    value parity are pinned in tests.
+    exact operator and full cross-engine value parity are pinned in
+    tests.
     """
     from airquality_data_pipeline_spark.operators.dedup import word_shingles
 
@@ -488,91 +475,6 @@ def bloom_contamination(
     per_doc = t.groupBy("id").agg(
         F.count(F.lit(1)).alias("n_ngrams"),
         F.sum(F.when(maybe, 1).otherwise(0)).cast("long").alias("n_flagged"),
-    )
-    return (
-        train.select(F.col(id_col).alias("id"))
-        .join(per_doc, "id", "left")
-        .select(
-            "id",
-            F.coalesce("n_ngrams", F.lit(0)).cast("long").alias("n_ngrams"),
-            F.coalesce("n_flagged", F.lit(0)).cast("long").alias("n_flagged"),
-            (F.coalesce("n_flagged", F.lit(0)) > 0).alias("maybe_contaminated"),
-        )
-    )
-
-
-def bloom_contamination_bitmap(
-    train: DataFrame,
-    benchmark: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int = 8,
-    k: int = BLOOM_K,
-    m: int = BLOOM_M,
-) -> DataFrame:
-    """Fixed-size-bitmap variant of `bloom_contamination` for the
-    huge-benchmark regime: the benchmark's distinct bit positions fold
-    into an m-bit numpy bitmap that ships to every executor as an O(m)
-    = 512 KiB broadcast variable HOWEVER large the benchmark grows; the
-    train side is one scan with a vectorized-numpy membership test
-    (Arrow-batched pandas UDF over JVM-computed positions). Results are
-    bit-identical to `bloom_contamination` (pinned in tests): the
-    bitmap sets exactly the bits at the distinct positions, so
-    `bitmap[p] == 1` <=> `p IN positions`.
-
-    Trade-off vs the default: the bitmap is built by collecting the
-    benchmark's DISTINCT bit positions to the driver — bounded by
-    min(k * |bench n-grams|, m) longs (the same driver-sized-dimension
-    pattern as the foreachBatch upserts) — which runs a Spark job at
-    PLAN-BUILD time. Prefer the default in-plan form unless the
-    position hash relation itself (~30 bytes/entry vs 1 bit here)
-    threatens executor memory. The broadcast's lifetime is tied to the
-    returned DataFrame's UDF closure and is reclaimed by the
-    ContextCleaner once the frame is dropped.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    from airquality_data_pipeline_spark.operators.dedup import word_shingles
-
-    bench_sh = word_shingles(
-        benchmark, text_col=text_col, id_col=id_col, n=n
-    )
-    pos_rows = (
-        bench_sh.select(
-            F.explode(
-                F.array(*[_bloom_pos(F.col("shingle"), j, m) for j in range(k)])
-            ).alias("pos")
-        )
-        .distinct()
-        .collect()
-    )
-    bitmap = np.zeros(m // 8, dtype=np.uint8)
-    if pos_rows:
-        pos = np.array([r["pos"] for r in pos_rows], dtype=np.int64)
-        np.bitwise_or.at(bitmap, pos >> 3, np.uint8(1) << (pos & 7).astype(np.uint8))
-    bc = train.sparkSession.sparkContext.broadcast(bitmap)
-
-    @pandas_udf("boolean")
-    def _all_bits_set(ps: pd.Series) -> pd.Series:
-        bm = bc.value
-        if len(ps) == 0:
-            return pd.Series([], dtype=bool)
-        mat = np.vstack(ps.to_numpy())  # (rows, k) int64 positions
-        hit = (bm[mat >> 3] & (np.uint8(1) << (mat & 7).astype(np.uint8))) != 0
-        return pd.Series(hit.all(axis=1))
-
-    train_sh = word_shingles(train, text_col=text_col, id_col=id_col, n=n)
-    flagged = train_sh.withColumn(
-        "_maybe",
-        _all_bits_set(
-            F.array(*[_bloom_pos(F.col("shingle"), j, m) for j in range(k)])
-        ),
-    )
-    per_doc = flagged.groupBy("id").agg(
-        F.count(F.lit(1)).alias("n_ngrams"),
-        F.sum(F.when(F.col("_maybe"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_flagged"),
     )
     return (
         train.select(F.col(id_col).alias("id"))

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 # plan construction must run zero Spark jobs) and (b) adds a fixed
 # per-query job to the bench loop. The key includes the file's
 # (mtime_ns, size) so an in-place fixture regeneration — e.g. the
-# events.ts TIMESTAMP(NANOS) <-> timestamp[us] flip that table()
+# events.ts TIMESTAMP(NANOS) <-> timestamp[us] flip that events_layout()
 # branches on — invalidates the entry instead of silently serving a
 # stale schema (r8 ADVICE); a local os.stat is not a Spark job, so
 # plan build stays job-free.
@@ -82,22 +82,31 @@ def _read_parquet(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.schema(schema).parquet(path)
 
 
+def events_layout(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Column]:
+    """The events fixture as stored, and the column that reads its `ts`
+    as a session timestamp — the one place that decides the layout, for
+    the batch `table()` and the file-source stream alike.
+
+    events.ts has shipped as both parquet TIMESTAMP(NANOS) (which Spark
+    4 rejects unless read as raw int64 via nanosAsLong) and plain
+    timestamp[us]. Branch on what the fixture actually holds:
+      * bigint  -> nanos-as-long fixture: floor-convert to a micros
+        instant (matches DuckDB's nanos->micros truncation).
+      * timestamp / timestamp_ntz -> micros fixture: cast to
+        session-local timestamp (session is pinned UTC, so the wall
+        clock is preserved and matches DuckDB's naive timestamps).
+    """
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    raw = _read_parquet(spark, sf_dir, "events")
+    if dict(raw.dtypes)["ts"] == "bigint":
+        return raw, F.expr("timestamp_micros(ts div 1000)")
+    return raw, F.col("ts").cast("timestamp")
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
-        # events.ts has shipped as both parquet TIMESTAMP(NANOS) (which
-        # Spark 4 rejects unless read as raw int64 via nanosAsLong) and
-        # plain timestamp[us]. Branch on what the fixture actually holds:
-        #   * bigint  -> nanos-as-long fixture: floor-convert to a micros
-        #     instant (matches DuckDB's nanos->micros truncation).
-        #   * timestamp / timestamp_ntz -> micros fixture: cast to
-        #     session-local timestamp (session is pinned UTC, so the wall
-        #     clock is preserved and matches DuckDB's naive timestamps).
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = _read_parquet(spark, sf_dir, "events")
-        ts_type = dict(df.dtypes)["ts"]
-        if ts_type == "bigint":
-            return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+        raw, ts = events_layout(spark, sf_dir)
+        return raw.withColumn("ts", ts)
     return _read_parquet(spark, sf_dir, name)
 
 

@@ -179,7 +179,7 @@ def _simhash_oracle(bits: int = 32) -> str:
 @register("q43_simhash", oracle=_simhash_oracle())
 def q43_simhash(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
-    return simhash(docs, text_col="text", id_col="doc_id", bits=32)
+    return simhash(docs, text_col="text", id_col="doc_id", bits=32, n=1)
 
 
 # --------------------------------------------------------------------------
@@ -630,9 +630,8 @@ def q112_jaccard_estimate(spark, sf_dir):
 # (PLANS.md, measured at 80 k docs): random pairs collide per 8-bit
 # band at 4/256, a quadratic term that grew candidates 16.6x at a 16x
 # corpus; at 16-bit bands the rate is 4/65536 and measured growth
-# (4.2x) tracks the true dup mass. The 32-bit shape remains available
-# via operators.dedup.simhash(bits=32) and is pinned by
-# tests/test_operators.py's simhash tests.
+# (4.2x) tracks the true dup mass. That form is the operators' default;
+# q43 asks for the 32-bit token fingerprint explicitly.
 # --------------------------------------------------------------------------
 def _simhash_corpus_oracle(bits: int = 32, n_bands: int = 4) -> str:
     # bits > 32 read from the salted second digest (simhash operator's
@@ -719,8 +718,8 @@ def q117_simhash_neardup(spark, sf_dir):
             )
         )
     )
-    sigs = simhash(corpus, text_col="text", id_col="doc_id", bits=64, n=3)
-    return simhash_band_candidates(sigs, bits=64, n_bands=4, max_hamming=3)
+    sigs = simhash(corpus, text_col="text", id_col="doc_id")
+    return simhash_band_candidates(sigs, n_bands=4, max_hamming=3)
 
 
 # --------------------------------------------------------------------------

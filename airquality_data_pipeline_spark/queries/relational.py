@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.functions.timeparse import local_to_utc
 from airquality_data_pipeline_spark.operators import fan_out
 from airquality_data_pipeline_spark.queries.common import (
     davg,
@@ -602,12 +603,8 @@ def q17_datetime_tz(spark, sf_dir):
     return ev.select(
         "event_id",
         ts_ms("ts", "ts_ms"),
-        F.unix_millis(F.to_utc_timestamp(F.col("ts"), "Europe/Berlin")).alias(
-            "berlin_utc_ms"
-        ),
-        F.unix_millis(F.to_utc_timestamp(F.col("ts"), "Europe/Warsaw")).alias(
-            "warsaw_utc_ms"
-        ),
+        F.unix_millis(local_to_utc("ts", "de")).alias("berlin_utc_ms"),
+        F.unix_millis(local_to_utc("ts", "gios")).alias("warsaw_utc_ms"),
         F.hour("ts").alias("hour_utc"),
         F.unix_millis(F.date_trunc("day", F.col("ts"))).alias("day_ms"),
     )

@@ -1080,10 +1080,8 @@ def q111_length_histogram(spark, sf_dir):
 # count — zero shuffle before the aggregate, zero plan-build jobs,
 # zero Python UDFs. False positives possible by design (docs flagged
 # that share no real 8-gram; exact q99 re-checks the flagged subset at
-# scale), false negatives impossible — pinned in tests, along with
-# bit-equality vs the O(m)-bytes fixed-size bitmap variant
-# (operators/text.bloom_contamination_bitmap, the huge-benchmark
-# path). The positions are md5-derived, so the oracle reproduces the
+# scale), false negatives impossible — pinned in tests. The
+# positions are md5-derived, so the oracle reproduces the
 # membership set bit-for-bit and this probabilistic operator still
 # gets a full value-hash correctness row.
 # --------------------------------------------------------------------------

@@ -25,6 +25,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# the two stored layouts of events.ts that events_layout() accepts
 EVENTS_RAW_SCHEMA = (
     "event_id long, ts long, user_id long, event_type string, "
     "value double, props string"
@@ -50,29 +51,17 @@ def _stage_dir(sf_dir: str) -> str:
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events fixture.
+    """File-source stream over the events fixture, with the stored
+    schema and `ts` conversion of `queries.common.events_layout` (the
+    schema comes from its cached read, so no footer job runs here)."""
+    from airquality_data_pipeline_spark.queries.common import events_layout
 
-    The fixture has shipped with ts as both parquet TIMESTAMP(NANOS)
-    (readable only as raw int64 via nanosAsLong, then floor-converted to
-    a micros instant) and plain timestamp[us]. A cheap batch read of the
-    footer decides which stream schema to use.
-    """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ts_type = dict(
-        spark.read.parquet(f"{sf_dir}/events.parquet").dtypes
-    )["ts"]
-    if ts_type == "bigint":
-        return (
-            spark.readStream.schema(EVENTS_RAW_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(_stage_dir(sf_dir))
-            .withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        )
+    raw, ts = events_layout(spark, sf_dir)
     return (
-        spark.readStream.schema(EVENTS_TS_SCHEMA)
+        spark.readStream.schema(raw.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(_stage_dir(sf_dir))
-        .withColumn("ts", F.col("ts").cast("timestamp"))
+        .withColumn("ts", ts)
     )
 
 

@@ -325,10 +325,10 @@ def test_simhash_band_candidates_pigeonhole_recall(spark):
         ],
         "doc_id long, text string",
     )
-    sigs = simhash(df, "text", "doc_id", bits=32)
+    sigs = simhash(df, "text", "doc_id", bits=32, n=1)
     pairs = {
         (r.id_a, r.id_b): r.hamming
-        for r in simhash_band_candidates(sigs, bits=32).collect()
+        for r in simhash_band_candidates(sigs).collect()
     }
     assert pairs.get((1, 2)) == 0
     # every emitted pair respects the verify threshold
@@ -337,15 +337,19 @@ def test_simhash_band_candidates_pigeonhole_recall(spark):
     assert not any(4 in p for p in pairs)
     # 64-bit variant (salted second digest): same exact-replica
     # guarantee, 16-bit bands
-    sigs64 = simhash(df, "text", "doc_id", bits=64)
+    sigs64 = simhash(df, "text", "doc_id", bits=64, n=1)
     row = sigs64.where(F.col("id") == 1).collect()[0]
     assert len(row.simhash) == 64
     pairs64 = {
         (r.id_a, r.id_b): r.hamming
-        for r in simhash_band_candidates(sigs64, bits=64).collect()
+        for r in simhash_band_candidates(sigs64).collect()
     }
     assert pairs64.get((1, 2)) == 0
     assert not any(4 in p for p in pairs64)
+    # the defaults are q117's registered form: 64 bits over word 3-grams
+    assert sorted(simhash(df, "text", "doc_id").collect()) == sorted(
+        simhash(df, "text", "doc_id", bits=64, n=3).collect()
+    )
 
 
 def test_span_scrub_removes_corpus_frequent_tiles(spark):
@@ -628,34 +632,6 @@ def test_bloom_contamination_no_false_negatives(spark, sf_dir):
     }
     assert exact, "fixture must produce some contaminated docs"
     assert exact <= bloom  # containment: zero false negatives
-
-
-def test_bloom_join_and_bitmap_variants_identical(spark, sf_dir):
-    # the in-plan broadcast-join form (default, zero build jobs) and
-    # the fixed-size-bitmap pandas-UDF form (huge-benchmark path) are
-    # the SAME membership test (bitmap[p]==1 <=> p IN positions) and
-    # must agree row-for-row, including n_flagged counts
-    from airquality_data_pipeline_spark.operators.text import (
-        bloom_contamination,
-        bloom_contamination_bitmap,
-    )
-
-    docs = table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 100
-    )
-    tagged = docs.withColumn("_bucket", bucket)
-    train = tagged.where(F.col("_bucket") < 95)
-    bench = tagged.where(F.col("_bucket") >= 95)
-    kw = dict(text_col="text", id_col="doc_id", n=8)
-    joined = {tuple(r) for r in bloom_contamination(train, bench, **kw).collect()}
-    bitmap = {
-        tuple(r) for r in bloom_contamination_bitmap(train, bench, **kw).collect()
-    }
-    assert joined == bitmap
-    assert any(r[3] for r in joined), "fixture must flag some docs"
 
 
 def test_chunk_dedup_removes_replica_chunks(spark):

@@ -180,28 +180,6 @@ def test_fault_isolation(spark):
     assert result.payload.count() > 0
 
 
-def test_settings_from_env():
-    from airquality_data_pipeline_spark.config import Settings
-
-    s = Settings.from_env({})
-    assert s.sleep_seconds == 300 and not s.live_api and s.pl_only_auto
-    assert s.trigger == {"processingTime": "300 seconds"}
-
-    s2 = Settings.from_env(
-        {
-            "PIPELINE_SLEEP_SECONDS": "60",
-            "PIPELINE_LIVE_API": "true",
-            "PIPELINE_DISABLE_NL": "1",
-            "PIPELINE_PL_ONLY_AUTO": "no",
-            "KAFKA_TOPIC": "aq.test",
-            "PIPELINE_RETENTION_DAYS": "3",
-        }
-    )
-    assert s2.sleep_seconds == 60 and s2.live_api and s2.disable_nl
-    assert not s2.pl_only_auto
-    assert s2.kafka_topic == "aq.test" and s2.retention_days == 3
-
-
 def test_rest_datasource_end_to_end(spark):
     """The custom Python DataSource through the real read path:
     spark.read.format('rest_measurements') with a pickled fake transport,

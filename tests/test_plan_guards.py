@@ -242,9 +242,8 @@ def test_catalog_wide_no_cartesian_or_rowwise_python(spark, sf_dir):
 # aggregate via sqrt_k_centroids) and the ivf_assign centroid collect
 # (now a lazy 1-row collect_list broadcast); the r8 verdict flagged
 # q113's bloom-bitmap collect (now an in-plan broadcast position join,
-# operators/text.bloom_contamination — the eager bitmap variant lives
-# on as bloom_contamination_bitmap for the huge-benchmark regime, off
-# the registered path). Only genuinely ITERATIVE queries remain here.
+# operators/text.bloom_contamination). Only genuinely ITERATIVE queries
+# remain here.
 # Parquet schema inference is cached per (sf_dir, table) in
 # queries/common.py, so after the warm-up below a table() call runs no
 # footer-read job either.
