@@ -87,7 +87,6 @@ def read_json_with_quarantine(
     spark: SparkSession,
     path: str,
     schema: T.StructType,
-    corrupt_col: str = "_corrupt_record",
 ):
     """PERMISSIVE JSON read split into (good, quarantine) — the
     source-level twin of the cursor path's malformed-row passthrough
@@ -111,6 +110,7 @@ def read_json_with_quarantine(
     so struct-nullness alone under-detects — the corrupt column
     catches both that case and unparseable text.
     """
+    corrupt_col = "_corrupt_record"
     full = T.StructType(
         [*schema.fields, T.StructField(corrupt_col, T.StringType(), True)]
     )

@@ -36,7 +36,6 @@ def incremental_filter(
     cursors: DataFrame,
     keys: tuple[str, ...] = ("station_id", "pollutant"),
     ts_col: str = "timestamp",
-    cursor_ts: str = "last_observed_at",
 ) -> tuple[DataFrame, DataFrame]:
     """Return (fresh_or_malformed_rows, pending_cursor_updates).
 
@@ -46,6 +45,7 @@ def incremental_filter(
     cursor (reference app/main.py:223-231). Updates are the max ts per
     key over the kept well-formed rows.
     """
+    cursor_ts = "last_observed_at"
     is_malformed = reduce(
         or_, [F.col(k).isNull() for k in keys], F.col(ts_col).isNull()
     )

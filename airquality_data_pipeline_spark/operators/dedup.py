@@ -10,8 +10,9 @@ in the hot path) so they survive 100 TB:
   - minhash: explode to (doc, shingle), per-doc min of k cheap hashes —
     map-side partial agg; candidate pairs via equi-join on
     (seed, minhash) buckets, never a cross join.
-  - simhash: 32-bit majority fingerprint; hamming-ball pairing via
-    banded equi-join.
+  - simhash: 64-bit majority fingerprint over word 3-grams by default
+    (32 bits / tokens on request); hamming-ball pairing via banded
+    equi-join.
   - ngram jaccard: verification step over candidate pairs only.
 """
 
@@ -191,7 +192,6 @@ def minhash_candidate_pairs(
 def ngram_jaccard_pairs(
     shingles: DataFrame,
     threshold: float,
-    scale: int = 6,
     sizes: DataFrame | None = None,
 ) -> DataFrame:
     """Exact Jaccard over shingle sets for pairs sharing >= 1 shingle:
@@ -249,7 +249,7 @@ def ngram_jaccard_pairs(
             F.round(
                 F.col("n_inter")
                 / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter")).cast("double"),
-                scale,
+                6,
             ),
         )
     )
@@ -420,11 +420,10 @@ def simhash_band_candidates(
     )
 
 
-def minhash_sig_expr(
-    text: Column, n: int = 3, num_hashes: int = 16
-) -> Column:
-    """Per-ROW MinHash signature key: the same ':'-joined signature
-    string q67 builds via explode + groupBy, computed as one row-local
+def minhash_sig_expr(text: Column) -> Column:
+    """Per-ROW MinHash signature key over word 3-grams and all 16
+    MINHASH_PARAMS seeds: the same ':'-joined signature string q67
+    builds via explode + groupBy, computed as one row-local
     expression (shingle array -> md5 base hash per shingle ->
     array_min of (a*h+b) mod P per seed). No explode, no aggregate, no
     shuffle — which is exactly what makes signature-identical near-dup
@@ -434,7 +433,7 @@ def minhash_sig_expr(
     (streaming/jobs.neardup_suppression_stream). Pinned equal to the
     minhash_signatures aggregate in tests.
 
-    Docs with no shingles (< n tokens) get the empty-set sentinel
+    Docs with no shingles (< 3 tokens) get the empty-set sentinel
     'EMPTY' — every such doc shares it, matching the aggregate path's
     behavior of dropping them from signatures (callers treat them as
     one degenerate cluster or filter them out).
@@ -442,12 +441,12 @@ def minhash_sig_expr(
     toks = F.split(F.lower(F.trim(text)), r"\s+")
     # bind the base-hash array once: ONE md5 per shingle, then 16 cheap
     # modular folds over the numeric array (r5 — the digest used to sit
-    # inside every per-seed lambda, costing num_hashes md5 passes)
+    # inside every per-seed lambda, costing 16 md5 passes)
     return let(
         toks,
         lambda t: let(
             F.transform(
-                shingle_array(t, n),
+                shingle_array(t, 3),
                 lambda s: F.conv(F.substring(F.md5(s), 1, 7), 16, 10).cast(
                     "bigint"
                 ),
@@ -463,7 +462,7 @@ def minhash_sig_expr(
                                 % F.lit(MINHASH_P),
                             )
                         ).cast("string")
-                        for a, b in MINHASH_PARAMS[:num_hashes]
+                        for a, b in MINHASH_PARAMS
                     ],
                 )
             ),

@@ -43,17 +43,16 @@ def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
     id_col: str = "id",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
     max_iter: int = 20,
 ) -> DataFrame:
-    """Return (id, component) with component = min node id reachable.
-    Nodes absent from any edge form singleton components."""
+    """Return (id, component) with component = min node id reachable
+    over the (id_a, id_b) edges. Nodes absent from any edge form
+    singleton components."""
     sym = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(
             edges.select(
-                F.col(dst_col).alias("src"), F.col(src_col).alias("dst")
+                F.col("id_b").alias("src"), F.col("id_a").alias("dst")
             )
         )
         .distinct()
@@ -102,8 +101,6 @@ def connected_components_star(
     nodes: DataFrame,
     edges: DataFrame,
     id_col: str = "id",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
     max_iter: int = 30,
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star
@@ -121,11 +118,11 @@ def connected_components_star(
     budget or a monotone changed-edge counter to save the two extra
     shuffles per round.
 
-    Returns (id, component) with component = min reachable node id;
-    isolated nodes are singletons.
+    Returns (id, component) with component = min node id reachable
+    over the (id_a, id_b) edges; isolated nodes are singletons.
     """
     e = _sym(
-        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
+        edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
     ).localCheckpoint()
     for _ in range(max_iter):
         # large-star: m = min(N(u) + {u}); emit (v, m) for v > u

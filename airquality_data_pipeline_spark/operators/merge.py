@@ -22,12 +22,12 @@ def coalesce_merge(
     target: DataFrame,
     source: DataFrame,
     key: str,
-    value_cols: list[str] | None = None,
 ) -> DataFrame:
     """Upsert source into target on `key`; matched rows take
-    COALESCE(source.col, target.col) per value column; unmatched rows
-    from either side carry through unchanged."""
-    value_cols = value_cols or [c for c in target.columns if c != key]
+    COALESCE(source.col, target.col) per value column (every target
+    column but `key`); unmatched rows from either side carry through
+    unchanged."""
+    value_cols = [c for c in target.columns if c != key]
     t = target.select(key, *[F.col(c).alias(f"_t_{c}") for c in value_cols])
     s = source.select(key, *[F.col(c).alias(f"_s_{c}") for c in value_cols])
     return t.join(s, key, "full_outer").select(

@@ -2,12 +2,10 @@
 columns with typed metadata, processed by Arrow-batched Pandas functions
 over mapInPandas.
 
-The container has no image/audio codecs, so the *decode* step is stubbed:
-``decode_mode="fake"`` (default) produces a deterministic feature from
-the raw bytes so the whole distributed path — schema, partitioning,
-batch iteration, UDF signatures — is real and testable;
-``decode_mode="real"`` raises NotImplementedError until a codec library
-(PIL / torchaudio / pyav) is installed.
+Image/audio codecs (PIL / torchaudio / pyav) are out of scope, so the
+*decode* step is stubbed: a deterministic feature from the raw bytes
+keeps the whole distributed path — schema, partitioning, batch
+iteration, UDF signatures — real and testable.
 
 Scale notes: payloads stay in executor memory only for the life of one
 Arrow batch; feature extraction is embarrassingly parallel (no shuffle);
@@ -89,28 +87,16 @@ def _fake_decode(payload: bytes) -> list[float]:
     return [c / total for c in counts]
 
 
-def _real_decode(payload: bytes, modality: str) -> list[float]:
-    raise NotImplementedError(
-        "real decode needs a codec library (PIL/pyav/torchaudio) which is "
-        "not installed in this environment; use decode_mode='fake'"
-    )
-
-
-def extract_features(df: DataFrame, decode_mode: str = "fake") -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """mapInPandas feature extraction over binary payloads.
 
     One Arrow batch in, one out; never materializes the partition. The
     decode call is the per-item stub; everything around it (batching,
     schema, null handling) is the production path.
     """
-    decode = _fake_decode if decode_mode == "fake" else None
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if decode is None:
-                pdf.apply(
-                    lambda r: _real_decode(r["payload"], r["modality"]), axis=1
-                )
             yield pd.DataFrame(
                 {
                     "item_id": pdf["item_id"],
@@ -118,7 +104,7 @@ def extract_features(df: DataFrame, decode_mode: str = "fake") -> DataFrame:
                     "n_bytes": pdf["payload"].map(
                         lambda p: 0 if p is None else len(p)
                     ),
-                    "feature": pdf["payload"].map(decode),
+                    "feature": pdf["payload"].map(_fake_decode),
                 }
             )
 
@@ -154,13 +140,13 @@ def frame_sample(df: DataFrame, n_frames: int = 4) -> DataFrame:
     return df.mapInPandas(op, schema=out_schema)
 
 
-def resize_image(df: DataFrame, height: int = 4, width: int = 4) -> DataFrame:
-    """Image-resize stub over mapInPandas: produce a fixed (height x
-    width) grid per payload — the deterministic fake maps evenly-spaced
+def resize_image(df: DataFrame) -> DataFrame:
+    """Image-resize stub over mapInPandas: produce a fixed 4x4 grid per
+    payload — the deterministic fake maps evenly-spaced
     byte windows to their mean (a real deployment swaps the window-mean
     for PIL's `Image.resize` after decode; schema, batching and output
-    shape are identical). Output: item_id, grid (height*width floats,
-    row-major), n_bytes."""
+    shape are identical). Output: item_id, grid (16 floats, row-major),
+    n_bytes."""
     out_schema = T.StructType(
         [
             T.StructField("item_id", T.LongType(), False),
@@ -168,7 +154,7 @@ def resize_image(df: DataFrame, height: int = 4, width: int = 4) -> DataFrame:
             T.StructField("n_bytes", T.IntegerType(), True),
         ]
     )
-    cells = height * width
+    cells = 4 * 4
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -9,6 +9,9 @@ Scale design: the query set is broadcast (it is the small side by
 construction); candidate vectors stream through executors partition-local,
 so the only shuffle is the final per-query top-k. IVF cuts the candidate
 set per query by the centroid bucket before any pairwise math.
+
+Every operator takes the embeddings frame and reads its (vec_id,
+embedding) columns.
 """
 
 from __future__ import annotations
@@ -28,19 +31,17 @@ def _dot(a: Column, b: Column) -> Column:
     )
 
 
-def with_norm(
-    df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
-) -> DataFrame:
-    """Project to (id, v: array<double>, nrm: double).
+def with_norm(df: DataFrame) -> DataFrame:
+    """Project (vec_id, embedding) to (id, v: array<double>, nrm: double).
 
     The input goes through fan_out first: embedding fixtures arrive as
     one parquet split, and everything downstream (pairwise folds) is
     CPU-bound.
     """
-    return _norm_projection(fan_out(df), vec_col, id_col)
+    return _norm_projection(fan_out(df))
 
 
-def _norm_projection(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
+def _norm_projection(df: DataFrame) -> DataFrame:
     """with_norm's projection without the fan-out exchange — for
     bounded side-inputs (centroid seeds) where a full-corpus
     repartition ahead of a pushed-down filter would be wasted.
@@ -52,15 +53,15 @@ def _norm_projection(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
     fold > 0) is computed identically by the DuckDB oracles' nested
     `WHERE nrm > 0`. cosine() additionally uses try_divide — see its
     docstring for why the filter alone is not a sound ANSI guard."""
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     return df.select(
-        F.col(id_col).alias("id"),
+        F.col("vec_id").alias("id"),
         v.alias("v"),
         F.sqrt(_dot(v, v)).alias("nrm"),
     ).where(F.col("nrm") > 0)
 
 
-def cosine(a_v: Column, a_n: Column, b_v: Column, b_n: Column, scale: int = 6) -> Column:
+def cosine(a_v: Column, a_n: Column, b_v: Column, b_n: Column) -> Column:
     """Rounded cosine similarity — rounding makes ranking/thresholding
     deterministic across engines (fold-order ULP noise is ~1e-16,
     far below the 5e-7 grid).
@@ -72,19 +73,17 @@ def cosine(a_v: Column, a_n: Column, b_v: Column, b_n: Column, scale: int = 6) -
     evaluation on a to-be-filtered row would throw DIVIDE_BY_ZERO
     (observed: q107's pushed-down window filter, r6 zero-vector
     sweep). NULL only ever appears on rows the norm filter drops."""
-    return F.round(F.try_divide(_dot(a_v, b_v), a_n * b_n), scale)
+    return F.round(F.try_divide(_dot(a_v, b_v), a_n * b_n), 6)
 
 
 def cosine_topk(
     emb: DataFrame,
     query_pred: Column,
     k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Exact top-k nearest (cosine) for each query vector (rows matching
     query_pred), excluding self. Ties broken by candidate id ascending."""
-    n = with_norm(emb, vec_col, id_col)
+    n = with_norm(emb)
     q = n.where(query_pred).select(
         F.col("id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
     )
@@ -104,13 +103,11 @@ def cosine_topk(
 def neardup_pairs(
     emb: DataFrame,
     threshold: float,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """All (a < b) pairs with cosine >= threshold. Brute force — at scale
     gate the candidate set first (IVF bucket equi-join or LSH banding),
     then run this as the verification step."""
-    n = with_norm(emb, vec_col, id_col)
+    n = with_norm(emb)
     a = n.select(
         F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
     )
@@ -195,27 +192,19 @@ def hyperplane_lsh(
     emb: DataFrame,
     n_bits: int = 16,
     dim: int = 64,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Sign-LSH signature per vector: bit j = [cos-side of hyperplane j]
     = [round(v . h_j, 6) >= 0]. Vectors with equal signatures land in
     the same candidate bucket — the similarity analog of MinHash
     banding, and the scale path for near-dup mining (bucket equi-join
     instead of all-pairs). Output: (id, sig) with sig a bit-string."""
-    return _sig_from_normed(with_norm(emb, vec_col, id_col), n_bits, dim)
+    return _sig_from_normed(with_norm(emb), n_bits, dim)
 
 
-def planted_neardup_corpus(
-    emb: DataFrame,
-    every: int = 5,
-    id_offset: int = 100000,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Corpus with deterministic planted near-duplicates: every
-    `every`-th vector gains a replica (id + id_offset) whose component i
-    is jittered by ((id*31 + i*7) % 11 - 5) * 1e-3 — cosine vs the
+def planted_neardup_corpus(emb: DataFrame) -> DataFrame:
+    """Corpus with deterministic planted near-duplicates: every 5th
+    vector gains a replica (vec_id + 100000) whose component i is
+    jittered by ((id*31 + i*7) % 11 - 5) * 1e-3 — cosine vs the
     original ~0.9999 on unit-ish Gaussian vectors. Integer-derived and
     float->double widening only, so any engine reproduces the exact
     same doubles (the q45 oracle builds the identical corpus in SQL).
@@ -223,21 +212,21 @@ def planted_neardup_corpus(
     Gaussian (max natural pairwise cosine ~0.51): without planting
     there is nothing in the >= 0.9 regime near-dup mining targets."""
     base = emb.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias(vec_col),
+        F.col("vec_id"),
+        F.col("embedding").cast("array<double>").alias("embedding"),
     )
     jittered = F.transform(
-        F.col(vec_col),
+        F.col("embedding"),
         lambda x, i: x
-        + (((F.col(id_col) * 31 + i * 7) % 11 - 5).cast("double") * 0.001),
+        + (((F.col("vec_id") * 31 + i * 7) % 11 - 5).cast("double") * 0.001),
     )
     # two-stage select: jittering and re-idding in ONE projection makes
     # the lambda's outer id reference resolve against the renamed output
-    # column (jitter computed with id + id_offset) instead of the input
+    # column (jitter computed with id + 100000) instead of the input
     planted = (
-        base.where(F.col(id_col) % every == 0)
-        .select(F.col(id_col), jittered.alias(vec_col))
-        .select((F.col(id_col) + id_offset).alias(id_col), F.col(vec_col))
+        base.where(F.col("vec_id") % 5 == 0)
+        .select(F.col("vec_id"), jittered.alias("embedding"))
+        .select((F.col("vec_id") + 100000).alias("vec_id"), F.col("embedding"))
     )
     return base.unionByName(planted)
 
@@ -247,9 +236,6 @@ def lsh_gated_neardup(
     threshold: float,
     n_bits: int = 16,
     band_bits: int = 4,
-    dim: int = 64,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Near-dup pairs at scale: sign-LSH banding generates candidates
     (pairs sharing ANY band of the signature — an equi-join on
@@ -285,8 +271,8 @@ def lsh_gated_neardup(
     # re-evaluating the scan + 16 projection folds per consumer (guide
     # §3.3, the minhash_candidate_pairs pattern). Measured q45 at
     # sf0.1 (warm, alternating): ~4.6 -> ~3.3 s.
-    n = with_norm(emb, vec_col, id_col).localCheckpoint()
-    sigs = _sig_from_normed(n, n_bits, dim).localCheckpoint()
+    n = with_norm(emb).localCheckpoint()
+    sigs = _sig_from_normed(n, n_bits, 64).localCheckpoint()  # 64-dim embeddings
     bands = sigs.select(
         "id",
         F.explode(
@@ -331,30 +317,25 @@ def lsh_gated_neardup(
     )
 
 
-def sqrt_k_centroids(
-    emb: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    floor_k: int = 8,
-) -> DataFrame:
-    """Centroid seed frame with k = max(floor_k, floor(sqrt(n))) derived
+def sqrt_k_centroids(emb: DataFrame) -> DataFrame:
+    """Centroid seed frame with k = max(8, floor(sqrt(n))) derived
     INSIDE the plan (a 1-row count aggregate cross-joined into the seed
     filter) — no driver-side `corpus.count()` job at plan build (r7
     verdict item). floor(sqrt(CAST n AS DOUBLE)) is IEEE-identical on
     Spark and DuckDB for any n < 2^52, so oracles pin the same k with
-    `greatest(floor_k, CAST(floor(sqrt(count(*))) AS BIGINT))`. Cost at
+    `greatest(8, CAST(floor(sqrt(count(*))) AS BIGINT))`. Cost at
     execution: one extra count scan of `emb` inside the (broadcast)
     centroid subtree — at real scale k comes from table statistics or a
     parameter instead; this helper exists for oracle-replicable
     sqrt-scaled k."""
     kframe = emb.agg(
         F.greatest(
-            F.lit(floor_k).cast("long"),
+            F.lit(8).cast("long"),
             F.floor(F.sqrt(F.count(F.lit(1)))).cast("long"),
         ).alias("_k")
     )
     return (
-        _norm_projection(emb, vec_col, id_col)
+        _norm_projection(emb)
         .crossJoin(F.broadcast(kframe))
         .where(F.col("id") < F.col("_k"))
         .select("id", "v", "nrm")
@@ -364,8 +345,6 @@ def sqrt_k_centroids(
 def ivf_assign(
     emb: DataFrame,
     centroid_pred: Column | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF coarse quantizer: centroid seed vectors are the rows matching
@@ -398,13 +377,13 @@ def ivf_assign(
     if centroids is None:
         if centroid_pred is None:
             raise ValueError("ivf_assign: pass centroid_pred or centroids")
-        centroids = _norm_projection(emb, vec_col, id_col).where(centroid_pred)
+        centroids = _norm_projection(emb).where(centroid_pred)
     cents_row = centroids.agg(
         F.sort_array(
             F.collect_list(F.struct(F.col("id"), F.col("v"), F.col("nrm")))
         ).alias("_cents")
     )
-    n = with_norm(emb, vec_col, id_col)
+    n = with_norm(emb)
     sims = F.transform(
         F.col("_cents"),
         lambda c: F.round(
@@ -438,12 +417,7 @@ def ivf_assign(
     )
 
 
-def kmeans_step(
-    emb: DataFrame,
-    centroid_pred: Column,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def kmeans_step(emb: DataFrame, centroid_pred: Column) -> DataFrame:
     """One Lloyd iteration over the IVF assignment: per cluster, the
     member count, the mean member-to-centroid cosine (the inertia
     proxy), and the L2 norm of the NEW centroid (the element-wise mean
@@ -461,7 +435,7 @@ def kmeans_step(
     norm-squared sum are exact decimal arithmetic on both engines
     (doubles only at the final sqrt, which IEEE 754 rounds correctly).
     """
-    assigned = ivf_assign(emb, centroid_pred, vec_col, id_col)
+    assigned = ivf_assign(emb, centroid_pred)
     # single pass over the assignment: referencing `assigned` from two
     # aggregation branches re-runs the (expensive) assignment subtree —
     # per-branch column pruning makes the exchanges non-identical, so
@@ -518,13 +492,11 @@ def ivf_topk(
     query_pred: Column,
     centroid_pred: Column,
     k: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Approximate top-k: search only the query's IVF bucket (nprobe=1).
     The pairwise join is an equi-join on bucket — candidate work per
     query drops by ~n_centroids vs brute force."""
-    assigned = ivf_assign(emb, centroid_pred, vec_col, id_col)
+    assigned = ivf_assign(emb, centroid_pred)
     q = assigned.where(query_pred).select(
         F.col("id").alias("query_id"),
         F.col("v").alias("qv"),
@@ -549,8 +521,6 @@ def ivf_topk_multiprobe(
     centroid_pred: Column,
     k: int = 3,
     nprobe: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """IVF top-k with nprobe > 1: each query searches its `nprobe`
     nearest centroid buckets instead of only the closest — the standard
@@ -564,13 +534,13 @@ def ivf_topk_multiprobe(
     bucket equi-join, not the assignment cost. Each data vector lives in
     exactly one bucket, so no candidate dedup is needed.
     """
-    n = with_norm(emb, vec_col, id_col)
+    n = with_norm(emb)
     cents = n.where(centroid_pred).select(
         F.col("id").alias("cent_id"),
         F.col("v").alias("cv"),
         F.col("nrm").alias("cn"),
     )
-    assigned = ivf_assign(emb, centroid_pred, vec_col, id_col)
+    assigned = ivf_assign(emb, centroid_pred)
     q_scored = (
         n.where(query_pred)
         .crossJoin(F.broadcast(cents))
@@ -605,8 +575,6 @@ def product_quantize(
     centroid_pred: Column,
     n_sub: int = 8,
     dim: int = 64,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Product quantization: the 100 TB embedding-compression step of an
     IVF-PQ index. The vector splits into n_sub contiguous subvectors;
@@ -630,7 +598,7 @@ def product_quantize(
     order-independent. Output: (id, pq_code 'c0:...:c{n_sub-1}',
     recon_err)."""
     sub = dim // n_sub
-    n = with_norm(emb, vec_col, id_col)
+    n = with_norm(emb)
     subvecs = n.select(
         "id",
         F.posexplode(
@@ -679,82 +647,3 @@ def product_quantize(
         )
     )
 
-
-def ivf_assign_matmul(
-    emb: DataFrame,
-    centroid_pred: Column,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Large-k IVF coarse quantizer: ivf_assign's contract (bucket =
-    max-cosine centroid, ties to the lowest cent_id) computed as an
-    Arrow-batched BLOCKED MATMUL instead of k inlined fold expressions.
-
-    ivf_assign's generated code grows linearly with k — fine to a few
-    hundred centroids (the registered queries' regime), uncompilable at
-    the k ~ sqrt(n) of a 100 TB corpus (10^4-10^5 centroids, the
-    SemDeDup/IVF regime PLANS.md flags). Here the prenormalized
-    centroid matrix ships once per executor as an explicit Spark
-    broadcast, and each Arrow batch does one (batch x d) @ (d x k)
-    BLAS call — the KMeansModel.transform shape: zero shuffles, work
-    linear in rows, centroid count bounded only by executor memory
-    (10^5 x 64 doubles = 51 MB).
-
-    Two deliberate differences from ivf_assign: sims are argmaxed
-    UNROUNDED (the fold path rounds to 6 decimals for DuckDB oracle
-    exactness; this scale path has no oracle — cent_sim is rounded on
-    output only, on the SAME half-up 1e-6 grid as the fold path's
-    F.round), and all arithmetic is float64 end-to-end (the q219
-    float32-product lesson). Exact ties still break to the lowest
-    cent_id: centroid columns are laid out in id order and np.argmax
-    returns the first maximum.
-    """
-    import numpy as np
-
-    cents = (
-        _norm_projection(emb, vec_col, id_col).where(centroid_pred).collect()
-    )
-    cents.sort(key=lambda r: r.id)
-    if not cents:
-        raise ValueError("ivf_assign_matmul: centroid_pred matched no rows")
-    ct = (
-        np.asarray([list(r.v) for r in cents], dtype=np.float64)
-        / np.asarray([r.nrm for r in cents], dtype=np.float64)[:, None]
-    ).T  # d x k, prenormalized so the matmul yields cosine directly
-    cids = np.asarray([r.id for r in cents], dtype=np.int64)
-    bc = emb.sparkSession.sparkContext.broadcast((ct, cids))
-
-    def assign(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        ct_, cids_ = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = _np.stack(pdf["v"].to_numpy()).astype(_np.float64)
-            s = (x @ ct_) / pdf["nrm"].to_numpy()[:, None]
-            j = _np.argmax(s, axis=1)
-            top = s[_np.arange(len(j)), j]
-            # HALF_UP (away from zero) on the 1e-6 grid — the same
-            # convention as the fold path's F.round; np.round's
-            # half-to-even differed by one quantum at exact halves
-            # (r6 ADVICE item)
-            yield _pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "v": pdf["v"],
-                    "nrm": pdf["nrm"],
-                    "bucket": cids_[j],
-                    "cent_sim": _np.trunc(
-                        top * 1e6 + _np.copysign(0.5, top)
-                    )
-                    / 1e6,
-                }
-            )
-
-    return with_norm(emb, vec_col, id_col).mapInPandas(
-        assign,
-        schema="id long, v array<double>, nrm double, "
-        "bucket long, cent_sim double",
-    )

@@ -44,19 +44,17 @@ def cms_build(
     toks: DataFrame,
     tok_col: str = "tok",
     weight_col: str | None = None,
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
 ) -> DataFrame:
     """Build the (r, col, counter) grid from a token DataFrame — one
     row per token OCCURRENCE (or per token with `weight_col` giving the
     occurrence count; building from a pre-aggregated count is the same
-    grid, cheaper). Plan: broadcast the depth-row hash index, one
+    grid, cheaper). Plan: broadcast the CMS_DEPTH-row hash index, one
     groupBy(r, col) with map-side partial sums — the shuffle carries at
-    most depth*width rows regardless of input size."""
+    most CMS_DEPTH*CMS_WIDTH rows regardless of input size."""
     w = F.col(weight_col) if weight_col else F.lit(1)
-    pos = toks.crossJoin(F.broadcast(_rows(toks, depth))).select(
+    pos = toks.crossJoin(F.broadcast(_rows(toks, CMS_DEPTH))).select(
         F.col("r"),
-        cms_position(F.col(tok_col), F.col("r"), width).alias("col"),
+        cms_position(F.col(tok_col), F.col("r")).alias("col"),
         w.alias("w"),
     )
     return pos.groupBy("r", "col").agg(F.sum("w").alias("counter"))
@@ -76,16 +74,15 @@ def cms_estimate(
     sketch: DataFrame,
     probes: DataFrame,
     tok_col: str = "tok",
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
 ) -> DataFrame:
-    """Point-estimate counts for the probe tokens: min over the depth
+    """Point-estimate counts for the probe tokens: min over the CMS_DEPTH
     counters at each token's positions. The sketch side is at most
-    depth*width rows — broadcast it; the probe side never shuffles."""
-    pos = probes.crossJoin(F.broadcast(_rows(probes, depth))).select(
+    CMS_DEPTH*CMS_WIDTH rows — broadcast it; the probe side never
+    shuffles."""
+    pos = probes.crossJoin(F.broadcast(_rows(probes, CMS_DEPTH))).select(
         F.col(tok_col),
         "r",
-        cms_position(F.col(tok_col), F.col("r"), width).alias("col"),
+        cms_position(F.col(tok_col), F.col("r")).alias("col"),
     )
     return (
         pos.join(F.broadcast(sketch), ["r", "col"])

@@ -328,7 +328,6 @@ def chunk_fingerprints(
     text_col: str,
     id_col: str,
     chunk_size: int = 64,
-    hash_hex_len: int = 15,
     keep_chunk: bool = False,
 ) -> DataFrame:
     """Content-chunk document fingerprinting: the text is cut into
@@ -337,18 +336,14 @@ def chunk_fingerprints(
     chars at the same alignment share a chunk hash (the
     partial-overlap / shared-passage signal exact-doc dedup misses).
 
-    Hash width vs key width (hash_hex_len = leading hex digits of
-    md5(chunk) kept):
-      * 15 (default) -> 60-bit BIGINT key: 8-byte shuffle rows.
-        Birthday bound ~ n^2 / 2^61 collisions among n distinct chunks
-        — negligible below ~10^8 chunks (p < 0.5% at 10^8), which covers
-        any single-corpus audit; a collision makes downstream dedup
-        silently drop a unique chunk, so
-      * 32 -> the full 128-bit digest as a hex STRING key for
-        100 TB-scale chunk dedup (~10^12 chunks): 32-byte shuffle rows,
-        collision probability ~ 10^-15.
-    The earlier 31-bit Rabin-Karp fold collided at ~10^5 chunks and is
-    gone; md5 is also what a SQL oracle reproduces bit-exactly.
+    The key is the leading 15 hex digits (60 bits, the widest
+    signed-bigint-safe cut) of md5(chunk) as a BIGINT: 8-byte shuffle
+    rows. Birthday bound ~ n^2 / 2^61 collisions among n distinct
+    chunks — negligible below ~10^8 chunks (p < 0.5% at 10^8), which
+    covers any single-corpus audit; a collision makes downstream dedup
+    silently drop a unique chunk. The earlier 31-bit Rabin-Karp fold
+    collided at ~10^5 chunks and is gone; md5 is also what a SQL oracle
+    reproduces bit-exactly.
 
     All per-row JVM-side work (substring + md5, whole-stage codegen):
     the only wide operation a consumer adds is the groupBy on
@@ -367,12 +362,7 @@ def chunk_fingerprints(
         F.col(id_col).alias("id"),
         F.posexplode(chunks).alias("chunk_idx", "chunk"),
     )
-    digest = F.substring(F.md5(F.col("chunk")), 1, hash_hex_len)
-    hashed = (
-        F.conv(digest, 16, 10).cast("long")
-        if hash_hex_len <= 15  # 60 bits: the widest signed-bigint-safe cut
-        else digest
-    )
+    hashed = F.conv(F.substring(F.md5(F.col("chunk")), 1, 15), 16, 10).cast("long")
     return exploded.select(
         "id",
         "chunk_idx",
@@ -389,20 +379,20 @@ BLOOM_K = 3
 BLOOM_M = 1 << 22  # 4 Mi bits = 512 KiB bitmap
 
 
-def _bloom_pos(shingle: Column, j: int, m: int = BLOOM_M) -> Column:
+def _bloom_pos(shingle: Column, j: int) -> Column:
     """Bit position j for a shingle: hex digits [6j+1, 6j+6] (24 bits)
-    of ONE md5(shingle), mod m. All k positions slice the same digest
+    of ONE md5(shingle), mod BLOOM_M. All k positions slice the same digest
     (the standard one-hash/k-slices bloom construction — stronger than
     Kirsch-Mitzenmacher double hashing), so the k probes cost ONE md5
     per shingle: the identical subexpressions are eliminated by
     whole-stage codegen (was k salted digests = k md5s). md5-derived so
     ANY engine computes the identical position — the whole bloom gate
     is hash-match checkable against a SQL oracle, unlike an
-    engine-internal sketch format. 24 bits per slice covers m up to
-    2^24; md5's 32 hex chars bound k * 6 <= 32 (k <= 5)."""
-    assert m <= 1 << 24 and 6 * j + 6 <= 32
+    engine-internal sketch format. 24 bits per slice covers BLOOM_M up
+    to 2^24; md5's 32 hex chars bound k * 6 <= 32 (k <= 5)."""
+    assert BLOOM_M <= 1 << 24 and 6 * j + 6 <= 32
     h = F.md5(shingle)
-    return F.conv(F.substring(h, 6 * j + 1, 6), 16, 10).cast("long") % m
+    return F.conv(F.substring(h, 6 * j + 1, 6), 16, 10).cast("long") % BLOOM_M
 
 
 def bloom_contamination(
@@ -411,8 +401,6 @@ def bloom_contamination(
     text_col: str,
     id_col: str,
     n: int = 8,
-    k: int = BLOOM_K,
-    m: int = BLOOM_M,
 ) -> DataFrame:
     """Bloom-style decontamination gate — the broadcast-only fast path
     for `ngram_contamination` at corpus scale, expressed ENTIRELY
@@ -430,7 +418,8 @@ def bloom_contamination(
     the executed plan), so NO shuffle touches the train shingles before
     the per-doc aggregate. Broadcast size is min(k * |bench n-grams|,
     m) distinct longs — benchmark-bounded, never train-bounded, and
-    never more than 2^24 (`_bloom_pos` asserts m <= 2^24).
+    never more than 2^24 (`_bloom_pos` asserts m <= 2^24). Here
+    k = BLOOM_K and m = BLOOM_M.
 
     Guarantee: no false negatives (every truly contaminated doc is
     flagged); false positives at ~(1-e^{{-kn/m}})^k. The production
@@ -447,7 +436,7 @@ def bloom_contamination(
     bpos = (
         bench_sh.select(
             F.explode(
-                F.array(*[_bloom_pos(F.col("shingle"), j, m) for j in range(k)])
+                F.array(*[_bloom_pos(F.col("shingle"), j) for j in range(BLOOM_K)])
             ).alias("pos")
         )
         .distinct()
@@ -456,21 +445,21 @@ def bloom_contamination(
     train_sh = word_shingles(train, text_col=text_col, id_col=id_col, n=n)
     t = train_sh.select(
         "id",
-        *[_bloom_pos(F.col("shingle"), j, m).alias(f"_p{j}") for j in range(k)],
+        *[_bloom_pos(F.col("shingle"), j).alias(f"_p{j}") for j in range(BLOOM_K)],
     )
     # k broadcast left joins against the SAME distinct-position build
     # plan (aliases canonicalize away -> one exchange, reused k-1
     # times); `pos` is non-null exactly when the probe hits, renamed
     # per probe so later joins stay unambiguous. bpos is distinct, so
     # a left join can never duplicate train rows.
-    for j in range(k):
+    for j in range(BLOOM_K):
         b = bpos.alias(f"_b{j}")
         t = t.join(
             F.broadcast(b), F.col(f"_p{j}") == b["pos"], "left"
         ).withColumnRenamed("pos", f"_hit{j}")
     maybe = reduce(
         lambda a, c: a & c,
-        [F.col(f"_hit{j}").isNotNull() for j in range(k)],
+        [F.col(f"_hit{j}").isNotNull() for j in range(BLOOM_K)],
     )
     per_doc = t.groupBy("id").agg(
         F.count(F.lit(1)).alias("n_ngrams"),
@@ -629,7 +618,7 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 
-def bm25_expr(k1: float = BM25_K1, b: float = BM25_B) -> str:
+def bm25_expr() -> str:
     """The per-(query-term, doc) BM25 contribution as ANSI SQL text over
     columns (tf, df, dl, n, avgdl) — one string, two engines: Spark
     evaluates it via F.expr, DuckDB verbatim. Identical expression tree
@@ -638,8 +627,8 @@ def bm25_expr(k1: float = BM25_K1, b: float = BM25_B) -> str:
     quantization in the caller's sum)."""
     return (
         f"ln(1 + (n - df + 0.5) / (df + 0.5))"
-        f" * (tf * {k1 + 1.0!r})"
-        f" / (tf + {k1!r} * (1 - {b!r} + {b!r} * dl / avgdl))"
+        f" * (tf * {BM25_K1 + 1.0!r})"
+        f" / (tf + {BM25_K1!r} * (1 - {BM25_B!r} + {BM25_B!r} * dl / avgdl))"
     )
 
 
@@ -649,8 +638,6 @@ def bm25_topk(
     text_col: str,
     id_col: str,
     k: int = 10,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
 ) -> DataFrame:
     """BM25 top-k retrieval over the corpus for a bounded query set —
     the lexical-search sibling of cosine_topk (q44), and the retrieval
@@ -691,7 +678,7 @@ def bm25_topk(
         F.count(F.lit(1)).alias("n"),
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
     )
-    contrib = F.expr(bm25_expr(k1, b))
+    contrib = F.expr(bm25_expr())
     scored = (
         tf.join(F.broadcast(queries), "term")
         .join(F.broadcast(dfreq), "term")

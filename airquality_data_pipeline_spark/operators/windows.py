@@ -209,10 +209,8 @@ def global_ntile(
 def exact_decile_edges(
     df: DataFrame,
     value_col: str,
-    *,
-    out_col: str = "qs",
 ) -> DataFrame:
-    """1-row frame whose `out_col` is the 9-element array of exact
+    """1-row frame whose `qs` column is the 9-element array of exact
     decile edges: edge i = the ceil(i*n/10)-th smallest value
     (1-based), an order statistic that is deterministic under ties and
     — unlike pairing percentile_approx against DuckDB's quantile_disc
@@ -269,6 +267,6 @@ def exact_decile_edges(
                 lambda i: F.get(
                     F.filter(F.col("__s"), lambda s: s["__i"] == i), 0
                 )["__edge"],
-            ).alias(out_col)
+            ).alias("qs")
         )
     )

@@ -502,8 +502,8 @@ def q101_pii_scrub(spark, sf_dir):
 # 64-char chunk; per doc, how many of its chunks also appear (same hash)
 # in at least one other document: the partial-overlap / shared-passage
 # signal that exact-doc dedup misses. The only shuffle keys are the
-# 8-byte chunk hash and the doc id (hash_hex_len=32 upgrades to the full
-# 128-bit digest for 100 TB corpora — see operators/text.py docstring).
+# 8-byte chunk hash and the doc id (collision bound in the
+# operators/text.chunk_fingerprints docstring).
 # --------------------------------------------------------------------------
 @register(
     "q102_chunk_fingerprints",

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from airquality_data_pipeline_spark.functions.strings import coerce_coord
 
 
-def parse_de_station_rows(df: DataFrame, json_col: str = "raw") -> DataFrame:
+def parse_de_station_rows(df: DataFrame) -> DataFrame:
     """DE catalog rows: positional array OR keyed object, one JSON text
     per row. Both candidate parses run; coalesce picks whichever shape
     matched (from_json is permissive -> null on mismatch).
@@ -32,9 +32,9 @@ def parse_de_station_rows(df: DataFrame, json_col: str = "raw") -> DataFrame:
     (app/main.py:391-394); lat/lon are accepted as lenient aliases. The
     display name falls back to the city when absent (main.py:408:
     ``location_name = name or city``)."""
-    as_list = F.from_json(F.col(json_col), "array<string>")
+    as_list = F.from_json(F.col("raw"), "array<string>")
     as_obj = F.from_json(
-        F.col(json_col),
+        F.col("raw"),
         "struct<id:string, name:string, city:string,"
         " latitude:string, longitude:string, lat:string, lon:string>",
     )
@@ -62,10 +62,10 @@ def _map_value_by_key_substring(m: Column, needle: str) -> Column:
     return F.try_element_at(F.map_values(filtered), F.lit(1))
 
 
-def parse_pl_station_rows(df: DataFrame, json_col: str = "raw") -> DataFrame:
+def parse_pl_station_rows(df: DataFrame) -> DataFrame:
     """PL catalog rows: Polish/English key fallbacks + WGS84 coordinate
     key discovery over the raw key-value map."""
-    m = F.from_json(F.col(json_col), "map<string,string>")
+    m = F.from_json(F.col("raw"), "map<string,string>")
     station_id = F.coalesce(
         m["Identyfikator stacji"], m["id"], m["stationId"]
     )
@@ -82,11 +82,11 @@ def parse_pl_station_rows(df: DataFrame, json_col: str = "raw") -> DataFrame:
     ).where(F.col("station_id").isNotNull())
 
 
-def parse_nl_station_details(df: DataFrame, json_col: str = "raw") -> DataFrame:
+def parse_nl_station_details(df: DataFrame) -> DataFrame:
     """NL station detail: nested geometry.coordinates = [lon, lat]
     (app/main.py:529-531), municipality as city."""
     s = F.from_json(
-        F.col(json_col),
+        F.col("raw"),
         "struct<number:string, location:string, municipality:string,"
         " geometry:struct<type:string, coordinates:array<double>>>",
     )
@@ -99,11 +99,11 @@ def parse_nl_station_details(df: DataFrame, json_col: str = "raw") -> DataFrame:
     ).where(F.col("station_id").isNotNull())
 
 
-def parse_de_measure_payload(df: DataFrame, json_col: str = "raw") -> DataFrame:
+def parse_de_measure_payload(df: DataFrame) -> DataFrame:
     """DE measurements: {ts: [component, scope, value, next_ts, flag]}
     (app/main.py:745-753) — a map explode + positional extraction; null
     values dropped (F1)."""
-    m = F.from_json(F.col(json_col), "map<string,array<string>>")
+    m = F.from_json(F.col("raw"), "map<string,array<string>>")
     exploded = df.select(
         F.col("station_id"), F.explode(m).alias("ts", "fields")
     )

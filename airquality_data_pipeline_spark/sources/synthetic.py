@@ -16,19 +16,18 @@ _STATIONS = ("DEBB001", "NL01001", "PL0001A")
 _POLLUTANTS = ("pm25", "pm10", "no2", "o3")
 
 
-def synthetic_measurements(
-    spark: SparkSession, n: int = 100, seed: int = 42, base_ts: str = "2024-01-01 00:00:00"
-) -> DataFrame:
+def synthetic_measurements(spark: SparkSession, n: int = 100) -> DataFrame:
     """Deterministic batch of canonical measurement records
-    (schema: io.MEASUREMENT_SCHEMA). value = round(uniform(5, 55), 2)
-    mirrors reference app/main.py:324."""
+    (schema: io.MEASUREMENT_SCHEMA), one a minute from 2024-01-01
+    00:00. value = round(uniform(5, 55), 2) with seed 42 mirrors
+    reference app/main.py:324."""
     stations = F.array(*[F.lit(s) for s in _STATIONS])
     polls = F.array(*[F.lit(p) for p in _POLLUTANTS])
     df = spark.range(n).select(
         F.col("id"),
         F.element_at(stations, (F.col("id") % 3 + 1).cast("int")).alias("station_id"),
         F.element_at(polls, (F.col("id") % 4 + 1).cast("int")).alias("pollutant"),
-        F.round(F.rand(seed) * 50 + 5, 2).alias("value"),
+        F.round(F.rand(42) * 50 + 5, 2).alias("value"),
     )
     return df.select(
         "station_id",
@@ -41,7 +40,8 @@ def synthetic_measurements(
         F.lit(None).cast("double").alias("lat"),
         F.lit(None).cast("double").alias("lon"),
         F.date_format(
-            F.lit(base_ts).cast("timestamp") + F.make_interval(mins=F.col("id").cast("int")),
+            F.lit("2024-01-01 00:00:00").cast("timestamp")
+            + F.make_interval(mins=F.col("id").cast("int")),
             "yyyy-MM-dd'T'HH:mm:ss'Z'",
         ).alias("timestamp"),
         F.lit("synthetic").alias("source"),

@@ -117,28 +117,24 @@ def corpus_curation_stream(docs: DataFrame) -> DataFrame:
     )
 
 
-def watermark_dedup(
-    events: DataFrame, delay: str = "30 minutes"
-) -> DataFrame:
+def watermark_dedup(events: DataFrame) -> DataFrame:
     """Engine-managed replacement for the reference's cursor table: drop
-    re-deliveries of the same (user, type, minute) within the watermark.
-    State is bounded by the delay — the cursor table's unbounded
-    per-key growth becomes engine-evicted state (SURVEY.md §2.8)."""
+    re-deliveries of the same (user, type, minute) within the 30-minute
+    watermark. State is bounded by the delay — the cursor table's
+    unbounded per-key growth becomes engine-evicted state (SURVEY.md §2.8)."""
     return (
         events.withColumn("minute", F.date_trunc("minute", F.col("ts")))
-        .withWatermark("ts", delay)
+        .withWatermark("ts", "30 minutes")
         .dropDuplicatesWithinWatermark(["user_id", "event_type", "minute"])
     )
 
 
-def tumbling_counts(
-    events: DataFrame, size: str = "1 hour", delay: str = "30 minutes"
-) -> DataFrame:
-    """Append-mode tumbling window aggregation; windows close when the
-    watermark passes their end."""
+def tumbling_counts(events: DataFrame) -> DataFrame:
+    """Append-mode 1-hour tumbling window aggregation; windows close when
+    the 30-minute watermark passes their end."""
     return (
-        events.withWatermark("ts", delay)
-        .groupBy(F.window("ts", size).alias("w"), "event_type")
+        events.withWatermark("ts", "30 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -150,18 +146,13 @@ def tumbling_counts(
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    size: str = "2 hours",
-    slide: str = "1 hour",
-    delay: str = "30 minutes",
-) -> DataFrame:
-    """Overlapping sliding windows (each event lands in size/slide
-    windows); append mode closes a window when the watermark passes
-    its end — the streaming twin of batch q32."""
+def sliding_counts(events: DataFrame) -> DataFrame:
+    """Overlapping 2-hour windows sliding by 1 hour (each event lands in
+    two windows); append mode closes a window when the 30-minute
+    watermark passes its end — the streaming twin of batch q32."""
     return (
-        events.withWatermark("ts", delay)
-        .groupBy(F.window("ts", size, slide).alias("w"))
+        events.withWatermark("ts", "30 minutes")
+        .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -172,14 +163,12 @@ def sliding_counts(
     )
 
 
-def session_aggregation(
-    events: DataFrame, gap: str = "30 minutes", delay: str = "30 minutes"
-) -> DataFrame:
-    """Per-user session windows (dynamic gap-merged) — the streaming twin
-    of operators.windows.sessionize."""
+def session_aggregation(events: DataFrame) -> DataFrame:
+    """Per-user session windows (30-minute gap, 30-minute watermark) —
+    the streaming twin of operators.windows.sessionize."""
     return (
-        events.withWatermark("ts", delay)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.withWatermark("ts", "30 minutes")
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
         .select(
             F.col("w.start").alias("session_start"),
@@ -213,6 +202,8 @@ def duration_seconds(duration: str) -> int:
         raise ValueError(f"unparseable duration {duration!r}")
     if unit not in _DURATION_UNIT_S:
         raise ValueError(f"unsupported duration unit in {duration!r}")
+    if count <= 0:
+        raise ValueError(f"non-positive duration {duration!r}")
     return count * _DURATION_UNIT_S[unit]
 
 
@@ -242,8 +233,6 @@ def time_shifted(
     events: DataFrame,
     job,
     time_cols,
-    days: int = 36525,
-    ts_col: str = "ts",
     window_durations=None,
 ) -> DataFrame:
     """Shift-ingest / unshift-emit adapter for PRE-1970 event time.
@@ -253,13 +242,13 @@ def time_shifted(
     micro-batch and silently dropped by any watermarked operator (the
     pinned engine envelope, tests/test_streaming_hostile.py). This
     wrapper makes historical archives streamable: add a constant
-    ``days`` interval to ``ts_col`` before the job, run the watermarked
+    36525-day interval to ``ts`` before the job, run the watermarked
     job on post-1970 time, then subtract the same interval from every
     emitted timestamp column in ``time_cols``.
 
     Correctness constraints (the caller's contract):
-    - ``days`` must push the whole archive past 1970 (the default
-      ~100 years covers 1870+; epochs are microsecond-exact under
+    - The shift (~100 years) must push the whole archive past 1970,
+      so it covers 1870+ (epochs are microsecond-exact under
       interval arithmetic, no calendar drift since the shift is in
       exact 86400 s days on a UTC-pinned session).
     - Window ALIGNMENT: tumbling/sliding windows align to epoch
@@ -276,10 +265,11 @@ def time_shifted(
       deltas) are shift-invariant, so lateness/eviction behave as if
       the archive were contemporary.
     """
+    days = 36525
     if window_durations is not None:
         validate_alignment(days, window_durations)
-    itv = F.expr(f"INTERVAL {int(days)} DAYS")
-    out = job(events.withColumn(ts_col, F.col(ts_col) + itv))
+    itv = F.expr(f"INTERVAL {days} DAYS")
+    out = job(events.withColumn("ts", F.col("ts") + itv))
     for c in time_cols:
         out = out.withColumn(c, F.col(c) - itv)
     return out
@@ -421,16 +411,12 @@ def foreach_batch_cursor_commit(events: DataFrame, cursor_store: dict) -> None:
     q.awaitTermination()
 
 
-def stream_stream_join(
-    events: DataFrame,
-    lookback: str = "2 hours",
-    delay: str = "30 minutes",
-) -> DataFrame:
+def stream_stream_join(events: DataFrame) -> DataFrame:
     """Stream-stream interval join: each purchase joined to the same
-    user's views from the preceding `lookback`. Both sides carry
+    user's views from the preceding 2 hours. Both sides carry 30-minute
     watermarks, and the time-range predicate bounds the join state: the
     engine evicts buffered views once the purchase-side watermark passes
-    view_ts + lookback (unbounded-state stream joins are rejected by
+    view_ts + 2 hours (unbounded-state stream joins are rejected by
     Spark without these two ingredients).
 
     The reference has no join of streams (SURVEY.md §2.3 "not present");
@@ -443,7 +429,7 @@ def stream_stream_join(
             F.col("ts").alias("view_ts"),
             F.col("value").alias("view_value"),
         )
-        .withWatermark("view_ts", delay)
+        .withWatermark("view_ts", "30 minutes")
     )
     purchases = (
         events.where(F.col("event_type") == "purchase")
@@ -452,12 +438,12 @@ def stream_stream_join(
             F.col("user_id").alias("p_user"),
             F.col("ts").alias("buy_ts"),
         )
-        .withWatermark("buy_ts", delay)
+        .withWatermark("buy_ts", "30 minutes")
     )
     return purchases.join(
         views,
         F.expr(
-            f"p_user = v_user AND view_ts >= buy_ts - INTERVAL {lookback} "
+            "p_user = v_user AND view_ts >= buy_ts - INTERVAL 2 hours "
             "AND view_ts <= buy_ts"
         ),
         "inner",
@@ -619,11 +605,9 @@ def leakage_free_split_stream(docs: DataFrame) -> DataFrame:
     )
 
 
-def ohlc_stream(
-    events: DataFrame, size: str = "1 hour", delay: str = "30 minutes"
-) -> DataFrame:
-    """Streaming twin of the q155 OHLC compaction: append-mode tumbling
-    bars with open/close as struct-argmin/argmax over (ts, event_id) —
+def ohlc_stream(events: DataFrame) -> DataFrame:
+    """Streaming twin of the q155 OHLC compaction: append-mode 1-hour
+    tumbling bars with open/close as struct-argmin/argmax over (ts, event_id) —
     the same ONE-aggregate shape as the batch query, so closed windows
     carry identical values (pinned by
     tests/test_streaming.test_ohlc_stream_matches_batch). Struct
@@ -631,8 +615,8 @@ def ohlc_stream(
     (window, event_type) is O(1) regardless of event volume — the
     compaction keeps running at any input rate."""
     return (
-        events.withWatermark("ts", delay)
-        .groupBy(F.window("ts", size).alias("w"), "event_type")
+        events.withWatermark("ts", "30 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.min(F.struct("ts", "event_id", "value"))

@@ -84,7 +84,8 @@ def test_unknown_size_fails_closed_to_noop(spark):
 def test_operators_add_no_fan_out_above_threshold(spark, docs_path):
     df = spark.read.parquet(docs_path)
     assert _round_robin(word_shingles(df, "text", "doc_id"))
-    assert _round_robin(with_norm(df, "embedding", "doc_id"))
+    emb = df.withColumnRenamed("doc_id", "vec_id")
+    assert _round_robin(with_norm(emb))
     with _split_bytes(spark, 1024):
         assert not _round_robin(word_shingles(df, "text", "doc_id"))
-        assert not _round_robin(with_norm(df, "embedding", "doc_id"))
+        assert not _round_robin(with_norm(emb))

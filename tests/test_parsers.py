@@ -41,6 +41,24 @@ def test_pl_rows_key_fallbacks_and_wgs84_discovery(spark):
     assert got["PL0003"].lat is None  # no coords anywhere -> null, not error
 
 
+def test_pl_automatic_station_predicate(spark):
+    from airquality_data_pipeline_spark.functions.strings import (
+        is_automatic_station,
+    )
+
+    rows = [
+        ('{"Identyfikator stacji":"PL0001","Typ stacji":"automatyczna"}',),
+        ('{"Identyfikator stacji":"PL0002","Typ stacji":"manualna"}',),
+    ]
+    df = spark.createDataFrame(rows, "raw string")
+    got = dict(
+        parsers.parse_pl_station_rows(df)
+        .select("station_id", is_automatic_station("station_type"))
+        .collect()
+    )
+    assert got == {"PL0001": True, "PL0002": False}
+
+
 def test_nl_detail_geometry(spark):
     rows = [
         ('{"number":"NL01491","location":"Amsterdam-Vondelpark",'

@@ -304,7 +304,8 @@ def test_time_shifted_misaligned_window_raises(spark, ancient_dir):
 
 def test_validate_alignment_contract():
     """Unit pins for the shared helper: day-multiple durations pass,
-    non-divisors raise, bare date_trunc units parse, junk rejects."""
+    non-divisors raise, bare date_trunc units parse, junk and
+    non-positive counts reject."""
     jobs.validate_alignment(36525, ["1 hour", "30 minutes", "minute",
                                     "1 day", "90 seconds"])
     jobs.validate_alignment(14, ["2 weeks"])
@@ -319,5 +320,10 @@ def test_validate_alignment_contract():
         jobs.validate_alignment(1, ["500 milliseconds"])
     with pytest.raises(ValueError, match="unparseable"):
         jobs.validate_alignment(1, ["1 hour 30 minutes"])
+    # zero would divide by zero in the modulo check; a negative count
+    # would pass it
+    for bad in ("0 minutes", "-1 hour"):
+        with pytest.raises(ValueError, match="non-positive"):
+            jobs.validate_alignment(36525, [bad])
     assert jobs.duration_seconds("minute") == 60
     assert jobs.duration_seconds("2 Hours") == 7200
