@@ -8,10 +8,11 @@ Layout:
   queries/      oracle-checked query catalog (driver contract)
   operators/    reusable dataflow operators (dedup, cursor filter, merges,
                 similarity, text analysis, as-of/range joins)
-  functions/    scalar function library (time parsing, tz, strings, json)
+  functions/    scalar function library (timezones, strings, expressions)
   sources/      synthetic generator + REST DataSource scaffolding
   plans/        end-to-end pipeline compositions (bronze->silver)
-  streaming/    Structured Streaming jobs (watermark dedup, windows, upserts)
+  streaming/    Structured Streaming jobs (watermark dedup, tumbling windows,
+                per-key cursor state, commit-after-emit) + cursor/catalog sinks
 """
 
 __version__ = "0.1.0"

@@ -7,8 +7,6 @@ from pyspark.sql import functions as F
 
 # pollutant allowlist, reference app/main.py:1051
 POLLUTANTS = ("pm10", "pm25", "no2", "nox", "no", "o3", "co", "so2")
-# NL formula allowlist, reference app/main.py:59-60
-NL_FORMULAS = ("no2", "pm10", "pm25", "o3")
 
 
 def normalize_pollutant(col: Column | str) -> Column:

@@ -1,11 +1,6 @@
-"""Timestamp parsing + timezone normalization (SURVEY.md §2.6 C1-C4).
-
-Reference behaviors re-expressed:
-  C1 ISO-8601 parse, null on failure        app/main.py:166-181
-  C2 naive local -> UTC (Berlin/Warsaw)     app/main.py:184-206, 755-758, 1133-1136
-  C3 aware -> UTC normalize                 app/main.py:129-134
-  C4 'YYYY-MM-DD HH:MM:SS' space separator  app/main.py:1134
-"""
+"""Timezone normalization (SURVEY.md §2.6 C2): naive source-local wall
+time -> UTC for the Berlin/Warsaw sources (reference app/main.py:184-206,
+755-758, 1133-1136)."""
 
 from __future__ import annotations
 
@@ -18,17 +13,6 @@ SOURCE_TZ = {
 }
 
 
-def parse_iso_ts(col: Column | str) -> Column:
-    """Permissive ISO-8601 parse: handles 'Z', offsets, space or 'T'
-    separators; unparseable -> null (matches the reference's
-    null-on-failure, app/main.py:179-181). try_to_timestamp keeps ANSI
-    mode from raising."""
-    c = F.col(col) if isinstance(col, str) else col
-    # normalize the space separator (C4) then let try_to_timestamp handle
-    # the rest ('Z' parses natively)
-    return F.try_to_timestamp(F.regexp_replace(c, r"^(\d{4}-\d{2}-\d{2}) ", "$1T"))
-
-
 def local_to_utc(col: Column | str, source: str) -> Column:
     """Interpret a naive timestamp as source-local wall time and convert
     to UTC; unknown sources fall back to UTC unchanged (reference
@@ -36,10 +20,3 @@ def local_to_utc(col: Column | str, source: str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     tz = SOURCE_TZ.get(source)
     return F.to_utc_timestamp(c, tz) if tz else c
-
-
-def iso_format(col: Column | str) -> Column:
-    """Render a UTC instant as ISO-8601 text with 'Z' suffix — the wire
-    format of the canonical record (reference app/main.py:129-134)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.date_format(c, "yyyy-MM-dd'T'HH:mm:ss'Z'")

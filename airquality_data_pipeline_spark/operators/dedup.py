@@ -429,9 +429,8 @@ def minhash_sig_expr(text: Column) -> Column:
     shuffle — which is exactly what makes signature-identical near-dup
     collapse usable in STRUCTURED STREAMING, where an agg-then-dedup
     plan would need its own watermark/output-mode handling: a per-row
-    column feeds straight into engine-managed dropDuplicates state
-    (streaming/jobs.neardup_suppression_stream). Pinned equal to the
-    minhash_signatures aggregate in tests.
+    column feeds straight into engine-managed dropDuplicates state.
+    Pinned equal to the minhash_signatures aggregate in tests.
 
     Docs with no shingles (< 3 tokens) get the empty-set sentinel
     'EMPTY' — every such doc shares it, matching the aggregate path's

@@ -37,15 +37,6 @@ _cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 MODALITIES = ("image", "audio", "video", "text")
 
-MULTIMODAL_SCHEMA = T.StructType(
-    [
-        T.StructField("item_id", T.LongType(), False),
-        T.StructField("modality", T.StringType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("meta", T.MapType(T.StringType(), T.StringType()), True),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("item_id", T.LongType(), False),
@@ -136,47 +127,5 @@ def frame_sample(df: DataFrame, n_frames: int = 4) -> DataFrame:
                     rows["frame_idx"].append(i)
                     rows["frame_bytes"].append(bytes(payload[i * step:(i + 1) * step]))
             yield pd.DataFrame(rows)
-
-    return df.mapInPandas(op, schema=out_schema)
-
-
-def resize_image(df: DataFrame) -> DataFrame:
-    """Image-resize stub over mapInPandas: produce a fixed 4x4 grid per
-    payload — the deterministic fake maps evenly-spaced
-    byte windows to their mean (a real deployment swaps the window-mean
-    for PIL's `Image.resize` after decode; schema, batching and output
-    shape are identical). Output: item_id, grid (16 floats, row-major),
-    n_bytes."""
-    out_schema = T.StructType(
-        [
-            T.StructField("item_id", T.LongType(), False),
-            T.StructField("grid", T.ArrayType(T.FloatType()), True),
-            T.StructField("n_bytes", T.IntegerType(), True),
-        ]
-    )
-    cells = 4 * 4
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            grids = []
-            for payload in pdf["payload"]:
-                if payload is None or len(payload) == 0:
-                    grids.append([0.0] * cells)
-                    continue
-                step = max(len(payload) // cells, 1)
-                grid = []
-                for i in range(cells):
-                    window = payload[i * step:(i + 1) * step] or payload[-1:]
-                    grid.append(sum(window) / float(len(window)))
-                grids.append(grid)
-            yield pd.DataFrame(
-                {
-                    "item_id": pdf["item_id"],
-                    "grid": grids,
-                    "n_bytes": pdf["payload"].map(
-                        lambda p: 0 if p is None else len(p)
-                    ),
-                }
-            )
 
     return df.mapInPandas(op, schema=out_schema)

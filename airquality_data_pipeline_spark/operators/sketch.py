@@ -22,16 +22,16 @@ CMS_DEPTH = 4
 CMS_WIDTH = 256
 
 
-def cms_position(tok: Column, r: Column, width: int = CMS_WIDTH) -> Column:
+def cms_position(tok: Column, r: Column) -> Column:
     """Counter column for token `tok` in hash row `r`: first 32 bits of
-    md5(tok || '#' || r) mod width."""
+    md5(tok || '#' || r) mod CMS_WIDTH."""
     return (
         F.conv(
             F.substring(F.md5(F.concat(tok, F.lit("#"), r.cast("string"))), 1, 8),
             16,
             10,
         ).cast("long")
-        % width
+        % CMS_WIDTH
     )
 
 
@@ -58,16 +58,6 @@ def cms_build(
         w.alias("w"),
     )
     return pos.groupBy("r", "col").agg(F.sum("w").alias("counter"))
-
-
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge partial sketches (per-partition / per-batch / per-shard)
-    by element-wise sum — CMS's defining property; counters only add,
-    so merge order is irrelevant."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("r", "col").agg(F.sum("counter").alias("counter"))
 
 
 def cms_estimate(

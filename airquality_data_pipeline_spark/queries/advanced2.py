@@ -1052,8 +1052,7 @@ def q155_ohlc_bars(spark, sf_dir):
 # duplicate states merge, each surviving state gets
 # [valid_from, valid_to) from its own ts and the next change's ts
 # (NULL = currently open). Two stacked windows over the SAME
-# (user_id | ts, event_id) partitioning share one exchange+sort; the
-# lakehouse MERGE twin of this shape is operators/lakehouse.py.
+# (user_id | ts, event_id) partitioning share one exchange+sort.
 # --------------------------------------------------------------------------
 @register(
     "q156_scd2_intervals",

@@ -460,8 +460,7 @@ def q131_cms_heavy_hitters(spark, sf_dir):
 # (seen-sourced replica -> dup_of_corpus, batch-sourced -> dup_in_batch).
 # Plan shape: signature is a row-local expression (minhash_sig_expr —
 # no explode/agg), membership is one hash equi-join on sig, first-wins
-# is one window on the sig partition: exactly the batch twin of
-# streaming/jobs.neardup_suppression_stream's state lookups.
+# is one window on the sig partition.
 # --------------------------------------------------------------------------
 def _q132_oracle() -> str:
     from airquality_data_pipeline_spark.operators.dedup import (

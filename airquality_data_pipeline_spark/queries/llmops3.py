@@ -55,9 +55,8 @@ def _tokens(spark, sf_dir):
 
 
 def dsir_model(spark, sf_dir, target_lang: str = "en"):
-    """The 1024-row hashed-bucket importance model [bucket, w] —
-    shared by q250 (batch) and streaming.dsir_scoring_stream (which
-    collects it as bounded model state, the KMeansModel pattern)."""
+    """The 1024-row hashed-bucket importance model [bucket, w] of
+    q250."""
     toks = _tokens(spark, sf_dir).select(
         "doc_id", "lang", _tok_bucket().alias("bucket")
     )

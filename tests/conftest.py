@@ -12,6 +12,20 @@ sys.path.insert(0, str(REPO_ROOT))
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def run_to_memory(df, name: str) -> None:
+    """Drain a bounded stream into an in-memory table (test/dev sink):
+    availableNow processes the full source then stops — the batch-mode
+    analog of one reference polling cycle."""
+    q = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
 @pytest.fixture(scope="session")
 def spark():
     from airquality_data_pipeline_spark.session import get_spark

@@ -8,10 +8,6 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from airquality_data_pipeline_spark.functions.timeparse import (
-    iso_format,
-    parse_iso_ts,
-)
 from airquality_data_pipeline_spark.queries.common import table, utc
 
 
@@ -19,7 +15,7 @@ def _canonical_events(spark, sf_dir):
     # serialize ts as ISO text so every format round-trips losslessly
     return table(spark, sf_dir, "events").select(
         "event_id",
-        iso_format(F.col("ts")).alias("ts_iso"),
+        F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("ts_iso"),
         "user_id",
         "event_type",
         "value",
@@ -63,31 +59,6 @@ def test_json_csv_orc_roundtrip(spark, sf_dir):
     orc_dir = tempfile.mkdtemp(prefix="fmt_orc_")
     src.write.mode("overwrite").orc(orc_dir)
     _assert_same(expected, spark.read.orc(orc_dir))
-
-
-def test_parse_iso_ts_variants(spark):
-    df = spark.createDataFrame(
-        [
-            ("2024-01-02T03:04:05Z",),
-            ("2024-01-02T03:04:05+00:00",),
-            ("2024-01-02 03:04:05",),  # space separator (C4)
-            ("2024-01-02T03:04:05.123Z",),
-            ("garbage",),
-            (None,),
-        ],
-        "raw string",
-    )
-    got = df.select(
-        "raw", F.unix_millis(parse_iso_ts("raw")).alias("ms")
-    ).collect()
-    by_raw = {r.raw: r.ms for r in got}
-    base = 1704164645000
-    assert by_raw["2024-01-02T03:04:05Z"] == base
-    assert by_raw["2024-01-02T03:04:05+00:00"] == base
-    assert by_raw["2024-01-02 03:04:05"] == base
-    assert by_raw["2024-01-02T03:04:05.123Z"] == base + 123
-    assert by_raw["garbage"] is None  # null on failure (C1)
-    assert by_raw[None] is None
 
 
 def test_binaryfile_and_wholetext_sources(spark, sf_dir):
@@ -182,48 +153,6 @@ def test_binaryfile_and_wholetext_sources(spark, sf_dir):
     a = {r.item_id: (r.n_bytes, tuple(r.feature)) for r in via_parquet.collect()}
     b = {r.item_id: (r.n_bytes, tuple(r.feature)) for r in via_files.collect()}
     assert a == b
-
-
-def test_json_quarantine_split(spark, tmp_path):
-    # PERMISSIVE + corrupt-column quarantine: good rows parse, bad
-    # lines survive verbatim, and the two sides partition the file
-    from pyspark.sql import types as T
-
-    from airquality_data_pipeline_spark.io import read_json_with_quarantine
-
-    p = tmp_path / "m.jsonl"
-    p.write_text(
-        '{"station_id": "s1", "value": 1.5}\n'
-        "{broken json\n"
-        '{"station_id": "s2", "value": 2.0}\n'
-        '["not","an","object"]\n'
-    )
-    schema = T.StructType(
-        [
-            T.StructField("station_id", T.StringType(), True),
-            T.StructField("value", T.DoubleType(), True),
-        ]
-    )
-    good, quar = read_json_with_quarantine(spark, str(p), schema)
-    g = {(r.station_id, r.value) for r in good.collect()}
-    assert g == {("s1", 1.5), ("s2", 2.0)}
-    raws = sorted(r.raw for r in quar.collect())
-    assert raws == ['["not","an","object"]', "{broken json"]
-    # FAILFAST on the same file raises — the strictness dial works
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        spark.read.schema(schema).option("mode", "FAILFAST").json(
-            str(p)
-        ).collect()
-    # DROPMALFORMED keeps only the parseable rows
-    dropped = (
-        spark.read.schema(schema)
-        .option("mode", "DROPMALFORMED")
-        .json(str(p))
-        .collect()
-    )
-    assert {(r.station_id, r.value) for r in dropped} == g
 
 
 def test_parquet_schema_evolution_merge(spark, tmp_path):

@@ -1,12 +1,20 @@
-"""Every defaulted parameter of the package (outside the query catalog)
-is either set by some caller outside tests/, or kept for a stated
-reason. A parameter no caller sets is a configuration nothing runs: make
-its default a constant instead.
+"""Everything the package declares outside the query catalog is used by
+something outside tests/, or kept for a stated reason.
 
-Pure `ast`, no Spark. A call sets a parameter when it passes it by
-keyword or by position. A call that only forwards one of the enclosing
-function's own parameters counts only once that parameter is itself
-set, resolved to a fixed point. Callees are matched by name.
+- Parameters: every defaulted parameter is set by some caller, or kept.
+  A parameter no caller sets is a configuration nothing runs: make its
+  default a constant instead. A call sets a parameter when it passes it
+  by keyword or by position. A call that only forwards one of the
+  enclosing function's own parameters counts only once that parameter is
+  itself set, resolved to a fixed point. Callees are matched by name.
+- Symbols: every top-level function, class and constant is reachable
+  from the roots (the query catalog, perfbench/, bench.py and
+  __spark_entry__.py), or kept. A name counts as used where a reachable
+  body mentions it, bare or as an attribute, again matched by name; an
+  import alone is not a use. Module-level statements that define
+  nothing run at import, so they are roots too.
+
+Pure `ast`, no Spark.
 """
 
 from __future__ import annotations
@@ -16,12 +24,14 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 PKG = ROOT / "airquality_data_pipeline_spark"
-CALLERS = [
-    *sorted(PKG.rglob("*.py")),
+ROOTS = [
+    *sorted((PKG / "queries").rglob("*.py")),
     *sorted((ROOT / "perfbench").rglob("*.py")),
     ROOT / "bench.py",
     ROOT / "__spark_entry__.py",
 ]
+MODULES = [p for p in sorted(PKG.rglob("*.py")) if p.relative_to(PKG).parts[0] != "queries"]
+CALLERS = [*MODULES, *ROOTS]
 
 # (module under the package, function, parameter) -> why it stays
 KEEP = {
@@ -35,8 +45,6 @@ KEEP = {
     ("streaming/jobs.py", "kafka_writer_config", "sasl_mechanism"): "deployment: broker",
     ("streaming/jobs.py", "kafka_writer_config", "sasl_username"): "deployment: broker",
     ("streaming/jobs.py", "kafka_writer_config", "sasl_password"): "deployment: broker",
-    ("session.py", "cluster_conf", "executors"): "deployment: cluster size",
-    ("session.py", "cluster_conf", "cores_per_executor"): "deployment: cluster size",
     ("operators/merge.py", "retention_filter", "reference_time"):
         "the reference's now() retention cut-off",
     ("sources/rest.py", "fetch_paginated", "params"): "the per-request API parameters",
@@ -44,14 +52,9 @@ KEEP = {
         "iteration bound; tests drive the not-converged warning",
     ("operators/graph.py", "connected_components_star", "max_iter"):
         "iteration bound; tests drive the not-converged warning",
-    ("streaming/jobs.py", "time_shifted", "window_durations"):
-        "the window-alignment check; tests drive it",
     ("operators/windows.py", "global_row_number", "num_partitions"): "tests vary it",
     ("operators/windows.py", "global_ntile", "num_partitions"): "tests vary it",
-    ("streaming/jobs.py", "read_documents_stream", "copies"): "tests vary it",
-    ("streaming/jobs.py", "run_to_memory", "output_mode"): "tests vary it",
     ("plans/jobs.py", "synthetic_cycle_job", "n"): "tests vary it",
-    ("operators/lakehouse.py", "merge_into_partitioned", "rule"): "tests vary it",
     ("sources/synthetic.py", "synthetic_measurements", "n"):
         "synthetic_cycle_job forwards its n",
 }
@@ -69,10 +72,8 @@ def _defaulted(fn: ast.FunctionDef):
 
 def _declared():
     decls = {}
-    for path in sorted(PKG.rglob("*.py")):
+    for path in MODULES:
         rel = path.relative_to(PKG)
-        if rel.parts[0] == "queries":
-            continue
         for node in ast.walk(ast.parse(path.read_text())):
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 for name, idx in _defaulted(node):
@@ -148,3 +149,92 @@ def test_keep_lists_only_unset_parameters():
     decls, unset = never_set()
     stale = [k for k in KEEP if k not in decls or k not in unset]
     assert not stale, f"KEEP entries that are gone or now set by a caller: {stale}"
+
+
+# (module under the package, top-level name) -> why it stays unreached
+ITEM_1 = "ROADMAP item 1 wires it into the producer cycle"
+ITEM_2 = "ROADMAP item 2 wires it into the producer cycle"
+KEEP_SYMBOLS = {
+    ("plans/pipeline.py", "isolated_bronze"): ITEM_1,
+    ("plans/pipeline.py", "commit_cursors"): ITEM_1,
+    ("plans/jobs.py", "synthetic_cycle_job"): ITEM_1,
+    ("plans/jobs.py", "refresh_catalog_job"): ITEM_2,
+    ("sources/parsers.py", "parse_de_measure_payload"): ITEM_2,
+    ("sources/parsers.py", "parse_de_station_rows"): ITEM_2,
+    ("sources/parsers.py", "parse_pl_station_rows"): ITEM_2,
+    ("sources/parsers.py", "parse_nl_station_details"): ITEM_2,
+    ("functions/strings.py", "is_automatic_station"): ITEM_2,
+    ("sources/rest.py", "requests_transport_factory"): "deployment stand-in: live HTTP",
+    ("streaming/jobs.py", "kafka_shaped"): "deployment stand-in: Kafka sink payload",
+    ("streaming/jobs.py", "kafka_writer_config"): "deployment stand-in: Kafka sink options",
+    ("operators/similarity.py", "neardup_pairs"):
+        "reference that tests compare lsh_gated_neardup against",
+    ("streaming/jobs.py", "read_events_stream"):
+        "events stream source for the kept stream jobs",
+}
+
+
+def _mentions(node: ast.AST) -> set[str]:
+    """Names a node uses, bare or as an attribute."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+    return out
+
+
+def _symbols():
+    """(module, name) -> defining statement per top-level function, class
+    and constant outside the catalog (dunders excluded), and the names
+    the roots use."""
+    defs, used = {}, set()
+    for path in ROOTS:
+        used |= _mentions(ast.parse(path.read_text()))
+    for path in MODULES:
+        rel = path.relative_to(PKG).as_posix()
+        for st in ast.parse(path.read_text()).body:
+            if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names = [st.name]
+            elif isinstance(st, (ast.Assign, ast.AnnAssign)):
+                targets = st.targets if isinstance(st, ast.Assign) else [st.target]
+                names = [t.id for t in targets if isinstance(t, ast.Name)]
+            elif isinstance(st, (ast.Import, ast.ImportFrom)):
+                continue
+            else:
+                used |= _mentions(st)
+                continue
+            for name in names:
+                if not (name.startswith("__") and name.endswith("__")):
+                    defs[(rel, name)] = st
+    return defs, used
+
+
+def reached(defs, used, seeds=()) -> set:
+    """Symbols the used names reach, with seeds as extra roots."""
+    live, frontier = set(seeds), set(used)
+    for k in seeds:
+        frontier |= _mentions(defs[k])
+    while new := {k for k in defs if k[1] in frontier} - live:
+        live |= new
+        frontier = set().union(*(_mentions(defs[k]) for k in new))
+    return live
+
+
+def test_every_symbol_is_reached_or_kept():
+    defs, used = _symbols()
+    live = reached(defs, used, [k for k in KEEP_SYMBOLS if k in defs])
+    dead = sorted(set(defs) - live)
+    assert not dead, (
+        f"{len(dead)} top-level symbols nothing outside tests/ reaches; "
+        "delete each with the tests that only exercise it, or add it to "
+        "KEEP_SYMBOLS with a reason:\n" + "\n".join(f"  {m}: {n}" for m, n in dead)
+    )
+
+
+def test_keep_symbols_lists_only_unreached():
+    defs, used = _symbols()
+    live = reached(defs, used)
+    stale = [k for k in KEEP_SYMBOLS if k not in defs or k in live]
+    assert not stale, f"KEEP_SYMBOLS entries that are gone or now reached: {stale}"

@@ -11,8 +11,8 @@ import uuid
 from pyspark.sql import functions as F
 
 from airquality_data_pipeline_spark.queries.common import table, utc
-from airquality_data_pipeline_spark.streaming import jobs
 from airquality_data_pipeline_spark.streaming.stateful import cursor_filter_stream
+from tests.conftest import run_to_memory
 
 
 def _stage_two_batches(spark, sf_dir) -> str:
@@ -43,7 +43,7 @@ def test_cursor_state_across_batches(spark, sf_dir):
         .parquet(src)
     )
     name = f"cursor_{uuid.uuid4().hex[:8]}"
-    jobs.run_to_memory(cursor_filter_stream(stream), name)
+    run_to_memory(cursor_filter_stream(stream), name)
     got = spark.sql(f"SELECT * FROM {name}")
 
     # batch semantics truth: batch1 passes wholly (no prior state);
@@ -135,17 +135,25 @@ def test_cursor_state_survives_restart(spark, sf_dir):
 
 
 def test_cursor_state_on_rocksdb(spark, sf_dir):
-    """The same cursor operator on the RocksDB state store provider
-    (jobs.rocksdb_state_conf): correctness must be identical to the
-    default provider, and the state-operator metrics must prove RocksDB
-    actually backed the state (custom rocksdb* metrics present) with one
-    state row per distinct (user_id, event_type) key."""
+    """The same cursor operator on the RocksDB state store provider, the
+    one a deployment with large keyed state sets: correctness must be
+    identical to the default provider, and the state-operator metrics
+    must prove RocksDB actually backed the state (custom rocksdb*
+    metrics present) with one state row per distinct (user_id,
+    event_type) key."""
     utc(spark)
     src = _stage_two_batches(spark, sf_dir)
-    saved = {
-        k: spark.conf.get(k, None) for k in jobs.rocksdb_state_conf()
+    rocksdb = {
+        "spark.sql.streaming.stateStore.providerClass": (
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider"
+        ),
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": (
+            "true"
+        ),
     }
-    for k, v in jobs.rocksdb_state_conf().items():
+    saved = {k: spark.conf.get(k, None) for k in rocksdb}
+    for k, v in rocksdb.items():
         spark.conf.set(k, v)
     try:
         stream = (
@@ -193,149 +201,3 @@ def test_cursor_state_on_rocksdb(spark, sf_dir):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def test_ewma_stream_matches_sequential_model(spark, sf_dir):
-    """The streaming EWMA's final per-user value must equal the exact
-    sequential fold over the batch-ordered events — bit-equal, because
-    both apply the same alpha=1/2 binary arithmetic in the same
-    (ts, event_id) order regardless of micro-batch boundaries."""
-    from airquality_data_pipeline_spark.queries.common import table, utc
-    from airquality_data_pipeline_spark.streaming import jobs, stateful
-
-    utc(spark)
-    stream = jobs.read_events_stream(spark, sf_dir)
-    name = "ewma_sink"
-    jobs.run_to_memory(stateful.ewma_stream(stream), name, output_mode="update")
-    rows = spark.sql(
-        f"SELECT user_id, n_seen, ewma FROM {name}"
-    ).collect()
-    # update mode re-emits per batch; keep the final (max n_seen) row
-    got: dict[int, tuple[int, float]] = {}
-    for r in rows:
-        if r.user_id not in got or r.n_seen > got[r.user_id][0]:
-            got[r.user_id] = (r.n_seen, r.ewma)
-
-    batch = (
-        table(spark, sf_dir, "events")
-        .select("user_id", "event_id", "ts", "value")
-        .collect()
-    )
-    series: dict[int, list] = {}
-    for r in batch:
-        series.setdefault(r.user_id, []).append((r.ts, r.event_id, r.value))
-    for uid, evs in series.items():
-        ewma = None
-        for _, _, v in sorted(evs):
-            v = float(v)
-            ewma = v if ewma is None else 0.5 * v + 0.5 * ewma
-        n, got_ewma = got[uid]
-        assert n == len(evs)
-        assert got_ewma == ewma, (uid, got_ewma, ewma)
-
-
-def test_attribution_stream_matches_batch_q197(spark, sf_dir):
-    """Summing the streamed per-batch attribution increments over all
-    micro-batches must reproduce the batch q197 channel rollup exactly
-    (counts integer-equal; revenue compared in exact integer cents)."""
-    from airquality_data_pipeline_spark.queries import QUERIES
-    from airquality_data_pipeline_spark.queries.common import utc
-    from airquality_data_pipeline_spark.streaming import jobs, stateful
-
-    utc(spark)
-    stream = jobs.read_events_stream(spark, sf_dir)
-    name = "attr_sink"
-    jobs.run_to_memory(
-        stateful.attribution_stream(stream), name, output_mode="append"
-    )
-    got: dict[str, tuple[int, int]] = {}
-    for r in spark.sql(
-        f"SELECT channel, SUM(n_purchases) AS n, SUM(revenue_cents) AS c"
-        f" FROM {name} GROUP BY channel"
-    ).collect():
-        got[r.channel] = (r.n, r.c)
-
-    batch = QUERIES["q197_last_touch_attribution"](spark, sf_dir).collect()
-    expect = {
-        r.channel: (r.n_purchases, int(round(r.revenue * 100)))
-        for r in batch
-    }
-    assert got == expect
-
-
-def test_throttle_stream_ttl_expiry_and_batch_parity(spark, sf_dir):
-    """Four time-ordered micro-batches through the event-time TTL
-    throttle: (a) summed emission/suppression counts equal the exact
-    sequential per-key fold over the whole fixture; (b) at least one
-    EventTimeTimeout tombstone fires (state expiry is exercised, not
-    just configured); (c) expiry never changes emission decisions."""
-    import os
-    import tempfile
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from airquality_data_pipeline_spark.queries.common import table, utc
-    from airquality_data_pipeline_spark.streaming import jobs, stateful
-
-    utc(spark)
-    ev = table(spark, sf_dir, "events").select("user_id", "event_id", "ts")
-    # stage 4 time-ordered parquet slices with increasing mtimes so the
-    # file source (maxFilesPerTrigger=1) delivers them in time order
-    rows = ev.orderBy("ts", "event_id").collect()
-    quarter = (len(rows) + 3) // 4
-    d = tempfile.mkdtemp(prefix="throttle_stream_")
-    for i in range(4):
-        chunk = rows[i * quarter : (i + 1) * quarter]
-        if not chunk:
-            continue
-        spark.createDataFrame(chunk, ev.schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{d}/slice_{i}")
-        _time.sleep(0.05)
-    paths = [
-        f"{d}/slice_{i}" for i in range(4) if os.path.isdir(f"{d}/slice_{i}")
-    ]
-    flat = tempfile.mkdtemp(prefix="throttle_flat_")
-    for i, p in enumerate(paths):
-        part = next(
-            f for f in os.listdir(p) if f.endswith(".parquet")
-        )
-        os.symlink(f"{p}/{part}", f"{flat}/{i:02d}.parquet")
-        os.utime(f"{flat}/{i:02d}.parquet", (1000 + i, 1000 + i))
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(flat)
-    )
-    name = "throttle_sink"
-    jobs.run_to_memory(
-        stateful.throttle_stream(stream), name, output_mode="update"
-    )
-    out = spark.sql(f"SELECT * FROM {name}").collect()
-    tombstones = [r for r in out if r.emitted == -1]
-    assert tombstones, "EventTimeTimeout never fired"
-    got: dict[int, list[int]] = {}
-    for r in out:
-        if r.emitted >= 0:
-            g = got.setdefault(r.user_id, [0, 0])
-            g[0] += r.emitted
-            g[1] += r.suppressed
-
-    # exact sequential fold over the full fixture
-    series: dict[int, list] = {}
-    for r in rows:
-        series.setdefault(r.user_id, []).append((r.ts, r.event_id))
-    for uid, evs in series.items():
-        last = None
-        em = sup = 0
-        for ts, _ in sorted(evs):
-            ts_ms = int(ts.timestamp() * 1000)
-            if last is None or ts_ms >= last + stateful.THROTTLE_TTL_MS:
-                em += 1
-                last = ts_ms
-            else:
-                sup += 1
-        assert got[uid] == [em, sup], (uid, got[uid], (em, sup))

@@ -6,16 +6,16 @@ from __future__ import annotations
 
 import uuid
 
-import pytest
 from pyspark.sql import functions as F
 
 from airquality_data_pipeline_spark.queries.common import table, utc
 from airquality_data_pipeline_spark.streaming import jobs
+from tests.conftest import run_to_memory
 
 
-def _drain(spark, df, mode="append"):
+def _drain(spark, df):
     name = f"t_{uuid.uuid4().hex[:8]}"
-    jobs.run_to_memory(df, name, output_mode=mode)
+    run_to_memory(df, name)
     return spark.sql(f"SELECT * FROM {name}")
 
 
@@ -61,15 +61,6 @@ def test_tumbling_counts_match_batch(spark, sf_dir):
     assert got_rows
     for k, v in got_rows.items():
         assert batch_rows[k] == v
-
-
-def test_session_aggregation_runs(spark, sf_dir):
-    utc(spark)
-    stream = jobs.read_events_stream(spark, sf_dir)
-    got = _drain(spark, jobs.session_aggregation(stream))
-    rows = got.collect()
-    assert rows
-    assert all(r.session_end > r.session_start for r in rows)
 
 
 def test_kafka_shaped_payload(spark, sf_dir):
@@ -160,94 +151,6 @@ def test_sessionize_equals_session_window(spark, sf_dir):
         assert (r.end - last).total_seconds() == 1800
 
 
-def test_sliding_counts_match_batch(spark, sf_dir):
-    utc(spark)
-    stream = jobs.read_events_stream(spark, sf_dir)
-    got = _drain(spark, jobs.sliding_counts(stream))
-    batch = (
-        table(spark, sf_dir, "events")
-        .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    got_rows = {r.window_start: r.n_events for r in got.collect()}
-    batch_rows = {r.w.start: r.n_events for r in batch.collect()}
-    assert got_rows
-    for k, v in got_rows.items():
-        assert batch_rows[k] == v
-
-
-def test_stream_stream_interval_join(spark, sf_dir):
-    """Stream-stream join (purchases x prior views, 2 h lookback, both
-    sides watermarked) must produce exactly the batch join's matches
-    when the whole source fits in the run (availableNow)."""
-    import uuid
-
-    from airquality_data_pipeline_spark.queries.common import table, utc
-
-    utc(spark)
-    stream = jobs.read_events_stream(spark, sf_dir)
-    name = f"ssj_{uuid.uuid4().hex[:8]}"
-    jobs.run_to_memory(jobs.stream_stream_join(stream), name)
-    got = spark.sql(f"SELECT * FROM {name}")
-
-    ev = table(spark, sf_dir, "events")
-    views = ev.where(F.col("event_type") == "view").select(
-        F.col("user_id").alias("v_user"),
-        F.col("ts").alias("view_ts"),
-        F.col("value").alias("view_value"),
-    )
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("buy_ts"),
-    )
-    expected = purchases.join(
-        views,
-        F.expr(
-            "p_user = v_user AND view_ts >= buy_ts - INTERVAL 2 HOURS "
-            "AND view_ts <= buy_ts"
-        ),
-        "inner",
-    )
-    assert got.count() == expected.count()
-    # spot-check multiset equality on a projection
-    a = sorted(
-        (r.purchase_id, r.view_value) for r in got.collect()
-    )
-    b = sorted(
-        (r.purchase_id, r.view_value) for r in expected.collect()
-    )
-    assert a == b
-
-
-def test_corpus_curation_stream_dedups_across_batches(spark, sf_dir):
-    utc(spark)
-    # the corpus is delivered TWICE (two staged copies, one file per
-    # micro-batch): the digest-dedup state must absorb the entire second
-    # delivery across the batch boundary
-    stream = jobs.read_documents_stream(spark, sf_dir, copies=2)
-    got = _drain(spark, jobs.corpus_curation_stream(stream))
-
-    docs = table(spark, sf_dir, "documents")
-    from airquality_data_pipeline_spark.operators.text import quality_features
-
-    batch = quality_features(
-        docs.withColumn("digest", F.md5("text")).dropDuplicates(["digest"]),
-        text_col="text",
-        id_col="doc_id",
-    )
-    assert got.count() == batch.count()
-    # verdict histogram matches the batch rules exactly
-    g = {r.verdict: r["count"] for r in got.groupBy("verdict").count().collect()}
-    b = batch.select(
-        F.when(F.col("n_tokens") < 15, F.lit("too_short"))
-        .when(F.col("quality") < 0.6, F.lit("low_quality"))
-        .otherwise(F.lit("kept"))
-        .alias("verdict")
-    )
-    assert g == {r.verdict: r["count"] for r in b.groupBy("verdict").count().collect()}
-
-
 def test_minhash_sig_expr_matches_aggregate_path(spark, sf_dir):
     # the per-row signature expression must produce EXACTLY the
     # ':'-joined signature the explode+groupBy path (q67) builds
@@ -278,247 +181,19 @@ def test_minhash_sig_expr_matches_aggregate_path(spark, sf_dir):
             assert sig == "EMPTY"
 
 
-def test_neardup_suppression_stream_collapses_redelivery(spark, sf_dir):
-    # the corpus delivered TWICE across micro-batches: every signature
-    # must survive exactly once
-    stream = jobs.read_documents_stream(spark, sf_dir, copies=2)
-    got = _drain(spark, jobs.neardup_suppression_stream(stream))
-    rows = got.collect()
-    sigs = [r.sig for r in rows]
-    assert len(sigs) == len(set(sigs))  # one row per signature
-    from airquality_data_pipeline_spark.operators.dedup import minhash_sig_expr
-
-    # batch model of the stream's state key: the EMPTY sentinel is
-    # digest-qualified so unrelated short docs keep distinct keys
-    # (hostile fixtures plant such docs; see the job's docstring)
-    raw = minhash_sig_expr(F.col("text"))
-    key = F.when(raw != "EMPTY", raw).otherwise(
-        F.concat(F.lit("EMPTY:"), F.md5(F.col("text")))
-    )
-    batch = table(spark, sf_dir, "documents").select(key.alias("sig"))
-    n_distinct = batch.distinct().count()
-    assert len(sigs) == n_distinct
-
-
-def test_leakage_free_split_stream_matches_batch(spark, sf_dir):
-    # streaming twin of q124 (signature-identity clusters): corpus
-    # delivered TWICE; the split must be a pure function of the
-    # signature (no cluster straddles splits, delivery order
-    # irrelevant) and agree with the batch recomputation
-    from airquality_data_pipeline_spark.operators.dedup import minhash_sig_expr
-
-    stream = jobs.read_documents_stream(spark, sf_dir, copies=2)
-    got = _drain(spark, jobs.leakage_free_split_stream(stream))
-    rows = got.collect()
-    sigs = [r.sig for r in rows]
-    assert len(sigs) == len(set(sigs))  # one survivor per cluster
-    # batch model of the stream's cluster key (digest-qualified EMPTY
-    # sentinel — see neardup_suppression_stream)
-    raw = minhash_sig_expr(F.col("text"))
-    key = F.when(raw != "EMPTY", raw).otherwise(
-        F.concat(F.lit("EMPTY:"), F.md5(F.col("text")))
-    )
-    batch = (
-        table(spark, sf_dir, "documents")
-        .select(key.alias("sig"))
-        .distinct()
-        .select(
-            "sig",
-            (
-                F.conv(F.substring(F.md5("sig"), 1, 8), 16, 10).cast("long")
-                % 100
-            ).cast("int").alias("bucket"),
-        )
-    )
-    expected = {r.sig: r.bucket for r in batch.collect()}
-    assert len(rows) == len(expected)
-    for r in rows:
-        b = expected[r.sig]
-        assert r.bucket == b
-        want = "train" if b < 80 else ("val" if b < 90 else "test")
-        assert r.split == want
-    # all three splits actually populated on the fixture corpus
-    assert {r.split for r in rows} == {"train", "val", "test"}
-
-
-def test_cms_counter_stream_matches_batch_grid(spark, sf_dir):
-    # the streaming sketch's complete-mode grid must equal the batch
-    # cms_build over the same corpus — and its state is bounded at
-    # depth x width cells however long the stream runs
-    from airquality_data_pipeline_spark.operators.sketch import (
-        CMS_DEPTH,
-        CMS_WIDTH,
-        cms_build,
-    )
-
-    stream = jobs.read_documents_stream(spark, sf_dir)
-    got = _drain(spark, jobs.cms_counter_stream(stream), mode="complete")
-    rows = got.collect()
-    assert len(rows) <= CMS_DEPTH * CMS_WIDTH
-    toks = table(spark, sf_dir, "documents").select(
-        F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("tok")
-    )
-    batch = {(r.r, r.col): r.counter for r in cms_build(toks).collect()}
-    assert {(r.r, r.col): r.counter for r in rows} == batch
-
-
-def test_neardup_suppression_short_docs_not_collapsed(spark, sf_dir, tmp_path):
-    # docs with < 3 tokens share minhash_sig_expr's 'EMPTY' sentinel;
-    # the stream must keep UNRELATED short docs (distinct texts) while
-    # still collapsing re-deliveries of the SAME short doc
-    import os
-
-    staged = str(tmp_path / "short_docs")
-    os.makedirs(staged)
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        {
-            "doc_id": pd.array([1, 2, 3, 4], dtype="int64"),
-            "text": [
-                "alpha beta",
-                "gamma",
-                "alpha beta",  # exact dup of doc 1
-                "one two three four five",  # shingleable
-            ],
-            "lang": ["en"] * 4,
-            "source": ["s"] * 4,
-            "n_chars": pd.array([10, 5, 10, 23], dtype="int64"),
-        }
-    )
-    pdf.to_parquet(f"{staged}/d0.parquet")
-    stream = (
-        spark.readStream.schema(jobs.DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
-    got = _drain(spark, jobs.neardup_suppression_stream(stream)).collect()
-    kept = sorted(r.doc_id for r in got)
-    # doc 3 (exact re-delivery of doc 1's text) collapses; 1, 2, 4 stay
-    assert kept == [1, 2, 4]
-    sigs = {r.doc_id: r.sig for r in got}
-    assert sigs[1].startswith("EMPTY:") and sigs[2].startswith("EMPTY:")
-    assert sigs[1] != sigs[2]
-    assert not sigs[4].startswith("EMPTY")
-
-
-def test_ohlc_stream_matches_batch(spark, sf_dir):
-    """Closed streaming OHLC bars must equal the batch q155 aggregate
-    bit-for-bit (open/close argmin/argmax and the decimal volume are
-    all order-insensitive)."""
-    utc(spark)
-    stream = jobs.read_events_stream(spark, sf_dir)
-    got = _drain(spark, jobs.ohlc_stream(stream))
-    batch = (
-        table(spark, sf_dir, "events")
-        .groupBy(F.date_trunc("hour", "ts").alias("bar"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(F.struct("ts", "event_id", "value"))
-            .getField("value")
-            .alias("open"),
-            F.max("value").alias("high"),
-            F.min("value").alias("low"),
-            F.max(F.struct("ts", "event_id", "value"))
-            .getField("value")
-            .alias("close"),
-            F.sum(F.col("value").cast("decimal(18,6)"))
-            .cast("double")
-            .alias("volume"),
-        )
-    )
-    got_rows = {
-        (r.bar_start, r.event_type): (
-            r.n, r.open, r.high, r.low, r.close, r.volume
-        )
-        for r in got.collect()
-    }
-    batch_rows = {
-        (r.bar, r.event_type): (
-            r.n, r.open, r.high, r.low, r.close, r.volume
-        )
-        for r in batch.collect()
-    }
-    assert got_rows, "no closed bars emitted"
-    for k, v in got_rows.items():
-        assert batch_rows[k] == v
-
-
-def test_anomaly_scoring_stream_matches_batch(spark, sf_dir):
-    """Stream-static join: streaming anomaly set == batch anomaly set
-    (the enrichment is stateless, so no window-closing caveats)."""
-    utc(spark)
-    ev = table(spark, sf_dir, "events").select(
-        "event_id", "event_type", F.hour("ts").cast("long").alias("hh"),
-        "value",
-    )
-    from airquality_data_pipeline_spark.queries.common import dec
-
-    base = ev.groupBy("event_type", "hh").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(dec("value", 6)).cast("double").alias("s"),
-        F.sum(dec(F.col("value") * F.col("value"), 6))
-        .cast("double")
-        .alias("ss"),
-    )
-    stats = base.where(F.col("n") > 1).select(
-        "event_type",
-        "hh",
-        (F.col("s") / F.col("n")).alias("mean"),
-        F.sqrt(
-            (F.col("ss") - F.col("s") * F.col("s") / F.col("n"))
-            / (F.col("n") - 1)
-        ).alias("std"),
-    )
-    stream = jobs.read_events_stream(spark, sf_dir)
-    got = _drain(spark, jobs.anomaly_scoring_stream(stream, stats))
-    batch_ids = {
-        r.event_id
-        for r in ev.join(stats, ["event_type", "hh"])
-        .where(F.abs(F.col("value") - F.col("mean")) > 3 * F.col("std"))
-        .collect()
-    }
-    got_ids = {r.event_id for r in got.collect()}
-    assert got_ids == batch_ids
-    if not batch_ids:
-        # hostile fixtures (coarse tied value grids) can have no
-        # 3-sigma outliers at all; equality above still verified
-        pytest.skip("fixture yields no 3-sigma anomalies")
-
-
-def test_dsir_scoring_stream_matches_batch(spark, sf_dir):
-    # selection-at-ingest: the frozen batch model scored over the
-    # stream must reproduce q250's per-doc scores (sequential double
-    # fold vs exact decimal sum of the same 6dp weights -> ~1e-9)
-    from airquality_data_pipeline_spark.queries import QUERIES
-    from airquality_data_pipeline_spark.queries.llmops3 import dsir_model
-
-    _, model = dsir_model(spark, sf_dir)
-    model_rows = [(r.bucket, r.w) for r in model.collect()]
-    stream = jobs.read_documents_stream(spark, sf_dir)
-    got = _drain(
-        spark, jobs.dsir_scoring_stream(stream, model_rows)
-    ).collect()
-    batch = {
-        r.doc_id: (r.dsir_score, r.selected)
-        for r in QUERIES["q250_dsir_selection"](spark, sf_dir).collect()
-    }
-    assert len(got) == len(batch)
-    for r in got:
-        b_score, b_sel = batch[r.doc_id]
-        assert abs(r.dsir_score - b_score) < 1e-6, r.doc_id
-        assert r.selected == b_sel
-
-
-def test_blocklist_screen_composes_with_streaming(spark, sf_dir):
+def test_blocklist_screen_composes_with_streaming(spark, sf_dir, tmp_path):
     # q265 is a stateless row-local projection, so the same expression
     # over a stream must reproduce the batch verdicts exactly
+    import os
+
     from airquality_data_pipeline_spark.queries import QUERIES
     from airquality_data_pipeline_spark.queries.llmops3 import (
         blocklist_screen,
     )
 
-    stream = jobs.read_documents_stream(spark, sf_dir)
+    os.symlink(f"{sf_dir}/documents.parquet", tmp_path / "documents.parquet")
+    schema = table(spark, sf_dir, "documents").schema
+    stream = spark.readStream.schema(schema).parquet(str(tmp_path))
     got = _drain(spark, blocklist_screen(stream)).collect()
     batch = {
         r.doc_id: (r.n_hits, r.verdict)
