@@ -36,6 +36,18 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
+def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """Driver-side rows as a LocalRelation. They go in as an Arrow table,
+    whatever the session's Arrow setting: a list of rows would become a
+    Python-RDD scan, and every action over it would start Python tasks."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = T.DataType.fromDDL(ddl)
+    columns = [list(c) for c in zip(*rows)] or [[] for _ in schema.names]
+    return spark.createDataFrame(pa.table(columns, schema=to_arrow_schema(schema)), schema)
+
+
 # --- canonical measurement record (reference app/main.py:769-783) ---------
 MEASUREMENT_SCHEMA = T.StructType(
     [

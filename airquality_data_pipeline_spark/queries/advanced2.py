@@ -20,6 +20,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from airquality_data_pipeline_spark.functions.expr import let, materialize
+from airquality_data_pipeline_spark.io import local_frame
 from airquality_data_pipeline_spark.operators.dedup import shingle_array
 from airquality_data_pipeline_spark.queries.common import (
     dec,
@@ -3673,9 +3674,7 @@ def q183_benford_audit(spark, sf_dir):
         .groupBy(digit.alias("digit"))
         .agg(F.count(F.lit(1)).alias("o"))
     )
-    exp = spark.createDataFrame(
-        sorted(_BENFORD.items()), "digit long, p double"
-    )
+    exp = local_frame(spark, sorted(_BENFORD.items()), "digit long, p double")
     tot = obs.agg(F.sum("o").cast("long").alias("n"))
     e = F.col("p").cast("double") * F.col("n")
     return (

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.io import local_frame
 from airquality_data_pipeline_spark.operators import fan_out
 from airquality_data_pipeline_spark.operators.dedup import (
     MINHASH_P,
@@ -1146,9 +1147,7 @@ def q230_band_threshold_sweep(spark, sf_dir):
     n_pl = planted.agg(F.count(F.lit(1)).alias("n_planted"))
     sweep = flagged.crossJoin(
         F.broadcast(
-            docs.sparkSession.createDataFrame(
-                [(4,), (6,), (8,), (10,)], "threshold int"
-            )
+            local_frame(docs.sparkSession, [(4,), (6,), (8,), (10,)], "threshold int")
         )
     ).crossJoin(F.broadcast(n_pl))
     inb = F.when(F.col("n_matches") >= F.col("threshold"), 1).otherwise(0)

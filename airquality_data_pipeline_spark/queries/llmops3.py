@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.io import local_frame
 from airquality_data_pipeline_spark.operators import fan_out
 from airquality_data_pipeline_spark.queries.common import (
     dec,
@@ -412,12 +413,11 @@ def q254_ndcg_at_10(spark, sf_dir):
     from airquality_data_pipeline_spark.queries.text import BM25_QUERIES
 
     docs = table(spark, sf_dir, "documents")
-    queries = spark.createDataFrame(
-        BM25_QUERIES, "query_id int, term string"
-    )
+    queries = local_frame(spark, BM25_QUERIES, "query_id int, term string")
     top10 = bm25_topk(docs, queries, text_col="text", id_col="doc_id", k=10)
 
-    qsrc = spark.createDataFrame(
+    qsrc = local_frame(
+        spark,
         [(1, "src1"), (2, "src2"), (3, "src3")],
         "query_id int, rel_source string",
     )
@@ -573,9 +573,7 @@ def q255_rrf_fusion(spark, sf_dir):
     from airquality_data_pipeline_spark.queries.text import BM25_QUERIES
 
     docs = table(spark, sf_dir, "documents")
-    queries = spark.createDataFrame(
-        BM25_QUERIES, "query_id int, term string"
-    )
+    queries = local_frame(spark, BM25_QUERIES, "query_id int, term string")
     bm25 = bm25_topk(
         docs, queries, text_col="text", id_col="doc_id", k=20
     ).select("query_id", "doc_id", F.col("rank").alias("b_rank"))

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.io import local_frame
 from airquality_data_pipeline_spark.operators.text import (
     LANG_MARKERS,
     boilerplate_ngram_stats,
@@ -1333,9 +1334,7 @@ def q119_bm25_topk(spark, sf_dir):
     from airquality_data_pipeline_spark.operators.text import bm25_topk
 
     docs = table(spark, sf_dir, "documents")
-    queries = docs.sparkSession.createDataFrame(
-        BM25_QUERIES, "query_id int, term string"
-    )
+    queries = local_frame(docs.sparkSession, BM25_QUERIES, "query_id int, term string")
     return bm25_topk(docs, queries, text_col="text", id_col="doc_id", k=10)
 
 

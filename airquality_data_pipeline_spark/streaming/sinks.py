@@ -21,6 +21,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
+from airquality_data_pipeline_spark.io import local_frame
+
 STATIONS_DDL = """
 CREATE TABLE IF NOT EXISTS stations (
   station_id TEXT PRIMARY KEY,
@@ -143,6 +145,4 @@ def load_cursors(db_path: str, source: str, spark, connect: Callable = sqlite3.c
             "FROM ingestion_cursors WHERE source = ?",
             (source,),
         ).fetchall()
-    return spark.createDataFrame(
-        rows or [], "station_id string, pollutant string, last_observed_at string"
-    )
+    return local_frame(spark, rows, "station_id string, pollutant string, last_observed_at string")

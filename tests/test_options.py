@@ -238,3 +238,16 @@ def test_keep_symbols_lists_only_unreached():
     live = reached(defs, used)
     stale = [k for k in KEEP_SYMBOLS if k not in defs or k in live]
     assert not stale, f"KEEP_SYMBOLS entries that are gone or now reached: {stale}"
+
+
+def test_driver_rows_become_frames_only_through_local_frame():
+    """`createDataFrame` over a list of rows gives a Python-RDD scan, and
+    every action over it starts Python tasks; `io.local_frame` gives a
+    LocalRelation. The package calls it nowhere else."""
+    callers = set()
+    for path in sorted(PKG.rglob("*.py")):
+        for fn in ast.parse(path.read_text()).body:
+            for n in ast.walk(fn):
+                if isinstance(n, ast.Call) and getattr(n.func, "attr", None) == "createDataFrame":
+                    callers.add((path.relative_to(PKG).as_posix(), getattr(fn, "name", None)))
+    assert callers == {("io.py", "local_frame")}

@@ -3,6 +3,7 @@ The builder is a mock, so no second SparkSession starts."""
 
 from __future__ import annotations
 
+import os
 from unittest import mock
 
 import pytest
@@ -33,3 +34,14 @@ def test_non_positive_cpus_rejected(builder, monkeypatch, value):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", value)
     with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
         session.get_spark()
+
+
+def test_workers_fork_from_the_package_daemon(builder):
+    # the package's parent on the workers' path: they import the daemon
+    # and the REST reader whatever the driver's cwd
+    session.get_spark()
+    parent = os.path.dirname(os.path.dirname(os.path.abspath(session.__file__)))
+    calls = builder.config.call_args_list
+    assert mock.call("spark.python.daemon.module", "airquality_data_pipeline_spark.worker_daemon") in calls
+    assert mock.call("spark.executorEnv.PYTHONPATH", parent) in calls
+    assert os.path.isfile(os.path.join(parent, "airquality_data_pipeline_spark", "worker_daemon.py"))
