@@ -22,6 +22,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from airquality_data_pipeline_spark.functions.expr import let
+from airquality_data_pipeline_spark.functions.strings import (
+    md5_int,
+    md5_int_sql,
+    tokens,
+    tokens_sql,
+)
 from airquality_data_pipeline_spark.operators import fan_out
 
 
@@ -86,7 +92,7 @@ def word_shingles(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> Data
     without the repartition the whole stage runs on one core.
     """
     df = fan_out(df)
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = tokens(text_col)
     # bind the split once per row — referencing it inside the shingle
     # lambda would re-split per position (see shingle_array docstring)
     shingles = let(toks, lambda w: shingle_array(w, n))
@@ -96,6 +102,24 @@ def word_shingles(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> Data
     )
 
 
+def word_shingles_sql(src: str, n: int, carry: tuple[str, ...]) -> str:
+    """DuckDB twin of word_shingles: the CTEs `toks` and `sh` over the
+    relation src(doc_id, text, *carry). sh holds the distinct
+    (id, *carry, shingle) rows, doc_id renamed id; docs shorter than n
+    tokens have none (shingle_array's guard)."""
+    c = "".join(f", {x}" for x in carry)
+    return f"""
+    toks AS (
+      SELECT doc_id{c}, {tokens_sql("text")} AS t FROM {src}
+    ),
+    sh AS (
+      SELECT DISTINCT doc_id AS id{c},
+             array_to_string(t[i:i+{n - 1}], ' ') AS shingle
+      FROM toks, UNNEST(generate_series(1, greatest(len(t) - {n - 1}, 0))) AS g(i)
+      WHERE len(t) >= {n}
+    )"""
+
+
 def shingle_set_sizes(
     df: DataFrame, text_col: str, id_col: str, n: int = 3
 ) -> DataFrame:
@@ -103,7 +127,7 @@ def shingle_set_sizes(
     entirely inside the row — no explode, no shuffle. Identical to
     counting `word_shingles` rows per id, at the cost of one light scan
     instead of re-evaluating the exploded subtree."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = tokens(text_col)
     shingles = let(toks, lambda w: shingle_array(w, n))
     return df.select(
         F.col(id_col).alias("id"),
@@ -126,6 +150,12 @@ MINHASH_PARAMS: list[tuple[int, int]] = [
     (149181043, 83472422), (115595697, 180707823), (54873727, 49792546),
     (203971921, 51924210),
 ]
+# the table as one DuckDB row source: (seed, a, b) per hash function
+MINHASH_PARAMS_SQL = (
+    f"SELECT unnest(range({len(MINHASH_PARAMS)})) AS seed,"
+    f" unnest({[a for a, _ in MINHASH_PARAMS]}) AS a,"
+    f" unnest({[b for _, b in MINHASH_PARAMS]}) AS b"
+)
 
 
 def minhash_signatures(
@@ -139,13 +169,27 @@ def minhash_signatures(
     partial; one shuffle on id."""
     hashed = shingles.withColumn(
         "_h",
-        F.conv(F.substring(F.md5(F.col("shingle")), 1, 7), 16, 10).cast("bigint"),
+        md5_int("shingle", 1, 7),
     )
     aggs = [
         F.min((F.lit(a) * F.col("_h") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"mh_{i}")
         for i, (a, b) in enumerate(MINHASH_PARAMS[:num_hashes])
     ]
     return hashed.groupBy("id").agg(*aggs)
+
+
+# DuckDB twin of minhash_signatures over word_shingles_sql's `sh`: the
+# CTEs `hashed` (id, h) and `mh` (id, seed, mh), one row per signature
+# slot instead of one column
+MINHASH_SIGNATURES_SQL = f"""
+    hashed AS (
+      SELECT id, {md5_int_sql("shingle", 1, 7)} AS h FROM sh
+    ),
+    params AS ({MINHASH_PARAMS_SQL}),
+    mh AS (
+      SELECT id, p.seed, min((p.a * h + p.b) % {MINHASH_P}) AS mh
+      FROM hashed, params p GROUP BY id, p.seed
+    )"""
 
 
 def minhash_candidate_pairs(
@@ -225,8 +269,7 @@ def ngram_jaccard_pairs(
     1.95 s -> 1.4 s at sf0.1)."""
     hashed = shingles.select(
         "id",
-        F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10)
-        .cast("bigint")
+        md5_int("shingle", 1, 15)
         .alias("_sh"),
     ).localCheckpoint()
     if sizes is None:
@@ -293,11 +336,7 @@ def simhash(
         df = fan_out(df)
         toks = df.select(
             F.col(id_col).alias("id"),
-            F.explode(
-                F.array_distinct(
-                    F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-                )
-            ).alias("tok"),
+            F.explode(F.array_distinct(tokens(text_col))).alias("tok"),
         )
     else:
         toks = word_shingles(df, text_col=text_col, id_col=id_col, n=n).select(
@@ -437,7 +476,7 @@ def minhash_sig_expr(text: Column) -> Column:
     behavior of dropping them from signatures (callers treat them as
     one degenerate cluster or filter them out).
     """
-    toks = F.split(F.lower(F.trim(text)), r"\s+")
+    toks = tokens(text)
     # bind the base-hash array once: ONE md5 per shingle, then 16 cheap
     # modular folds over the numeric array (r5 — the digest used to sit
     # inside every per-seed lambda, costing 16 md5 passes)
@@ -446,9 +485,7 @@ def minhash_sig_expr(text: Column) -> Column:
         lambda t: let(
             F.transform(
                 shingle_array(t, 3),
-                lambda s: F.conv(F.substring(F.md5(s), 1, 7), 16, 10).cast(
-                    "bigint"
-                ),
+                lambda s: md5_int(s, 1, 7),
             ),
             lambda hs: F.when(F.size(hs) == 0, F.lit("EMPTY")).otherwise(
                 F.concat_ws(

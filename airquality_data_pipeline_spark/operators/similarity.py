@@ -20,6 +20,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from airquality_data_pipeline_spark.operators import fan_out
+from airquality_data_pipeline_spark.operators.dedup import (
+    MINHASH_P,
+    MINHASH_PARAMS,
+    MINHASH_PARAMS_SQL,
+)
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -41,6 +46,23 @@ def with_norm(df: DataFrame) -> DataFrame:
     return _norm_projection(fan_out(df))
 
 
+def with_norm_sql(src: str, carry: tuple[str, ...]) -> str:
+    """DuckDB twin of with_norm: the CTE `n` (vec_id, v, *carry, nrm)
+    over the relation src(vec_id, embedding, *carry). NULL vectors are
+    dropped too: DuckDB's list_dot_product errors on a NULL argument
+    rather than returning NULL, and a missing vector has no
+    similarity (the Spark callers filter them before with_norm)."""
+    c = "".join(f", {x}" for x in carry)
+    return f"""
+    n AS (
+      SELECT * FROM (
+        SELECT vec_id, embedding::DOUBLE[] AS v{c},
+               sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
+        FROM {src} WHERE embedding IS NOT NULL
+      ) WHERE nrm > 0
+    )"""
+
+
 def _norm_projection(df: DataFrame) -> DataFrame:
     """with_norm's projection without the fan-out exchange — for
     bounded side-inputs (centroid seeds) where a full-corpus
@@ -50,7 +72,7 @@ def _norm_projection(df: DataFrame) -> DataFrame:
     under ANSI mode the norm division would throw DIVIDE_BY_ZERO (the
     r6 zero-vector sweep axis caught 12 queries). Same contract as the
     MinHashLSH zero-vector filter; the predicate (sqrt of an IEEE dot
-    fold > 0) is computed identically by the DuckDB oracles' nested
+    fold > 0) is computed identically by with_norm_sql's nested
     `WHERE nrm > 0`. cosine() additionally uses try_divide — see its
     docstring for why the filter alone is not a sound ANSI guard."""
     v = F.col("embedding").cast("array<double>")
@@ -88,16 +110,20 @@ def cosine_topk(
         F.col("id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
     )
     pairs = n.crossJoin(F.broadcast(q)).where(F.col("id") != F.col("query_id"))
+    return _topk(pairs, k)
+
+
+def _topk(pairs: DataFrame, k: int) -> DataFrame:
+    """The k best-scored neighbors per query of (query_id, qv, qn) x
+    (id, v, nrm) pairs: (query_id, neighbor_id, cos_sim, rank), ties
+    broken by neighbor id ascending."""
     scored = pairs.select(
         "query_id",
         F.col("id").alias("neighbor_id"),
         cosine(F.col("qv"), F.col("qn"), F.col("v"), F.col("nrm")).alias("cos_sim"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
 def neardup_pairs(
@@ -127,19 +153,9 @@ def neardup_pairs(
 
 
 # Deterministic pseudo-random hyperplanes for sign-LSH: component i of
-# plane j is ((A_j * i + B_j) mod P) / P - 0.5 — integer-derived, so any
-# engine reproduces the exact same doubles. Same P as the minhash family.
-LSH_P = 268435459
-LSH_PARAMS: list[tuple[int, int]] = [
-    (59770417, 13427546), (147655245, 131475314), (119835357, 74913853),
-    (55026679, 46674928), (226517557, 17063198), (15997263, 50302251),
-    (117380371, 124908867), (14246393, 106750149), (225227991, 118348156),
-    (241167271, 149352498), (3488997, 85716440), (226889381, 182670606),
-    (149181043, 83472422), (115595697, 180707823), (54873727, 49792546),
-    (203971921, 51924210),
-]
-
-
+# plane j is ((a_j * i + b_j) mod P) / P - 0.5 over the minhash family's
+# (a_j, b_j) and P — integer-derived, so any engine reproduces the exact
+# same doubles.
 _PLANE_CACHE: dict[tuple[int, int, int], Column] = {}
 
 
@@ -160,7 +176,7 @@ def _plane_literal(a: int, b: int, dim: int) -> Column:
     the planes are pure constants."""
     key = (a, b, dim)
     if key not in _PLANE_CACHE:
-        vals = [((a * i + b) % LSH_P) / LSH_P - 0.5 for i in range(dim)]
+        vals = [((a * i + b) % MINHASH_P) / MINHASH_P - 0.5 for i in range(dim)]
         _PLANE_CACHE[key] = F.expr(
             "array(" + ",".join(f"{v!r}D" for v in vals) + ")"
         )
@@ -181,7 +197,7 @@ def _sig_from_normed(n: DataFrame, n_bits: int, dim: int) -> DataFrame:
     key = (n_bits, dim)
     if key not in _SIG_CACHE:
         bit_cols = []
-        for a, b in LSH_PARAMS[:n_bits]:
+        for a, b in MINHASH_PARAMS[:n_bits]:
             proj = F.round(_dot(F.col("v"), _plane_literal(a, b, dim)), 6)
             bit_cols.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
         _SIG_CACHE[key] = F.concat(*bit_cols)
@@ -201,13 +217,33 @@ def hyperplane_lsh(
     return _sig_from_normed(with_norm(emb), n_bits, dim)
 
 
+# DuckDB twin of hyperplane_lsh(n_bits=16, dim=64) over with_norm_sql's
+# `n`: the CTEs `proj` (id, seed, d = v . plane_seed) and `sigs` (id, sig)
+HYPERPLANE_LSH_SQL = f"""
+    params AS ({MINHASH_PARAMS_SQL}),
+    proj AS (
+      SELECT n.vec_id AS id, p.seed,
+             round(list_dot_product(n.v,
+               list_transform(range(64),
+                 i -> (CAST((p.a * i + p.b) % {MINHASH_P} AS DOUBLE) / {MINHASH_P} - 0.5))
+             ), 6) AS d
+      FROM n, params p
+    ),
+    sigs AS (
+      SELECT id,
+             string_agg(CASE WHEN d >= 0 THEN '1' ELSE '0' END, '' ORDER BY seed) AS sig
+      FROM proj GROUP BY id
+    )"""
+
+
 def planted_neardup_corpus(emb: DataFrame) -> DataFrame:
     """Corpus with deterministic planted near-duplicates: every 5th
     vector gains a replica (vec_id + 100000) whose component i is
     jittered by ((id*31 + i*7) % 11 - 5) * 1e-3 — cosine vs the
     original ~0.9999 on unit-ish Gaussian vectors. Integer-derived and
     float->double widening only, so any engine reproduces the exact
-    same doubles (the q45 oracle builds the identical corpus in SQL).
+    same doubles (PLANTED_NEARDUP_CORPUS_SQL builds the identical corpus
+    in SQL).
     Exists because the synthetic embeddings fixture is pure random
     Gaussian (max natural pairwise cosine ~0.51): without planting
     there is nothing in the >= 0.9 regime near-dup mining targets."""
@@ -229,6 +265,21 @@ def planted_neardup_corpus(emb: DataFrame) -> DataFrame:
         .select((F.col("vec_id") + 100000).alias("vec_id"), F.col("embedding"))
     )
     return base.unionByName(planted)
+
+
+# DuckDB twin of planted_neardup_corpus over the non-NULL embeddings:
+# the CTE `corpus` (vec_id, embedding as DOUBLE[])
+PLANTED_NEARDUP_CORPUS_SQL = """
+    corpus AS (
+      SELECT vec_id, embedding::DOUBLE[] AS embedding FROM embeddings
+      WHERE embedding IS NOT NULL
+      UNION ALL
+      SELECT vec_id + 100000,
+             list_transform(range(64),
+               i -> embedding[i+1]::DOUBLE
+                    + CAST((vec_id * 31 + i * 7) % 11 - 5 AS DOUBLE) * 0.001)
+      FROM embeddings WHERE embedding IS NOT NULL AND vec_id % 5 = 0
+    )"""
 
 
 def lsh_gated_neardup(
@@ -340,6 +391,42 @@ def sqrt_k_centroids(emb: DataFrame) -> DataFrame:
         .where(F.col("id") < F.col("_k"))
         .select("id", "v", "nrm")
     )
+
+
+def sqrt_k_centroids_sql(src: str) -> str:
+    """DuckDB twin of sqrt_k_centroids as the centroid predicate for
+    ivf_assign_sql, k counted over the relation src."""
+    return (
+        "vec_id < greatest(8, CAST(floor(sqrt("
+        f"(SELECT count(*) FROM {src}))) AS BIGINT))"
+    )
+
+
+# the centroids of the normed CTE `n` ranked per vector by cosine, ties
+# to the lowest centroid id: ivf_assign's argmax order
+_CENT_RANK_SQL = """ROW_NUMBER() OVER (
+                 PARTITION BY n.vec_id
+                 ORDER BY round(list_dot_product(n.v, c.cv) / (n.nrm * c.cn), 6) DESC,
+                          c.cent_id
+               )"""
+
+
+def ivf_assign_sql(centroid_pred: str, carry: tuple[str, ...]) -> str:
+    """DuckDB twin of ivf_assign over with_norm_sql's `n`: the CTEs
+    `cents` (cent_id, cv, cn), the rows matching centroid_pred, and
+    `assigned` (id, v, nrm, *carry, bucket), each vector's max-cosine
+    centroid."""
+    c = "".join(f", {x}" for x in carry)
+    nc = "".join(f", n.{x}" for x in carry)
+    return f"""
+    cents AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM n WHERE {centroid_pred}),
+    assigned AS (
+      SELECT id, v, nrm{c}, bucket FROM (
+        SELECT n.vec_id AS id, n.v, n.nrm{nc}, c.cent_id AS bucket,
+               {_CENT_RANK_SQL} AS r
+        FROM n, cents c
+      ) WHERE r = 1
+    )"""
 
 
 def ivf_assign(
@@ -506,13 +593,7 @@ def ivf_topk(
     pairs = assigned.join(F.broadcast(q), "bucket").where(
         F.col("id") != F.col("query_id")
     )
-    scored = pairs.select(
-        "query_id",
-        F.col("id").alias("neighbor_id"),
-        cosine(F.col("qv"), F.col("qn"), F.col("v"), F.col("nrm")).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _topk(pairs, k)
 
 
 def ivf_topk_multiprobe(
@@ -561,13 +642,22 @@ def ivf_topk_multiprobe(
     pairs = assigned.join(F.broadcast(probes), "bucket").where(
         F.col("id") != F.col("query_id")
     )
-    scored = pairs.select(
-        "query_id",
-        F.col("id").alias("neighbor_id"),
-        cosine(F.col("qv"), F.col("qn"), F.col("v"), F.col("nrm")).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _topk(pairs, k)
+
+
+def ivf_probes_sql(query_pred: str, nprobe: int) -> str:
+    """DuckDB twin of ivf_topk_multiprobe's probe list over
+    ivf_assign_sql's CTEs: `probes` (query_id, qv, qn, bucket), the
+    nprobe max-cosine centroids of each row of `n` matching
+    query_pred."""
+    return f"""
+    probes AS (
+      SELECT id AS query_id, v AS qv, nrm AS qn, bucket FROM (
+        SELECT n.vec_id AS id, n.v, n.nrm, c.cent_id AS bucket,
+               {_CENT_RANK_SQL} AS pr
+        FROM n, cents c WHERE {query_pred}
+      ) WHERE pr <= {nprobe}
+    )"""
 
 
 def product_quantize(

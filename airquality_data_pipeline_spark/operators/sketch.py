@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.functions.strings import md5_int
+
 CMS_DEPTH = 4
 CMS_WIDTH = 256
 
@@ -25,14 +27,7 @@ CMS_WIDTH = 256
 def cms_position(tok: Column, r: Column) -> Column:
     """Counter column for token `tok` in hash row `r`: first 32 bits of
     md5(tok || '#' || r) mod CMS_WIDTH."""
-    return (
-        F.conv(
-            F.substring(F.md5(F.concat(tok, F.lit("#"), r.cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % CMS_WIDTH
-    )
+    return md5_int(F.concat(tok, F.lit("#"), r.cast("string")), 1, 8) % CMS_WIDTH
 
 
 def _rows(df_or_spark, depth: int) -> DataFrame:

@@ -12,6 +12,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.functions.strings import md5_int, tokens
 from airquality_data_pipeline_spark.operators import fan_out
 
 # Stopword marker sets per language (word-boundary regexes). Deliberately
@@ -68,7 +69,7 @@ def quality_features(
     instead of joining parallel scans on the id (q103)."""
     t = F.col(text_col)
     n_chars = F.length(t)
-    toks = F.split(F.lower(F.trim(t)), r"\s+")
+    toks = tokens(t)
     n_tokens = F.size(toks)
     denom_t = F.greatest(n_tokens, F.lit(1)).cast("double")
     denom_c = F.greatest(n_chars, F.lit(1)).cast("double")
@@ -123,7 +124,7 @@ def term_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     df = fan_out(df)
     toks = df.select(
         F.col(id_col).alias("id"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("term"),
+        F.explode(tokens(text_col)).alias("term"),
     )
     tf = toks.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tf"))
     return tf.groupBy("term").agg(
@@ -145,7 +146,7 @@ def tfidf_vectors(
     df = fan_out(df)
     toks = df.select(
         F.col(id_col).alias("id"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("term"),
+        F.explode(tokens(text_col)).alias("term"),
     )
     tf = toks.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tf"))
     n_docs = df.select(F.countDistinct(id_col).alias("n"))
@@ -166,7 +167,7 @@ def fingerprint(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Order-insensitive document fingerprint: md5 over the sorted
     distinct token set (the classic 'fingerprint' clustering key —
     robust to word reordering, whitespace, and duplication)."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = tokens(text_col)
     canon = F.array_join(F.array_sort(F.array_distinct(toks)), " ")
     return df.select(
         F.col(id_col),
@@ -197,7 +198,7 @@ def repetition_features(
     from airquality_data_pipeline_spark.functions.expr import let, materialize
     from airquality_data_pipeline_spark.operators.dedup import shingle_array
 
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = tokens(text_col)
     stats = let(
         toks,
         lambda w: let(
@@ -362,7 +363,7 @@ def chunk_fingerprints(
         F.col(id_col).alias("id"),
         F.posexplode(chunks).alias("chunk_idx", "chunk"),
     )
-    hashed = F.conv(F.substring(F.md5(F.col("chunk")), 1, 15), 16, 10).cast("long")
+    hashed = md5_int("chunk", 1, 15)
     return exploded.select(
         "id",
         "chunk_idx",
@@ -391,8 +392,7 @@ def _bloom_pos(shingle: Column, j: int) -> Column:
     engine-internal sketch format. 24 bits per slice covers BLOOM_M up
     to 2^24; md5's 32 hex chars bound k * 6 <= 32 (k <= 5)."""
     assert BLOOM_M <= 1 << 24 and 6 * j + 6 <= 32
-    h = F.md5(shingle)
-    return F.conv(F.substring(h, 6 * j + 1, 6), 16, 10).cast("long") % BLOOM_M
+    return md5_int(shingle, 6 * j + 1, 6) % BLOOM_M
 
 
 def bloom_contamination(
@@ -579,7 +579,7 @@ def boilerplate_span_scrub(
     """
     from pyspark.sql import Window
 
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = tokens(text_col)
     n_tiles = (F.floor((F.size(toks) - 1) / F.lit(span)) + 1).cast("int")
     tiles = F.transform(
         F.sequence(F.lit(0), n_tiles - 1),
@@ -716,9 +716,7 @@ def vocab_coverage(
     """
     toks = df.select(
         F.col(id_col).alias("id"),
-        F.explode(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-        ).alias("term"),
+        F.explode(tokens(text_col)).alias("term"),
     )
     vocab = (
         toks.groupBy("term")

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.functions.strings import md5_int, md5_int_sql
 from airquality_data_pipeline_spark.queries.common import (
     dec,
     roundq,
@@ -80,10 +81,10 @@ def q85_doc_chunking(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q86_hash_split",
-    oracle="""
+    oracle=f"""
     WITH b AS (
       SELECT doc_id, lang,
-             ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100
+             {md5_int_sql("CAST(doc_id AS VARCHAR)", 1, 8)} % 100
                AS bucket
       FROM documents
     )
@@ -97,11 +98,7 @@ def q85_doc_chunking(spark, sf_dir):
 def q86_hash_split(spark, sf_dir):
     utc(spark)
     docs = table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 100
-    )
+    bucket = md5_int(F.col("doc_id").cast("string"), 1, 8) % 100
     return docs.select(
         "doc_id",
         "lang",
@@ -358,10 +355,10 @@ def q93_snapshot_diff(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q94_stratified_sample",
-    oracle="""
+    oracle=f"""
     WITH b AS (
       SELECT doc_id, lang,
-             ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100
+             {md5_int_sql("CAST(doc_id AS VARCHAR)", 1, 8)} % 100
                AS bucket
       FROM documents
     )
@@ -372,11 +369,7 @@ def q93_snapshot_diff(spark, sf_dir):
 )
 def q94_stratified_sample(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 100
-    )
+    bucket = md5_int(F.col("doc_id").cast("string"), 1, 8) % 100
     quota = F.when(F.col("lang") == "en", F.lit(20)).otherwise(F.lit(60))
     return (
         docs.select("doc_id", "lang", bucket.cast("int").alias("bucket"))
@@ -402,8 +395,7 @@ _PACK_BUCKETS = 32
     oracle=f"""
     WITH t AS (
       SELECT doc_id,
-             ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-               % {_PACK_BUCKETS} AS bucket,
+             {md5_int_sql("CAST(doc_id AS VARCHAR)", 1, 8)} % {_PACK_BUCKETS} AS bucket,
              CASE WHEN length(trim(text)) = 0 THEN 0
                   ELSE len(string_split_regex(trim(text), '\\s+')) END
                AS n_tokens
@@ -428,8 +420,7 @@ _PACK_BUCKETS = 32
 def q98_sequence_packing(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
     bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
+        md5_int(F.col("doc_id").cast("string"), 1, 8)
         % _PACK_BUCKETS
     ).cast("int")
     t = F.trim(F.col("text"))

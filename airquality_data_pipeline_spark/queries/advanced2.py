@@ -20,8 +20,23 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from airquality_data_pipeline_spark.functions.expr import let, materialize
+from airquality_data_pipeline_spark.functions.strings import (
+    md5_int,
+    md5_int_sql,
+    tokens,
+    tokens_sql,
+)
 from airquality_data_pipeline_spark.io import local_frame
-from airquality_data_pipeline_spark.operators.dedup import shingle_array
+from airquality_data_pipeline_spark.operators.dedup import (
+    shingle_array,
+    word_shingles_sql,
+)
+from airquality_data_pipeline_spark.operators.similarity import (
+    PLANTED_NEARDUP_CORPUS_SQL,
+    ivf_assign_sql,
+    sqrt_k_centroids_sql,
+    with_norm_sql,
+)
 from airquality_data_pipeline_spark.queries.common import (
     dec,
     decq,
@@ -65,7 +80,7 @@ from airquality_data_pipeline_spark.queries.registry import register
                generate_series(1, greatest(len(t) - 4, 0)),
                i -> array_to_string(t[i:i+4], ' ')) AS grams
       FROM (SELECT doc_id,
-                   string_split_regex(lower(trim(text)), '\s+') AS t
+                   {toks} AS t
             FROM corpus)
     )
     SELECT doc_id,
@@ -76,6 +91,7 @@ from airquality_data_pipeline_spark.queries.registry import register
              AS flagged
     FROM g WHERE len(grams) > 0
     """.format(
+        toks=tokens_sql("text"),
         # k/n rationals tie at .5 boundaries of the 1e-6 grid (e.g.
         # odd/128): guarded floor grid, not round() (r10 q225 class)
         dup_frac_rq=sql_roundq(
@@ -92,7 +108,7 @@ def q143_repetition_filter(spark, sf_dir):
             F.concat_ws(" ", "text", "text").alias("text"),
         )
     )
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokens("text")
     # one tokenize + one shingle build per row, counts taken inside the
     # same let body (two separate output columns would re-inline the
     # shingle subtree — see functions/expr.py)
@@ -860,8 +876,7 @@ def q152_rfm_segmentation(spark, sf_dir):
     oracle="""
     WITH f AS (
       SELECT label,
-             ('0x' || substring(md5(CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT
-               % 5 AS fold
+             {h} % 5 AS fold
       FROM embeddings
     ),
     cell AS (
@@ -878,6 +893,7 @@ def q152_rfm_segmentation(spark, sf_dir):
              * 4 < CAST(t.n_label AS DOUBLE) AS balanced
     FROM cell c JOIN tot t USING (label)
     """.format(
+        h=md5_int_sql("CAST(vec_id AS VARCHAR)", 1, 8),
         # rel_dev = |5c - n|/n, a k/n rational (.5-tie class): guarded
         # floor grid. expected = n/5 is tie-free at scale 2 (x*100 is
         # always the integer 20n), round() ok.
@@ -889,11 +905,7 @@ def q152_rfm_segmentation(spark, sf_dir):
 )
 def q153_stratified_kfold(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "label")
-    fold = (
-        F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 5
-    )
+    fold = md5_int(F.col("vec_id").cast("string"), 1, 8) % 5
     cell = (
         emb.select("label", fold.alias("fold"))
         .groupBy("fold", "label")
@@ -1133,8 +1145,7 @@ def q156_scd2_intervals(spark, sf_dir):
     oracle="""
     WITH d AS (
       SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-      WHERE ('0x' || substring(md5(CAST(l_orderkey AS VARCHAR)), 1, 8))
-              ::BIGINT % 4 = 0
+      WHERE {h} % 4 = 0
     ),
     e0 AS (
       SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
@@ -1177,6 +1188,7 @@ def q156_scd2_intervals(spark, sf_dir):
            {cc_rq} AS clustering_coeff
     FROM census
     """.format(
+        h=md5_int_sql("CAST(l_orderkey AS VARCHAR)", 1, 8),
         # 3T/W is a k/n rational (.5-tie class): guarded floor grid,
         # not round() (r10 q225 class)
         cc_rq=sql_roundq(
@@ -1187,11 +1199,7 @@ def q156_scd2_intervals(spark, sf_dir):
 )
 def q157_triangle_count(spark, sf_dir):
     keep = (
-        F.conv(
-            F.substring(F.md5(F.col("l_orderkey").cast("string")), 1, 8),
-            16,
-            10,
-        ).cast("long")
+        md5_int(F.col("l_orderkey").cast("string"), 1, 8)
         % 4
         == 0
     )
@@ -1370,38 +1378,10 @@ def q158_snowflake_rollup(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q159_semantic_decontamination",
-    oracle="""
-    WITH base AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-      WHERE embedding IS NOT NULL
-    ),
-    corpus AS (
-      SELECT vec_id, v FROM base
-      UNION ALL
-      SELECT vec_id + 100000,
-             list_transform(range(64),
-               i -> v[i+1] + CAST((vec_id * 31 + i * 7) % 11 - 5 AS DOUBLE) * 0.001)
-      FROM base WHERE vec_id % 5 = 0
-    ),
-    n AS (
-      SELECT * FROM (
-        SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM corpus
-      ) WHERE nrm > 0
-    ),
-    cents AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM n
-              WHERE vec_id < greatest(8, CAST(floor(sqrt(
-                        (SELECT count(*) FROM corpus))) AS BIGINT))),
-    assigned AS (
-      SELECT id, v, nrm, bucket FROM (
-        SELECT n.vec_id AS id, n.v, n.nrm, c.cent_id AS bucket,
-               ROW_NUMBER() OVER (
-                 PARTITION BY n.vec_id
-                 ORDER BY round(list_dot_product(n.v, c.cv) / (n.nrm * c.cn), 6) DESC,
-                          c.cent_id
-               ) AS r
-        FROM n, cents c
-      ) WHERE r = 1
-    ),
+    oracle=f"""
+    WITH {PLANTED_NEARDUP_CORPUS_SQL},
+    {with_norm_sql("corpus", ())},
+    {ivf_assign_sql(sqrt_k_centroids_sql("corpus"), ())},
     hits AS (
       SELECT t.bucket, t.id AS train_id, b.id AS bench_id,
              round(list_dot_product(t.v, b.v) / (t.nrm * b.nrm), 6) AS cos_sim
@@ -2146,8 +2126,7 @@ def q166_series_correlation(spark, sf_dir):
     oracle="""
     WITH u AS (
       SELECT user_id,
-             ('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 8))::BIGINT
-               % 2 AS variant,
+             {h} % 2 AS variant,
              CASE WHEN (min(struct_pack(t := ts, e := event_id,
                                         et := event_type))).et = 'purchase'
                   THEN 1 ELSE 0 END AS converted
@@ -2180,6 +2159,7 @@ def q166_series_correlation(spark, sf_dir):
              < 1.96 AS no_difference
     FROM wide
     """.format(
+        h=md5_int_sql("CAST(user_id AS VARCHAR)", 1, 8),
         # conversion rates are k/n rationals (.5-tie class): guarded
         # floor grid; z's denominator is sqrt-derived — tie-free,
         # round() + 0.0 ok (r10 q225 class)
@@ -2192,11 +2172,7 @@ def q167_ab_test(spark, sf_dir):
     ev = table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "event_type"
     )
-    variant = (
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 2
-    )
+    variant = md5_int(F.col("user_id").cast("string"), 1, 8) % 2
     first_type = F.min(F.struct("ts", "event_id", "event_type")).getField(
         "event_type"
     )
@@ -2553,30 +2529,8 @@ def q171_anova_f(spark, sf_dir):
 @register(
     "q172_knn_label_noise",
     oracle="""
-    WITH base AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings
-      WHERE embedding IS NOT NULL
-    ),
-    n AS (
-      SELECT * FROM (
-        SELECT vec_id, v, label, sqrt(list_dot_product(v, v)) AS nrm FROM base
-      ) WHERE nrm > 0
-    ),
-    cents AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM n
-              WHERE vec_id < greatest(8, CAST(floor(sqrt(
-                        (SELECT count(*) FROM embeddings
-                         WHERE embedding IS NOT NULL))) AS BIGINT))),
-    assigned AS (
-      SELECT id, v, nrm, label, bucket FROM (
-        SELECT n.vec_id AS id, n.v, n.nrm, n.label, c.cent_id AS bucket,
-               ROW_NUMBER() OVER (
-                 PARTITION BY n.vec_id
-                 ORDER BY round(list_dot_product(n.v, c.cv) / (n.nrm * c.cn), 6) DESC,
-                          c.cent_id
-               ) AS r
-        FROM n, cents c
-      ) WHERE r = 1
-    ),
+    WITH {norm},
+    {assign},
     knn AS (
       SELECT id, own_label, nb_label FROM (
         SELECT a.id, a.label AS own_label, b.label AS nb_label,
@@ -2605,6 +2559,11 @@ def q171_anova_f(spark, sf_dir):
            {noise_rq} AS noise_rate
     FROM vote GROUP BY own_label
     """.format(
+        norm=with_norm_sql("embeddings", ("label",)),
+        assign=ivf_assign_sql(
+            sqrt_k_centroids_sql("embeddings WHERE embedding IS NOT NULL"),
+            ("label",),
+        ),
         # k/n count ratio (.5-tie class): guarded floor grid (r10 q225)
         noise_rq=sql_roundq(
             "CAST(SUM(CASE WHEN majority_label <> own_label"
@@ -2708,18 +2667,14 @@ def q172_knn_label_noise(spark, sf_dir):
     oracle="""
     WITH cust AS (
       SELECT c_custkey AS id,
-             (('0x' || substring(md5(CAST(c_custkey AS VARCHAR)), 1, 8))
-                ::BIGINT % 120000) / 1000.0 - 60 AS lat,
-             (('0x' || substring(md5(CAST(c_custkey AS VARCHAR)), 9, 8))
-                ::BIGINT % 360000) / 1000.0 - 180 AS lon
+             ({h1} % 120000) / 1000.0 - 60 AS lat,
+             ({h2} % 360000) / 1000.0 - 180 AS lon
       FROM customer
     ),
     supp AS (
       SELECT s_suppkey AS sid,
-             (('0x' || substring(md5('s' || CAST(s_suppkey AS VARCHAR)), 1, 8))
-                ::BIGINT % 120000) / 1000.0 - 60 AS slat,
-             (('0x' || substring(md5('s' || CAST(s_suppkey AS VARCHAR)), 9, 8))
-                ::BIGINT % 360000) / 1000.0 - 180 AS slon
+             ({h3} % 120000) / 1000.0 - 60 AS slat,
+             ({h4} % 360000) / 1000.0 - 180 AS slon
       FROM supplier
     ),
     sg AS (
@@ -2747,6 +2702,10 @@ def q172_knn_label_noise(spark, sf_dir):
       FROM scored
     ) WHERE rk = 1
     """.format(
+        h1=md5_int_sql("CAST(c_custkey AS VARCHAR)", 1, 8),
+        h2=md5_int_sql("CAST(c_custkey AS VARCHAR)", 9, 8),
+        h3=md5_int_sql("'s' || CAST(s_suppkey AS VARCHAR)", 1, 8),
+        h4=md5_int_sql("'s' || CAST(s_suppkey AS VARCHAR)", 9, 8),
         # squared distance of grid coordinates is a rational (.5-tie
         # class, and it ORDERS the rank): guarded floor grid (r10 q225)
         d2_rq=sql_roundq(
@@ -2757,10 +2716,7 @@ def q172_knn_label_noise(spark, sf_dir):
 )
 def q173_grid_nn_join(spark, sf_dir):
     def coord(expr, start, mod, scale, shift):
-        return (
-            F.conv(F.substring(F.md5(expr), start, 8), 16, 10).cast("long")
-            % mod
-        ) / scale - shift
+        return (md5_int(expr, start, 8) % mod) / scale - shift
 
     cust = table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("id"),
@@ -3274,7 +3230,7 @@ def q178_embedding_dim_stats(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q179_hub_detection",
-    oracle=r"""
+    oracle=fr"""
     WITH corpus AS (
       SELECT doc_id, text FROM documents
       UNION ALL
@@ -3282,17 +3238,9 @@ def q178_embedding_dim_stats(spark, sf_dir):
              'standard boilerplate footer all rights reserved contact us' AS text
       FROM UNNEST(generate_series(0, 29)) AS g(i)
     ),
-    toks AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-      FROM corpus
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id AS id, array_to_string(t[i:i+2], ' ') AS shingle
-      FROM toks, UNNEST(generate_series(1, greatest(len(t) - 2, 0))) AS g(i)
-      WHERE len(t) >= 3
-    ),
+    {word_shingles_sql("corpus", 3, ())},
     hashed AS (
-      SELECT id, ('0x' || substring(md5(shingle), 1, 15))::BIGINT AS h
+      SELECT id, {md5_int_sql("shingle", 1, 15)} AS h
       FROM sh
     ),
     df AS (
@@ -3330,8 +3278,7 @@ def q179_hub_detection(spark, sf_dir):
     sh = word_shingles(corpus, text_col="text", id_col="doc_id", n=3)
     hashed = sh.select(
         "id",
-        F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10)
-        .cast("long")
+        md5_int("shingle", 1, 15)
         .alias("h"),
     )
     df_ok = (
@@ -3514,11 +3461,11 @@ def q181_theil_sen(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q182_token_pmi",
-    oracle=r"""
+    oracle=fr"""
     WITH toks AS (
       SELECT doc_id, g.i AS pos, t[g.i] AS tok
       FROM (SELECT doc_id,
-                   string_split_regex(lower(trim(text)), '\s+') AS t
+                   {tokens_sql("text")} AS t
             FROM documents),
            UNNEST(generate_series(1, len(t))) AS g(i)
     ),
@@ -3549,9 +3496,7 @@ def q182_token_pmi(spark, sf_dir):
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = docs.select(
         "doc_id",
-        F.posexplode(
-            F.split(F.lower(F.trim("text")), r"\s+")
-        ).alias("pos0", "tok"),
+        F.posexplode(tokens("text")).alias("pos0", "tok"),
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "tok")
     uni = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
     tot = toks.agg(F.count(F.lit(1)).alias("n"))

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.functions.strings import md5_int, md5_int_sql
 from airquality_data_pipeline_spark.operators import fan_out
 from airquality_data_pipeline_spark.queries.common import (
     dec,
@@ -1502,8 +1503,7 @@ def q259_psi_drift(spark, sf_dir):
     WITH ev AS (
       SELECT event_id, event_type, value,
              CAST(hour(ts) AS BIGINT) AS hr,
-             ('0x' || substring(md5(CAST(event_id AS VARCHAR)), 1, 8))
-               ::BIGINT % 100 AS bucket
+             {h} % 100 AS bucket
       FROM events WHERE value IS NOT NULL
     ),
     pred AS (
@@ -1549,6 +1549,7 @@ def q259_psi_drift(spark, sf_dir):
     FROM test t, qhat q
     GROUP BY 1, 2
     """.format(
+        h=md5_int_sql("CAST(event_id AS VARCHAR)", 1, 8),
         # coverage = k/n count ratio (.5-tie class): guarded floor grid
         cov_rq=sql_roundq(
             "CAST(SUM(CASE WHEN t.resid <= q.q_hat THEN 1 ELSE 0 END)"
@@ -1560,14 +1561,7 @@ def q260_conformal_calibration(spark, sf_dir):
     utc(spark)
     from pyspark.sql import Window as _W
 
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("event_id").cast("string")), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
+    bucket = md5_int(F.col("event_id").cast("string"), 1, 8) % 100
     # a NULL target has no residual: its rank position (Spark nulls
     # first, DuckDB nulls last) would move q_hat — excluded on BOTH
     # engines (null_mass axis)
@@ -1893,8 +1887,7 @@ def q262_woe_iv(spark, sf_dir):
     oracle="""
     WITH ev AS (
       SELECT event_type,
-             ('0x' || substring(md5(CAST(event_id AS VARCHAR)), 1, 8))
-               ::BIGINT % 5 AS fold,
+             {h} % 5 AS fold,
              CASE WHEN value > 50 THEN 1 ELSE 0 END AS y
       FROM events
     ),
@@ -1917,6 +1910,7 @@ def q262_woe_iv(spark, sf_dir):
     FROM per_fold f
     JOIN per_type t ON f.event_type = t.event_type, g
     """.format(
+        h=md5_int_sql("CAST(event_id AS VARCHAR)", 1, 8),
         # smoothed encodings are integer rationals (.5-tie class):
         # guarded floor grid (r10 q225 class)
         oof_rq=sql_roundq(
@@ -1932,14 +1926,7 @@ def q262_woe_iv(spark, sf_dir):
 )
 def q263_oof_target_encoding(spark, sf_dir):
     utc(spark)
-    fold = (
-        F.conv(
-            F.substring(F.md5(F.col("event_id").cast("string")), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % 5
-    )
+    fold = md5_int(F.col("event_id").cast("string"), 1, 8) % 5
     ev = table(spark, sf_dir, "events").select(
         "event_type",
         fold.alias("fold"),

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.functions.strings import md5_int_sql, md5_unit
 from airquality_data_pipeline_spark.operators import fan_out
 from airquality_data_pipeline_spark.queries.common import (
     dec,
@@ -1211,9 +1212,7 @@ def q221_diff_in_diff(spark, sf_dir):
     ),
     reps AS (
       SELECT user_id, y, r.rep,
-             ('0x' || substring(md5(CAST(user_id AS VARCHAR) || ':'
-                                    || CAST(r.rep AS VARCHAR)), 1, 8)
-              )::BIGINT / 4294967296.0 AS u
+             {h} / 4294967296.0 AS u
       FROM per_user, (SELECT unnest(range(0, 20)) AS rep) r
     ),
     weighted AS (
@@ -1248,6 +1247,9 @@ def q221_diff_in_diff(spark, sf_dir):
     FROM est e LEFT JOIN rep_means r ON TRUE
     GROUP BY e.n_users, e.estimate
     """.format(
+        h=md5_int_sql(
+            "CAST(user_id AS VARCHAR) || ':' || CAST(r.rep AS VARCHAR)", 1, 8
+        ),
         # the mean estimate and the interpolated percentiles of
         # rational replicate means are rationals (.5-tie class):
         # guarded floor grid (r10 q225 class)
@@ -1270,23 +1272,12 @@ def q222_poisson_bootstrap(spark, sf_dir):
         "y",
         F.explode(F.sequence(F.lit(0), F.lit(19))).alias("rep"),
     )
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("user_id").cast("string"),
-                        F.lit(":"),
-                        F.col("rep").cast("string"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("double")
-        / 4294967296.0
+    u = md5_unit(
+        F.concat(
+            F.col("user_id").cast("string"),
+            F.lit(":"),
+            F.col("rep").cast("string"),
+        )
     )
     w = (
         F.when(u < 0.36787944117144233, 0)

@@ -11,11 +11,16 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.functions.strings import (
+    md5_int,
+    md5_int_sql,
+    tokens,
+    tokens_sql,
+)
 from airquality_data_pipeline_spark.io import local_frame
 from airquality_data_pipeline_spark.operators import fan_out
 from airquality_data_pipeline_spark.operators.dedup import (
-    MINHASH_P,
-    MINHASH_PARAMS,
+    MINHASH_SIGNATURES_SQL,
     exact_dedup,
     minhash_candidate_pairs,
     minhash_signatures,
@@ -23,6 +28,7 @@ from airquality_data_pipeline_spark.operators.dedup import (
     shingle_set_sizes,
     simhash,
     word_shingles,
+    word_shingles_sql,
 )
 from airquality_data_pipeline_spark.operators.graph import connected_components
 from airquality_data_pipeline_spark.queries.common import (
@@ -33,22 +39,6 @@ from airquality_data_pipeline_spark.queries.common import (
 from airquality_data_pipeline_spark.queries.registry import register
 
 _NUM_HASHES = 16
-_A_SQL = ", ".join(str(a) for a, _ in MINHASH_PARAMS)
-_B_SQL = ", ".join(str(b) for _, b in MINHASH_PARAMS)
-
-# word-3-gram shingle CTE shared by the oracle SQLs (mirrors
-# operators.dedup.word_shingles: lowercase, whitespace split, distinct)
-_SHINGLES_CTE = """
-    toks AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
-      FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id AS id, array_to_string(t[i:i+2], ' ') AS shingle
-      FROM toks, UNNEST(generate_series(1, greatest(len(t) - 2, 0))) AS g(i)
-      WHERE len(t) >= 3
-    )
-"""
 
 
 # --------------------------------------------------------------------------
@@ -88,20 +78,8 @@ def q40_exact_dedup(spark, sf_dir):
 @register(
     "q41_minhash_candidates",
     oracle=f"""
-    WITH {_SHINGLES_CTE},
-    hashed AS (
-      SELECT id, ('0x' || substring(md5(shingle), 1, 7))::BIGINT AS h FROM sh
-    ),
-    params AS (
-      SELECT unnest(range({_NUM_HASHES})) AS seed,
-             unnest([{_A_SQL}]) AS a,
-             unnest([{_B_SQL}]) AS b
-    ),
-    mh AS (
-      SELECT id, p.seed, min((p.a * h + p.b) % {MINHASH_P}) AS mh
-      FROM hashed, params p
-      GROUP BY id, p.seed
-    )
+    WITH {word_shingles_sql("documents", 3, ())},
+    {MINHASH_SIGNATURES_SQL}
     SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_matches
     FROM mh a JOIN mh b ON a.seed = b.seed AND a.mh = b.mh AND a.id < b.id
     GROUP BY a.id, b.id
@@ -122,9 +100,9 @@ def q41_minhash_candidates(spark, sf_dir):
 @register(
     "q42_ngram_jaccard",
     oracle=f"""
-    WITH {_SHINGLES_CTE},
+    WITH {word_shingles_sql("documents", 3, ())},
     hashed AS (
-      SELECT id, ('0x' || substring(md5(shingle), 1, 15))::BIGINT AS sh
+      SELECT id, {md5_int_sql("shingle", 1, 15)} AS sh
       FROM sh
     ),
     sizes AS (SELECT id, count(*) AS sz FROM hashed GROUP BY id),
@@ -164,7 +142,7 @@ def _simhash_oracle(bits: int = 32) -> str:
     )
     return f"""
     WITH toks AS (
-      SELECT DISTINCT doc_id AS id, unnest(string_split_regex(lower(trim(text)), '\\s+')) AS tok
+      SELECT DISTINCT doc_id AS id, unnest({tokens_sql("text")}) AS tok
       FROM documents
     ),
     hashed AS (SELECT id, md5(tok) AS h FROM toks),
@@ -194,22 +172,11 @@ _SIG_COLS = ", ".join(f"mh_{i}" for i in range(_NUM_HASHES))
 @register(
     "q67_signature_clusters",
     oracle=f"""
-    WITH {_SHINGLES_CTE},
-    hashed AS (
-      SELECT id, ('0x' || substring(md5(shingle), 1, 7))::BIGINT AS h FROM sh
-    ),
-    params AS (
-      SELECT unnest(range({_NUM_HASHES})) AS seed,
-             unnest([{_A_SQL}]) AS a,
-             unnest([{_B_SQL}]) AS b
-    ),
-    mh_long AS (
-      SELECT id, p.seed, min((p.a * h + p.b) % {MINHASH_P}) AS mh
-      FROM hashed, params p GROUP BY id, p.seed
-    ),
+    WITH {word_shingles_sql("documents", 3, ())},
+    {MINHASH_SIGNATURES_SQL},
     sig AS (
       SELECT id, string_agg(CAST(mh AS VARCHAR), ':' ORDER BY seed) AS sig
-      FROM mh_long GROUP BY id
+      FROM mh GROUP BY id
     )
     SELECT min(id) AS keeper_id, count(*) AS n_docs
     FROM sig GROUP BY sig HAVING count(*) >= 2
@@ -237,18 +204,7 @@ def q67_signature_clusters(spark, sf_dir):
 # oracle computes the same closure with a recursive CTE.
 # --------------------------------------------------------------------------
 _EDGES_CTE = f"""
-    hashed AS (
-      SELECT id, ('0x' || substring(md5(shingle), 1, 7))::BIGINT AS h FROM sh
-    ),
-    params AS (
-      SELECT unnest(range({_NUM_HASHES})) AS seed,
-             unnest([{_A_SQL}]) AS a,
-             unnest([{_B_SQL}]) AS b
-    ),
-    mh AS (
-      SELECT id, p.seed, min((p.a * h + p.b) % {MINHASH_P}) AS mh
-      FROM hashed, params p GROUP BY id, p.seed
-    ),
+    {MINHASH_SIGNATURES_SQL},
     cand AS (
       SELECT a.id AS id_a, b.id AS id_b
       FROM mh a JOIN mh b ON a.seed = b.seed AND a.mh = b.mh AND a.id < b.id
@@ -264,7 +220,7 @@ _EDGES_CTE = f"""
 @register(
     "q71_neardup_components",
     oracle=f"""
-    WITH RECURSIVE {_SHINGLES_CTE},
+    WITH RECURSIVE {word_shingles_sql("documents", 3, ())},
     {_EDGES_CTE},
     reach(a, b) AS (
       SELECT doc_id, doc_id FROM documents
@@ -316,14 +272,14 @@ def q71_neardup_components(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q63_ml_minhash_lsh",
-    oracle="""
+    oracle=f"""
     WITH shingleable AS (
       -- 3-gram LSH is defined only for docs with >= 3 tokens: shorter
       -- docs featurize to the all-zero vector, which Spark ML's
       -- MinHashLSH rejects ('at least 1 non zero entry'); both engines
       -- exclude them with this SAME predicate (alt-seed sweep catch)
       SELECT doc_id, text FROM documents
-      WHERE len(string_split_regex(lower(trim(text)), '\\s+')) >= 3
+      WHERE len({tokens_sql("text")}) >= 3
         AND length(trim(text)) > 0
     ),
     corpus AS (
@@ -349,7 +305,7 @@ def q63_ml_minhash_lsh(spark, sf_dir):
     # which MinHashLSH rejects; exclude them with the SAME predicate
     # the oracle uses, BEFORE planting, so both corpora are identical
     base = base.where(
-        (F.size(F.split(F.lower(F.trim("text")), r"\s+")) >= 3)
+        (F.size(tokens("text")) >= 3)
         & (F.length(F.trim("text")) > 0)
     )
     # bounded planted-dup set: 20 rows, deterministic; the limit's
@@ -424,12 +380,12 @@ def q63_ml_minhash_lsh(spark, sf_dir):
 # argmax via max(struct(quality, -id)): one extra broadcast-sized join
 # against the quality features, same single groupBy as q67.
 # --------------------------------------------------------------------------
-_QUALITY_SQL = """
+_QUALITY_SQL = f"""
     q AS (
       SELECT doc_id,
-             least(CAST(len(string_split_regex(lower(trim(text)), '\\s+')) AS DOUBLE) / 50.0, 1.0) * 0.4
+             least(CAST(len({tokens_sql("text")}) AS DOUBLE) / 50.0, 1.0) * 0.4
              + least((CAST(len(regexp_extract_all(lower(text), '\\b(the|and|of|to|a|in|is|it|that|for)\\b')) AS DOUBLE)
-                      / CAST(greatest(len(string_split_regex(lower(trim(text)), '\\s+')), 1) AS DOUBLE)) * 5.0, 1.0) * 0.3
+                      / CAST(greatest(len({tokens_sql("text")}), 1) AS DOUBLE)) * 5.0, 1.0) * 0.3
              + (1.0 - least((CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE)
                              / CAST(greatest(length(text), 1) AS DOUBLE)) * 10.0, 1.0)) * 0.2
              + (1.0 - least((CAST(len(regexp_extract_all(text, '[0-9]')) AS DOUBLE)
@@ -443,22 +399,11 @@ _QUALITY_SQL = """
 @register(
     "q96_canonical_docs",
     oracle=f"""
-    WITH {_SHINGLES_CTE},
-    hashed AS (
-      SELECT id, ('0x' || substring(md5(shingle), 1, 7))::BIGINT AS h FROM sh
-    ),
-    params AS (
-      SELECT unnest(range({_NUM_HASHES})) AS seed,
-             unnest([{_A_SQL}]) AS a,
-             unnest([{_B_SQL}]) AS b
-    ),
-    mh_long AS (
-      SELECT id, p.seed, min((p.a * h + p.b) % {MINHASH_P}) AS mh
-      FROM hashed, params p GROUP BY id, p.seed
-    ),
+    WITH {word_shingles_sql("documents", 3, ())},
+    {MINHASH_SIGNATURES_SQL},
     sig AS (
       SELECT id, string_agg(CAST(mh AS VARCHAR), ':' ORDER BY seed) AS sig
-      FROM mh_long GROUP BY id
+      FROM mh GROUP BY id
     ),
     {_QUALITY_SQL}
     SELECT (max(struct_pack(qq := quality, nid := -id))).nid * -1 AS canonical_id,
@@ -512,32 +457,19 @@ def q96_canonical_docs(spark, sf_dir):
 @register(
     "q112_jaccard_estimate",
     oracle=f"""
-    WITH {_SHINGLES_CTE},
-    hashed AS (
-      SELECT id,
-             ('0x' || substring(md5(shingle), 1, 7))::BIGINT AS h,
-             ('0x' || substring(md5(shingle), 1, 15))::BIGINT AS sh
-      FROM sh
-    ),
-    params AS (
-      SELECT unnest(range({_NUM_HASHES})) AS seed,
-             unnest([{_A_SQL}]) AS a,
-             unnest([{_B_SQL}]) AS b
-    ),
-    mh AS (
-      SELECT id, p.seed, min((p.a * h + p.b) % {MINHASH_P}) AS mh
-      FROM hashed, params p GROUP BY id, p.seed
-    ),
+    WITH {word_shingles_sql("documents", 3, ())},
+    {MINHASH_SIGNATURES_SQL},
     cand AS (
       SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_matches
       FROM mh a JOIN mh b ON a.seed = b.seed AND a.mh = b.mh AND a.id < b.id
       GROUP BY a.id, b.id
       HAVING count(*) >= 6
     ),
-    sizes AS (SELECT id, count(*) AS sz FROM hashed GROUP BY id),
+    h15 AS (SELECT id, {md5_int_sql("shingle", 1, 15)} AS sh FROM sh),
+    sizes AS (SELECT id, count(*) AS sz FROM h15 GROUP BY id),
     inter AS (
       SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
-      FROM hashed a JOIN hashed b ON a.sh = b.sh AND a.id < b.id
+      FROM h15 a JOIN h15 b ON a.sh = b.sh AND a.id < b.id
       GROUP BY a.id, b.id
     ),
     joined AS (
@@ -572,8 +504,7 @@ def q112_jaccard_estimate(spark, sf_dir):
     # candidates, never to every pair that shares one shingle.
     hashed = sh.select(
         "id",
-        F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10)
-        .cast("bigint")
+        md5_int("shingle", 1, 15)
         .alias("_sh"),
     )
     inter = (
@@ -651,7 +582,7 @@ def _simhash_corpus_oracle(bits: int = 32, n_bands: int = 4) -> str:
     bit_cases = ", ".join(
         f"CASE WHEN v_{i} >= 0 THEN '1' ELSE '0' END" for i in range(bits)
     )
-    h2 = ", md5(tok || '#2') AS h2" if bits > 32 else ""
+    h2 = ", md5(shingle || '#2') AS h2" if bits > 32 else ""
     band_bits = bits // n_bands
     return f"""
     WITH corpus AS (
@@ -661,16 +592,8 @@ def _simhash_corpus_oracle(bits: int = 32, n_bands: int = 4) -> str:
       UNION ALL
       SELECT doc_id + 200000, text || ' zzqx' FROM documents WHERE doc_id % 10 = 5
     ),
-    ctoks AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
-      FROM corpus
-    ),
-    feats AS (
-      SELECT DISTINCT doc_id AS id, array_to_string(t[i:i+2], ' ') AS tok
-      FROM ctoks, UNNEST(generate_series(1, greatest(len(t) - 2, 0))) AS g(i)
-      WHERE len(t) >= 3
-    ),
-    hashed AS (SELECT id, md5(tok) AS h{h2} FROM feats),
+    {word_shingles_sql("corpus", 3, ())},
+    hashed AS (SELECT id, md5(shingle) AS h{h2} FROM sh),
     v AS (
       SELECT id,
       {votes}
@@ -736,7 +659,7 @@ def q117_simhash_neardup(spark, sf_dir):
 @register(
     "q120_dedup_pipeline",
     oracle=f"""
-    WITH RECURSIVE {_SHINGLES_CTE},
+    WITH RECURSIVE {word_shingles_sql("documents", 3, ())},
     {_EDGES_CTE},
     reach(a, b) AS (
       SELECT doc_id, doc_id FROM documents
@@ -810,7 +733,7 @@ def q120_dedup_pipeline(spark, sf_dir):
 @register(
     "q124_leakage_free_split",
     oracle=f"""
-    WITH RECURSIVE {_SHINGLES_CTE},
+    WITH RECURSIVE {word_shingles_sql("documents", 3, ())},
     {_EDGES_CTE},
     reach(a, b) AS (
       SELECT doc_id, doc_id FROM documents
@@ -819,10 +742,10 @@ def q120_dedup_pipeline(spark, sf_dir):
     ),
     comp AS (SELECT a AS doc_id, min(b) AS component FROM reach GROUP BY a)
     SELECT doc_id, component,
-           ('0x' || substr(md5(CAST(component AS VARCHAR)), 1, 8))::BIGINT % 100
+           {md5_int_sql("CAST(component AS VARCHAR)", 1, 8)} % 100
              AS bucket,
-           CASE WHEN ('0x' || substr(md5(CAST(component AS VARCHAR)), 1, 8))::BIGINT % 100 < 90 THEN 'train'
-                WHEN ('0x' || substr(md5(CAST(component AS VARCHAR)), 1, 8))::BIGINT % 100 < 95 THEN 'val'
+           CASE WHEN {md5_int_sql("CAST(component AS VARCHAR)", 1, 8)} % 100 < 90 THEN 'train'
+                WHEN {md5_int_sql("CAST(component AS VARCHAR)", 1, 8)} % 100 < 95 THEN 'val'
                 ELSE 'test'
            END AS split
     FROM comp
@@ -840,12 +763,7 @@ def q124_leakage_free_split(spark, sf_dir):
     comps = connected_components_star(
         docs.select(F.col("doc_id")), edges, id_col="doc_id"
     ).select(F.col("id").alias("doc_id"), "component")
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("component").cast("string")), 1, 8), 16, 10
-        ).cast("long")
-        % 100
-    )
+    bucket = md5_int(F.col("component").cast("string"), 1, 8) % 100
     return comps.select(
         "doc_id",
         "component",
@@ -882,28 +800,8 @@ def q124_leakage_free_split(spark, sf_dir):
       WHERE doc_id % 9 = 0
         AND len(string_split_regex(trim(text), '\\s+')) >= 20
     ),
-    toks AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
-      FROM corpus
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id AS id, array_to_string(t[i:i+2], ' ') AS shingle
-      FROM toks, UNNEST(generate_series(1, greatest(len(t) - 2, 0))) AS g(i)
-      WHERE len(t) >= 3
-    ),
-    hashed AS (
-      SELECT id, ('0x' || substring(md5(shingle), 1, 7))::BIGINT AS h FROM sh
-    ),
-    params AS (
-      SELECT unnest(range({_NUM_HASHES})) AS seed,
-             unnest([{_A_SQL}]) AS a,
-             unnest([{_B_SQL}]) AS b
-    ),
-    mh AS (
-      SELECT id, p.seed, min((p.a * h + p.b) % {MINHASH_P}) AS mh
-      FROM hashed, params p
-      GROUP BY id, p.seed
-    ),
+    {word_shingles_sql("corpus", 3, ())},
+    {MINHASH_SIGNATURES_SQL},
     cand AS (
       SELECT a.id AS id_a, b.id AS id_b
       FROM mh a JOIN mh b ON a.seed = b.seed AND a.mh = b.mh AND a.id < b.id
@@ -917,7 +815,7 @@ def q124_leakage_free_split(spark, sf_dir):
         AND len(string_split_regex(trim(text), '\\s+')) >= 20
     ),
     h15 AS (
-      SELECT id, ('0x' || substring(md5(shingle), 1, 15))::BIGINT AS s15
+      SELECT id, {md5_int_sql("shingle", 1, 15)} AS s15
       FROM sh
     ),
     sizes AS (SELECT id, count(*) AS sz FROM h15 GROUP BY id),
@@ -1030,28 +928,8 @@ def q229_dedup_pr_harness(spark, sf_dir):
       WHERE doc_id % 9 = 0
         AND len(string_split_regex(trim(text), '\\s+')) >= 20
     ),
-    toks AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
-      FROM corpus
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id AS id, array_to_string(t[i:i+2], ' ') AS shingle
-      FROM toks, UNNEST(generate_series(1, greatest(len(t) - 2, 0))) AS g(i)
-      WHERE len(t) >= 3
-    ),
-    hashed AS (
-      SELECT id, ('0x' || substring(md5(shingle), 1, 7))::BIGINT AS h FROM sh
-    ),
-    params AS (
-      SELECT unnest(range({_NUM_HASHES})) AS seed,
-             unnest([{_A_SQL}]) AS a,
-             unnest([{_B_SQL}]) AS b
-    ),
-    mh AS (
-      SELECT id, p.seed, min((p.a * h + p.b) % {MINHASH_P}) AS mh
-      FROM hashed, params p
-      GROUP BY id, p.seed
-    ),
+    {word_shingles_sql("corpus", 3, ())},
+    {MINHASH_SIGNATURES_SQL},
     pairs AS (
       SELECT a.id AS id_a, b.id AS id_b,
              CAST(count(*) AS BIGINT) AS n_matches
@@ -1066,7 +944,7 @@ def q229_dedup_pr_harness(spark, sf_dir):
         AND len(string_split_regex(trim(text), '\\s+')) >= 20
     ),
     h15 AS (
-      SELECT id, ('0x' || substring(md5(shingle), 1, 15))::BIGINT AS s15
+      SELECT id, {md5_int_sql("shingle", 1, 15)} AS s15
       FROM sh
     ),
     sizes AS (SELECT id, count(*) AS sz FROM h15 GROUP BY id),

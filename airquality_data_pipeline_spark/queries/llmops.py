@@ -20,11 +20,26 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.functions.strings import (
+    md5_int,
+    md5_int_sql,
+    md5_unit,
+    tokens,
+    tokens_sql,
+)
 from airquality_data_pipeline_spark.operators import fan_out
+from airquality_data_pipeline_spark.operators.dedup import (
+    MINHASH_SIGNATURES_SQL,
+    word_shingles_sql,
+)
 from airquality_data_pipeline_spark.operators.similarity import (
+    PLANTED_NEARDUP_CORPUS_SQL,
     cosine,
     ivf_assign,
+    ivf_assign_sql,
     planted_neardup_corpus,
+    sqrt_k_centroids_sql,
+    with_norm_sql,
 )
 from airquality_data_pipeline_spark.queries.common import (
     decq,
@@ -40,18 +55,6 @@ from airquality_data_pipeline_spark.queries.registry import register
 _CONTAINMENT_RQ = sql_roundq("n_inter / least(x.sz, y.sz)::DOUBLE")
 
 
-def _hash_unit(col):
-    """Deterministic pseudo-uniform in [0, 1): first 32 md5 bits of the
-    value's string form, scaled by 2^-32. The engine-portable stand-in
-    for rand() wherever the result must be reproducible cross-engine."""
-    return (
-        F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10).cast(
-            "double"
-        )
-        / F.lit(4294967296.0)
-    )
-
-
 # --------------------------------------------------------------------------
 # q127: weighted sampling without replacement, k per stratum — the
 # Efraimidis–Spirakis A-ES scheme: each row draws u ~ U(0,1) and keeps
@@ -64,10 +67,10 @@ def _hash_unit(col):
 # --------------------------------------------------------------------------
 @register(
     "q127_weighted_sample",
-    oracle="""
+    oracle=f"""
     WITH keyed AS (
       SELECT source, doc_id, n_chars,
-             ln(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
+             ln({md5_int_sql("CAST(doc_id AS VARCHAR)", 1, 8)}
                 / 4294967296.0) / n_chars AS k
       FROM documents
     )
@@ -90,7 +93,8 @@ def q127_weighted_sample(spark, sf_dir):
     # it last (u^(1/w) -> 0). NULL keys sort last under DESC on both
     # engines (DuckDB double x/0 is NULL and DESC defaults NULLS LAST),
     # so the engines agree; ANSI `/` would throw instead.
-    key = F.try_divide(F.log(_hash_unit(F.col("doc_id"))), F.col("n_chars"))
+    u = md5_unit(F.col("doc_id").cast("string"))
+    key = F.try_divide(F.log(u), F.col("n_chars"))
     w = Window.partitionBy("source").orderBy(F.desc(key), F.asc("doc_id"))
     return (
         docs.select(
@@ -114,7 +118,7 @@ def q127_weighted_sample(spark, sf_dir):
 # Nothing in the plan scales with corpus^2, and the model side of the
 # join is vocabulary-bounded.
 # --------------------------------------------------------------------------
-_BUCKET_SQL = "('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100"
+_BUCKET_SQL = f"{md5_int_sql('CAST(doc_id AS VARCHAR)', 1, 8)} % 100"
 
 
 @register(
@@ -150,15 +154,11 @@ _BUCKET_SQL = "('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT %
 )
 def q128_unigram_crossentropy(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 100
-    )
+    bucket = md5_int(F.col("doc_id").cast("string"), 1, 8) % 100
     toks = docs.select(
         "doc_id",
         bucket.alias("bucket"),
-        F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("tok"),
+        F.explode(tokens("text")).alias("tok"),
     )
     model = (
         toks.where(F.col("bucket") < 80)
@@ -201,22 +201,15 @@ def q128_unigram_crossentropy(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q129_containment",
-    oracle="""
-    WITH toks0 AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
-      FROM documents
-    ),
-    corpus AS (
-      SELECT doc_id, t FROM toks0
+    oracle=f"""
+    WITH corpus AS (
+      SELECT doc_id, text FROM documents
       UNION ALL
-      SELECT doc_id + 300000, t[1:len(t) // 2] FROM toks0
+      SELECT doc_id + 300000, array_to_string(t[1:len(t) // 2], ' ')
+      FROM (SELECT doc_id, {tokens_sql("text")} AS t FROM documents)
       WHERE doc_id % 10 = 7
     ),
-    sh AS (
-      SELECT DISTINCT doc_id AS id, array_to_string(t[i:i+2], ' ') AS shingle
-      FROM corpus, UNNEST(generate_series(1, greatest(len(t) - 2, 0))) AS g(i)
-      WHERE len(t) >= 3
-    ),
+    {word_shingles_sql("corpus", 3, ())},
     sz AS (SELECT id, count(*) AS sz FROM sh GROUP BY id),
     inter AS (
       SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
@@ -224,18 +217,18 @@ def q128_unigram_crossentropy(spark, sf_dir):
       GROUP BY a.id, b.id
     )
     SELECT id_a, id_b, n_inter,
-           {containment_rq} AS containment
+           {_CONTAINMENT_RQ} AS containment
     FROM inter
     JOIN sz x ON inter.id_a = x.id
     JOIN sz y ON inter.id_b = y.id
     WHERE n_inter / least(x.sz, y.sz)::DOUBLE >= 0.8
-    """.format(containment_rq=_CONTAINMENT_RQ),
+    """,
 )
 def q129_containment(spark, sf_dir):
     from airquality_data_pipeline_spark.operators.dedup import word_shingles
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.lower(F.trim("text")), r"\s+")
+    toks = tokens("text")
     excerpts = (
         docs.where(F.col("doc_id") % 10 == 7)
         .select(
@@ -284,38 +277,10 @@ def q129_containment(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q130_semdedup",
-    oracle="""
-    WITH base AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-      WHERE embedding IS NOT NULL
-    ),
-    corpus AS (
-      SELECT vec_id, v FROM base
-      UNION ALL
-      SELECT vec_id + 100000,
-             list_transform(range(64),
-               i -> v[i+1] + CAST((vec_id * 31 + i * 7) % 11 - 5 AS DOUBLE) * 0.001)
-      FROM base WHERE vec_id % 5 = 0
-    ),
-    n AS (
-      SELECT * FROM (
-        SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM corpus
-      ) WHERE nrm > 0
-    ),
-    cents AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM n
-              WHERE vec_id < greatest(8, CAST(floor(sqrt(
-                        (SELECT count(*) FROM corpus))) AS BIGINT))),
-    assigned AS (
-      SELECT id, v, nrm, bucket FROM (
-        SELECT n.vec_id AS id, n.v, n.nrm, c.cent_id AS bucket,
-               ROW_NUMBER() OVER (
-                 PARTITION BY n.vec_id
-                 ORDER BY round(list_dot_product(n.v, c.cv) / (n.nrm * c.cn), 6) DESC,
-                          c.cent_id
-               ) AS r
-        FROM n, cents c
-      ) WHERE r = 1
-    ),
+    oracle=f"""
+    WITH {PLANTED_NEARDUP_CORPUS_SQL},
+    {with_norm_sql("corpus", ())},
+    {ivf_assign_sql(sqrt_k_centroids_sql("corpus"), ())},
     pairs AS (
       SELECT a.bucket, a.id AS id_a, b.id AS id_b,
              round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) AS cos_sim
@@ -382,16 +347,16 @@ def q130_semdedup(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q131_cms_heavy_hitters",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT unnest(string_split_regex(lower(trim(text)), '\\s+')) AS tok
+      SELECT unnest({tokens_sql("text")}) AS tok
       FROM documents
     ),
     exact AS (SELECT tok, count(*) AS cnt FROM toks GROUP BY tok),
     params AS (SELECT unnest(range(4)) AS r),
     positions AS (
       SELECT e.tok, e.cnt, p.r,
-             ('0x' || substring(md5(e.tok || '#' || CAST(p.r AS VARCHAR)), 1, 8))::BIGINT % 256 AS col
+             {md5_int_sql("e.tok || '#' || CAST(p.r AS VARCHAR)", 1, 8)} % 256 AS col
       FROM exact e, params p
     ),
     counters AS (
@@ -421,7 +386,7 @@ def q131_cms_heavy_hitters(spark, sf_dir):
 
     docs = table(spark, sf_dir, "documents")
     toks = docs.select(
-        F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("tok")
+        F.explode(tokens("text")).alias("tok")
     )
     exact = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     # the grid built from the aggregate is identical to building from
@@ -462,48 +427,23 @@ def q131_cms_heavy_hitters(spark, sf_dir):
 # no explode/agg), membership is one hash equi-join on sig, first-wins
 # is one window on the sig partition.
 # --------------------------------------------------------------------------
-def _q132_oracle() -> str:
-    from airquality_data_pipeline_spark.operators.dedup import (
-        MINHASH_P,
-        MINHASH_PARAMS,
-    )
-
-    a_sql = ", ".join(str(a) for a, _ in MINHASH_PARAMS)
-    b_sql = ", ".join(str(b) for _, b in MINHASH_PARAMS)
-    return f"""
+@register(
+    "q132_incremental_dedup",
+    oracle=f"""
     WITH corpus AS (
       SELECT doc_id, text,
-             CASE WHEN ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 50
+             CASE WHEN {md5_int_sql("CAST(doc_id AS VARCHAR)", 1, 8)} % 100 < 50
                   THEN 'seen' ELSE 'incoming' END AS grp
       FROM documents
       UNION ALL
       SELECT doc_id + 400000, text, 'incoming'
       FROM documents WHERE doc_id % 10 = 3
     ),
-    toks AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
-      FROM corpus
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id AS id, array_to_string(t[i:i+2], ' ') AS shingle
-      FROM toks, UNNEST(generate_series(1, greatest(len(t) - 2, 0))) AS g(i)
-      WHERE len(t) >= 3
-    ),
-    hashed AS (
-      SELECT id, ('0x' || substring(md5(shingle), 1, 7))::BIGINT AS h FROM sh
-    ),
-    params AS (
-      SELECT unnest(range({len(MINHASH_PARAMS)})) AS seed,
-             unnest([{a_sql}]) AS a,
-             unnest([{b_sql}]) AS b
-    ),
-    mh_long AS (
-      SELECT id, p.seed, min((p.a * h + p.b) % {MINHASH_P}) AS mh
-      FROM hashed, params p GROUP BY id, p.seed
-    ),
+    {word_shingles_sql("corpus", 3, ())},
+    {MINHASH_SIGNATURES_SQL},
     sig AS (
       SELECT id, string_agg(CAST(mh AS VARCHAR), ':' ORDER BY seed) AS sig
-      FROM mh_long GROUP BY id
+      FROM mh GROUP BY id
     ),
     labeled AS (
       -- LEFT join + digest-qualified EMPTY sentinel: sub-shingle docs
@@ -526,10 +466,8 @@ def _q132_oracle() -> str:
                 WHEN i.rn > 1 THEN 'dup_in_batch'
                 ELSE 'new' END AS verdict
     FROM incoming i LEFT JOIN seen s ON i.sig = s.sig
-    """
-
-
-@register("q132_incremental_dedup", oracle=_q132_oracle())
+    """,
+)
 def q132_incremental_dedup(spark, sf_dir):
     from airquality_data_pipeline_spark.operators.dedup import minhash_sig_expr
 
@@ -539,11 +477,7 @@ def q132_incremental_dedup(spark, sf_dir):
     # out so it runs at full parallelism (guide §2.5) — scale-guarded,
     # no-op at 100 TB
     docs = fan_out(docs)
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 100
-    )
+    bucket = md5_int(F.col("doc_id").cast("string"), 1, 8) % 100
     base = docs.select(
         "doc_id",
         "text",
@@ -609,9 +543,9 @@ def q132_incremental_dedup(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q134_hll_shard_union",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT source, unnest(string_split_regex(lower(trim(text)), '\\s+')) AS tok
+      SELECT source, unnest({tokens_sql("text")}) AS tok
       FROM documents
     )
     SELECT source, count(DISTINCT tok) AS exact_distinct, true AS in_bound
@@ -626,7 +560,7 @@ def q134_hll_shard_union(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
     toks = docs.select(
         "source",
-        F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("tok"),
+        F.explode(tokens("text")).alias("tok"),
     )
     per = toks.groupBy("source").agg(
         F.countDistinct("tok").alias("exact_distinct"),
@@ -775,7 +709,7 @@ _LAMBDA = 0.7
     "q136_bigram_crossentropy",
     oracle=f"""
     WITH split AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t,
+      SELECT doc_id, {tokens_sql("text")} AS t,
              {_BUCKET_SQL} AS bucket
       FROM documents
     ),
@@ -812,12 +746,8 @@ _LAMBDA = 0.7
 )
 def q136_bigram_crossentropy(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 100
-    )
-    toks = F.split(F.lower(F.trim("text")), r"\s+")
+    bucket = md5_int(F.col("doc_id").cast("string"), 1, 8) % 100
+    toks = tokens("text")
     base = docs.select("doc_id", bucket.alias("bucket"), toks.alias("t"))
     uni_toks = base.where(F.col("bucket") < 80).select(
         F.explode("t").alias("w")
@@ -885,25 +815,18 @@ def q136_bigram_crossentropy(spark, sf_dir):
     "q137_split_ngram_leakage",
     oracle=f"""
     WITH labeled AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t,
+      SELECT doc_id, text,
              CASE WHEN {_BUCKET_SQL} < 80 THEN 'train'
                   WHEN {_BUCKET_SQL} < 90 THEN 'val'
                   ELSE 'test' END AS split
       FROM documents
       UNION ALL
-      SELECT doc_id + 600000, string_split_regex(lower(trim(text)), '\\s+'),
-             'val'
-      FROM documents WHERE doc_id % 10 = 1
+      SELECT doc_id + 600000, text, 'val' FROM documents WHERE doc_id % 10 = 1
       UNION ALL
-      SELECT doc_id + 700000, string_split_regex(lower(trim(text)), '\\s+'),
-             'test'
-      FROM documents WHERE doc_id % 10 = 2
+      SELECT doc_id + 700000, text, 'test' FROM documents WHERE doc_id % 10 = 2
     ),
-    grams AS (
-      SELECT DISTINCT split, array_to_string(t[i:i+7], ' ') AS gram
-      FROM labeled, UNNEST(generate_series(1, greatest(len(t) - 7, 0))) AS g(i)
-      WHERE len(t) >= 8
-    ),
+    {word_shingles_sql("labeled", 8, ("split",))},
+    grams AS (SELECT DISTINCT split, shingle AS gram FROM sh),
     sizes AS (SELECT split, count(*) AS n FROM grams GROUP BY split),
     shared AS (
       SELECT a.split AS split_a, b.split AS split_b, count(*) AS n_shared
@@ -921,11 +844,7 @@ def q136_bigram_crossentropy(spark, sf_dir):
 )
 def q137_split_ngram_leakage(spark, sf_dir):
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 100
-    )
+    bucket = md5_int(F.col("doc_id").cast("string"), 1, 8) % 100
     base = docs.select(
         "doc_id",
         "text",
@@ -1006,46 +925,39 @@ def q137_split_ngram_leakage(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q138_containment_capped",
-    oracle="""
-    WITH toks0 AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
-      FROM documents
-    ),
-    corpus AS (
-      SELECT doc_id, t FROM toks0
+    oracle=f"""
+    WITH corpus AS (
+      SELECT doc_id, text FROM documents
       UNION ALL
-      SELECT doc_id + 300000, t[1:len(t) // 2] FROM toks0
+      SELECT doc_id + 300000, array_to_string(t[1:len(t) // 2], ' ')
+      FROM (SELECT doc_id, {tokens_sql("text")} AS t FROM documents)
       WHERE doc_id % 10 = 7
     ),
-    sh0 AS (
-      SELECT DISTINCT doc_id AS id, array_to_string(t[i:i+2], ' ') AS shingle
-      FROM corpus, UNNEST(generate_series(1, greatest(len(t) - 2, 0))) AS g(i)
-      WHERE len(t) >= 3
+    {word_shingles_sql("corpus", 3, ())},
+    df AS (SELECT shingle, count(*) AS df FROM sh GROUP BY shingle),
+    capped AS (
+      SELECT sh.id, sh.shingle FROM sh
+      JOIN df ON sh.shingle = df.shingle WHERE df.df <= 64
     ),
-    df AS (SELECT shingle, count(*) AS df FROM sh0 GROUP BY shingle),
-    sh AS (
-      SELECT sh0.id, sh0.shingle FROM sh0
-      JOIN df ON sh0.shingle = df.shingle WHERE df.df <= 64
-    ),
-    sz AS (SELECT id, count(*) AS sz FROM sh GROUP BY id),
+    sz AS (SELECT id, count(*) AS sz FROM capped GROUP BY id),
     inter AS (
       SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.id < b.id
+      FROM capped a JOIN capped b ON a.shingle = b.shingle AND a.id < b.id
       GROUP BY a.id, b.id
     )
     SELECT id_a, id_b, n_inter,
-           {containment_rq} AS containment
+           {_CONTAINMENT_RQ} AS containment
     FROM inter
     JOIN sz x ON inter.id_a = x.id
     JOIN sz y ON inter.id_b = y.id
     WHERE n_inter / least(x.sz, y.sz)::DOUBLE >= 0.8
-    """.format(containment_rq=_CONTAINMENT_RQ),
+    """,
 )
 def q138_containment_capped(spark, sf_dir):
     from airquality_data_pipeline_spark.operators.dedup import word_shingles
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.lower(F.trim("text")), r"\s+")
+    toks = tokens("text")
     excerpts = (
         docs.where(F.col("doc_id") % 10 == 7)
         .select(

@@ -21,6 +21,11 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.functions.strings import (
+    md5_int,
+    md5_int_sql,
+    md5_unit,
+)
 from airquality_data_pipeline_spark.queries.common import (
     finite,
     roundq,
@@ -774,14 +779,14 @@ def q234_code_screen(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q235_dp_noisy_counts",
-    oracle="""
+    oracle=f"""
     WITH counts AS (
       SELECT event_type, CAST(count(*) AS BIGINT) AS c
       FROM events GROUP BY event_type
     ),
     noised AS (
       SELECT event_type, c,
-             ('0x' || substring(md5('dp:' || event_type), 1, 8))::BIGINT
+             {md5_int_sql("'dp:' || event_type", 1, 8)}
                / 4294967296.0 AS u
       FROM counts
     )
@@ -799,16 +804,7 @@ def q235_dp_noisy_counts(spark, sf_dir):
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("dp:"), F.col("event_type"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("double")
-        / 4294967296.0
-    )
+    u = md5_unit(F.concat(F.lit("dp:"), F.col("event_type")))
     lap = F.when(u < 0.5, -F.log(2.0 * u)).otherwise(
         F.log(2.0 * (1.0 - u))
     )
@@ -891,8 +887,7 @@ def q236_k_anonymity(spark, sf_dir):
     oracle="""
     WITH files AS (
       SELECT source,
-             ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 4))
-               ::BIGINT % 64 AS shard,
+             {h} % 64 AS shard,
              CAST(SUM(len(text)) AS BIGINT) AS bytes
       FROM documents GROUP BY 1, 2
     ),
@@ -921,6 +916,7 @@ def q236_k_anonymity(spark, sf_dir):
            {fill_rq} AS fill_ratio
     FROM bins GROUP BY source
     """.format(
+        h=md5_int_sql("CAST(doc_id AS VARCHAR)", 1, 4),
         # bytes/(files*16384) integer rational (.5-tie class):
         # guarded floor grid (r10 q225 class)
         fill_rq=sql_roundq(
@@ -933,14 +929,7 @@ def q239_compaction_plan(spark, sf_dir):
     docs = table(spark, sf_dir, "documents").select(
         "source", "doc_id", F.length("text").alias("blen")
     )
-    shard = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4),
-            16,
-            10,
-        ).cast("long")
-        % 64
-    )
+    shard = md5_int(F.col("doc_id").cast("string"), 1, 4) % 64
     files = docs.groupBy("source", shard.alias("shard")).agg(
         F.sum("blen").alias("bytes")
     )
@@ -995,8 +984,7 @@ def q239_compaction_plan(spark, sf_dir):
                    FROM events),
     assigned AS (
       SELECT value, 'random' AS layout,
-             ('0x' || substring(md5(CAST(event_id AS VARCHAR)), 1, 8))
-               ::BIGINT % 64 AS file_id
+             {h} % 64 AS file_id
       FROM events
       UNION ALL
       SELECT value, 'value_clustered' AS layout,
@@ -1025,6 +1013,7 @@ def q239_compaction_plan(spark, sf_dir):
            {skip_rq} AS skip_ratio
     FROM zones GROUP BY 1
     """.format(
+        h=md5_int_sql("CAST(event_id AS VARCHAR)", 1, 8),
         # k/n count ratio (.5-tie class): guarded floor grid (r10 q225)
         f=sql_finite("value"),
         skip_rq=sql_roundq(
@@ -1040,14 +1029,7 @@ def q253_zone_map_skipping(spark, sf_dir):
     stats = ev.agg(
         F.min(fv).alias("vmin"), F.max(fv).alias("vmax")
     )
-    rand_file = (
-        F.conv(
-            F.substring(F.md5(F.col("event_id").cast("string")), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % 64
-    )
+    rand_file = md5_int(F.col("event_id").cast("string"), 1, 8) % 64
     # try_divide + degenerate-range guard: vmax = vmin under the
     # all-ties robustness axis — everything lands in one zone (file 0)
     # on BOTH engines instead of an ANSI DIVIDE_BY_ZERO (Spark) vs a

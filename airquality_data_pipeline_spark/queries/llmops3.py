@@ -21,6 +21,12 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.functions.strings import (
+    md5_int,
+    md5_int_sql,
+    tokens,
+    tokens_sql,
+)
 from airquality_data_pipeline_spark.io import local_frame
 from airquality_data_pipeline_spark.operators import fan_out
 from airquality_data_pipeline_spark.queries.common import (
@@ -32,17 +38,14 @@ from airquality_data_pipeline_spark.queries.common import (
 from airquality_data_pipeline_spark.queries.registry import register
 
 # Hashed feature bucket (token -> [0, 1024)): first 8 md5 hex digits.
-_TOK_BUCKET_SQL = "('0x' || substring(md5(tok), 1, 8))::BIGINT % 1024"
+_TOK_BUCKET_SQL = f"{md5_int_sql('tok', 1, 8)} % 1024"
 _DOC_BUCKET_SQL = (
-    "('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100"
+    f"{md5_int_sql('CAST(doc_id AS VARCHAR)', 1, 8)} % 100"
 )
 
 
 def _tok_bucket() -> F.Column:
-    return (
-        F.conv(F.substring(F.md5(F.col("tok")), 1, 8), 16, 10).cast("long")
-        % 1024
-    )
+    return md5_int("tok", 1, 8) % 1024
 
 
 def _tokens(spark, sf_dir):
@@ -51,7 +54,7 @@ def _tokens(spark, sf_dir):
         "doc_id",
         "lang",
         "n_chars",
-        F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("tok"),
+        F.explode(tokens("text")).alias("tok"),
     )
 
 
@@ -98,7 +101,7 @@ def dsir_model(spark, sf_dir, target_lang: str = "en"):
     oracle=f"""
     WITH toks AS (
       SELECT doc_id, lang,
-             unnest(string_split_regex(lower(trim(text)), '\\s+')) AS tok
+             unnest({tokens_sql("text")}) AS tok
       FROM documents
     ),
     b AS (
@@ -194,18 +197,13 @@ def q250_dsir_selection(spark, sf_dir):
 )
 def q251_perplexity_terciles(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-        ).cast("long")
-        % 100
-    )
+    bucket = md5_int(F.col("doc_id").cast("string"), 1, 8) % 100
     toks = docs.select(
         "doc_id",
         "lang",
         "n_chars",
         bucket.alias("bucket"),
-        F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("tok"),
+        F.explode(tokens("text")).alias("tok"),
     )
     model = (
         toks.where(F.col("bucket") < 80)
@@ -337,7 +335,7 @@ def _ndcg_oracle() -> str:
     WITH d AS (
       SELECT doc_id,
              CASE WHEN length(trim(text)) = 0 THEN 0
-                  ELSE len(string_split_regex(lower(trim(text)), '\\s+'))
+                  ELSE len({tokens_sql("text")})
              END AS dl,
              lower(trim(text)) AS t
       FROM documents
@@ -493,7 +491,7 @@ def _rrf_oracle() -> str:
     WITH d AS (
       SELECT doc_id,
              CASE WHEN length(trim(text)) = 0 THEN 0
-                  ELSE len(string_split_regex(lower(trim(text)), '\\s+'))
+                  ELSE len({tokens_sql("text")})
              END AS dl,
              lower(trim(text)) AS t
       FROM documents
@@ -654,7 +652,7 @@ def q255_rrf_fusion(spark, sf_dir):
     oracle="""
     WITH toks AS (
       SELECT lang,
-             unnest(string_split_regex(lower(trim(text)), '\\s+')) AS tok
+             unnest({toks}) AS tok
       FROM documents
     ),
     counts AS (SELECT lang, count(*) AS n_tokens FROM toks GROUP BY 1),
@@ -681,6 +679,7 @@ def q255_rrf_fusion(spark, sf_dir):
            {rf_rq} AS resample_factor
     FROM powed p JOIN z ON p.alpha = z.alpha
     """.format(
+        toks=tokens_sql("text"),
         # token share and grid-value ratios are rationals (.5-tie
         # class): guarded floor grid; pa = pow(p, 0.3/0.7) is
         # irrational (tie-free) and pow(p, 1.0) grid-exact — round ok
@@ -743,10 +742,9 @@ _BLOCKLIST_SQL = ", ".join(f"'{w}'" for w in _BLOCKLIST)
     WITH scored AS (
       SELECT doc_id,
              CASE WHEN length(trim(text)) = 0 THEN 0
-                  ELSE len(string_split_regex(lower(trim(text)), '\\s+'))
+                  ELSE len({tokens_sql("text")})
              END AS n_tokens,
-             len(list_filter(string_split_regex(lower(trim(text)),
-                                                '\\s+'),
+             len(list_filter({tokens_sql("text")},
                              t -> list_contains([{_BLOCKLIST_SQL}], t)))
                AS n_hits
       FROM documents

@@ -9,13 +9,16 @@ from pyspark.sql import functions as F
 
 from airquality_data_pipeline_spark.functions.expr import materialize
 from airquality_data_pipeline_spark.operators.similarity import (
-    LSH_P,
-    LSH_PARAMS,
+    HYPERPLANE_LSH_SQL,
+    PLANTED_NEARDUP_CORPUS_SQL,
     cosine_topk,
     hyperplane_lsh,
+    ivf_assign_sql,
+    ivf_probes_sql,
     ivf_topk,
     lsh_gated_neardup,
     planted_neardup_corpus,
+    with_norm_sql,
 )
 from airquality_data_pipeline_spark.queries.common import (
     roundq,
@@ -23,26 +26,6 @@ from airquality_data_pipeline_spark.queries.common import (
     table,
 )
 from airquality_data_pipeline_spark.queries.registry import register
-
-# shared oracle CTE: vectors cast to double + L2 norms. Zero-norm
-# vectors are excluded in lockstep with _norm_projection (cosine is
-# undefined for them; ANSI division would throw on the Spark side).
-# NULL vectors are excluded explicitly on BOTH engines (null_text
-# axis): DuckDB's list_inner_product ERRORS on a NULL argument rather
-# than returning NULL, and a missing vector has no similarity anyway.
-_NORM_CTE = """
-    n AS (
-      SELECT * FROM (
-        SELECT vec_id, embedding::DOUBLE[] AS v,
-               sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-        FROM embeddings WHERE embedding IS NOT NULL
-      ) WHERE nrm > 0
-    )
-"""
-
-# deterministic sign-LSH hyperplane parameters, shared with the oracle SQL
-_LSH_A = ", ".join(str(a) for a, _ in LSH_PARAMS)
-_LSH_B = ", ".join(str(b) for _, b in LSH_PARAMS)
 
 
 # --------------------------------------------------------------------------
@@ -53,7 +36,7 @@ _LSH_B = ", ".join(str(b) for _, b in LSH_PARAMS)
 @register(
     "q44_cosine_topk",
     oracle=f"""
-    WITH {_NORM_CTE},
+    WITH {with_norm_sql("embeddings", ())},
     q AS (SELECT vec_id AS qid, v AS qv, nrm AS qn FROM n WHERE vec_id < 10),
     scored AS (
       SELECT q.qid AS query_id, n.vec_id AS neighbor_id,
@@ -98,41 +81,9 @@ def q44_cosine_topk(spark, sf_dir):
 @register(
     "q45_embedding_neardup",
     oracle=f"""
-    WITH base AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-      WHERE embedding IS NOT NULL
-    ),
-    corpus AS (
-      SELECT vec_id, v FROM base
-      UNION ALL
-      SELECT vec_id + 100000,
-             list_transform(range(64),
-               i -> v[i+1] + CAST((vec_id * 31 + i * 7) % 11 - 5 AS DOUBLE) * 0.001)
-      FROM base WHERE vec_id % 5 = 0
-    ),
-    n AS (
-      SELECT * FROM (
-        SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM corpus
-      ) WHERE nrm > 0
-    ),
-    params AS (
-      SELECT unnest(range(16)) AS j,
-             unnest([{_LSH_A}]) AS a,
-             unnest([{_LSH_B}]) AS b
-    ),
-    proj AS (
-      SELECT n.vec_id AS id, p.j,
-             round(list_dot_product(n.v,
-               list_transform(range(64),
-                 i -> (CAST((p.a * i + p.b) % {LSH_P} AS DOUBLE) / {LSH_P} - 0.5))
-             ), 6) AS d
-      FROM n, params p
-    ),
-    sigs AS (
-      SELECT id,
-             string_agg(CASE WHEN d >= 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS sig
-      FROM proj GROUP BY id
-    ),
+    WITH {PLANTED_NEARDUP_CORPUS_SQL},
+    {with_norm_sql("corpus", ())},
+    {HYPERPLANE_LSH_SQL},
     bands AS (
       SELECT id, bj.band, substring(sig, bj.band * 4 + 1, 4) AS bv
       FROM sigs, (SELECT unnest(range(4)) AS band) bj
@@ -167,19 +118,8 @@ def q45_embedding_neardup(spark, sf_dir):
 @register(
     "q46_ivf_topk",
     oracle=f"""
-    WITH {_NORM_CTE},
-    cents AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM n WHERE vec_id < 8),
-    assigned AS (
-      SELECT id, v, nrm, bucket FROM (
-        SELECT n.vec_id AS id, n.v, n.nrm, c.cent_id AS bucket,
-               ROW_NUMBER() OVER (
-                 PARTITION BY n.vec_id
-                 ORDER BY round(list_dot_product(n.v, c.cv) / (n.nrm * c.cn), 6) DESC,
-                          c.cent_id
-               ) AS r
-        FROM n, cents c
-      ) WHERE r = 1
-    ),
+    WITH {with_norm_sql("embeddings", ())},
+    {ivf_assign_sql("vec_id < 8", ())},
     q AS (
       SELECT id AS query_id, v AS qv, nrm AS qn, bucket
       FROM assigned WHERE id < 10
@@ -214,23 +154,9 @@ def q46_ivf_topk(spark, sf_dir):
 @register(
     "q47_vector_lsh",
     oracle=f"""
-    WITH {_NORM_CTE},
-    params AS (
-      SELECT unnest(range(16)) AS j,
-             unnest([{_LSH_A}]) AS a,
-             unnest([{_LSH_B}]) AS b
-    ),
-    proj AS (
-      SELECT n.vec_id AS id, p.j,
-             round(list_dot_product(n.v,
-               list_transform(range(64),
-                 i -> (CAST((p.a * i + p.b) % {LSH_P} AS DOUBLE) / {LSH_P} - 0.5))
-             ), 6) AS d
-      FROM n, params p
-    )
-    SELECT id,
-           string_agg(CASE WHEN d >= 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS sig
-    FROM proj GROUP BY id
+    WITH {with_norm_sql("embeddings", ())},
+    {HYPERPLANE_LSH_SQL}
+    SELECT id, sig FROM sigs
     """,
 )
 def q47_vector_lsh(spark, sf_dir):
@@ -316,28 +242,18 @@ from airquality_data_pipeline_spark.operators.similarity import kmeans_step  # n
 @register(
     "q104_kmeans_refine",
     oracle=f"""
-    WITH {_NORM_CTE},
-    cents AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM n WHERE vec_id < 8),
-    assigned AS (
-      SELECT id, v, bucket, c_sim FROM (
-        SELECT n.vec_id AS id, n.v, c.cent_id AS bucket,
-               round(list_dot_product(n.v, c.cv) / (n.nrm * c.cn), 6) AS c_sim,
-               ROW_NUMBER() OVER (
-                 PARTITION BY n.vec_id
-                 ORDER BY round(list_dot_product(n.v, c.cv) / (n.nrm * c.cn), 6) DESC,
-                          c.cent_id
-               ) AS r
-        FROM n, cents c
-      ) WHERE r = 1
-    ),
+    WITH {with_norm_sql("embeddings", ())},
+    {ivf_assign_sql("vec_id < 8", ())},
     stats AS (
       -- floor grid (common.sql_decq convention), not round(): the
       -- mean cosine is a continuous double ratio (see kmeans_step)
-      SELECT bucket, count(*) AS n_vectors,
-             floor(CAST(SUM(CAST(c_sim AS DECIMAL(18,6))) AS DOUBLE)
+      SELECT a.bucket, count(*) AS n_vectors,
+             floor(CAST(SUM(CAST(round(list_dot_product(a.v, c.cv)
+                                       / (a.nrm * c.cn), 6)
+                                 AS DECIMAL(18,6))) AS DOUBLE)
                    / count(*) * 1000000.0 + 0.5) / 1000000.0
                AS mean_cent_sim
-      FROM assigned GROUP BY bucket
+      FROM assigned a JOIN cents c ON a.bucket = c.cent_id GROUP BY a.bucket
     ),
     dims AS (
       SELECT bucket, i - 1 AS dim, v[i] AS val
@@ -388,30 +304,9 @@ from airquality_data_pipeline_spark.operators.similarity import (  # noqa: E402
 @register(
     "q107_ivf_multiprobe",
     oracle=f"""
-    WITH {_NORM_CTE},
-    cents AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM n WHERE vec_id < 8),
-    assigned AS (
-      SELECT id, v, nrm, bucket FROM (
-        SELECT n.vec_id AS id, n.v, n.nrm, c.cent_id AS bucket,
-               ROW_NUMBER() OVER (
-                 PARTITION BY n.vec_id
-                 ORDER BY round(list_dot_product(n.v, c.cv) / (n.nrm * c.cn), 6) DESC,
-                          c.cent_id
-               ) AS r
-        FROM n, cents c
-      ) WHERE r = 1
-    ),
-    probes AS (
-      SELECT id AS query_id, v AS qv, nrm AS qn, bucket FROM (
-        SELECT n.vec_id AS id, n.v, n.nrm, c.cent_id AS bucket,
-               ROW_NUMBER() OVER (
-                 PARTITION BY n.vec_id
-                 ORDER BY round(list_dot_product(n.v, c.cv) / (n.nrm * c.cn), 6) DESC,
-                          c.cent_id
-               ) AS pr
-        FROM n, cents c WHERE n.vec_id < 10
-      ) WHERE pr <= 2
-    ),
+    WITH {with_norm_sql("embeddings", ())},
+    {ivf_assign_sql("vec_id < 8", ())},
+    {ivf_probes_sql("n.vec_id < 10", 2)},
     scored AS (
       SELECT p.query_id, a.id AS neighbor_id,
              round(list_dot_product(p.qv, a.v) / (p.qn * a.nrm), 6) AS cos_sim
@@ -449,27 +344,11 @@ from airquality_data_pipeline_spark.operators.similarity import (  # noqa: E402
     product_quantize,
 )
 
-_IVF_ASSIGN_CTE = f"""
-    cents AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM n WHERE vec_id < 8),
-    assigned AS (
-      SELECT id, v, nrm, bucket FROM (
-        SELECT n.vec_id AS id, n.v, n.nrm, c.cent_id AS bucket,
-               ROW_NUMBER() OVER (
-                 PARTITION BY n.vec_id
-                 ORDER BY round(list_dot_product(n.v, c.cv) / (n.nrm * c.cn), 6) DESC,
-                          c.cent_id
-               ) AS r
-        FROM n, cents c
-      ) WHERE r = 1
-    )
-"""
-
-
 @register(
     "q115_ann_recall",
     oracle=f"""
-    WITH {_NORM_CTE},
-    {_IVF_ASSIGN_CTE},
+    WITH {with_norm_sql("embeddings", ())},
+    {ivf_assign_sql("vec_id < 8", ())},
     q AS (
       SELECT id AS query_id, v AS qv, nrm AS qn, bucket
       FROM assigned WHERE id < 10
@@ -496,17 +375,7 @@ _IVF_ASSIGN_CTE = f"""
         FROM assigned a JOIN q p ON a.bucket = p.bucket AND a.id <> p.query_id
       ) WHERE rank <= 3
     ),
-    probes AS (
-      SELECT id AS query_id, v AS qv, nrm AS qn, bucket FROM (
-        SELECT n.vec_id AS id, n.v, n.nrm, c.cent_id AS bucket,
-               ROW_NUMBER() OVER (
-                 PARTITION BY n.vec_id
-                 ORDER BY round(list_dot_product(n.v, c.cv) / (n.nrm * c.cn), 6) DESC,
-                          c.cent_id
-               ) AS pr
-        FROM n, cents c WHERE n.vec_id < 10
-      ) WHERE pr <= 2
-    ),
+    {ivf_probes_sql("n.vec_id < 10", 2)},
     s2 AS (
       SELECT query_id, neighbor_id FROM (
         SELECT p.query_id, a.id AS neighbor_id,
@@ -581,7 +450,7 @@ def q115_ann_recall(spark, sf_dir):
 @register(
     "q116_product_quantization",
     oracle=f"""
-    WITH {_NORM_CTE},
+    WITH {with_norm_sql("embeddings", ())},
     sub AS (
       SELECT vec_id AS id, j AS subspace, v[j*8+1 : j*8+8] AS sv
       FROM n, UNNEST(generate_series(0, 7)) AS g(j)

@@ -7,7 +7,14 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.functions.strings import (
+    md5_int,
+    md5_int_sql,
+    tokens,
+    tokens_sql,
+)
 from airquality_data_pipeline_spark.io import local_frame
+from airquality_data_pipeline_spark.operators.dedup import word_shingles_sql
 from airquality_data_pipeline_spark.operators.text import (
     LANG_MARKERS,
     boilerplate_ngram_stats,
@@ -75,7 +82,7 @@ def q48_language_id(spark, sf_dir):
     WITH m AS (
       SELECT doc_id,
              length(text) AS n_chars_calc,
-             len(string_split_regex(lower(trim(text)), '\\s+')) AS n_tokens,
+             len({tokens_sql("text")}) AS n_tokens,
              {_rc('text', '[.,;:!?]')} AS n_punct,
              {_rc('text', '[0-9]')} AS n_digit,
              {_rc('lower(text)', LANG_MARKERS['en'])} AS n_stop
@@ -127,11 +134,11 @@ def q50_token_counts(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q51_fingerprint",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
            md5(array_to_string(list_sort(list_distinct(
-             string_split_regex(lower(trim(text)), '\\s+'))), ' ')) AS fingerprint,
-           len(list_distinct(string_split_regex(lower(trim(text)), '\\s+'))) AS vocab_size
+             {tokens_sql("text")})), ' ')) AS fingerprint,
+           len(list_distinct({tokens_sql("text")})) AS vocab_size
     FROM documents
     """,
 )
@@ -172,10 +179,10 @@ def q52_binary_columns(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q54_term_stats",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT doc_id AS id,
-             unnest(string_split_regex(lower(trim(text)), '\\s+')) AS term
+             unnest({tokens_sql("text")}) AS term
       FROM documents
     ),
     tf AS (SELECT id, term, count(*) AS tf FROM toks GROUP BY id, term)
@@ -198,10 +205,10 @@ def q54_term_stats(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q62_tfidf",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT doc_id AS id,
-             unnest(string_split_regex(lower(trim(text)), '\\s+')) AS term
+             unnest({tokens_sql("text")}) AS term
       FROM documents
     ),
     tf AS (SELECT id, term, count(*) AS tf FROM toks GROUP BY id, term),
@@ -227,9 +234,9 @@ def q62_tfidf(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q95_repetition_filter",
-    oracle="""
+    oracle=f"""
     WITH t AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS w
+      SELECT doc_id, {tokens_sql("text")} AS w
       FROM documents
     ),
     g AS (
@@ -268,16 +275,8 @@ def q95_repetition_filter(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q97_boilerplate_ngrams",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
-      FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id AS id, array_to_string(t[i:i+2], ' ') AS shingle
-      FROM toks, UNNEST(generate_series(1, greatest(len(t) - 2, 0))) AS g(i)
-      WHERE len(t) >= 3
-    ),
+    oracle=f"""
+    WITH {word_shingles_sql("documents", 3, ())},
     dfreq AS (SELECT shingle, count(*) AS df FROM sh GROUP BY shingle)
     SELECT id, count(*) AS n_shingles,
            CAST(SUM(CASE WHEN df >= 10 THEN 1 ELSE 0 END) AS BIGINT)
@@ -304,33 +303,23 @@ def q97_boilerplate_ngrams(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q99_decontamination",
-    oracle="""
+    oracle=f"""
     WITH b AS (
       SELECT doc_id, text,
-             ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100
+             {md5_int_sql("CAST(doc_id AS VARCHAR)", 1, 8)} % 100
                AS bucket
       FROM documents
     ),
-    toks AS (
-      SELECT doc_id, bucket,
-             string_split_regex(lower(trim(text)), '\\s+') AS t
-      FROM b WHERE bucket < 80 OR bucket >= 90
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id, bucket,
-             array_to_string(t[i:i+7], ' ') AS shingle
-      FROM toks, UNNEST(generate_series(1, greatest(len(t) - 7, 0))) AS g(i)
-      WHERE len(t) >= 8
-    ),
+    {word_shingles_sql("b", 8, ("bucket",))},
     bench AS (SELECT DISTINCT shingle FROM sh WHERE bucket >= 90),
     per_doc AS (
-      SELECT s.doc_id,
+      SELECT s.id AS doc_id,
              count(*) AS n_ngrams,
              CAST(SUM(CASE WHEN bench.shingle IS NOT NULL THEN 1 ELSE 0 END)
                   AS BIGINT) AS n_contaminated
       FROM sh s LEFT JOIN bench USING (shingle)
       WHERE s.bucket < 80
-      GROUP BY s.doc_id
+      GROUP BY s.id
     )
     SELECT b.doc_id AS id,
            CAST(coalesce(p.n_ngrams, 0) AS BIGINT) AS n_ngrams,
@@ -342,11 +331,7 @@ def q97_boilerplate_ngrams(spark, sf_dir):
 )
 def q99_decontamination(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 100
-    )
+    bucket = md5_int(F.col("doc_id").cast("string"), 1, 8) % 100
     tagged = docs.withColumn("_bucket", bucket)
     train = tagged.where(F.col("_bucket") < 80)
     bench = tagged.where(F.col("_bucket") >= 90)
@@ -516,7 +501,7 @@ def q101_pii_scrub(spark, sf_dir):
     ),
     h AS (
       SELECT doc_id, chunk_idx,
-             ('0x' || substring(md5(chunk), 1, 15))::BIGINT AS chunk_hash
+             {h} AS chunk_hash
       FROM ch
     ),
     freq AS (
@@ -529,6 +514,7 @@ def q101_pii_scrub(spark, sf_dir):
     FROM h JOIN freq USING (chunk_hash)
     GROUP BY h.doc_id
     """.format(
+        h=md5_int_sql("chunk", 1, 15),
         # k/n count ratio (.5-tie class): guarded floor grid (r10 q225)
         ratio_rq=sql_roundq(
             "CAST(SUM(CASE WHEN nd >= 2 THEN 1 ELSE 0 END) AS DOUBLE)"
@@ -576,7 +562,7 @@ def q102_chunk_fingerprints(spark, sf_dir):
     oracle=f"""
     WITH b AS (
       SELECT doc_id, text,
-             ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100
+             {md5_int_sql("CAST(doc_id AS VARCHAR)", 1, 8)} % 100
                AS bucket
       FROM documents
     ),
@@ -584,7 +570,7 @@ def q102_chunk_fingerprints(spark, sf_dir):
     m AS (
       SELECT doc_id,
              length(text) AS nc,
-             len(string_split_regex(lower(trim(text)), '\\s+')) AS n_tokens,
+             len({tokens_sql("text")}) AS n_tokens,
              len(regexp_extract_all(text, '[.,;:!?]')) AS np,
              len(regexp_extract_all(text, '[0-9]')) AS ndg,
              len(regexp_extract_all(lower(text), '{LANG_MARKERS["en"]}')) AS ns
@@ -612,7 +598,7 @@ def q102_chunk_fingerprints(spark, sf_dir):
                                         i -> array_to_string(w[i:i+2], ' '))
                     ELSE [] END AS sh
         FROM (SELECT doc_id,
-                     string_split_regex(lower(trim(text)), '\\s+') AS w
+                     {tokens_sql("text")} AS w
               FROM train)
       )
     ),
@@ -621,22 +607,15 @@ def q102_chunk_fingerprints(spark, sf_dir):
              ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
       FROM train
     ),
-    sh AS (
-      SELECT DISTINCT doc_id, bucket, array_to_string(t[i:i+7], ' ') AS shingle
-      FROM (SELECT doc_id, bucket,
-                   string_split_regex(lower(trim(text)), '\\s+') AS t
-            FROM b) toks,
-           UNNEST(generate_series(1, greatest(len(t) - 7, 0))) AS g(i)
-      WHERE len(t) >= 8
-    ),
+    {word_shingles_sql("b", 8, ("bucket",))},
     benchsh AS (SELECT DISTINCT shingle FROM sh WHERE bucket >= 95),
     cont AS (
-      SELECT s.doc_id,
+      SELECT s.id AS doc_id,
              SUM(CASE WHEN benchsh.shingle IS NOT NULL THEN 1 ELSE 0 END) > 0
                AS contaminated
       FROM sh s LEFT JOIN benchsh USING (shingle)
       WHERE s.bucket < 95
-      GROUP BY s.doc_id
+      GROUP BY s.id
     )
     SELECT doc_id, n_tokens, quality, dup_ratio, verdict,
            verdict = 'kept' AS kept
@@ -659,11 +638,7 @@ def q103_curation_pipeline(spark, sf_dir):
     from pyspark.sql import Window
 
     docs = table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 100
-    )
+    bucket = md5_int(F.col("doc_id").cast("string"), 1, 8) % 100
     tagged = docs.withColumn("_bucket", bucket)
     train = tagged.where(F.col("_bucket") < 95)
     bench = tagged.where(F.col("_bucket") >= 95)
@@ -794,7 +769,7 @@ def q105_length_filter(spark, sf_dir):
     WITH m AS (
       SELECT doc_id, source,
              length(text) AS nc,
-             len(string_split_regex(lower(trim(text)), '\\s+')) AS n_tokens,
+             len({tokens_sql("text")}) AS n_tokens,
              len(regexp_extract_all(text, '[.,;:!?]')) AS np,
              len(regexp_extract_all(text, '[0-9]')) AS ndg,
              len(regexp_extract_all(lower(text), '{LANG_MARKERS["en"]}')) AS ns
@@ -867,7 +842,7 @@ def q106_source_mix(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q108_shard_export",
-    oracle="""
+    oracle=f"""
     WITH d AS (
       SELECT doc_id,
              CASE WHEN length(trim(text)) = 0 THEN 0
@@ -876,7 +851,8 @@ def q106_source_mix(spark, sf_dir):
       FROM documents
     ),
     sh AS (
-      SELECT *, ('0x' || substr(digest, 1, 8))::BIGINT % 8 AS shard FROM d
+      SELECT *, {md5_int_sql("CAST(doc_id AS VARCHAR)", 1, 8)} % 8 AS shard
+      FROM d
     )
     SELECT doc_id, shard,
            ROW_NUMBER() OVER (PARTITION BY shard ORDER BY digest) AS pos,
@@ -925,7 +901,7 @@ def q108_shard_export(spark, sf_dir):
 # --------------------------------------------------------------------------
 from airquality_data_pipeline_spark.operators.text import chunk_dedup  # noqa: E402
 
-_CHUNK_HASH_SQL = """
+_CHUNK_HASH_SQL = f"""
     d AS (SELECT doc_id, text FROM corpus WHERE length(text) > 0),
     ch AS (
       SELECT doc_id, i AS chunk_idx, substring(text, i*64+1, 64) AS chunk
@@ -933,7 +909,7 @@ _CHUNK_HASH_SQL = """
     ),
     h AS (
       SELECT doc_id, chunk_idx, chunk,
-             ('0x' || substring(md5(chunk), 1, 15))::BIGINT AS chunk_hash
+             {md5_int_sql("chunk", 1, 15)} AS chunk_hash
       FROM ch
     )
 """
@@ -1086,11 +1062,10 @@ def q111_length_histogram(spark, sf_dir):
 # membership set bit-for-bit and this probabilistic operator still
 # gets a full value-hash correctness row.
 # --------------------------------------------------------------------------
-from airquality_data_pipeline_spark.operators.text import bloom_contamination  # noqa: E402
-
-# position j = 24-bit slice [6j+1, 6j+6] of ONE md5(shingle), mirroring
-# operators/text._bloom_pos
-_BPOS = "('0x' || substring(md5(shingle), {lo}, 6))::BIGINT % 4194304"
+from airquality_data_pipeline_spark.operators.text import (  # noqa: E402
+    BLOOM_M,
+    bloom_contamination,
+)
 
 
 @register(
@@ -1098,31 +1073,22 @@ _BPOS = "('0x' || substring(md5(shingle), {lo}, 6))::BIGINT % 4194304"
     oracle=f"""
     WITH b AS (
       SELECT doc_id, text,
-             ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100
+             {md5_int_sql("CAST(doc_id AS VARCHAR)", 1, 8)} % 100
                AS bucket
       FROM documents
     ),
-    toks AS (
-      SELECT doc_id, bucket, string_split_regex(lower(trim(text)), '\\s+') AS t
-      FROM b
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id AS id, bucket, array_to_string(t[i:i+7], ' ') AS shingle
-      FROM toks, UNNEST(generate_series(1, greatest(len(t) - 7, 0))) AS g(i)
-      WHERE len(t) >= 8
-    ),
+    {word_shingles_sql("b", 8, ("bucket",))},
     bpos AS (
       SELECT DISTINCT
-             ('0x' || substring(md5(shingle), lo, 6))::BIGINT
-               % 4194304 AS pos
+             {md5_int_sql("shingle", "lo", 6)} % {BLOOM_M} AS pos
       FROM (SELECT DISTINCT shingle FROM sh WHERE bucket >= 95),
            UNNEST([1, 7, 13]) AS g(lo)
     ),
     tsh AS (
       SELECT id,
-             {_BPOS.format(lo=1)} AS p0,
-             {_BPOS.format(lo=7)} AS p1,
-             {_BPOS.format(lo=13)} AS p2
+             {md5_int_sql("shingle", 1, 6)} % {BLOOM_M} AS p0,
+             {md5_int_sql("shingle", 7, 6)} % {BLOOM_M} AS p1,
+             {md5_int_sql("shingle", 13, 6)} % {BLOOM_M} AS p2
       FROM sh WHERE bucket < 95
     ),
     per AS (
@@ -1143,11 +1109,7 @@ _BPOS = "('0x' || substring(md5(shingle), {lo}, 6))::BIGINT % 4194304"
 )
 def q113_bloom_decontamination(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 100
-    )
+    bucket = md5_int(F.col("doc_id").cast("string"), 1, 8) % 100
     tagged = docs.withColumn("_bucket", bucket)
     train = tagged.where(F.col("_bucket") < 95)
     bench = tagged.where(F.col("_bucket") >= 95)
@@ -1230,14 +1192,14 @@ def q114_unicode_normalize(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q118_span_scrub",
-    oracle="""
+    oracle=f"""
     WITH corpus AS (
       SELECT doc_id, text FROM documents
       UNION ALL
       SELECT doc_id + 100000, text FROM documents WHERE doc_id % 10 = 0
     ),
     d AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS toks
+      SELECT doc_id, {tokens_sql("text")} AS toks
       FROM corpus WHERE length(trim(text)) > 0
     ),
     tiles AS (
@@ -1299,7 +1261,7 @@ _BM25_VALUES = ", ".join(f"({qid}, '{term}')" for qid, term in BM25_QUERIES)
     WITH d AS (
       SELECT doc_id,
              CASE WHEN length(trim(text)) = 0 THEN 0
-                  ELSE len(string_split_regex(lower(trim(text)), '\\s+')) END AS dl,
+                  ELSE len({tokens_sql("text")}) END AS dl,
              lower(trim(text)) AS t
       FROM documents
     ),
@@ -1347,10 +1309,10 @@ def q119_bm25_topk(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q122_vocab_coverage",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT doc_id AS id,
-             unnest(string_split_regex(lower(trim(text)), '\\s+')) AS term
+             unnest({tokens_sql("text")}) AS term
       FROM documents
     ),
     counts AS (SELECT term, count(*) AS cnt FROM toks GROUP BY term),
@@ -1442,7 +1404,7 @@ def q123_source_calibration(spark, sf_dir):
       -- plain split length, matching quality_features' n_tokens
       -- exactly (an empty doc counts 1 — the split yields [''])
       SELECT q.doc_id, d.source, q.quality,
-             len(string_split_regex(lower(trim(d.text)), '\\s+')) AS n_tokens
+             len({tokens_sql("d.text")}) AS n_tokens
       FROM q JOIN documents d ON q.doc_id = d.doc_id
     ),
     r AS (
@@ -1501,13 +1463,13 @@ def q125_token_budget_selection(spark, sf_dir):
     oracle="""
     WITH b AS (
       SELECT doc_id, text,
-             ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100
+             {h} % 100
                AS bucket
       FROM documents
     ),
     toks AS (
       SELECT bucket,
-             unnest(string_split_regex(lower(trim(text)), '\\s+')) AS term
+             unnest({toks}) AS term
       FROM b
     ),
     per AS (
@@ -1533,6 +1495,8 @@ def q125_token_budget_selection(spark, sf_dir):
     SELECT term, cnt_train, cnt_held, rate_train, rate_held, rate_diff
     FROM scored ORDER BY rate_diff DESC, term LIMIT 20
     """.format(
+        h=md5_int_sql("CAST(doc_id AS VARCHAR)", 1, 8),
+        toks=tokens_sql("text"),
         # k/n rates and their gaps are rationals (.5-tie class), and
         # rate_diff ORDERS the top-20: guarded floor grid (r10 q225)
         rt_rq=sql_roundq("cnt_train / tot_train"),
@@ -1544,16 +1508,10 @@ def q125_token_budget_selection(spark, sf_dir):
 )
 def q126_token_drift(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 100
-    )
+    bucket = md5_int(F.col("doc_id").cast("string"), 1, 8) % 100
     toks = docs.select(
         bucket.alias("bucket"),
-        F.explode(
-            F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-        ).alias("term"),
+        F.explode(tokens("text")).alias("term"),
     )
     per = toks.groupBy("term").agg(
         F.sum(F.when(F.col("bucket") < 95, 1).otherwise(0))

@@ -126,9 +126,12 @@ class RestMeasurementsReader(DataSourceReader):
 
     def partitions(self):
         """Page shards. Each gets a share of the read's request budget in
-        proportion to its pages; the shares sum to request_budget."""
+        proportion to its pages; the shares sum to request_budget. No
+        pages (max_pages < 1) plan no shard."""
         max_pages = int(self.options.get("max_pages", "10"))
         shards = int(self.options.get("num_shards", "4"))
+        if shards < 1:
+            raise ValueError(f"num_shards must be >= 1, got {shards}")
         budget = int(self.options.get("request_budget", "280"))
         per = max(max_pages // shards, 1)
         firsts = [i * per + 1 for i in range(shards) if i * per + 1 <= max_pages]
@@ -142,6 +145,9 @@ class RestMeasurementsReader(DataSourceReader):
         ]
 
     def read(self, partition):
+        if partition is None:
+            # Spark reads once with None when partitions() plans none
+            return
         opt = self.options
         cfg = RestSourceConfig(
             base_url=opt.get("base_url", ""),

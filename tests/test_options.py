@@ -20,6 +20,7 @@ Pure `ast`, no Spark.
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -251,3 +252,64 @@ def test_driver_rows_become_frames_only_through_local_frame():
                 if isinstance(n, ast.Call) and getattr(n.func, "attr", None) == "createDataFrame":
                     callers.add((path.relative_to(PKG).as_posix(), getattr(fn, "name", None)))
     assert callers == {("io.py", "local_frame")}
+
+
+# convention -> (owning module, its distinctive spellings). Each
+# convention both engines must agree on has one definition: a Column
+# form and a DuckDB `*_sql` twin side by side in the owning module, which
+# every operator and oracle imports. Whitespace is ignored in matching.
+CONVENTIONS = {
+    "md5 integer hash": (
+        "functions/strings.py",
+        ("F.conv(F.substring(F.md5(", "'0x' || substr"),
+    ),
+    "whitespace tokenizer": (
+        "functions/strings.py",
+        ("F.split(F.lower(F.trim(", "string_split_regex(lower(trim("),
+    ),
+    "hash parameter table": ("operators/dedup.py", ("59770417",)),
+    "word shingles": (
+        "operators/dedup.py",
+        ("UNNEST(generate_series(1, greatest(len(t) -",),
+    ),
+    "MinHash fold": ("operators/dedup.py", ("min((p.a * h + p.b) %",)),
+    "sign-LSH planes": ("operators/similarity.py", ("(p.a * i + p.b) %",)),
+    "normed vectors": ("operators/similarity.py", (") WHERE nrm > 0",)),
+    "IVF argmax": ("operators/similarity.py", ("list_dot_product(n.v, c.cv)",)),
+    "planted near-dups": ("operators/similarity.py", ("vec_id * 31 + i * 7",)),
+}
+
+
+def _flat(text: str) -> tuple[str, list[int]]:
+    """text without whitespace, and the line number of each kept char."""
+    chars, lines, line = [], [], 1
+    for ch in text:
+        if ch == "\n":
+            line += 1
+        elif not ch.isspace():
+            chars.append(ch)
+            lines.append(line)
+    return "".join(chars), lines
+
+
+def test_each_cross_engine_convention_is_spelled_once():
+    stray, missing = [], []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        flat, lines = _flat(path.read_text())
+        for name, (owner, spellings) in CONVENTIONS.items():
+            for spelling in spellings:
+                needle = re.escape(_flat(spelling)[0])
+                at = [m.start() for m in re.finditer(needle, flat)]
+                if rel == owner and not at:
+                    missing.append(f"  {owner}: {spelling!r} ({name})")
+                if rel != owner:
+                    stray += [
+                        f"  {rel}:{lines[i]}: {spelling!r} ({name}, owned by {owner})"
+                        for i in at
+                    ]
+    assert not stray, (
+        f"{len(stray)} hand copies of a cross-engine convention; import the "
+        "owning module's Column form or `*_sql` twin instead:\n" + "\n".join(stray)
+    )
+    assert not missing, "owning modules no longer spell:\n" + "\n".join(missing)

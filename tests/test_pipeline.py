@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from airquality_data_pipeline_spark.plans import pipeline
@@ -203,6 +204,24 @@ def test_rest_datasource_end_to_end(spark):
     assert len(got) == 55  # every page exactly once across shards
     assert {r.station_id for r in got} == {f"s{i}" for i in range(55)}
     assert all(r.pollutant == "pm25" for r in got)
+
+
+def test_rest_read_with_no_pages(spark):
+    """max_pages=0 plans no page shard, so the read yields no rows; a
+    shard count below 1 is refused by name."""
+    opts = {
+        "transport_pickle": rest.transport_option(rest.fake_transport_from_rows([])),
+        "base_url": "fake://api",
+        "max_pages": "0",
+        "num_shards": "2",
+    }
+    spark.dataSource.register(rest.RestMeasurementsSource)
+    assert spark.read.format("rest_measurements").options(**opts).load().collect() == []
+    bad = {**opts, "max_pages": "4", "num_shards": "0"}
+    with pytest.raises(ValueError, match="num_shards must be >= 1, got 0"):
+        rest.RestMeasurementsReader(bad).partitions()
+    with pytest.raises(Exception, match="num_shards must be >= 1"):
+        spark.read.format("rest_measurements").options(**bad).load().collect()
 
 
 def test_rest_budget_holds_per_read(spark, tmp_path):

@@ -1,15 +1,15 @@
 """Per-query profiling harness for optimization work (guide §1).
 
-Runs a subset of the catalog with the bench's exact methodology
-(noop sink, warmup, min-of-2 with a third run on >2.5x spread) and
-writes {name: sec} to stdout as JSON. Usage:
+Runs a subset of the catalog with bench.py's own warm-up and timing
+loop (noop sink, min-of-N with one more run on a >2.5x spread, a full
+GC every 10 queries) and writes {name: sec} to stdout as JSON. Usage:
 
     python tools/profile_queries.py q01_pricing_summary q146_ewma ...
     python tools/profile_queries.py --top 25        # 25 slowest per bench_queries.json
     python tools/profile_queries.py --explain DIR q146_ewma   # also dump explain("formatted")
 
-Timing runs label jobs via setJobDescription so the (disabled-by-
-default) UI or event logs attribute stages to queries.
+Timing runs label jobs with the query name (setJobDescription) so the
+(disabled-by-default) UI or event logs attribute stages to queries.
 """
 
 from __future__ import annotations
@@ -17,7 +17,6 @@ from __future__ import annotations
 import argparse
 import json
 import sys
-import time
 from pathlib import Path
 
 REPO_ROOT = str(Path(__file__).resolve().parent.parent)
@@ -26,18 +25,7 @@ if REPO_ROOT not in sys.path:
 
 from airquality_data_pipeline_spark.queries import QUERIES  # noqa: E402
 from airquality_data_pipeline_spark.session import get_spark  # noqa: E402
-
-WARMUPS = (
-    "q01_pricing_summary",
-    "q51_fingerprint",
-    "q44_cosine_topk",
-    "q117_simhash_neardup",
-    "q132_incremental_dedup",
-)
-
-
-def run_query(df) -> None:
-    df.write.mode("overwrite").format("noop").save()
+from bench import time_queries, warm_up  # noqa: E402
 
 
 def main() -> None:
@@ -66,8 +54,7 @@ def main() -> None:
 
     spark = get_spark(app_name="profile")
     if not args.no_warmup:
-        for w in WARMUPS:
-            run_query(QUERIES[w](spark, args.sf_dir))
+        warm_up(spark, args.sf_dir)
 
     if args.explain:
         out = Path(args.explain)
@@ -80,28 +67,12 @@ def main() -> None:
             )
             (out / f"{n}.txt").write_text(plan)
 
-    timings: dict[str, float] = {}
-    all_runs: dict[str, list[float]] = {}
     if args.runs == 0:
         print(json.dumps({"explained": sorted(set(names))}))
         return
-    for qi, name in enumerate(sorted(set(names))):
-        if qi % 10 == 0:
-            spark.sparkContext._jvm.System.gc()
-        spark.sparkContext.setJobDescription(f"profile:{name}")
-        runs = []
-        for _ in range(args.runs):
-            start = time.perf_counter()
-            run_query(QUERIES[name](spark, args.sf_dir))
-            runs.append(round(time.perf_counter() - start, 3))
-        if max(runs) > 2.5 * min(runs):
-            start = time.perf_counter()
-            run_query(QUERIES[name](spark, args.sf_dir))
-            runs.append(round(time.perf_counter() - start, 3))
-        spark.sparkContext.setJobDescription(None)
-        all_runs[name] = runs
-        timings[name] = min(runs)
-
+    timings, all_runs = time_queries(
+        spark, args.sf_dir, sorted(set(names)), args.runs
+    )
     print(json.dumps({"timings": timings, "runs": all_runs}, indent=1, sort_keys=True))
 
 
