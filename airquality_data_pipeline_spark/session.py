@@ -8,12 +8,12 @@ otherwise. Every other setting here is the one you'd also want on a
 coalescing), UTC session timezone (oracle parity + sanity), Arrow for any
 Pandas-UDF boundary.
 
-Python workers fork from `worker_daemon` (`spark.python.daemon.module`).
-On CPython < 3.13 the stock daemon's workers re-read every zip archive on
-`sys.path` in each task (~0.2 CPU-s, ~28,000 directory entries); that
-daemon re-reads an archive only when it changed. The workers' PYTHONPATH
-(`spark.executorEnv.PYTHONPATH`) holds this package's parent directory, so
-they import the daemon and the REST reader whatever the process's cwd.
+Every Python process Spark starts (worker daemons, DataSource planners) gets
+`spark.executorEnv.PYTHONPATH`: `_startup/`, whose `sitecustomize` hook takes
+Spark's source-only pyspark.zip, py4j zip and spark-core jar off `sys.path`
+when the installed pyspark and py4j are their releases (import ~0.7 CPU-s, not
+~1.6, and no per-task archive re-read on CPython < 3.13), else re-reads a zip
+only when it changed; then the package's parent, so any cwd imports it.
 """
 
 from __future__ import annotations
@@ -22,7 +22,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_PKG = os.path.dirname(os.path.abspath(__file__))
+_PYTHONPATH = os.pathsep.join([os.path.join(_PKG, "_startup"), os.path.dirname(_PKG)])
 
 
 def get_spark(
@@ -51,8 +52,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
-        .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
-        .config("spark.executorEnv.PYTHONPATH", _PARENT)
+        .config("spark.executorEnv.PYTHONPATH", _PYTHONPATH)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -103,8 +103,8 @@ class RestMeasurementsReader(DataSourceReader):
         for live deployments (e.g. a requests-backed factory)."""
 
     def __init__(self, options: dict):
-        self.options = options
-        pickled = options.get("transport_pickle", "")
+        self.options = dict(options)  # each read task unpickles the reader
+        pickled = self.options.pop("transport_pickle", "")
         factory = options.get("transport_factory", "")
         if pickled:
             import base64

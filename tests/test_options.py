@@ -8,11 +8,12 @@ something outside tests/, or kept for a stated reason.
   enclosing function's own parameters counts only once that parameter is
   itself set, resolved to a fixed point. Callees are matched by name.
 - Symbols: every top-level function, class and constant is reachable
-  from the roots (the query catalog, perfbench/, bench.py and
-  __spark_entry__.py), or kept. A name counts as used where a reachable
-  body mentions it, bare or as an attribute, again matched by name; an
-  import alone is not a use. Module-level statements that define
-  nothing run at import, so they are roots too.
+  from the roots (the query catalog, perfbench/, bench.py,
+  __spark_entry__.py and `_startup/sitecustomize.py`, the start-up hook
+  the interpreter imports by file name), or kept. A name counts as used
+  where a reachable body mentions it, bare or as an attribute, again
+  matched by name; an import alone is not a use. Module-level statements
+  that define nothing run at import, so they are roots too.
 
 Pure `ast`, no Spark.
 """
@@ -25,13 +26,15 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 PKG = ROOT / "airquality_data_pipeline_spark"
+HOOK = PKG / "_startup" / "sitecustomize.py"
 ROOTS = [
+    HOOK,
     *sorted((PKG / "queries").rglob("*.py")),
     *sorted((ROOT / "perfbench").rglob("*.py")),
     ROOT / "bench.py",
     ROOT / "__spark_entry__.py",
 ]
-MODULES = [p for p in sorted(PKG.rglob("*.py")) if p.relative_to(PKG).parts[0] != "queries"]
+MODULES = [p for p in sorted(PKG.rglob("*.py")) if p.relative_to(PKG).parts[0] != "queries" and p != HOOK]
 CALLERS = [*MODULES, *ROOTS]
 
 # (module under the package, function, parameter) -> why it stays

@@ -206,6 +206,29 @@ def test_rest_datasource_end_to_end(spark):
     assert all(r.pollutant == "pm25" for r in got)
 
 
+def test_rest_reader_ships_its_transport_once(spark):
+    """Every read task gets the pickled reader. It carries the decoded
+    transport, not the base64 option as well, and reads the same rows."""
+    from pyspark import cloudpickle
+
+    rows = [
+        {"station_id": f"s{i}", "pollutant": "no2", "value": float(i),
+         "timestamp": "2024-03-01T06:00:00Z"}
+        for i in range(25)
+    ]
+    pickled = rest.transport_option(rest.fake_transport_from_rows(rows, page_size=10))
+    opts = {"transport_pickle": pickled, "base_url": "fake://api",
+            "max_pages": "3", "num_shards": "2"}
+    reader = rest.RestMeasurementsReader(opts)
+    assert pickled.encode() not in cloudpickle.dumps(reader)
+    assert opts["transport_pickle"] == pickled  # the caller's options stand
+    spark.dataSource.register(rest.RestMeasurementsSource)
+    got = spark.read.format("rest_measurements").options(**opts).load().collect()
+    assert sorted(tuple(r) for r in got) == sorted(
+        (r["station_id"], r["pollutant"], r["value"], r["timestamp"]) for r in rows
+    )
+
+
 def test_rest_read_with_no_pages(spark):
     """max_pages=0 plans no page shard, so the read yields no rows; a
     shard count below 1 is refused by name."""

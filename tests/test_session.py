@@ -36,12 +36,15 @@ def test_non_positive_cpus_rejected(builder, monkeypatch, value):
         session.get_spark()
 
 
-def test_workers_fork_from_the_package_daemon(builder):
-    # the package's parent on the workers' path: they import the daemon
-    # and the REST reader whatever the driver's cwd
+def test_workers_start_with_the_package_hook(builder):
+    # the hook's directory first, then the package's parent: every Python
+    # process Spark starts runs the hook and imports the REST reader
+    # whatever the driver's cwd; Spark's own daemon forks the workers
     session.get_spark()
-    parent = os.path.dirname(os.path.dirname(os.path.abspath(session.__file__)))
+    pkg = os.path.dirname(os.path.abspath(session.__file__))
+    hook = os.path.join(pkg, "_startup")
     calls = builder.config.call_args_list
-    assert mock.call("spark.python.daemon.module", "airquality_data_pipeline_spark.worker_daemon") in calls
-    assert mock.call("spark.executorEnv.PYTHONPATH", parent) in calls
-    assert os.path.isfile(os.path.join(parent, "airquality_data_pipeline_spark", "worker_daemon.py"))
+    assert mock.call("spark.executorEnv.PYTHONPATH", f"{hook}{os.pathsep}{os.path.dirname(pkg)}") in calls
+    # the directory goes first on the workers' path: it holds nothing else
+    assert [n for n in os.listdir(hook) if n != "__pycache__"] == ["sitecustomize.py"]
+    assert not any(c.args[0] == "spark.python.daemon.module" for c in calls)
