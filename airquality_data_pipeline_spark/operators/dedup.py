@@ -191,6 +191,13 @@ MINHASH_SIGNATURES_SQL = f"""
       FROM hashed, params p GROUP BY id, p.seed
     )"""
 
+# the `:`-joined signature over MINHASH_SIGNATURES_SQL's `mh`, slots in
+# seed order: the CTE `sig` (id, sig)
+MINHASH_SIG_SQL = """sig AS (
+      SELECT id, string_agg(CAST(mh AS VARCHAR), ':' ORDER BY seed) AS sig
+      FROM mh GROUP BY id
+    )"""
+
 
 def minhash_candidate_pairs(
     signatures: DataFrame, num_hashes: int = 16, min_matches: int = 8

@@ -98,6 +98,11 @@ def cosine(a_v: Column, a_n: Column, b_v: Column, b_n: Column) -> Column:
     return F.round(F.try_divide(_dot(a_v, b_v), a_n * b_n), 6)
 
 
+def cosine_sql(a_v: str, a_n: str, b_v: str, b_n: str) -> str:
+    """DuckDB twin of cosine(): vectors a_v, b_v with norms a_n, b_n."""
+    return f"round(list_dot_product({a_v}, {b_v}) / ({a_n} * {b_n}), 6)"
+
+
 def cosine_topk(
     emb: DataFrame,
     query_pred: Column,
@@ -124,6 +129,16 @@ def _topk(pairs: DataFrame, k: int) -> DataFrame:
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+
+
+def topk_sql(k: int) -> str:
+    """DuckDB twin of _topk's ranking over a CTE `scored` (query_id,
+    neighbor_id, cos_sim): the query's final SELECT."""
+    return f"""SELECT query_id, neighbor_id, cos_sim, rank FROM (
+      SELECT *, ROW_NUMBER() OVER (
+        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id
+      ) AS rank FROM scored
+    ) WHERE rank <= {k}"""
 
 
 def neardup_pairs(
@@ -404,9 +419,9 @@ def sqrt_k_centroids_sql(src: str) -> str:
 
 # the centroids of the normed CTE `n` ranked per vector by cosine, ties
 # to the lowest centroid id: ivf_assign's argmax order
-_CENT_RANK_SQL = """ROW_NUMBER() OVER (
+_CENT_RANK_SQL = f"""ROW_NUMBER() OVER (
                  PARTITION BY n.vec_id
-                 ORDER BY round(list_dot_product(n.v, c.cv) / (n.nrm * c.cn), 6) DESC,
+                 ORDER BY {cosine_sql("n.v", "n.nrm", "c.cv", "c.cn")} DESC,
                           c.cent_id
                )"""
 
@@ -522,6 +537,9 @@ def kmeans_step(emb: DataFrame, centroid_pred: Column) -> DataFrame:
     norm-squared sum are exact decimal arithmetic on both engines
     (doubles only at the final sqrt, which IEEE 754 rounds correctly).
     """
+    # function-level: queries/ imports this module
+    from airquality_data_pipeline_spark.queries.common import dsum
+
     assigned = ivf_assign(emb, centroid_pred)
     # single pass over the assignment: referencing `assigned` from two
     # aggregation branches re-runs the (expensive) assignment subtree —
@@ -534,10 +552,7 @@ def kmeans_step(emb: DataFrame, centroid_pred: Column) -> DataFrame:
         "bucket", F.posexplode("v").alias("dim", "val"), "cent_sim"
     )
     per_dim = dims.groupBy("bucket", "dim").agg(
-        (
-            F.sum(F.col("val").cast("decimal(18,6)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("mean_val"),
+        (dsum("val") / F.count(F.lit(1))).alias("mean_val"),
         F.sum(F.col("cent_sim").cast("decimal(18,6)")).alias("sum_sim"),
         F.count(F.lit(1)).alias("n"),
     )

@@ -660,6 +660,9 @@ def bm25_topk(
     """
     from pyspark.sql import Window
 
+    # function-level: queries/ imports this module
+    from airquality_data_pipeline_spark.queries.common import dsum
+
     t = F.trim(F.col(text_col))
     dl_col = F.when(F.length(t) == 0, F.lit(0)).otherwise(
         F.size(F.split(F.lower(t), r"\s+"))
@@ -685,9 +688,7 @@ def bm25_topk(
         .join(d.select("doc_id", "dl"), "doc_id")
         .crossJoin(F.broadcast(stats))
         .groupBy("query_id", "doc_id")
-        .agg(
-            F.sum(contrib.cast("decimal(18,6)")).cast("double").alias("score")
-        )
+        .agg(dsum(contrib).alias("score"))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (

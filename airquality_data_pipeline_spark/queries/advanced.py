@@ -16,7 +16,10 @@ from pyspark.sql import functions as F
 from airquality_data_pipeline_spark.functions.strings import md5_int, md5_int_sql
 from airquality_data_pipeline_spark.queries.common import (
     dec,
+    dsum,
     roundq,
+    sql_double,
+    sql_dsum,
     sql_floor_ms,
     sql_roundq,
     table,
@@ -136,8 +139,7 @@ def q86_hash_split(spark, sf_dir):
            -- through float math and mis-round past ~17 significant
            -- digits, so wide products must never round through double;
            -- the final cast hops through VARCHAR (correctly rounded).
-           CAST(CAST(SUM(CAST(value AS DECIMAL(18,6)) * dur) AS VARCHAR)
-                AS DOUBLE) / SUM(dur) AS twa
+           {sql_double("SUM(CAST(value AS DECIMAL(18,6)) * dur)")} / SUM(dur) AS twa
     FROM d WHERE dur IS NOT NULL
     GROUP BY user_id
     """,
@@ -187,7 +189,7 @@ def q87_time_weighted_avg(spark, sf_dir):
       ) s
     ), hourly AS (
       SELECT user_id, h,
-             CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(value)
+             {sql_dsum("value")} / COUNT(value)
                AS observed
       FROM ev GROUP BY user_id, h
     )
@@ -217,9 +219,7 @@ def q88_gapfill_locf(spark, sf_dir):
         ).alias("h"),
     )
     hourly = ev.groupBy("user_id", "h").agg(
-        (F.sum(dec("value")).cast("double") / F.count("value")).alias(
-            "observed"
-        )
+        (dsum("value") / F.count("value")).alias("observed")
     )
     w = (
         W.partitionBy("user_id")

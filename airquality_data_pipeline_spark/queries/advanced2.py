@@ -33,6 +33,7 @@ from airquality_data_pipeline_spark.operators.dedup import (
 )
 from airquality_data_pipeline_spark.operators.similarity import (
     PLANTED_NEARDUP_CORPUS_SQL,
+    cosine_sql,
     ivf_assign_sql,
     sqrt_k_centroids_sql,
     with_norm_sql,
@@ -40,8 +41,11 @@ from airquality_data_pipeline_spark.operators.similarity import (
 from airquality_data_pipeline_spark.queries.common import (
     dec,
     decq,
+    dsum,
     finite,
     roundq,
+    sql_double,
+    sql_dsum,
     sql_finite,
     sql_floor_ms,
     sql_roundq,
@@ -332,10 +336,7 @@ def q145_mad_outliers(spark, sf_dir):
     """.format(
         # sum(2dp*2^k)/sum(2^k) is a dyadic-denominator rational —
         # exactly the .5-tie class: guarded floor grid (r10 q225 class)
-        ewma_rq=sql_roundq(
-            "CAST(CAST(SUM(v * u) AS VARCHAR) AS DOUBLE)"
-            " / CAST(SUM(u) AS DOUBLE)"
-        ),
+        ewma_rq=sql_roundq(sql_double("SUM(v * u)") + " / CAST(SUM(u) AS DOUBLE)"),
     ),
 )
 def q146_ewma(spark, sf_dir):
@@ -490,7 +491,7 @@ def q147_fuzzy_string_join(spark, sf_dir):
            max(l_extendedprice) AS hi,
            {{}}
     FROM t GROUP BY bucket
-    """.format("CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS mass"),
+    """.format(sql_dsum("l_extendedprice") + " AS mass"),
 )
 def q148_equidepth_histogram(spark, sf_dir):
     from airquality_data_pipeline_spark.operators.windows import (
@@ -510,7 +511,7 @@ def q148_equidepth_histogram(spark, sf_dir):
         F.count(F.lit(1)).alias("n"),
         F.min("l_extendedprice").alias("lo"),
         F.max("l_extendedprice").alias("hi"),
-        F.sum(dec("l_extendedprice", 6)).cast("double").alias("mass"),
+        dsum("l_extendedprice").alias("mass"),
     )
 
 
@@ -638,10 +639,8 @@ def q149_pagerank(spark, sf_dir):
     WITH base AS (
       SELECT event_type, CAST(EXTRACT(hour FROM ts) AS BIGINT) AS hh,
              CAST(count(*) AS BIGINT) AS n,
-             CAST(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS VARCHAR)
-                  AS DOUBLE) AS s,
-             CAST(CAST(SUM(CAST(value * value AS DECIMAL(18,6)))
-                       AS VARCHAR) AS DOUBLE) AS ss
+             {s} AS s,
+             {ss} AS ss
       FROM events GROUP BY 1, 2
     ),
     stats AS (
@@ -663,6 +662,8 @@ def q149_pagerank(spark, sf_dir):
      AND CAST(EXTRACT(hour FROM e.ts) AS BIGINT) = x.hh
     GROUP BY 1, 2, x.n, x.mean, x.std
     """.format(
+        s=sql_dsum("value"),
+        ss=sql_dsum("value * value"),
         # mean = k/(1e6*n) rational (.5-tie class): guarded floor
         # grid; std is sqrt-derived — tie-free, round() ok
         mean_rq=sql_roundq("x.mean"),
@@ -675,10 +676,8 @@ def q150_seasonal_anomaly(spark, sf_dir):
     )
     base = ev.groupBy("event_type", "hh").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(dec("value", 6)).cast("double").alias("s"),
-        F.sum(dec(F.col("value") * F.col("value"), 6))
-        .cast("double")
-        .alias("ss"),
+        dsum("value").alias("s"),
+        dsum(F.col("value") * F.col("value")).alias("ss"),
     )
     stats = base.where(F.col("n") > 1).select(
         "event_type",
@@ -781,15 +780,14 @@ def q151_markov_transitions(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q152_rfm_segmentation",
-    oracle="""
+    oracle=f"""
     WITH anchor AS (SELECT max(o_orderdate) AS mx FROM orders),
     rfm AS (
       SELECT o_custkey AS c_custkey,
              CAST(datediff('day', max(o_orderdate), max(a.mx))
                   AS BIGINT) AS recency_days,
              CAST(count(*) AS BIGINT) AS frequency,
-             CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
-                       AS VARCHAR) AS DOUBLE) AS monetary
+             {sql_dsum("o_totalprice", 2)} AS monetary
       FROM orders CROSS JOIN anchor a
       GROUP BY o_custkey
     ),
@@ -823,7 +821,7 @@ def q152_rfm_segmentation(spark, sf_dir):
             .cast("long")
             .alias("recency_days"),
             F.count(F.lit(1)).alias("frequency"),
-            F.sum(dec("o_totalprice", 2)).cast("double").alias("monetary"),
+            dsum("o_totalprice", 2).alias("monetary"),
         )
         # the customer-dimension aggregate feeds FOUR consumers (the
         # base row plus three global_ntile score frames): materialize
@@ -967,8 +965,7 @@ def q153_stratified_kfold(spark, sf_dir):
         p05_rq=sql_roundq("p.p05"),
         p95_rq=sql_roundq("p.p95"),
         mean_rq=sql_roundq(
-            "CAST(CAST(SUM(CAST(least(greatest(e.value, p.p05), p.p95)"
-            " AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) / count(*)"
+            sql_dsum("least(greatest(e.value, p.p05), p.p95)") + " / count(*)"
         ),
     ),
 )
@@ -991,7 +988,7 @@ def q154_winsorized_scaling(spark, sf_dir):
         .cast("long")
         .alias("n_clip_hi"),
         roundq(
-            F.sum(dec(clipped, 6)).cast("double") / F.count(F.lit(1))
+            dsum(clipped) / F.count(F.lit(1))
         ).alias("mean_winsorized"),
     ).select(
         "event_type",
@@ -1024,8 +1021,7 @@ def q154_winsorized_scaling(spark, sf_dir):
            min(value) AS low,
            (max(struct_pack(t := ts, e := event_id, v := value))).v
              AS close,
-           CAST(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS VARCHAR)
-                AS DOUBLE) AS volume
+           {sql_dsum("value")} AS volume
     FROM events
     GROUP BY event_type, date_trunc('hour', ts)
     """,
@@ -1046,7 +1042,7 @@ def q155_ohlc_bars(spark, sf_dir):
         F.max(F.struct("ts", "event_id", "value"))
         .getField("value")
         .alias("close"),
-        F.sum(dec("value", 6)).cast("double").alias("volume"),
+        dsum("value").alias("volume"),
     ).select(
         "event_type",
         F.unix_millis(F.col("bar").cast("timestamp")).alias("bar_ms"),
@@ -1317,12 +1313,11 @@ def q157_triangle_count(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q158_snowflake_rollup",
-    oracle="""
+    oracle=f"""
     SELECT r.r_name,
            CAST(EXTRACT(year FROM o.o_orderdate) AS BIGINT) AS order_year,
            CAST(count(*) AS BIGINT) AS n_lines,
-           CAST(CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount)
-                              AS DECIMAL(18,4))) AS VARCHAR) AS DOUBLE)
+           {sql_dsum("l.l_extendedprice * (1 - l.l_discount)", 4)}
              AS revenue
     FROM lineitem l
     JOIN orders o   ON l.l_orderkey = o.o_orderkey
@@ -1384,10 +1379,10 @@ def q158_snowflake_rollup(spark, sf_dir):
     {ivf_assign_sql(sqrt_k_centroids_sql("corpus"), ())},
     hits AS (
       SELECT t.bucket, t.id AS train_id, b.id AS bench_id,
-             round(list_dot_product(t.v, b.v) / (t.nrm * b.nrm), 6) AS cos_sim
+             {cosine_sql("t.v", "t.nrm", "b.v", "b.nrm")} AS cos_sim
       FROM assigned t JOIN assigned b
         ON t.bucket = b.bucket AND t.id < 100000 AND b.id >= 100000
-      WHERE round(list_dot_product(t.v, b.v) / (t.nrm * b.nrm), 6) >= 0.95
+      WHERE {cosine_sql("t.v", "t.nrm", "b.v", "b.nrm")} >= 0.95
     )
     SELECT bucket, train_id,
            CAST(count(*) AS BIGINT) AS n_hits,
@@ -1654,7 +1649,7 @@ def q161_dq_audit(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q162_incremental_agg_merge",
-    oracle="""
+    oracle=f"""
     WITH anchor AS (
       SELECT max(ts) - INTERVAL 72 HOURS AS cutoff FROM events
     ),
@@ -1686,7 +1681,7 @@ def q161_dq_audit(spark, sf_dir):
     )
     SELECT m.event_type,
            m.cnt,
-           CAST(CAST(m.s AS VARCHAR) AS DOUBLE) AS total,
+           {sql_double("m.s")} AS total,
            m.mn AS vmin, m.mx AS vmax,
            (m.cnt = x.cnt AND m.s = x.s AND m.mn = x.mn AND m.mx = x.mx)
              AS matches
@@ -1791,13 +1786,13 @@ def q162_incremental_agg_merge(spark, sf_dir):
       -- differs between engines (common.decq docstring; seed31 catch)
       SELECT event_type,
              CAST(count(*) AS BIGINT) AS n,
-             CAST(CAST(SUM(CAST(floor(x * 1000000.0 + 0.5) AS HUGEINT))
-                  AS VARCHAR) AS DOUBLE) / 1000000 AS sx,
-             CAST(CAST(SUM(CAST(y AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS sy,
-             CAST(CAST(SUM(CAST(floor(x * x * 1000000.0 + 0.5) AS HUGEINT))
-                  AS VARCHAR) AS DOUBLE) / 1000000 AS sxx,
-             CAST(CAST(SUM(CAST(floor(x * y * 1000000.0 + 0.5) AS HUGEINT))
-                  AS VARCHAR) AS DOUBLE) / 1000000 AS sxy
+             {sql_double("SUM(CAST(floor(x * 1000000.0 + 0.5) AS HUGEINT))")}
+               / 1000000 AS sx,
+             {sql_dsum("y")} AS sy,
+             {sql_double("SUM(CAST(floor(x * x * 1000000.0 + 0.5) AS HUGEINT))")}
+               / 1000000 AS sxx,
+             {sql_double("SUM(CAST(floor(x * y * 1000000.0 + 0.5) AS HUGEINT))")}
+               / 1000000 AS sxy
       FROM pts GROUP BY event_type
     )
     SELECT event_type, n,
@@ -1831,7 +1826,7 @@ def q163_grouped_linear_trend(spark, sf_dir):
     s = pts.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         (F.sum(decq("x", 6)).cast("double") / F.lit(1e6)).alias("sx"),
-        F.sum(dec("y", 6)).cast("double").alias("sy"),
+        dsum("y").alias("sy"),
         (
             F.sum(decq(F.col("x") * F.col("x"), 6)).cast("double")
             / F.lit(1e6)
@@ -1867,6 +1862,11 @@ def q163_grouped_linear_trend(spark, sf_dir):
 # quantile for (5-1)(7-1)=24 dof in INTEGER-free double arithmetic on
 # both engines.
 # --------------------------------------------------------------------------
+_Q164_CHI2 = sql_double(
+    "SUM(CAST(floor((o - e) * (o - e) / e * 100000000.0 + 0.5) AS HUGEINT))"
+)
+
+
 @register(
     "q164_chi_square",
     oracle="""
@@ -1887,19 +1887,13 @@ def q163_grouped_linear_trend(spark, sf_dir):
            -- floor grid, not CAST-to-DECIMAL: the term is continuous
            -- (common.decq docstring)
            {chi2_rq} AS chi2,
-           CAST(CAST(SUM(CAST(floor((o - e) * (o - e) / e
-                                    * 100000000.0 + 0.5) AS HUGEINT))
-                     AS VARCHAR) AS DOUBLE) / 100000000 < 45.56
-             AS independent_995
+           {chi2} / 100000000 < 45.56 AS independent_995
     FROM cells
     """.format(
         # chi2 is k/1e8 grid-exact — re-rounding to 6 dp ties when
         # k mod 100 = 50: guarded floor grid (r10 q225 class)
-        chi2_rq=sql_roundq(
-            "CAST(CAST(SUM(CAST(floor((o - e) * (o - e) / e"
-            " * 100000000.0 + 0.5) AS HUGEINT))"
-            " AS VARCHAR) AS DOUBLE) / 100000000"
-        ),
+        chi2_rq=sql_roundq(_Q164_CHI2 + " / 100000000"),
+        chi2=_Q164_CHI2,
     ),
 )
 def q164_chi_square(spark, sf_dir):
@@ -1959,11 +1953,9 @@ def q164_chi_square(spark, sf_dir):
     ),
     g AS (
       SELECT max(n) AS n,
-             CAST(CAST(max(tot) AS VARCHAR) AS DOUBLE) AS tot,
-             CAST(CAST(SUM(i * r) AS VARCHAR) AS DOUBLE) AS iw,
-             CAST(CAST(SUM(CASE WHEN i > n - n // 5 THEN r
-                           ELSE CAST(0 AS DECIMAL(18,2)) END) AS VARCHAR)
-                  AS DOUBLE) AS top_rev
+             {tot} AS tot,
+             {iw} AS iw,
+             {top_rev} AS top_rev
       FROM ranked
     )
     SELECT n,
@@ -1972,6 +1964,12 @@ def q164_chi_square(spark, sf_dir):
            {top20_rq} AS top20_share
     FROM g
     """.format(
+        tot=sql_double("max(tot)"),
+        iw=sql_double("SUM(i * r)"),
+        top_rev=sql_double(
+            "SUM(CASE WHEN i > n - n // 5 THEN r"
+            " ELSE CAST(0 AS DECIMAL(18,2)) END)"
+        ),
         # gini/top20 are rationals of 2-dp sums (.5-tie class) and tot
         # can carry magnitude at scaled sweeps: guarded floor grid
         # (r10 q225 class + q220 magnitude class)
@@ -2362,7 +2360,7 @@ def q169_bounce_rate(spark, sf_dir):
       GROUP BY 1, 2
     )
     SELECT r_name, month_ms,
-           CAST(CAST(m AS VARCHAR) AS DOUBLE) AS revenue,
+           {sql_double("m")} AS revenue,
            {{mom_rq}} AS mom_growth
     FROM rev
     WINDOW w AS (PARTITION BY r_name ORDER BY month_ms)
@@ -2371,9 +2369,9 @@ def q169_bounce_rate(spark, sf_dir):
         # guarded floor grid, which also normalizes -0.0 (r10 q225)
         mom_rq=sql_roundq(
             "CASE WHEN lag(m) OVER w IS NULL THEN NULL"
-            " ELSE (CAST(CAST(m AS VARCHAR) AS DOUBLE)"
-            " - CAST(CAST(lag(m) OVER w AS VARCHAR) AS DOUBLE))"
-            " / CAST(CAST(lag(m) OVER w AS VARCHAR) AS DOUBLE) END"
+            f" ELSE ({sql_double('m')}"
+            f" - {sql_double('lag(m) OVER w')})"
+            f" / {sql_double('lag(m) OVER w')} END"
         ),
     ),
 )
@@ -2424,30 +2422,22 @@ def q170_mom_growth(spark, sf_dir):
     oracle="""
     WITH g AS (
       SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-             CAST(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS VARCHAR)
-                  AS DOUBLE) AS s,
-             CAST(CAST(SUM(CAST(value * value AS DECIMAL(18,6)))
-                       AS VARCHAR) AS DOUBLE) AS ss
+             {s} AS s,
+             {ss} AS ss
       FROM events GROUP BY event_type
     ),
     tot AS (
       SELECT CAST(SUM(n) AS BIGINT) AS nn, CAST(count(*) AS BIGINT) AS k,
-             CAST(CAST(SUM(CAST(s AS DECIMAL(18,6))) AS VARCHAR)
-                  AS DOUBLE) AS gs,
-             CAST(CAST(SUM(CAST(ss AS DECIMAL(18,6))) AS VARCHAR)
-                  AS DOUBLE) AS gss
+             {gs} AS gs,
+             {gss} AS gss
       FROM g
     ),
     parts AS (
       SELECT max(t.nn) AS nn, max(t.k) AS k,
              -- floor grid: s*s/n is continuous (common.decq)
-             CAST(CAST(SUM(CAST(floor(g.s * g.s / g.n * 1000000.0 + 0.5)
-                                AS HUGEINT)) AS VARCHAR) AS DOUBLE) / 1000000
+             {ssn} / 1000000
                - max(t.gs) * max(t.gs) / max(t.nn) AS ssb,
-             max(t.gss)
-               - CAST(CAST(SUM(CAST(floor(g.s * g.s / g.n * 1000000.0 + 0.5)
-                                    AS HUGEINT)) AS VARCHAR) AS DOUBLE)
-                 / 1000000 AS ssw
+             max(t.gss) - {ssn} / 1000000 AS ssw
       -- LEFT JOIN ON TRUE (identical to the cross join when g is
       -- non-empty) so k survives as 0 on empty events
       -- (empty_relation axis): g CROSS JOIN tot over empty g fed the
@@ -2462,6 +2452,13 @@ def q170_mom_growth(spark, sf_dir):
            {eta_rq} AS eta_squared
     FROM parts
     """.format(
+        s=sql_dsum("value"),
+        ss=sql_dsum("value * value"),
+        gs=sql_dsum("s"),
+        gss=sql_dsum("ss"),
+        ssn=sql_double(
+            "SUM(CAST(floor(g.s * g.s / g.n * 1000000.0 + 0.5) AS HUGEINT))"
+        ),
         # sums-of-squares and their ratios are micro-unit rationals
         # (.5-tie class): guarded floor grid (r10 q225 class)
         ssb_rq=sql_roundq("ssb"),
@@ -2475,16 +2472,14 @@ def q171_anova_f(spark, sf_dir):
     ev = table(spark, sf_dir, "events").select("event_type", "value")
     g = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(dec("value", 6)).cast("double").alias("s"),
-        F.sum(dec(F.col("value") * F.col("value"), 6))
-        .cast("double")
-        .alias("ss"),
+        dsum("value").alias("s"),
+        dsum(F.col("value") * F.col("value")).alias("ss"),
     )
     parts = g.agg(
         F.sum("n").cast("long").alias("nn"),
         F.count(F.lit(1)).alias("k"),
-        F.sum(dec("s", 6)).cast("double").alias("gs"),
-        F.sum(dec("ss", 6)).cast("double").alias("gss"),
+        dsum("s").alias("gs"),
+        dsum("ss").alias("gss"),
         (
             F.sum(decq(F.col("s") * F.col("s") / F.col("n"), 6))
             .cast("double")
@@ -2536,8 +2531,7 @@ def q171_anova_f(spark, sf_dir):
         SELECT a.id, a.label AS own_label, b.label AS nb_label,
                ROW_NUMBER() OVER (
                  PARTITION BY a.id
-                 ORDER BY round(list_dot_product(a.v, b.v)
-                                / (a.nrm * b.nrm), 6) DESC, b.id
+                 ORDER BY {cos} DESC, b.id
                ) AS rk
         FROM assigned a JOIN assigned b
           ON a.bucket = b.bucket AND a.id <> b.id
@@ -2560,6 +2554,7 @@ def q171_anova_f(spark, sf_dir):
     FROM vote GROUP BY own_label
     """.format(
         norm=with_norm_sql("embeddings", ("label",)),
+        cos=cosine_sql("a.v", "a.nrm", "b.v", "b.nrm"),
         assign=ivf_assign_sql(
             sqrt_k_centroids_sql("embeddings WHERE embedding IS NOT NULL"),
             ("label",),
@@ -3051,14 +3046,12 @@ def q176_quantile_normalization(spark, sf_dir):
     s AS (
       SELECT event_type,
              CAST(count(gap_s) AS BIGINT) AS n,
-             CAST(CAST(SUM(CAST(gap_s AS DECIMAL(18,6))) AS VARCHAR)
-                  AS DOUBLE) AS sg,
+             {sql_dsum("gap_s")} AS sg,
              -- DECIMAL(28,6): gap_s is on the exact ms grid, but its
              -- SQUARE reaches ~7e12 s^2 on sparse fixtures (days-long
              -- gaps) and overflows 18,6's 1e12 integer headroom
              -- (minimal-scale robustness sweep catch)
-             CAST(CAST(SUM(CAST(gap_s * gap_s AS DECIMAL(28,6)))
-                       AS VARCHAR) AS DOUBLE) AS sgg
+             {sql_double("SUM(CAST(gap_s * gap_s AS DECIMAL(28,6)))")} AS sgg
       FROM gaps WHERE gap_s IS NOT NULL GROUP BY event_type
     )
     SELECT event_type, n,
@@ -3095,7 +3088,7 @@ def q177_interevent_fit(spark, sf_dir):
     ).where(F.col("gap_s").isNotNull())
     s = gaps.groupBy("event_type").agg(
         F.count("gap_s").alias("n"),
-        F.sum(dec("gap_s", 6)).cast("double").alias("sg"),
+        dsum("gap_s").alias("sg"),
         # decimal(28,6), not dec()'s (18,6): the squared gap is still
         # grid-exact but needs ~1e13 integer headroom on sparse
         # fixtures (minimal-scale robustness sweep catch)
@@ -3153,11 +3146,8 @@ def q177_interevent_fit(spark, sf_dir):
     s AS (
       -- floor grid: embedding x is a generic double (common.decq)
       SELECT dim, CAST(count(*) AS BIGINT) AS n,
-             CAST(CAST(SUM(CAST(floor(x * 100000000.0 + 0.5) AS HUGEINT))
-                  AS VARCHAR) AS DOUBLE) / 100000000 AS sx,
-             CAST(CAST(SUM(CAST(floor(x * x * 100000000.0 + 0.5)
-                                AS HUGEINT))
-                  AS VARCHAR) AS DOUBLE) / 100000000 AS sxx
+             {sx} / 100000000 AS sx,
+             {sxx} / 100000000 AS sxx
       FROM expl GROUP BY dim
     )
     SELECT dim, n,
@@ -3169,7 +3159,11 @@ def q177_interevent_fit(spark, sf_dir):
            sqrt((sxx - sx * sx / n) / (n - 1)) < 0.5 AS collapsed,
            abs(sx / n) > 0.1 AS biased
     FROM s
-    """.format(mean_rq=sql_roundq("sx / n")),
+    """.format(
+        sx=sql_double("SUM(CAST(floor(x * 100000000.0 + 0.5) AS HUGEINT))"),
+        sxx=sql_double("SUM(CAST(floor(x * x * 100000000.0 + 0.5) AS HUGEINT))"),
+        mean_rq=sql_roundq("sx / n"),
+    ),
 )
 def q178_embedding_dim_stats(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings").select(
@@ -3648,7 +3642,7 @@ def q183_benford_audit(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q184_retention_halflife",
-    oracle="""
+    oracle=f"""
     WITH firsts AS (
       SELECT user_id, date_trunc('week', min(ts)) AS cohort
       FROM events GROUP BY user_id
@@ -3678,16 +3672,13 @@ def q183_benford_audit(spark, sf_dir):
     ),
     s AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
-             CAST(CAST(SUM(CAST(x AS DECIMAL(18,8))) AS VARCHAR)
-                  AS DOUBLE) AS sx,
+             {sql_dsum("x", 8)} AS sx,
              -- floor grid for the ln-derived terms (common.decq)
-             CAST(CAST(SUM(CAST(floor(y * 100000000.0 + 0.5) AS HUGEINT))
-                  AS VARCHAR) AS DOUBLE) / 100000000 AS sy,
-             CAST(CAST(SUM(CAST(x * x AS DECIMAL(18,8))) AS VARCHAR)
-                  AS DOUBLE) AS sxx,
-             CAST(CAST(SUM(CAST(floor(x * y * 100000000.0 + 0.5)
-                                AS HUGEINT))
-                  AS VARCHAR) AS DOUBLE) / 100000000 AS sxy
+             {sql_double("SUM(CAST(floor(y * 100000000.0 + 0.5) AS HUGEINT))")}
+               / 100000000 AS sy,
+             {sql_dsum("x * x", 8)} AS sxx,
+             {sql_double("SUM(CAST(floor(x * y * 100000000.0 + 0.5) AS HUGEINT))")}
+               / 100000000 AS sxy
       FROM pts
     )
     SELECT n, decay_b,
@@ -3742,9 +3733,9 @@ def q184_retention_halflife(spark, sf_dir):
     )
     s = pts.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(dec("x", 8)).cast("double").alias("sx"),
+        dsum("x", 8).alias("sx"),
         (F.sum(decq("y", 8)).cast("double") / F.lit(1e8)).alias("sy"),
-        F.sum(dec(F.col("x") * F.col("x"), 8)).cast("double").alias("sxx"),
+        dsum(F.col("x") * F.col("x"), 8).alias("sxx"),
         (
             F.sum(decq(F.col("x") * F.col("y"), 8)).cast("double")
             / F.lit(1e8)
@@ -3958,10 +3949,8 @@ def q186_funnel_latency(spark, sf_dir):
     stats AS (
       SELECT event_type,
              CAST(count(d) AS BIGINT) AS n,
-             CAST(CAST(SUM(CAST(d AS DECIMAL(18,6))) AS VARCHAR)
-                  AS DOUBLE) AS sd,
-             CAST(CAST(SUM(CAST(d * d AS DECIMAL(18,6))) AS VARCHAR)
-                  AS DOUBLE) AS sdd
+             {sd} AS sd,
+             {sdd} AS sdd
       FROM deltas WHERE d IS NOT NULL GROUP BY event_type
     )
     SELECT x.event_type, x.n,
@@ -3975,6 +3964,8 @@ def q186_funnel_latency(spark, sf_dir):
     WHERE dl.d IS NOT NULL
     GROUP BY x.event_type, x.n, x.sd, x.sdd
     """.format(
+        sd=sql_dsum("d"),
+        sdd=sql_dsum("d * d"),
         # mean = k/(1e6*n) rational (.5-tie class): guarded floor
         # grid, which also normalizes -0.0; sigma is sqrt-derived —
         # tie-free, round() ok (r10 q225 class)
@@ -3996,8 +3987,8 @@ def q187_rate_change_alert(spark, sf_dir):
     ).where(F.col("d").isNotNull())
     stats = deltas.groupBy("event_type").agg(
         F.count("d").alias("n"),
-        F.sum(dec("d", 6)).cast("double").alias("sd"),
-        F.sum(dec(F.col("d") * F.col("d"), 6)).cast("double").alias("sdd"),
+        dsum("d").alias("sd"),
+        dsum(F.col("d") * F.col("d")).alias("sdd"),
     )
     mean = F.col("sd") / F.col("n")
     # try_divide: a type with a single hourly delta has n - 1 = 0
@@ -4041,10 +4032,7 @@ def q187_rate_change_alert(spark, sf_dir):
     oracle="""
     WITH calc AS (
       SELECT l_orderkey,
-             CAST(CAST(SUM(CAST(l_extendedprice * (1 + l_tax)
-                                * (1 - l_discount)
-                                AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE)
-               AS charge
+             {charge} AS charge
       FROM lineitem GROUP BY l_orderkey
     )
     SELECT CASE
@@ -4063,10 +4051,8 @@ def q187_rate_change_alert(spark, sf_dir):
     FROM orders o JOIN calc c ON o.o_orderkey = c.l_orderkey
     GROUP BY band
     """.format(
-        gap_rq=sql_roundq(
-            "CAST(CAST(SUM(CAST(abs(o.o_totalprice - c.charge)"
-            " AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE)", 2
-        ),
+        charge=sql_dsum("l_extendedprice * (1 + l_tax) * (1 - l_discount)"),
+        gap_rq=sql_roundq(sql_dsum("abs(o.o_totalprice - c.charge)"), 2),
     ),
 )
 def q188_invoice_reconciliation(spark, sf_dir):
@@ -4094,7 +4080,7 @@ def q188_invoice_reconciliation(spark, sf_dir):
     )
     return j.groupBy(band.alias("band")).agg(
         F.count(F.lit(1)).alias("n_orders"),
-        roundq(F.sum(dec(gap, 6)).cast("double"), 2).alias("abs_gap_total"),
+        roundq(dsum(gap), 2).alias("abs_gap_total"),
     )
 
 

@@ -26,8 +26,12 @@ from airquality_data_pipeline_spark.functions.strings import md5_int, md5_int_sq
 from airquality_data_pipeline_spark.operators import fan_out
 from airquality_data_pipeline_spark.queries.common import (
     dec,
+    dsum,
     finite,
     roundq,
+    spark_sql_dsum,
+    sql_double,
+    sql_dsum,
     sql_finite,
     sql_floor_ms,
     sql_roundq,
@@ -704,7 +708,7 @@ def q196_decile_lift(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q197_last_touch_attribution",
-    oracle="""
+    oracle=f"""
     WITH touched AS (
       SELECT event_type, value,
              last_value(CASE WHEN event_type <> 'purchase'
@@ -716,8 +720,7 @@ def q196_decile_lift(spark, sf_dir):
     )
     SELECT COALESCE(touch, 'none') AS channel,
            CAST(count(*) AS BIGINT) AS n_purchases,
-           CAST(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS VARCHAR)
-                AS DOUBLE) AS revenue
+           {sql_dsum("value")} AS revenue
     FROM touched WHERE event_type = 'purchase'
     GROUP BY 1
     """,
@@ -749,7 +752,7 @@ def q197_last_touch_attribution(spark, sf_dir):
         .groupBy(F.coalesce("touch", F.lit("none")).alias("channel"))
         .agg(
             F.count(F.lit(1)).alias("n_purchases"),
-            F.sum(dec("value", 6)).cast("double").alias("revenue"),
+            dsum("value").alias("revenue"),
         )
     )
 
@@ -769,11 +772,10 @@ def q197_last_touch_attribution(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q198_hierarchy_rollup",
-    oracle="""
+    oracle=f"""
     WITH rev AS (
       SELECT l_suppkey AS s,
-             CAST(CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-                                AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE)
+             {sql_dsum("l_extendedprice * (1 - l_discount)")}
                AS revenue
       FROM lineitem GROUP BY l_suppkey
     ),
@@ -785,8 +787,7 @@ def q197_last_touch_attribution(spark, sf_dir):
       FROM rev
     )
     SELECT node, CAST(count(*) AS BIGINT) AS n_members,
-           CAST(CAST(SUM(CAST(revenue AS DECIMAL(18,6))) AS VARCHAR)
-                AS DOUBLE) AS subtree_revenue
+           {sql_dsum("revenue")} AS subtree_revenue
     FROM exploded GROUP BY node
     """,
 )
@@ -797,7 +798,7 @@ def q198_hierarchy_rollup(spark, sf_dir):
         (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("r"),
     )
     rev = li.groupBy("s").agg(
-        F.sum(dec("r", 6)).cast("double").alias("revenue")
+        dsum("r").alias("revenue")
     )
     exploded = rev.select(
         F.explode(
@@ -810,7 +811,7 @@ def q198_hierarchy_rollup(spark, sf_dir):
     )
     return exploded.groupBy("node").agg(
         F.count(F.lit(1)).alias("n_members"),
-        F.sum(dec("revenue", 6)).cast("double").alias("subtree_revenue"),
+        dsum("revenue").alias("subtree_revenue"),
     )
 
 
@@ -844,14 +845,9 @@ def q198_hierarchy_rollup(spark, sf_dir):
         # all three are micro-unit / count rationals (.5-tie class):
         # guarded floor grid (r10 q225 class)
         f=sql_finite("value"),
-        pred_rq=sql_roundq(
-            "CAST(SUM(CAST(p AS DECIMAL(18,6))) AS DOUBLE) / count(*)"
-        ),
+        pred_rq=sql_roundq(sql_dsum("p") + " / count(*)"),
         obs_rq=sql_roundq("CAST(SUM(y) AS DOUBLE) / count(*)"),
-        brier_rq=sql_roundq(
-            "CAST(SUM(CAST((p - y) * (p - y) AS DECIMAL(18,6)))"
-            " AS DOUBLE) / count(*)"
-        ),
+        brier_rq=sql_roundq(sql_dsum("(p - y) * (p - y)") + " / count(*)"),
     ),
 )
 def q199_calibration_bins(spark, sf_dir):
@@ -871,15 +867,13 @@ def q199_calibration_bins(spark, sf_dir):
     return scored.groupBy(b.alias("bin")).agg(
         F.count(F.lit(1)).alias("n"),
         roundq(
-            F.sum(dec("p", 6)).cast("double") / F.count(F.lit(1))
+            dsum("p") / F.count(F.lit(1))
         ).alias("mean_pred"),
         roundq(
             F.sum("y").cast("double") / F.count(F.lit(1))
         ).alias("obs_rate"),
         roundq(
-            F.sum(
-                dec((F.col("p") - F.col("y")) * (F.col("p") - F.col("y")), 6)
-            ).cast("double")
+            dsum((F.col("p") - F.col("y")) * (F.col("p") - F.col("y")))
             / F.count(F.lit(1))
         ).alias("brier"),
     )
@@ -1068,7 +1062,7 @@ def q200_ols_two_feature(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q257_ushaped_attribution",
-    oracle="""
+    oracle=f"""
     WITH ordered AS (
       SELECT user_id, ts, event_id, event_type, value,
              COALESCE(SUM(CASE WHEN event_type = 'purchase' THEN 1
@@ -1107,8 +1101,7 @@ def q200_ols_two_feature(spark, sf_dir):
       WHERE event_type = 'purchase' AND n_touches = 0
     )
     SELECT channel, CAST(count(*) AS BIGINT) AS n_credits,
-           CAST(CAST(SUM(CAST(credit AS DECIMAL(18,6))) AS VARCHAR)
-                AS DOUBLE) AS credited_revenue
+           {sql_dsum("credit")} AS credited_revenue
     FROM credits GROUP BY 1
     """,
 )
@@ -1169,7 +1162,7 @@ def q257_ushaped_attribution(spark, sf_dir):
     )
     return credits.groupBy("channel").agg(
         F.count(F.lit(1)).alias("n_credits"),
-        F.sum(dec("credit", 6)).cast("double").alias("credited_revenue"),
+        dsum("credit").alias("credited_revenue"),
     )
 
 
@@ -1199,8 +1192,7 @@ def q257_ushaped_attribution(spark, sf_dir):
     WITH ev AS (SELECT event_type AS action, value AS r FROM events),
     stats AS (
       SELECT action, count(*) AS n_a,
-             CAST(CAST(SUM(CAST(r AS DECIMAL(18,6))) AS VARCHAR)
-                  AS DOUBLE) / count(*) AS avg_r
+             {sql_dsum("r")} / count(*) AS avg_r
       FROM ev GROUP BY 1
     ),
     tot AS (SELECT sum(n_a) AS n FROM stats),
@@ -1210,7 +1202,7 @@ def q257_ushaped_attribution(spark, sf_dir):
              {sql_roundq('exp(avg_r / 10)')} AS e
       FROM stats, tot
     ),
-    z AS (SELECT CAST(SUM(CAST(e AS DECIMAL(18,6))) AS DOUBLE) AS z
+    z AS (SELECT {sql_dsum("e")} AS z
           FROM soft),
     policy AS (
       SELECT action, n_a, avg_r, p_b,
@@ -1225,18 +1217,14 @@ def q257_ushaped_attribution(spark, sf_dir):
       FROM ev JOIN policy p ON ev.action = p.action
     ),
     dm AS (
-      SELECT CAST(SUM(CAST({sql_roundq('p_t * avg_r')} AS DECIMAL(18,6)))
-                  AS DOUBLE) AS v_dm
+      SELECT {sql_dsum(sql_roundq('p_t * avg_r'))} AS v_dm
       FROM policy
     ),
     gstats AS (
       SELECT CAST(count(*) AS BIGINT) AS n_events,
-             CAST(CAST(SUM(CAST(wr AS DECIMAL(18,6))) AS VARCHAR)
-                  AS DOUBLE) AS sum_wr,
-             CAST(CAST(SUM(CAST(w AS DECIMAL(18,6))) AS VARCHAR)
-                  AS DOUBLE) AS sum_w,
-             CAST(CAST(SUM(CAST(wres AS DECIMAL(18,6))) AS VARCHAR)
-                  AS DOUBLE) AS sum_wres
+             {sql_dsum("wr")} AS sum_wr,
+             {sql_dsum("w")} AS sum_w,
+             {sql_dsum("wres")} AS sum_wres
       FROM weighted
     )
     SELECT p.action, CAST(p.n_a AS BIGINT) AS n_a,
@@ -1258,7 +1246,7 @@ def q258_offpolicy_eval(spark, sf_dir):
     stats = ev.groupBy("action").agg(
         F.count(F.lit(1)).alias("n_a"),
         (
-            F.sum(dec("r", 6)).cast("double") / F.count(F.lit(1))
+            dsum("r") / F.count(F.lit(1))
         ).alias("avg_r"),
     )
     tot = stats.agg(F.sum("n_a").alias("n"))
@@ -1269,7 +1257,7 @@ def q258_offpolicy_eval(spark, sf_dir):
         (F.col("n_a").cast("double") / F.col("n")).alias("p_b"),
         roundq(F.exp(F.col("avg_r") / 10)).alias("e"),
     )
-    z = soft.agg(F.sum(dec("e", 6)).cast("double").alias("z"))
+    z = soft.agg(dsum("e").alias("z"))
     policy = soft.crossJoin(F.broadcast(z)).select(
         "action",
         "n_a",
@@ -1289,15 +1277,13 @@ def q258_offpolicy_eval(spark, sf_dir):
         ),
     )
     dm = policy.agg(
-        F.sum(dec(roundq(F.col("p_t") * F.col("avg_r")), 6))
-        .cast("double")
-        .alias("v_dm")
+        dsum(roundq(F.col("p_t") * F.col("avg_r"))).alias("v_dm")
     )
     glob = weighted.agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(dec("wr", 6)).cast("double").alias("sum_wr"),
-        F.sum(dec("w", 6)).cast("double").alias("sum_w"),
-        F.sum(dec("wres", 6)).cast("double").alias("sum_wres"),
+        dsum("wr").alias("sum_wr"),
+        dsum("w").alias("sum_w"),
+        dsum("wres").alias("sum_wres"),
     )
     return (
         policy.crossJoin(F.broadcast(glob))
@@ -1508,13 +1494,11 @@ def q259_psi_drift(spark, sf_dir):
     ),
     pred AS (
       SELECT event_type, hr,
-             CAST(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS VARCHAR)
-                  AS DOUBLE) / count(*) AS mu
+             {sum_value} / count(*) AS mu
       FROM ev WHERE bucket < 60 GROUP BY 1, 2
     ),
     gmean AS (
-      SELECT CAST(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS VARCHAR)
-                  AS DOUBLE) / count(*) AS gmu
+      SELECT {sum_value} / count(*) AS gmu
       FROM ev WHERE bucket < 60
     ),
     cal AS (
@@ -1550,6 +1534,7 @@ def q259_psi_drift(spark, sf_dir):
     GROUP BY 1, 2
     """.format(
         h=md5_int_sql("CAST(event_id AS VARCHAR)", 1, 8),
+        sum_value=sql_dsum("value"),
         # coverage = k/n count ratio (.5-tie class): guarded floor grid
         cov_rq=sql_roundq(
             "CAST(SUM(CASE WHEN t.resid <= q.q_hat THEN 1 ELSE 0 END)"
@@ -1579,12 +1564,12 @@ def q260_conformal_calibration(spark, sf_dir):
     train = ev.where(F.col("bucket") < 60)
     pred = train.groupBy("event_type", "hr").agg(
         (
-            F.sum(dec("value", 6)).cast("double") / F.count(F.lit(1))
+            dsum("value") / F.count(F.lit(1))
         ).alias("mu")
     )
     gmean = train.agg(
         (
-            F.sum(dec("value", 6)).cast("double") / F.count(F.lit(1))
+            dsum("value") / F.count(F.lit(1))
         ).alias("gmu")
     )
 
@@ -1764,7 +1749,7 @@ def q261_fairness_audit(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q262_woe_iv",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
       SELECT value,
              CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
@@ -1799,9 +1784,9 @@ def q261_fairness_audit(spark, sf_dir):
     SELECT CAST(bin AS BIGINT) AS bin, n_pos, n_neg,
            round(ln(p / q), 6) + 0.0 AS woe,
            round((p - q) * ln(p / q), 6) AS iv_term,
-           CAST(SUM(CAST(round((p - q) * ln(p / q), 6)
-                         AS DECIMAL(18,6))) OVER () AS DOUBLE)
-             AS iv_total
+           {sql_double(
+               "SUM(CAST(round((p - q) * ln(p / q), 6) AS DECIMAL(18,6))) OVER ()"
+           )} AS iv_total
     FROM shares
     """,
 )
@@ -1985,14 +1970,8 @@ def q263_oof_target_encoding(spark, sf_dir):
       SELECT x,
              CAST(count(*) AS BIGINT) AS n,
              CAST(sum(t) AS BIGINT) AS n_t,
-             CAST(CAST(SUM(CASE WHEN t = 1
-                      THEN CAST(y AS DECIMAL(18,6))
-                      ELSE CAST(0 AS DECIMAL(18,6)) END) AS VARCHAR)
-                  AS DOUBLE) AS sum_y_t,
-             CAST(CAST(SUM(CASE WHEN t = 0
-                      THEN CAST(y AS DECIMAL(18,6))
-                      ELSE CAST(0 AS DECIMAL(18,6)) END) AS VARCHAR)
-                  AS DOUBLE) AS sum_y_c
+             {sum_y_t} AS sum_y_t,
+             {sum_y_c} AS sum_y_c
       FROM ev GROUP BY 1
     ),
     e AS (
@@ -2004,15 +1983,12 @@ def q263_oof_target_encoding(spark, sf_dir):
     ),
     ipw AS (
       SELECT CAST(count(*) AS BIGINT) AS n_events,
-             CAST(SUM(CAST({s1_rq}
-                           AS DECIMAL(18,6))) AS DOUBLE) AS s1,
-             CAST(SUM(CAST({s0_rq}
-                           AS DECIMAL(18,6))) AS DOUBLE) AS s0
+             {s1} AS s1,
+             {s0} AS s0
       FROM ev JOIN e ON ev.x = e.x
     ),
     att AS (
-      SELECT CAST(SUM(CAST({term_rq}
-                           AS DECIMAL(18,6))) AS DOUBLE) AS att
+      SELECT {att} AS att
       FROM e
     )
     SELECT e.x AS stratum, e.n, e.n_t,
@@ -2025,11 +2001,21 @@ def q263_oof_target_encoding(spark, sf_dir):
         # IPW terms, propensities, and stratified gaps are all
         # rationals of exact sums (.5-tie class): guarded floor grid,
         # which also normalizes -0.0 (r10 q225 class)
-        s1_rq=sql_roundq("ev.t * ev.y / e.prop"),
-        s0_rq=sql_roundq("(1 - ev.t) * ev.y / (1 - e.prop)"),
-        term_rq=sql_roundq(
-            "(CAST(e.n_t AS DOUBLE) / (SELECT sum(n_t) FROM e))"
-            " * (e.mu_t - e.mu_c)"
+        sum_y_t=sql_double(
+            "SUM(CASE WHEN t = 1 THEN CAST(y AS DECIMAL(18,6))"
+            " ELSE CAST(0 AS DECIMAL(18,6)) END)"
+        ),
+        sum_y_c=sql_double(
+            "SUM(CASE WHEN t = 0 THEN CAST(y AS DECIMAL(18,6))"
+            " ELSE CAST(0 AS DECIMAL(18,6)) END)"
+        ),
+        s1=sql_dsum(sql_roundq("ev.t * ev.y / e.prop")),
+        s0=sql_dsum(sql_roundq("(1 - ev.t) * ev.y / (1 - e.prop)")),
+        att=sql_dsum(
+            sql_roundq(
+                "(CAST(e.n_t AS DOUBLE) / (SELECT sum(n_t) FROM e))"
+                " * (e.mu_t - e.mu_c)"
+            )
         ),
         prop_rq=sql_roundq("e.prop"),
         gap_rq=sql_roundq("e.mu_t - e.mu_c"),
@@ -2076,31 +2062,14 @@ def q264_causal_estimators(spark, sf_dir):
         ev.join(F.broadcast(e), "x")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(
-                dec(
-                    roundq(
-                        F.try_divide(
-                            F.col("t") * F.col("y"), F.col("prop")
-                        )
-                    ),
-                    6,
+            dsum(
+                roundq(F.try_divide(F.col("t") * F.col("y"), F.col("prop")))
+            ).alias("s1"),
+            dsum(
+                roundq(
+                    F.try_divide((1 - F.col("t")) * F.col("y"), 1 - F.col("prop"))
                 )
-            )
-            .cast("double")
-            .alias("s1"),
-            F.sum(
-                dec(
-                    roundq(
-                        F.try_divide(
-                            (1 - F.col("t")) * F.col("y"),
-                            1 - F.col("prop"),
-                        )
-                    ),
-                    6,
-                )
-            )
-            .cast("double")
-            .alias("s0"),
+            ).alias("s0"),
         )
     )
     nt_tot = e.agg(F.sum("n_t").alias("nt_tot"))
@@ -2115,7 +2084,7 @@ def q264_causal_estimators(spark, sf_dir):
                 * (F.col("mu_t") - F.col("mu_c"))
             ).alias("term")
         )
-        .agg(F.sum(dec("term", 6)).cast("double").alias("att"))
+        .agg(dsum("term").alias("att"))
     )
     return (
         e.crossJoin(F.broadcast(ipw))
@@ -2149,11 +2118,10 @@ def q264_causal_estimators(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q266_recursive_hierarchy",
-    oracle="""
+    oracle=f"""
     WITH RECURSIVE rev AS (
       SELECT l_suppkey AS s,
-             CAST(CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-                                AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE)
+             {sql_dsum("l_extendedprice * (1 - l_discount)")}
                AS revenue
       FROM lineitem GROUP BY 1
     ),
@@ -2163,8 +2131,7 @@ def q264_causal_estimators(spark, sf_dir):
       SELECT leaf, node // 10 FROM walk WHERE node > 0
     )
     SELECT w.node, CAST(count(*) AS BIGINT) AS n_members,
-           CAST(CAST(SUM(CAST(r.revenue AS DECIMAL(18,6))) AS VARCHAR)
-                AS DOUBLE) AS subtree_revenue
+           {sql_dsum("r.revenue")} AS subtree_revenue
     FROM walk w JOIN rev r ON w.leaf = r.s
     GROUP BY 1
     """,
@@ -2176,18 +2143,18 @@ def q266_recursive_hierarchy(spark, sf_dir):
         (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("r"),
     )
     rev = li.groupBy("s").agg(
-        F.sum(dec("r", 6)).cast("double").alias("revenue")
+        dsum("r").alias("revenue")
     )
     rev.createOrReplaceTempView("q266_rev")
     return spark.sql(
-        """
+        f"""
         WITH RECURSIVE walk AS (
           SELECT s AS leaf, s AS node FROM q266_rev
           UNION ALL
           SELECT leaf, node div 10 FROM walk WHERE node > 0
         )
         SELECT w.node, count(*) AS n_members,
-               CAST(SUM(CAST(r.revenue AS DECIMAL(18,6))) AS DOUBLE)
+               {spark_sql_dsum("r.revenue")}
                  AS subtree_revenue
         FROM walk w JOIN q266_rev r ON w.leaf = r.s
         GROUP BY w.node

@@ -22,10 +22,14 @@ from pyspark.sql import functions as F
 
 from airquality_data_pipeline_spark.functions.strings import md5_int_sql, md5_unit
 from airquality_data_pipeline_spark.operators import fan_out
+from airquality_data_pipeline_spark.operators.similarity import cosine_sql
 from airquality_data_pipeline_spark.queries.common import (
     dec,
+    dsum,
     finite,
     roundq,
+    sql_double,
+    sql_dsum,
     sql_finite,
     sql_floor_ms,
     sql_roundq,
@@ -45,12 +49,11 @@ from airquality_data_pipeline_spark.queries.registry import register
 # --------------------------------------------------------------------------
 @register(
     "q201_nation_trade",
-    oracle="""
+    oracle=f"""
     SELECT ns.n_name AS supp_nation, nc.n_name AS cust_nation,
            CAST(year(l.l_shipdate) AS BIGINT) AS ship_year,
            CAST(count(*) AS BIGINT) AS n_items,
-           CAST(CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount)
-                              AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE)
+           {sql_dsum("l.l_extendedprice * (1 - l.l_discount)")}
              AS revenue
     FROM lineitem l
     JOIN orders o ON l.l_orderkey = o.o_orderkey
@@ -103,7 +106,7 @@ def q201_nation_trade(spark, sf_dir):
     )
     return j.groupBy("supp_nation", "cust_nation", "ship_year").agg(
         F.count(F.lit(1)).alias("n_items"),
-        F.sum(dec("rev", 6)).cast("double").alias("revenue"),
+        dsum("rev").alias("revenue"),
     )
 
 
@@ -117,9 +120,7 @@ def q201_nation_trade(spark, sf_dir):
     "q202_market_share",
     oracle="""
     SELECT CAST(year(l.l_shipdate) AS BIGINT) AS ship_year,
-           CAST(CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount)
-                              AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE)
-             AS total_revenue,
+           {revenue} AS total_revenue,
            {share_rq} AS nation0_share
     FROM lineitem l
     JOIN supplier s ON l.l_suppkey = s.s_suppkey
@@ -129,15 +130,16 @@ def q201_nation_trade(spark, sf_dir):
         # ratio of 6-dp decimal sums is a rational (.5-tie class):
         # guarded floor grid, not round() (r10 q225 class)
         share_rq=sql_roundq(
-            "CAST(SUM(CASE WHEN n.n_name = 'NATION_0'"
-            " THEN CAST(l.l_extendedprice * (1 - l.l_discount)"
-            " AS DECIMAL(18,6))"
-            " ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE)"
-            " / CAST(CAST(SUM(CAST(l.l_extendedprice"
-            " * (1 - l.l_discount)"
-            " AS DECIMAL(18,6))) AS VARCHAR)"
-            " AS DOUBLE)"
+            sql_double(
+                "SUM(CASE WHEN n.n_name = 'NATION_0'"
+                " THEN CAST(l.l_extendedprice * (1 - l.l_discount)"
+                " AS DECIMAL(18,6))"
+                " ELSE CAST(0 AS DECIMAL(18,6)) END)"
+            )
+            + " / "
+            + sql_dsum("l.l_extendedprice * (1 - l.l_discount)")
         ),
+        revenue=sql_dsum("l.l_extendedprice * (1 - l.l_discount)"),
     ),
 )
 def q202_market_share(spark, sf_dir):
@@ -161,7 +163,7 @@ def q202_market_share(spark, sf_dir):
         .select("s_suppkey", "n_name")
     )
     j = li.join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-    total = F.sum(dec("rev", 6)).cast("double")
+    total = dsum("rev")
     n0 = F.sum(
         F.when(F.col("n_name") == "NATION_0", dec("rev", 6)).otherwise(
             F.lit(0).cast("decimal(18,6)")
@@ -184,12 +186,13 @@ def q202_market_share(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q203_product_profit",
-    oracle="""
+    oracle=f"""
     SELECT n.n_name AS supp_nation,
            CAST(year(l.l_shipdate) AS BIGINT) AS ship_year,
-           CAST(CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount)
-                              - 0.6 * p.p_retailprice * l.l_quantity
-                              AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE)
+           {sql_dsum(
+               "l.l_extendedprice * (1 - l.l_discount)"
+               " - 0.6 * p.p_retailprice * l.l_quantity"
+           )}
              AS profit_vs_retail_cost
     FROM lineitem l
     JOIN part p ON l.l_partkey = p.p_partkey
@@ -231,7 +234,7 @@ def q203_product_profit(spark, sf_dir):
         .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
     )
     return j.groupBy("supp_nation", "ship_year").agg(
-        F.sum(dec(profit, 6)).cast("double").alias("profit_vs_retail_cost")
+        dsum(profit).alias("profit_vs_retail_cost")
     )
 
 
@@ -540,11 +543,10 @@ def q207_table_profile(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q208_topn_with_other",
-    oracle="""
+    oracle=f"""
     WITH agg AS (
       SELECT c.c_mktsegment AS segment, o.o_orderpriority AS priority,
-             CAST(CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,6)))
-                  AS VARCHAR) AS DOUBLE) AS rev,
+             {sql_dsum("o.o_totalprice")} AS rev,
              CAST(count(*) AS BIGINT) AS n
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
       GROUP BY 1, 2
@@ -558,8 +560,7 @@ def q207_table_profile(spark, sf_dir):
     SELECT segment,
            CASE WHEN rk <= 3 THEN priority ELSE 'OTHER' END AS bucket,
            CAST(SUM(n) AS BIGINT) AS n_orders,
-           CAST(CAST(SUM(CAST(rev AS DECIMAL(18,6))) AS VARCHAR)
-                AS DOUBLE) AS revenue
+           {sql_dsum("rev")} AS revenue
     FROM ranked GROUP BY 1, 2
     """,
 )
@@ -576,7 +577,7 @@ def q208_topn_with_other(spark, sf_dir):
             F.col("o_orderpriority").alias("priority"),
         )
         .agg(
-            F.sum(dec("o_totalprice", 6)).cast("double").alias("rev"),
+            dsum("o_totalprice").alias("rev"),
             F.count(F.lit(1)).alias("n"),
         )
     )
@@ -591,7 +592,7 @@ def q208_topn_with_other(spark, sf_dir):
         "segment", bucket.alias("bucket")
     ).agg(
         F.sum("n").alias("n_orders"),
-        F.sum(dec("rev", 6)).cast("double").alias("revenue"),
+        dsum("rev").alias("revenue"),
     )
 
 
@@ -751,8 +752,7 @@ def q210_pareto_frontier(spark, sf_dir):
     oracle="""
     SELECT event_type, CAST(count(*) AS BIGINT) AS n,
            {arith_rq} AS mean_arith,
-           round(exp(CAST(SUM(CAST(ln(value) AS DECIMAL(18,6)))
-                          AS DOUBLE) / count(*)), 6) AS mean_geom,
+           round(exp({sum_ln} / count(*)), 6) AS mean_geom,
            {harm_rq} AS mean_harm
     FROM events WHERE value > 0
     GROUP BY event_type
@@ -760,14 +760,9 @@ def q210_pareto_frontier(spark, sf_dir):
         # arith/harm means are micro-unit rationals (.5-tie class):
         # guarded floor grid; geom is exp-derived — tie-free, round()
         # ok (r10 q225 class)
-        arith_rq=sql_roundq(
-            "CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE)"
-            " / count(*)"
-        ),
-        harm_rq=sql_roundq(
-            "count(*) / CAST(SUM(CAST(1.0 / value AS DECIMAL(18,6)))"
-            " AS DOUBLE)"
-        ),
+        arith_rq=sql_roundq(sql_dsum("value") + " / count(*)"),
+        sum_ln=sql_dsum("ln(value)"),
+        harm_rq=sql_roundq("count(*) / " + sql_dsum("1.0 / value")),
     ),
 )
 def q211_robust_means(spark, sf_dir):
@@ -776,14 +771,12 @@ def q211_robust_means(spark, sf_dir):
     n = F.count(F.lit(1))
     return ev.groupBy("event_type").agg(
         n.alias("n"),
-        roundq(F.sum(dec("value", 6)).cast("double") / n).alias(
-            "mean_arith"
-        ),
+        roundq(dsum("value") / n).alias("mean_arith"),
         F.round(
-            F.exp(F.sum(dec(F.log("value"), 6)).cast("double") / n), 6
+            F.exp(dsum(F.log("value")) / n), 6
         ).alias("mean_geom"),
         roundq(
-            n / F.sum(dec(F.lit(1.0) / F.col("value"), 6)).cast("double")
+            n / dsum(F.lit(1.0) / F.col("value"))
         ).alias("mean_harm"),
     )
 
@@ -871,12 +864,10 @@ def q212_survivorship(spark, sf_dir):
         # (.5-tie class): guarded floor grid (r10 q225 class)
         mae_rq=sql_roundq("CAST(SUM(abs(v - f)) AS DOUBLE) / count(*)"),
         mape_rq=sql_roundq(
-            "CAST(SUM(CAST(CAST(abs(v - f) AS DOUBLE) / v"
-            " AS DECIMAL(18,6))) AS DOUBLE) / count(*)"
+            sql_dsum("CAST(abs(v - f) AS DOUBLE) / v") + " / count(*)"
         ),
         smape_rq=sql_roundq(
-            "CAST(SUM(CAST(2.0 * abs(v - f) / (v + f)"
-            " AS DECIMAL(18,6))) AS DOUBLE) / count(*)"
+            sql_dsum("2.0 * abs(v - f) / (v + f)") + " / count(*)"
         ),
     ),
 )
@@ -899,13 +890,11 @@ def q213_backtest_smape(spark, sf_dir):
         n.alias("n_days"),
         roundq(F.sum(err).cast("double") / n).alias("mae"),
         roundq(
-            F.sum(dec(err.cast("double") / F.col("v"), 6)).cast("double")
+            dsum(err.cast("double") / F.col("v"))
             / n
         ).alias("mape"),
         roundq(
-            F.sum(
-                dec(2.0 * err / (F.col("v") + F.col("f")), 6)
-            ).cast("double")
+            dsum(2.0 * err / (F.col("v") + F.col("f")))
             / n
         ).alias("smape"),
     )
@@ -927,8 +916,8 @@ def q213_backtest_smape(spark, sf_dir):
 # exactly (decimal sums are exact, *1e6 is exact), products/sums stay
 # in DECIMAL(38,0)/HUGEINT integer arithmetic, and only the finished
 # statistics convert to double (integer->double conversion is
-# correctly rounded in both engines; the DuckDB decimal sum hops
-# through VARCHAR per the >17-digit rule). The previous shape cast
+# correctly rounded in both engines; the DuckDB sums go through
+# common.sql_double per the >17-digit rule). The previous shape cast
 # x*x (a double ~1e12) to DECIMAL(24,6), where x*x*1e6 >> 2^53 makes
 # Spark's exact-BigDecimal and DuckDB's scaled-float conversions
 # diverge — syy drifted ~100 ULPs and var_y flipped 1e-6 quanta.
@@ -952,12 +941,10 @@ def q213_backtest_smape(spark, sf_dir):
     ),
     gstats AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
-             CAST(CAST(SUM(xm) AS VARCHAR) AS DOUBLE) / 1000000.0 AS sx,
-             CAST(CAST(SUM(ym) AS VARCHAR) AS DOUBLE) / 1000000.0 AS sy,
-             CAST(CAST(SUM(CAST(xm AS HUGEINT) * xm) AS VARCHAR)
-                  AS DOUBLE) / 1000000000000.0 AS sxx,
-             CAST(CAST(SUM(CAST(xm AS HUGEINT) * ym) AS VARCHAR)
-                  AS DOUBLE) / 1000000000000.0 AS sxy
+             {sql_double("SUM(xm)")} / 1000000.0 AS sx,
+             {sql_double("SUM(ym)")} / 1000000.0 AS sy,
+             {sql_double("SUM(CAST(xm AS HUGEINT) * xm)")} / 1000000000000.0 AS sxx,
+             {sql_double("SUM(CAST(xm AS HUGEINT) * ym)")} / 1000000000000.0 AS sxy
       FROM per_user
     ),
     theta AS (
@@ -967,14 +954,11 @@ def q213_backtest_smape(spark, sf_dir):
     ),
     cell AS (
       SELECT variant, CAST(count(*) AS BIGINT) AS n_users,
-             CAST(CAST(SUM(xm) AS VARCHAR) AS DOUBLE) / 1000000.0 AS sx,
-             CAST(CAST(SUM(ym) AS VARCHAR) AS DOUBLE) / 1000000.0 AS sy,
-             CAST(CAST(SUM(CAST(xm AS HUGEINT) * xm) AS VARCHAR)
-                  AS DOUBLE) / 1000000000000.0 AS sxx,
-             CAST(CAST(SUM(CAST(ym AS HUGEINT) * ym) AS VARCHAR)
-                  AS DOUBLE) / 1000000000000.0 AS syy,
-             CAST(CAST(SUM(CAST(xm AS HUGEINT) * ym) AS VARCHAR)
-                  AS DOUBLE) / 1000000000000.0 AS sxy
+             {sql_double("SUM(xm)")} / 1000000.0 AS sx,
+             {sql_double("SUM(ym)")} / 1000000.0 AS sy,
+             {sql_double("SUM(CAST(xm AS HUGEINT) * xm)")} / 1000000000000.0 AS sxx,
+             {sql_double("SUM(CAST(ym AS HUGEINT) * ym)")} / 1000000000000.0 AS syy,
+             {sql_double("SUM(CAST(xm AS HUGEINT) * ym)")} / 1000000000000.0 AS sxy
       FROM per_user GROUP BY variant
     )
     SELECT c.variant, c.n_users,
@@ -1116,8 +1100,7 @@ def q220_cuped(spark, sf_dir):
     ),
     agg AS (
       SELECT treated, post, CAST(count(*) AS BIGINT) AS n,
-             CAST(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS VARCHAR)
-                  AS DOUBLE) AS s
+             {s} AS s
       FROM cells GROUP BY treated, post
     ),
     wide AS (
@@ -1137,6 +1120,7 @@ def q220_cuped(spark, sf_dir):
            {did_rq} AS did_estimate
     FROM wide
     """.format(
+        s=sql_dsum("value"),
         # cell means and their differences are micro-unit rationals
         # (.5-tie class): guarded floor grid, which also normalizes
         # -0.0 (r10 q225 class)
@@ -1158,7 +1142,7 @@ def q221_diff_in_diff(spark, sf_dir):
     )
     agg = cells.groupBy("treated", "post").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(dec("value", 6)).cast("double").alias("s"),
+        dsum("value").alias("s"),
     )
 
     def cell_mean(t, p):
@@ -1206,8 +1190,7 @@ def q221_diff_in_diff(spark, sf_dir):
     oracle="""
     WITH per_user AS (
       SELECT user_id,
-             CAST(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS VARCHAR)
-                  AS DOUBLE) AS y
+             {y} AS y
       FROM events GROUP BY user_id
     ),
     reps AS (
@@ -1228,8 +1211,7 @@ def q221_diff_in_diff(spark, sf_dir):
     ),
     rep_means AS (
       SELECT rep,
-             CAST(CAST(SUM(CAST(w * y AS DECIMAL(18,6))) AS VARCHAR)
-                  AS DOUBLE) / CAST(SUM(w) AS BIGINT) AS m
+             {wy} / CAST(SUM(w) AS BIGINT) AS m
       FROM weighted GROUP BY rep
     ),
     est AS (
@@ -1253,10 +1235,9 @@ def q221_diff_in_diff(spark, sf_dir):
         # the mean estimate and the interpolated percentiles of
         # rational replicate means are rationals (.5-tie class):
         # guarded floor grid (r10 q225 class)
-        est_rq=sql_roundq(
-            "CAST(CAST(SUM(CAST(y AS DECIMAL(18,6))) AS VARCHAR)"
-            " AS DOUBLE) / count(*)"
-        ),
+        y=sql_dsum("value"),
+        wy=sql_dsum("w * y"),
+        est_rq=sql_roundq(sql_dsum("y") + " / count(*)"),
         lo_rq=sql_roundq("quantile_cont(r.m, 0.025)"),
         hi_rq=sql_roundq("quantile_cont(r.m, 0.975)"),
     ),
@@ -1265,7 +1246,7 @@ def q222_poisson_bootstrap(spark, sf_dir):
     utc(spark)
     ev = table(spark, sf_dir, "events").select("user_id", "value")
     per_user = ev.groupBy("user_id").agg(
-        F.sum(dec("value", 6)).cast("double").alias("y")
+        dsum("value").alias("y")
     )
     reps = per_user.select(
         "user_id",
@@ -1294,14 +1275,14 @@ def q222_poisson_bootstrap(spark, sf_dir):
     # both engines (and both percentile implementations skip NULLs)
     rep_means = weighted.groupBy("rep").agg(
         F.try_divide(
-            F.sum(dec(F.col("w") * F.col("y"), 6)).cast("double"),
+            dsum(F.col("w") * F.col("y")),
             F.sum("w"),
         ).alias("m")
     )
     est = per_user.agg(
         F.count(F.lit(1)).alias("n_users"),
         roundq(
-            F.sum(dec("y", 6)).cast("double") / F.count(F.lit(1))
+            dsum("y") / F.count(F.lit(1))
         ).alias("estimate"),
     )
     ci = rep_means.agg(
@@ -1417,7 +1398,7 @@ def q223_cohort_ltv(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q224_negative_sampling",
-    oracle="""
+    oracle=f"""
     WITH n AS (
       SELECT vec_id, embedding::DOUBLE[] AS v,
              sqrt(list_dot_product(embedding::DOUBLE[],
@@ -1430,7 +1411,7 @@ def q223_cohort_ltv(spark, sf_dir):
       SELECT query_id, cand_id, rank FROM (
         SELECT q.qid AS query_id, n.vec_id AS cand_id,
                ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
-                 round(list_dot_product(q.qv, n.v) / (q.qn * n.nrm), 6)
+                 {cosine_sql("q.qv", "q.qn", "n.v", "n.nrm")}
                    DESC, n.vec_id) AS rank
         FROM n, q WHERE n.vec_id <> q.qid AND n.nrm > 0 AND q.qn > 0
       ) WHERE rank <= 3
@@ -2004,22 +1985,10 @@ def q231_srm_check(spark, sf_dir):
         # capped means are micro-unit rationals (.5-tie class):
         # guarded floor grid (r10 q225 class)
         f=sql_finite("value"),
-        raw_rq=sql_roundq(
-            "CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE)"
-            " / count(*)"
-        ),
-        p99_rq=sql_roundq(
-            "CAST(SUM(CAST(least(value, c.p99) AS DECIMAL(18,6)))"
-            " AS DOUBLE) / count(*)"
-        ),
-        p95_rq=sql_roundq(
-            "CAST(SUM(CAST(least(value, c.p95) AS DECIMAL(18,6)))"
-            " AS DOUBLE) / count(*)"
-        ),
-        p90_rq=sql_roundq(
-            "CAST(SUM(CAST(least(value, c.p90) AS DECIMAL(18,6)))"
-            " AS DOUBLE) / count(*)"
-        ),
+        raw_rq=sql_roundq(sql_dsum("value") + " / count(*)"),
+        p99_rq=sql_roundq(sql_dsum("least(value, c.p99)") + " / count(*)"),
+        p95_rq=sql_roundq(sql_dsum("least(value, c.p95)") + " / count(*)"),
+        p90_rq=sql_roundq(sql_dsum("least(value, c.p90)") + " / count(*)"),
     ),
 )
 def q232_capping_sensitivity(spark, sf_dir):
@@ -2035,22 +2004,17 @@ def q232_capping_sensitivity(spark, sf_dir):
     n = F.count(F.lit(1))
     return j.groupBy("p90", "p95", "p99").agg(
         n.alias("n"),
-        roundq(F.sum(dec("value", 6)).cast("double") / n).alias(
-            "mean_raw"
-        ),
+        roundq(dsum("value") / n).alias("mean_raw"),
         roundq(
-            F.sum(dec(F.least(F.col("value"), F.col("p99")), 6))
-            .cast("double")
+            dsum(F.least(F.col("value"), F.col("p99")))
             / n
         ).alias("mean_cap_p99"),
         roundq(
-            F.sum(dec(F.least(F.col("value"), F.col("p95")), 6))
-            .cast("double")
+            dsum(F.least(F.col("value"), F.col("p95")))
             / n
         ).alias("mean_cap_p95"),
         roundq(
-            F.sum(dec(F.least(F.col("value"), F.col("p90")), 6))
-            .cast("double")
+            dsum(F.least(F.col("value"), F.col("p90")))
             / n
         ).alias("mean_cap_p90"),
     ).drop("p90", "p95", "p99")
@@ -2070,8 +2034,7 @@ def q232_capping_sensitivity(spark, sf_dir):
     oracle="""
     WITH per_user AS (
       SELECT user_id, CAST(user_id % 2 AS BIGINT) AS treated,
-             CAST(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS VARCHAR)
-                  AS DOUBLE) AS score,
+             {score} AS score,
              CAST(max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
                   AS BIGINT) AS converted
       FROM events GROUP BY user_id
@@ -2101,6 +2064,7 @@ def q232_capping_sensitivity(spark, sf_dir):
            {cum_rq} AS cum_uplift
     FROM g
     """.format(
+        score=sql_dsum("value"),
         # rate gaps k/n - j/m are rationals (.5-tie class): guarded
         # floor grid, which also normalizes -0.0 (r10 q225 class)
         uplift_rq=sql_roundq(
@@ -2121,7 +2085,7 @@ def q237_uplift_deciles(spark, sf_dir):
     utc(spark)
     ev = table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
-        F.sum(dec("value", 6)).cast("double").alias("score"),
+        dsum("value").alias("score"),
         F.max(
             F.when(F.col("event_type") == "purchase", 1).otherwise(0)
         ).alias("converted"),

@@ -5,22 +5,27 @@ hash, so every value must match BIT-EXACTLY. Doubles summed in different
 orders differ in the last ULP between engines; the fixes used throughout
 the catalog:
 
-  * SUM/AVG of doubles: cast each value to DECIMAL(18,s) first (same
-    half-up rounding of the same IEEE double in both engines), sum exactly
-    (decimal addition is associative), cast the result back to double
-    (nearest-double of the same decimal => same bits).
+  * SUM/AVG of doubles go through the exact sum, spelled only here:
+    cast each value to DECIMAL(18,s) (same half-up rounding of the same
+    IEEE double in both engines), sum exactly (decimal addition is
+    associative), cast the result back to double. Spark: dsum()/davg();
+    Spark SQL text: spark_sql_dsum(); DuckDB oracles: sql_dsum()/
+    sql_davg(). None takes an alias, so each can sit inside a larger
+    expression.
+  * DuckDB's direct CAST(DECIMAL AS DOUBLE) computes int_value *
+    10^-scale in floating point and is NOT correctly rounded once a sum
+    passes ~17 significant digits (150009782104.930001 -> ...93002, where
+    Spark and Python give ...93): oracle text writes no
+    CAST(SUM(CAST(x AS DECIMAL(18,6))) AS DOUBLE). Every decimal or
+    HUGEINT value entering a double on the DuckDB side goes through
+    sql_double(), which hops through VARCHAR (correctly rounded), and
+    sql_dsum()/sql_davg() are built on it.
   * Scalar arithmetic stays in double (same expression tree => same IEEE
     ops => same bits) — only the value *entering* an order-dependent
     aggregate goes through decimal.
   * Timestamps in outputs become epoch-millis bigints
     (Spark unix_millis == DuckDB epoch_ms; both instant-based).
   * Every computed column is aliased identically on both sides.
-  * Decimal sums wider than ~17 significant digits: DuckDB's
-    CAST(DECIMAL AS DOUBLE) computes int_value * 10^-scale in floating
-    point and is NOT correctly rounded (e.g. 150009782104.930001 ->
-    ...93002), while Spark/Python round correctly. On the DuckDB side
-    hop through VARCHAR (CAST(CAST(x AS VARCHAR) AS DOUBLE) is
-    correctly rounded); sums below 17 digits are unaffected.
 """
 
 from __future__ import annotations
@@ -183,8 +188,8 @@ def decq(col: Column | str, scale: int = 6) -> Column:
     stays preferred (cheaper, keeps DECIMAL sums).
 
     SQL twin: sql_decq(). Callers divide the summed integer by
-    10^scale at the end (one shared float op; VARCHAR-hop the decimal
-    sum on the DuckDB side per the >17-digit rule).
+    10^scale at the end (one shared float op; sql_double() the sum on
+    the DuckDB side).
 
     Non-finite input is NULLed first (finite()): unguarded, Spark's
     floor would silently emit 0 for NaN and clamp ±inf to ±Long.MAX
@@ -198,7 +203,7 @@ def decq(col: Column | str, scale: int = 6) -> Column:
 
 def sql_decq(expr: str, scale: int = 6) -> str:
     """DuckDB twin of decq(): same floor(x*10^k + 0.5) grid, HUGEINT-
-    exact (cast the SUM through VARCHAR before any double use)."""
+    exact (sql_double() the SUM before any double use)."""
     return f"CAST(floor(({expr}) * {10**scale}.0 + 0.5) AS HUGEINT)"
 
 
@@ -261,12 +266,12 @@ def sql_roundq(expr: str, scale: int = 6) -> str:
     )
 
 
-def dsum(col: Column | str, alias: str, scale: int = 6) -> Column:
+def dsum(col: Column | str, scale: int = 6) -> Column:
     """Order-independent double SUM (exact decimal accumulation)."""
-    return F.sum(dec(col, scale)).cast("double").alias(alias)
+    return F.sum(dec(col, scale)).cast("double")
 
 
-def davg(col: Column | str, alias: str, scale: int = 6) -> Column:
+def davg(col: Column | str) -> Column:
     """Order-independent double AVG: decimal sum -> double, / count.
 
     The denominator counts the DECIMAL-cast value, not the raw column:
@@ -275,27 +280,35 @@ def davg(col: Column | str, alias: str, scale: int = 6) -> Column:
     would be a silent lie. All-non-finite groups yield NULL/0 -> NULL
     identically on both engines (probed: no ANSI divide error — the
     NULL numerator short-circuits)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return (
-        F.sum(dec(c, scale)).cast("double") / F.count(dec(c, scale))
-    ).alias(alias)
+    return dsum(col) / F.count(dec(col))
+
+
+def spark_sql_dsum(expr: str, scale: int = 6) -> str:
+    """dsum() in Spark SQL text, for builders that run spark.sql().
+    Spark's DECIMAL -> DOUBLE cast is correctly rounded, so this form
+    needs no hop; never use it in oracle text (sql_dsum there)."""
+    return f"CAST(SUM(CAST({expr} AS DECIMAL(18,{scale}))) AS DOUBLE)"
 
 
 # SQL-side twins (DuckDB): keep these in sync with the column helpers
 # above. The DECIMAL casts rendered here are finite-wrapped MECHANICALLY
 # at registration (registry.py applies nonfinite_null_sql to every
 # oracle), so these stay readable and cannot drift from the convention.
-def sql_dsum(expr: str, alias: str, scale: int = 6) -> str:
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(18,{scale}))) AS DOUBLE) AS {alias}"
+def sql_double(expr: str) -> str:
+    """A DECIMAL or HUGEINT value as the correctly rounded double:
+    through VARCHAR, since DuckDB's direct cast is not (module
+    docstring)."""
+    return f"CAST(CAST({expr} AS VARCHAR) AS DOUBLE)"
 
 
-def sql_davg(expr: str, alias: str, scale: int = 6) -> str:
+def sql_dsum(expr: str, scale: int = 6) -> str:
+    return sql_double(f"SUM(CAST({expr} AS DECIMAL(18,{scale})))")
+
+
+def sql_davg(expr: str) -> str:
     # COUNT of the DECIMAL-cast value: finite-consistent with the sum
     # (see davg) once registration wraps both casts.
-    return (
-        f"CAST(SUM(CAST({expr} AS DECIMAL(18,{scale}))) AS DOUBLE)"
-        f" / COUNT(CAST({expr} AS DECIMAL(18,{scale}))) AS {alias}"
-    )
+    return f"{sql_dsum(expr)} / COUNT(CAST({expr} AS DECIMAL(18,6)))"
 
 
 _FINITE_MARK = "CASE WHEN ISFINITE("

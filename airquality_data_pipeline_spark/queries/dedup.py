@@ -21,6 +21,7 @@ from airquality_data_pipeline_spark.io import local_frame
 from airquality_data_pipeline_spark.operators import fan_out
 from airquality_data_pipeline_spark.operators.dedup import (
     MINHASH_SIGNATURES_SQL,
+    MINHASH_SIG_SQL,
     exact_dedup,
     minhash_candidate_pairs,
     minhash_signatures,
@@ -174,10 +175,7 @@ _SIG_COLS = ", ".join(f"mh_{i}" for i in range(_NUM_HASHES))
     oracle=f"""
     WITH {word_shingles_sql("documents", 3, ())},
     {MINHASH_SIGNATURES_SQL},
-    sig AS (
-      SELECT id, string_agg(CAST(mh AS VARCHAR), ':' ORDER BY seed) AS sig
-      FROM mh GROUP BY id
-    )
+    {MINHASH_SIG_SQL}
     SELECT min(id) AS keeper_id, count(*) AS n_docs
     FROM sig GROUP BY sig HAVING count(*) >= 2
     """,
@@ -401,10 +399,7 @@ _QUALITY_SQL = f"""
     oracle=f"""
     WITH {word_shingles_sql("documents", 3, ())},
     {MINHASH_SIGNATURES_SQL},
-    sig AS (
-      SELECT id, string_agg(CAST(mh AS VARCHAR), ':' ORDER BY seed) AS sig
-      FROM mh GROUP BY id
-    ),
+    {MINHASH_SIG_SQL},
     {_QUALITY_SQL}
     SELECT (max(struct_pack(qq := quality, nid := -id))).nid * -1 AS canonical_id,
            count(*) AS n_docs,

@@ -30,11 +30,13 @@ from airquality_data_pipeline_spark.functions.strings import (
 from airquality_data_pipeline_spark.operators import fan_out
 from airquality_data_pipeline_spark.operators.dedup import (
     MINHASH_SIGNATURES_SQL,
+    MINHASH_SIG_SQL,
     word_shingles_sql,
 )
 from airquality_data_pipeline_spark.operators.similarity import (
     PLANTED_NEARDUP_CORPUS_SQL,
     cosine,
+    cosine_sql,
     ivf_assign,
     ivf_assign_sql,
     planted_neardup_corpus,
@@ -44,6 +46,7 @@ from airquality_data_pipeline_spark.operators.similarity import (
 from airquality_data_pipeline_spark.queries.common import (
     decq,
     roundq,
+    sql_double,
     sql_roundq,
     table,
 )
@@ -283,7 +286,7 @@ def q129_containment(spark, sf_dir):
     {ivf_assign_sql(sqrt_k_centroids_sql("corpus"), ())},
     pairs AS (
       SELECT a.bucket, a.id AS id_a, b.id AS id_b,
-             round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) AS cos_sim
+             {cosine_sql("a.v", "a.nrm", "b.v", "b.nrm")} AS cos_sim
       FROM assigned a JOIN assigned b
         ON a.bucket = b.bucket AND a.id < b.id
     )
@@ -441,10 +444,7 @@ def q131_cms_heavy_hitters(spark, sf_dir):
     ),
     {word_shingles_sql("corpus", 3, ())},
     {MINHASH_SIGNATURES_SQL},
-    sig AS (
-      SELECT id, string_agg(CAST(mh AS VARCHAR), ':' ORDER BY seed) AS sig
-      FROM mh GROUP BY id
-    ),
+    {MINHASH_SIG_SQL},
     labeled AS (
       -- LEFT join + digest-qualified EMPTY sentinel: sub-shingle docs
       -- (< 3 tokens) have no signature rows; like the STREAMING twin
@@ -617,7 +617,7 @@ def q134_hll_shard_union(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q135_char_entropy",
-    oracle="""
+    oracle=f"""
     WITH chars AS (
       SELECT doc_id, substring(text, CAST(g.i AS INT), 1) AS ch
       FROM documents, UNNEST(range(1, length(text) + 1)) AS g(i)
@@ -638,9 +638,9 @@ def q134_hll_shard_union(spark, sf_dir):
            -- floor grid for the FINAL 1e-6 quantization too: the
            -- scaled-int sum / 1e10 quotient is continuous and round()
            -- flipped one quantum at a .5 boundary (scale-100 sweep)
-           floor(-(CAST(CAST(sum(t.term) AS VARCHAR) AS DOUBLE))
+           floor(-({sql_double("sum(t.term)")})
                  / 10000.0 + 0.5) / 1000000.0 AS entropy,
-           floor(-(CAST(CAST(sum(t.term) AS VARCHAR) AS DOUBLE))
+           floor(-({sql_double("sum(t.term)")})
                  / 10000.0 + 0.5) / 1000000.0 < 3.0 AS low_entropy
     FROM terms t JOIN n ON t.doc_id = n.doc_id
     GROUP BY t.doc_id, n.n

@@ -26,9 +26,13 @@ from airquality_data_pipeline_spark.functions.strings import (
     md5_int_sql,
     md5_unit,
 )
+from airquality_data_pipeline_spark.operators.similarity import cosine_sql
 from airquality_data_pipeline_spark.queries.common import (
+    dsum,
     finite,
     roundq,
+    sql_double,
+    sql_dsum,
     sql_finite,
     sql_roundq,
     table,
@@ -422,7 +426,7 @@ def q217_curriculum_interleave(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q218_matryoshka_recall",
-    oracle="""
+    oracle=f"""
     WITH n AS (
       SELECT vec_id, embedding::DOUBLE[] AS v,
              sqrt(list_dot_product(embedding::DOUBLE[],
@@ -439,7 +443,7 @@ def q217_curriculum_interleave(spark, sf_dir):
       SELECT query_id, neighbor_id FROM (
         SELECT q.qid AS query_id, n.vec_id AS neighbor_id,
                ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
-                 round(list_dot_product(q.qv, n.v) / (q.qn * n.nrm), 6)
+                 {cosine_sql("q.qv", "q.qn", "n.v", "n.nrm")}
                    DESC, n.vec_id) AS rank
         FROM n, q WHERE n.vec_id <> q.qid AND n.nrm > 0 AND q.qn > 0
       ) WHERE rank <= 5
@@ -448,8 +452,7 @@ def q217_curriculum_interleave(spark, sf_dir):
       SELECT query_id, neighbor_id FROM (
         SELECT q.qid AS query_id, n.vec_id AS neighbor_id,
                ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
-                 round(list_dot_product(q.qtv, n.tv) / (q.qtn * n.tnrm),
-                       6) DESC, n.vec_id) AS rank
+                 {cosine_sql("q.qtv", "q.qtn", "n.tv", "n.tnrm")} DESC, n.vec_id) AS rank
         FROM n, q WHERE n.vec_id <> q.qid AND n.tnrm > 0 AND q.qtn > 0
       ) WHERE rank <= 5
     )
@@ -512,24 +515,21 @@ def q218_matryoshka_recall(spark, sf_dir):
     ),
     bylab AS (
       SELECT dim, label, CAST(count(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(x AS DECIMAL(18,6))) AS DOUBLE) AS s,
-             CAST(SUM(CAST(x * x AS DECIMAL(18,6))) AS DOUBLE) AS ss
+             {s} AS s,
+             {ss} AS ss
       FROM flat GROUP BY dim, label
     ),
     bydim AS (
       SELECT dim,
              CAST(SUM(n) AS BIGINT) AS nt,
-             CAST(SUM(CAST(s AS DECIMAL(18,6))) AS DOUBLE) AS st,
-             CAST(SUM(CAST(ss - s * s / n AS DECIMAL(28,10))) AS DOUBLE)
-               AS within_ss,
+             {st} AS st,
+             {within_ss} AS within_ss,
              CAST(count(*) AS BIGINT) AS n_classes
       FROM bylab GROUP BY dim
     ),
     fisher AS (
       SELECT b.dim,
-             CAST(SUM(CAST(b.n * (b.s / b.n - d.st / d.nt)
-                               * (b.s / b.n - d.st / d.nt)
-                           AS DECIMAL(28,10))) AS DOUBLE) AS between_ss,
+             {between_ss} AS between_ss,
              any_value(d.within_ss) AS within_ss,
              any_value(d.n_classes) AS n_classes
       FROM bylab b JOIN bydim d ON b.dim = d.dim
@@ -543,6 +543,14 @@ def q218_matryoshka_recall(spark, sf_dir):
       FROM fisher
     ) WHERE rk <= 10
     """.format(
+        s=sql_dsum("x"),
+        ss=sql_dsum("x * x"),
+        st=sql_dsum("s"),
+        within_ss=sql_double("SUM(CAST(ss - s * s / n AS DECIMAL(28,10)))"),
+        between_ss=sql_double(
+            "SUM(CAST(b.n * (b.s / b.n - d.st / d.nt)"
+            " * (b.s / b.n - d.st / d.nt) AS DECIMAL(28,10)))"
+        ),
         # fisher score is a rational of decimal-exact SSes, and it
         # ORDERS the top-10 rank (.5-tie class): guarded floor grid
         fisher_rq=sql_roundq("between_ss / within_ss"),
@@ -563,14 +571,12 @@ def q219_fisher_dims(spark, sf_dir):
     ).select("label", (F.col("dim0") + 1).alias("dim"), "x")
     bylab = flat.groupBy("dim", "label").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("x").cast("decimal(18,6)")).cast("double").alias("s"),
-        F.sum((F.col("x") * F.col("x")).cast("decimal(18,6)"))
-        .cast("double")
-        .alias("ss"),
+        dsum("x").alias("s"),
+        dsum(F.col("x") * F.col("x")).alias("ss"),
     )
     bydim = bylab.groupBy("dim").agg(
         F.sum("n").alias("nt"),
-        F.sum(F.col("s").cast("decimal(18,6)")).cast("double").alias("st"),
+        dsum("s").alias("st"),
         F.sum(
             (F.col("ss") - F.col("s") * F.col("s") / F.col("n"))
             .cast("decimal(28,10)")
@@ -641,7 +647,7 @@ def q219_fisher_dims(spark, sf_dir):
         # micro-unit mean and k/n share (.5-tie class): guarded floor
         # grid (r10 q225 class)
         lix_rq=sql_roundq(
-            "CAST(SUM(CAST(lix AS DECIMAL(18,6))) AS DOUBLE) / count(*)"
+            sql_dsum("lix") + " / count(*)"
         ),
         hard_rq=sql_roundq(
             "CAST(SUM(CASE WHEN lix > 44 THEN 1 ELSE 0 END)"
@@ -681,7 +687,7 @@ def q233_readability_lix(spark, sf_dir):
         F.sum("words").alias("words"),
         F.sum("long_words").alias("long_words"),
         roundq(
-            F.sum(F.col("lix").cast("decimal(18,6)")).cast("double") / n
+            dsum("lix") / n
         ).alias("mean_lix"),
         roundq(
             F.sum(F.when(F.col("lix") > 44, 1).otherwise(0)).cast("double")

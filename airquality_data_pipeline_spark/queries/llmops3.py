@@ -30,8 +30,9 @@ from airquality_data_pipeline_spark.functions.strings import (
 from airquality_data_pipeline_spark.io import local_frame
 from airquality_data_pipeline_spark.operators import fan_out
 from airquality_data_pipeline_spark.queries.common import (
-    dec,
+    dsum,
     roundq,
+    sql_dsum,
     sql_roundq,
     table,
 )
@@ -120,8 +121,8 @@ def dsir_model(spark, sf_dir, target_lang: str = "en"):
       FROM stats, tot
     )
     SELECT b.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-           CAST(SUM(CAST(m.w AS DECIMAL(18,6))) AS DOUBLE) AS dsir_score,
-           (CAST(SUM(CAST(m.w AS DECIMAL(18,6))) AS DOUBLE) > 0)
+           {sql_dsum("m.w")} AS dsir_score,
+           ({sql_dsum("m.w")} > 0)
              AS selected
     FROM b JOIN model m ON b.bucket = m.bucket
     GROUP BY 1
@@ -131,7 +132,7 @@ def q250_dsir_selection(spark, sf_dir):
     toks, model = dsir_model(spark, sf_dir)
     scored = toks.join(F.broadcast(model), "bucket").groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tokens"),
-        F.sum(dec("w", 6)).cast("double").alias("dsir_score"),
+        dsum("w").alias("dsir_score"),
     )
     return scored.select(
         "doc_id",
@@ -190,7 +191,7 @@ def q250_dsir_selection(spark, sf_dir):
     SELECT lang, CAST(tercile AS BIGINT) AS tercile,
            CAST(count(*) AS BIGINT) AS n_docs,
            CAST(sum(n_chars) AS BIGINT) AS total_chars,
-           CAST(SUM(CAST(avg_nll AS DECIMAL(18,6))) AS DOUBLE)
+           {sql_dsum("avg_nll")}
              / COUNT(*) AS mean_nll
     FROM bucketed GROUP BY 1, 2
     """,
@@ -241,7 +242,7 @@ def q251_perplexity_terciles(spark, sf_dir):
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").alias("total_chars"),
         (
-            F.sum(dec("avg_nll", 6)).cast("double") / F.count(F.lit(1))
+            dsum("avg_nll") / F.count(F.lit(1))
         ).alias("mean_nll"),
     )
 
@@ -356,7 +357,7 @@ def _ndcg_oracle() -> str:
       (VALUES (1, 'src1'), (2, 'src2'), (3, 'src3')),
     scored AS (
       SELECT q.query_id, tf.doc_id,
-             CAST(SUM(CAST({bm25_expr()} AS DECIMAL(18,6))) AS DOUBLE)
+             {sql_dsum(bm25_expr())}
                AS score
       FROM tf
       JOIN q ON tf.term = q.term
@@ -379,9 +380,10 @@ def _ndcg_oracle() -> str:
     nrel AS (SELECT query_id, count(*) AS n_rel FROM rel GROUP BY 1),
     dcg AS (
       SELECT t.query_id,
-             CAST(SUM(CAST(CASE WHEN r.doc_id IS NOT NULL
-                      THEN round(1.0 / log2(t.rank + 1), 6)
-                      ELSE 0 END AS DECIMAL(18,6))) AS DOUBLE) AS dcg
+             {sql_dsum(
+                 "CASE WHEN r.doc_id IS NOT NULL"
+                 " THEN round(1.0 / log2(t.rank + 1), 6) ELSE 0 END"
+             )} AS dcg
       FROM top10 t
       LEFT JOIN rel r
         ON t.query_id = r.query_id AND t.doc_id = r.doc_id
@@ -389,8 +391,7 @@ def _ndcg_oracle() -> str:
     ),
     idcg AS (
       SELECT n.query_id,
-             CAST(SUM(CAST(round(1.0 / log2(i + 1), 6)
-                           AS DECIMAL(18,6))) AS DOUBLE) AS idcg
+             {sql_dsum("round(1.0 / log2(i + 1), 6)")} AS idcg
       FROM nrel n, UNNEST(generate_series(1, least(n.n_rel, 10))) AS g(i)
       WHERE n.n_rel >= 1
       GROUP BY 1
@@ -434,16 +435,9 @@ def q254_ndcg_at_10(spark, sf_dir):
         )
         .groupBy("query_id")
         .agg(
-            F.sum(
-                dec(
-                    F.when(F.col("is_rel"), disc(F.col("rank"))).otherwise(
-                        F.lit(0)
-                    ),
-                    6,
-                )
-            )
-            .cast("double")
-            .alias("dcg")
+            dsum(
+                F.when(F.col("is_rel"), disc(F.col("rank"))).otherwise(F.lit(0))
+            ).alias("dcg")
         )
     )
     idcg = (
@@ -455,7 +449,7 @@ def q254_ndcg_at_10(spark, sf_dir):
             ).alias("i"),
         )
         .groupBy("query_id")
-        .agg(F.sum(dec(disc(F.col("i")), 6)).cast("double").alias("idcg"))
+        .agg(dsum(disc(F.col("i"))).alias("idcg"))
     )
     return (
         dcg.join(F.broadcast(nrel), "query_id", "left")
@@ -513,8 +507,7 @@ def _rrf_oracle() -> str:
         SELECT q.query_id, tf.doc_id,
                ROW_NUMBER() OVER (
                  PARTITION BY q.query_id
-                 ORDER BY CAST(SUM(CAST({bm25_expr()} AS DECIMAL(18,6)))
-                               AS DOUBLE) DESC, tf.doc_id
+                 ORDER BY {sql_dsum(bm25_expr())} DESC, tf.doc_id
                ) AS rank
         FROM tf
         JOIN q ON tf.term = q.term
@@ -529,9 +522,9 @@ def _rrf_oracle() -> str:
         SELECT q.query_id, tf.doc_id,
                ROW_NUMBER() OVER (
                  PARTITION BY q.query_id
-                 ORDER BY CAST(SUM(CAST(
-                   tf.tf * round(ln(CAST(stats.n AS DOUBLE) / dfreq.df), 6)
-                 AS DECIMAL(18,6))) AS DOUBLE) DESC, tf.doc_id
+                 ORDER BY {sql_dsum(
+                   "tf.tf * round(ln(CAST(stats.n AS DOUBLE) / dfreq.df), 6)"
+                 )} DESC, tf.doc_id
                ) AS rank
         FROM tf
         JOIN q ON tf.term = q.term
@@ -605,7 +598,7 @@ def q255_rrf_fusion(spark, sf_dir):
         .join(F.broadcast(dfreq), "term")
         .crossJoin(F.broadcast(stats))
         .groupBy("query_id", "doc_id")
-        .agg(F.sum(dec(contrib, 6)).cast("double").alias("score"))
+        .agg(dsum(contrib).alias("score"))
         .withColumn("t_rank", F.row_number().over(tfidf_rank))
         .where(F.col("t_rank") <= 20)
         .select("query_id", "doc_id", "t_rank")
@@ -670,7 +663,7 @@ def q255_rrf_fusion(spark, sf_dir):
     ),
     z AS (
       SELECT alpha,
-             CAST(SUM(CAST(pa AS DECIMAL(18,6))) AS DOUBLE) AS zsum
+             {zsum} AS zsum
       FROM powed GROUP BY 1
     )
     SELECT p.lang, p.alpha, CAST(p.n_tokens AS BIGINT) AS n_tokens,
@@ -680,6 +673,7 @@ def q255_rrf_fusion(spark, sf_dir):
     FROM powed p JOIN z ON p.alpha = z.alpha
     """.format(
         toks=tokens_sql("text"),
+        zsum=sql_dsum("pa"),
         # token share and grid-value ratios are rationals (.5-tie
         # class): guarded floor grid; pa = pow(p, 0.3/0.7) is
         # irrational (tie-free) and pow(p, 1.0) grid-exact — round ok
@@ -704,7 +698,7 @@ def q256_temperature_sampling(spark, sf_dir):
         "lang", "n_tokens", "p", alphas
     ).withColumn("pa", F.round(F.pow("p", "alpha"), 6))
     z = powed.groupBy("alpha").agg(
-        F.sum(dec("pa", 6)).cast("double").alias("zsum")
+        dsum("pa").alias("zsum")
     )
     return powed.join(F.broadcast(z), "alpha").select(
         "lang",

@@ -310,7 +310,7 @@ def q29_ragged_union(spark, sf_dir):
            {sql_floor_ms("min(ts)")} AS session_start_ms,
            {sql_floor_ms("max(ts)")} AS session_end_ms,
            COUNT(*) AS n_events,
-           {sql_dsum('value', 'sum_value')}
+           {sql_dsum("value")} AS sum_value
     FROM numbered
     GROUP BY user_id, session_id
     """,
@@ -324,7 +324,7 @@ def q30_sessionization(spark, sf_dir):
         F.unix_millis(F.min("ts")).alias("session_start_ms"),
         F.unix_millis(F.max("ts")).alias("session_end_ms"),
         F.count(F.lit(1)).alias("n_events"),
-        dsum("value", "sum_value"),
+        dsum("value").alias("sum_value"),
     )
 
 
@@ -338,7 +338,7 @@ def q30_sessionization(spark, sf_dir):
     SELECT {sql_floor_ms("date_trunc('hour', ts)")} AS window_start_ms,
            event_type,
            COUNT(*) AS n_events,
-           {sql_dsum('value', 'sum_value')}
+           {sql_dsum("value")} AS sum_value
     FROM events
     GROUP BY 1, 2
     """,
@@ -348,7 +348,7 @@ def q31_tumbling_window(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "sum_value"))
+        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value").alias("sum_value"))
         .select(
             F.unix_millis(F.col("w.start")).alias("window_start_ms"),
             "event_type",
@@ -362,7 +362,7 @@ def q31_tumbling_window(spark, sf_dir):
     "q55_salted_agg",
     oracle=f"""
     SELECT event_type,
-           {sql_dsum('value', 'sum_value')},
+           {sql_dsum("value")} AS sum_value,
            COUNT(*) AS sum_value_count
     FROM events
     GROUP BY event_type
@@ -388,7 +388,7 @@ def q55_salted_agg(spark, sf_dir):
     oracle=f"""
     SELECT {sql_floor_ms("ws")} AS window_start_ms,
            COUNT(*) AS n_events,
-           {sql_dsum('value', 'sum_value')}
+           {sql_dsum("value")} AS sum_value
     FROM (
       SELECT e.value, u.ws
       FROM events e,
@@ -403,7 +403,7 @@ def q32_sliding_window(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "2 hours", "1 hour").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "sum_value"))
+        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value").alias("sum_value"))
         .select(
             F.unix_millis(F.col("w.start")).alias("window_start_ms"),
             "n_events",

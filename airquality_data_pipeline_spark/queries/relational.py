@@ -20,6 +20,7 @@ from airquality_data_pipeline_spark.queries.common import (
     dec,
     dsum,
     sql_davg,
+    sql_double,
     sql_dsum,
     sql_floor_ms,
     table,
@@ -39,13 +40,13 @@ from airquality_data_pipeline_spark.queries.registry import register
     oracle=f"""
     SELECT
       l_returnflag, l_linestatus,
-      {sql_dsum('l_quantity', 'sum_qty')},
-      {sql_dsum('l_extendedprice', 'sum_base_price')},
-      {sql_dsum('l_extendedprice * (1 - l_discount)', 'sum_disc_price')},
-      {sql_dsum('l_extendedprice * (1 - l_discount) * (1 + l_tax)', 'sum_charge')},
-      {sql_davg('l_quantity', 'avg_qty')},
-      {sql_davg('l_extendedprice', 'avg_price')},
-      {sql_davg('l_discount', 'avg_disc', scale=6)},
+      {sql_dsum("l_quantity")} AS sum_qty,
+      {sql_dsum("l_extendedprice")} AS sum_base_price,
+      {sql_dsum("l_extendedprice * (1 - l_discount)")} AS sum_disc_price,
+      {sql_dsum("l_extendedprice * (1 - l_discount) * (1 + l_tax)")} AS sum_charge,
+      {sql_davg("l_quantity")} AS avg_qty,
+      {sql_davg("l_extendedprice")} AS avg_price,
+      {sql_davg("l_discount")} AS avg_disc,
       COUNT(*) AS count_order
     FROM lineitem
     WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
@@ -77,13 +78,13 @@ def q01_pricing_summary(spark, sf_dir):
     return (
         filtered.groupBy("l_returnflag", "l_linestatus")
         .agg(
-            dsum("l_quantity", "sum_qty"),
-            dsum("l_extendedprice", "sum_base_price"),
-            dsum(disc_price, "sum_disc_price"),
-            dsum(charge, "sum_charge"),
-            davg("l_quantity", "avg_qty"),
-            davg("l_extendedprice", "avg_price"),
-            davg("l_discount", "avg_disc", scale=6),
+            dsum("l_quantity").alias("sum_qty"),
+            dsum("l_extendedprice").alias("sum_base_price"),
+            dsum(disc_price).alias("sum_disc_price"),
+            dsum(charge).alias("sum_charge"),
+            davg("l_quantity").alias("avg_qty"),
+            davg("l_extendedprice").alias("avg_price"),
+            davg("l_discount").alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
         .orderBy("l_returnflag", "l_linestatus")
@@ -122,7 +123,7 @@ def q02_filter_project(spark, sf_dir):
     "q03_shipping_priority",
     oracle=f"""
     SELECT l_orderkey,
-           {sql_dsum('l_extendedprice * (1 - l_discount)', 'revenue')},
+           {sql_dsum("l_extendedprice * (1 - l_discount)")} AS revenue,
            {sql_floor_ms("o_orderdate")} AS o_orderdate_ms,
            o_orderpriority
     FROM customer
@@ -149,7 +150,7 @@ def q03_shipping_priority(spark, sf_dir):
         cust.join(orders, cust.c_custkey == orders.o_custkey)
         .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"))
+        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
         .select(
             "l_orderkey",
             "revenue",
@@ -198,7 +199,7 @@ def q04_semi_join_exists(spark, sf_dir):
     "q05_local_supplier_volume",
     oracle=f"""
     SELECT n_name,
-           {sql_dsum('l_extendedprice * (1 - l_discount)', 'revenue')}
+           {sql_dsum("l_extendedprice * (1 - l_discount)")} AS revenue
     FROM customer
     JOIN orders   ON c_custkey = o_custkey
     JOIN lineitem ON l_orderkey = o_orderkey
@@ -234,7 +235,7 @@ def q05_local_supplier_volume(spark, sf_dir):
         .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
         .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("n_name")
-        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"))
+        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
         .orderBy(F.desc("revenue"), "n_name")
     )
 
@@ -246,7 +247,7 @@ def q05_local_supplier_volume(spark, sf_dir):
 @register(
     "q06_forecast_revenue",
     oracle=f"""
-    SELECT {sql_dsum('l_extendedprice * l_discount', 'revenue')},
+    SELECT {sql_dsum("l_extendedprice * l_discount")} AS revenue,
            COUNT(*) AS n_rows
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
@@ -264,7 +265,7 @@ def q06_forecast_revenue(spark, sf_dir):
         & (F.col("l_discount").between(0.05, 0.07))
         & (F.col("l_quantity") < 24)
     ).agg(
-        dsum(F.col("l_extendedprice") * F.col("l_discount"), "revenue"),
+        dsum(F.col("l_extendedprice") * F.col("l_discount")).alias("revenue"),
         F.count(F.lit(1)).alias("n_rows"),
     )
 
@@ -333,7 +334,7 @@ def q08_left_join_coalesce(spark, sf_dir):
     oracle=f"""
     SELECT p_brand,
            COUNT(*) AS n_items,
-           {sql_dsum('l_extendedprice * (1 - l_discount)', 'revenue')}
+           {sql_dsum("l_extendedprice * (1 - l_discount)")} AS revenue
     FROM lineitem
     JOIN part ON l_partkey = p_partkey
     WHERE p_size >= 30
@@ -349,7 +350,7 @@ def q09_broadcast_dim_join(spark, sf_dir):
         .groupBy("p_brand")
         .agg(
             F.count(F.lit(1)).alias("n_items"),
-            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"),
+            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
         )
         .orderBy("p_brand")
     )
@@ -400,10 +401,11 @@ def q10_topk_per_group(spark, sf_dir):
            {sql_floor_ms("o_orderdate")} AS o_orderdate_ms,
            o_totalprice,
            ROW_NUMBER() OVER w AS rn,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) OVER (
-             PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-           ) AS DOUBLE) AS running_spend,
+           {sql_double(
+               "SUM(CAST(o_totalprice AS DECIMAL(18,6))) OVER ("
+               " PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey"
+               " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+           )} AS running_spend,
            LAG(o_totalprice) OVER w AS prev_price,
            LEAD(o_totalprice) OVER w AS next_price
     FROM orders
@@ -438,7 +440,7 @@ def q11_window_running(spark, sf_dir):
     oracle=f"""
     SELECT l_returnflag, l_linestatus,
            COUNT(*) AS n_rows,
-           {sql_dsum('l_quantity', 'sum_qty')}
+           {sql_dsum("l_quantity")} AS sum_qty
     FROM lineitem
     GROUP BY ROLLUP (l_returnflag, l_linestatus)
     -- Pinned engine envelope (tests/test_empty_relation.py): Spark's
@@ -459,7 +461,7 @@ def q12_rollup(spark, sf_dir):
     # 100 TB.
     li = fan_out(li.select("l_returnflag", "l_linestatus", "l_quantity"))
     return li.rollup("l_returnflag", "l_linestatus").agg(
-        F.count(F.lit(1)).alias("n_rows"), dsum("l_quantity", "sum_qty")
+        F.count(F.lit(1)).alias("n_rows"), dsum("l_quantity").alias("sum_qty")
     )
 
 
@@ -468,7 +470,7 @@ def q12_rollup(spark, sf_dir):
     oracle=f"""
     SELECT o_orderstatus, o_orderpriority,
            COUNT(*) AS n_orders,
-           {sql_dsum('o_totalprice', 'sum_price')}
+           {sql_dsum("o_totalprice")} AS sum_price
     FROM orders
     GROUP BY CUBE (o_orderstatus, o_orderpriority)
     -- empty-input grouping-sets envelope guard, see q12_rollup
@@ -478,7 +480,7 @@ def q12_rollup(spark, sf_dir):
 def q13_cube(spark, sf_dir):
     orders = table(spark, sf_dir, "orders")
     return orders.cube("o_orderstatus", "o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_orders"), dsum("o_totalprice", "sum_price")
+        F.count(F.lit(1)).alias("n_orders"), dsum("o_totalprice").alias("sum_price")
     )
 
 
@@ -546,8 +548,8 @@ def q15_distinct_agg(spark, sf_dir):
     "q16_conditional_agg",
     oracle=f"""
     SELECT l_returnflag,
-           {sql_dsum("CASE WHEN l_linestatus = 'O' THEN l_quantity ELSE 0 END", 'qty_open')},
-           {sql_dsum("CASE WHEN l_linestatus = 'F' THEN l_quantity ELSE 0 END", 'qty_fulfilled')},
+           {sql_dsum("CASE WHEN l_linestatus = 'O' THEN l_quantity ELSE 0 END")} AS qty_open,
+           {sql_dsum("CASE WHEN l_linestatus = 'F' THEN l_quantity ELSE 0 END")} AS qty_fulfilled,
            COUNT(CASE WHEN l_discount > 0.05 THEN 1 END) AS n_discounted
     FROM lineitem
     GROUP BY l_returnflag
@@ -562,15 +564,13 @@ def q16_conditional_agg(spark, sf_dir):
             dsum(
                 F.when(F.col("l_linestatus") == "O", F.col("l_quantity")).otherwise(
                     F.lit(0.0)
-                ),
-                "qty_open",
-            ),
+                )
+            ).alias("qty_open"),
             dsum(
                 F.when(F.col("l_linestatus") == "F", F.col("l_quantity")).otherwise(
                     F.lit(0.0)
-                ),
-                "qty_fulfilled",
-            ),
+                )
+            ).alias("qty_fulfilled"),
             F.count(F.when(F.col("l_discount") > 0.05, F.lit(1))).alias(
                 "n_discounted"
             ),

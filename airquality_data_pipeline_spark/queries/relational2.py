@@ -16,7 +16,9 @@ from airquality_data_pipeline_spark.operators.joins import (
 from airquality_data_pipeline_spark.queries.common import (
     davg,
     dsum,
+    spark_sql_dsum,
     sql_davg,
+    sql_double,
     sql_dsum,
     sql_floor_ms,
     table,
@@ -127,9 +129,9 @@ def q34_range_join(spark, sf_dir):
     "q35_pivot",
     oracle=f"""
     SELECT o_orderpriority,
-           {sql_dsum("CASE WHEN o_orderstatus = 'O' THEN o_totalprice ELSE 0 END", 'total_o')},
-           {sql_dsum("CASE WHEN o_orderstatus = 'F' THEN o_totalprice ELSE 0 END", 'total_f')},
-           {sql_dsum("CASE WHEN o_orderstatus = 'P' THEN o_totalprice ELSE 0 END", 'total_p')}
+           {sql_dsum("CASE WHEN o_orderstatus = 'O' THEN o_totalprice ELSE 0 END")} AS total_o,
+           {sql_dsum("CASE WHEN o_orderstatus = 'F' THEN o_totalprice ELSE 0 END")} AS total_f,
+           {sql_dsum("CASE WHEN o_orderstatus = 'P' THEN o_totalprice ELSE 0 END")} AS total_p
     FROM orders
     GROUP BY o_orderpriority
     ORDER BY o_orderpriority
@@ -140,7 +142,7 @@ def q35_pivot(spark, sf_dir):
     pivoted = (
         orders.groupBy("o_orderpriority")
         .pivot("o_orderstatus", ["O", "F", "P"])
-        .agg(F.sum(F.col("o_totalprice").cast("decimal(18,6)")).cast("double"))
+        .agg(dsum("o_totalprice"))
     )
     return pivoted.select(
         "o_orderpriority",
@@ -158,7 +160,7 @@ def q35_pivot(spark, sf_dir):
     oracle=f"""
     WITH wide AS (
       SELECT o_orderpriority,
-             {sql_dsum('o_totalprice', 'sum_price')},
+             {sql_dsum("o_totalprice")} AS sum_price,
              COUNT(*) AS n_orders
       FROM orders GROUP BY o_orderpriority
     )
@@ -170,7 +172,7 @@ def q35_pivot(spark, sf_dir):
 def q36_unpivot(spark, sf_dir):
     orders = table(spark, sf_dir, "orders")
     wide = orders.groupBy("o_orderpriority").agg(
-        dsum("o_totalprice", "sum_price"),
+        dsum("o_totalprice").alias("sum_price"),
         F.count(F.lit(1)).cast("double").alias("n_orders"),
     )
     return wide.unpivot(
@@ -295,7 +297,7 @@ def q39_collect_sorted(spark, sf_dir):
 # --------------------------------------------------------------------------
 _Q53_SQL = """
     SELECT c_custkey, c_name,
-           CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue,
+           {revenue} AS revenue,
            c_acctbal, n_name
     FROM customer
     JOIN orders   ON c_custkey = o_custkey
@@ -310,12 +312,15 @@ _Q53_SQL = """
 """
 
 
-@register("q53_sql_api", oracle=_Q53_SQL)
+_Q53_REVENUE = "l_extendedprice * (1 - l_discount)"
+
+
+@register("q53_sql_api", oracle=_Q53_SQL.format(revenue=sql_dsum(_Q53_REVENUE)))
 def q53_sql_api(spark, sf_dir):
     utc(spark)
     for name in ("customer", "orders", "lineitem", "nation"):
         table(spark, sf_dir, name).createOrReplaceTempView(name)
-    return spark.sql(_Q53_SQL)
+    return spark.sql(_Q53_SQL.format(revenue=spark_sql_dsum(_Q53_REVENUE)))
 
 
 # --------------------------------------------------------------------------
@@ -363,7 +368,7 @@ def q56_array_functions(spark, sf_dir):
     "q57_having",
     oracle=f"""
     SELECT o_custkey, COUNT(*) AS n_orders,
-           {sql_dsum('o_totalprice', 'total_spend')}
+           {sql_dsum("o_totalprice")} AS total_spend
     FROM orders
     GROUP BY o_custkey
     HAVING COUNT(*) >= 15
@@ -375,7 +380,7 @@ def q57_having(spark, sf_dir):
         orders.groupBy("o_custkey")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            dsum("o_totalprice", "total_spend"),
+            dsum("o_totalprice").alias("total_spend"),
         )
         .where(F.col("n_orders") >= 15)
     )
@@ -392,7 +397,7 @@ def q57_having(spark, sf_dir):
     oracle=f"""
     WITH part_avg AS (
       SELECT l_partkey,
-             {sql_davg('l_quantity', 'avg_qty')}
+             {sql_davg("l_quantity")} AS avg_qty
       FROM lineitem GROUP BY l_partkey
     )
     SELECT l.l_partkey, l.l_orderkey, l.l_linenumber, l.l_quantity,
@@ -404,7 +409,7 @@ def q57_having(spark, sf_dir):
 def q58_below_avg_quantity(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem")
     part_avg = li.groupBy(F.col("l_partkey").alias("pk")).agg(
-        davg("l_quantity", "avg_qty")
+        davg("l_quantity").alias("avg_qty")
     )
     return (
         li.join(part_avg, li.l_partkey == F.col("pk"))
@@ -531,7 +536,7 @@ def q65_nullsafe_join(spark, sf_dir):
     oracle=f"""
     SELECT event_id, user_id, {sql_floor_ms("ts")} AS ts_ms,
            COUNT(*) OVER w AS n_last_hour,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) OVER w AS DOUBLE) AS sum_last_hour
+           {sql_double("SUM(CAST(value AS DECIMAL(18,6))) OVER w")} AS sum_last_hour
     FROM events
     WHERE user_id < 30
     WINDOW w AS (
@@ -570,7 +575,7 @@ def q77_range_frame(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q76_null_aggregates",
-    oracle="""
+    oracle=f"""
     WITH t AS (
       SELECT event_type,
              CASE WHEN value > 100 THEN NULL ELSE value END AS v,
@@ -581,7 +586,7 @@ def q77_range_frame(spark, sf_dir):
            COUNT(*) AS n_rows,
            COUNT(v) AS n_nonnull,
            COUNT(DISTINCT grp) AS n_groups_nonnull,
-           CAST(SUM(CAST(v AS DECIMAL(18,6))) AS DOUBLE) AS sum_v,
+           {sql_dsum("v")} AS sum_v,
            min(v) AS min_v,
            max(grp) AS max_grp
     FROM t GROUP BY event_type
@@ -601,7 +606,7 @@ def q76_null_aggregates(spark, sf_dir):
             F.count(F.lit(1)).alias("n_rows"),
             F.count("v").alias("n_nonnull"),
             F.countDistinct("grp").alias("n_groups_nonnull"),
-            F.sum(F.col("v").cast("decimal(18,6)")).cast("double").alias("sum_v"),
+            dsum("v").alias("sum_v"),
             F.min("v").alias("min_v"),
             F.max("grp").alias("max_grp"),
         )

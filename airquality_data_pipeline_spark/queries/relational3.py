@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from airquality_data_pipeline_spark.queries.common import (
     finite,
+    spark_sql_dsum,
     sql_dsum,
     sql_finite,
     sql_floor_ms,
@@ -37,7 +38,7 @@ from airquality_data_pipeline_spark.queries.registry import register
            CAST(grouping(n.n_name) AS INT) AS g_nation,
            CAST(grouping(o.o_orderpriority) AS INT) AS g_prio,
            COUNT(*) AS n_orders,
-           {sql_dsum("o.o_totalprice", "revenue", 2)}
+           {sql_dsum("o.o_totalprice", 2)} AS revenue
     FROM orders o
     JOIN customer c ON o.o_custkey = c.c_custkey
     JOIN nation n ON c.c_nationkey = n.n_nationkey
@@ -51,13 +52,13 @@ def q78_grouping_sets(spark, sf_dir):
     for name in ("orders", "customer", "nation"):
         table(spark, sf_dir, name).createOrReplaceTempView(name)
     return spark.sql(
-        """
+        f"""
         SELECT n.n_name,
                o.o_orderpriority,
                CAST(grouping(n.n_name) AS INT) AS g_nation,
                CAST(grouping(o.o_orderpriority) AS INT) AS g_prio,
                COUNT(*) AS n_orders,
-               CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+               {spark_sql_dsum("o.o_totalprice", 2)}
                  AS revenue
         FROM orders o
         JOIN customer c ON o.o_custkey = c.c_custkey

@@ -11,6 +11,7 @@ from airquality_data_pipeline_spark.functions.expr import materialize
 from airquality_data_pipeline_spark.operators.similarity import (
     HYPERPLANE_LSH_SQL,
     PLANTED_NEARDUP_CORPUS_SQL,
+    cosine_sql,
     cosine_topk,
     hyperplane_lsh,
     ivf_assign_sql,
@@ -18,10 +19,12 @@ from airquality_data_pipeline_spark.operators.similarity import (
     ivf_topk,
     lsh_gated_neardup,
     planted_neardup_corpus,
+    topk_sql,
     with_norm_sql,
 )
 from airquality_data_pipeline_spark.queries.common import (
     roundq,
+    sql_dsum,
     sql_roundq,
     table,
 )
@@ -40,14 +43,10 @@ from airquality_data_pipeline_spark.queries.registry import register
     q AS (SELECT vec_id AS qid, v AS qv, nrm AS qn FROM n WHERE vec_id < 10),
     scored AS (
       SELECT q.qid AS query_id, n.vec_id AS neighbor_id,
-             round(list_dot_product(q.qv, n.v) / (q.qn * n.nrm), 6) AS cos_sim
+             {cosine_sql("q.qv", "q.qn", "n.v", "n.nrm")} AS cos_sim
       FROM n, q WHERE n.vec_id <> q.qid
     )
-    SELECT query_id, neighbor_id, cos_sim, rank FROM (
-      SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id
-      ) AS rank FROM scored
-    ) WHERE rank <= 5
+    {topk_sql(5)}
     """,
 )
 def q44_cosine_topk(spark, sf_dir):
@@ -94,11 +93,11 @@ def q44_cosine_topk(spark, sf_dir):
         ON a.band = c.band AND a.bv = c.bv AND a.id < c.id
     )
     SELECT cand.id_a, cand.id_b,
-           round(list_dot_product(x.v, y.v) / (x.nrm * y.nrm), 6) AS cos_sim
+           {cosine_sql("x.v", "x.nrm", "y.v", "y.nrm")} AS cos_sim
     FROM cand
     JOIN n x ON cand.id_a = x.vec_id
     JOIN n y ON cand.id_b = y.vec_id
-    WHERE round(list_dot_product(x.v, y.v) / (x.nrm * y.nrm), 6) >= 0.9
+    WHERE {cosine_sql("x.v", "x.nrm", "y.v", "y.nrm")} >= 0.9
     """,
 )
 def q45_embedding_neardup(spark, sf_dir):
@@ -126,14 +125,10 @@ def q45_embedding_neardup(spark, sf_dir):
     ),
     scored AS (
       SELECT q.query_id, a.id AS neighbor_id,
-             round(list_dot_product(q.qv, a.v) / (q.qn * a.nrm), 6) AS cos_sim
+             {cosine_sql("q.qv", "q.qn", "a.v", "a.nrm")} AS cos_sim
       FROM assigned a JOIN q ON a.bucket = q.bucket AND a.id <> q.query_id
     )
-    SELECT query_id, neighbor_id, cos_sim, rank FROM (
-      SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id
-      ) AS rank FROM scored
-    ) WHERE rank <= 3
+    {topk_sql(3)}
     """,
 )
 def q46_ivf_topk(spark, sf_dir):
@@ -248,9 +243,7 @@ from airquality_data_pipeline_spark.operators.similarity import kmeans_step  # n
       -- floor grid (common.sql_decq convention), not round(): the
       -- mean cosine is a continuous double ratio (see kmeans_step)
       SELECT a.bucket, count(*) AS n_vectors,
-             floor(CAST(SUM(CAST(round(list_dot_product(a.v, c.cv)
-                                       / (a.nrm * c.cn), 6)
-                                 AS DECIMAL(18,6))) AS DOUBLE)
+             floor({sql_dsum(cosine_sql("a.v", "a.nrm", "c.cv", "c.cn"))}
                    / count(*) * 1000000.0 + 0.5) / 1000000.0
                AS mean_cent_sim
       FROM assigned a JOIN cents c ON a.bucket = c.cent_id GROUP BY a.bucket
@@ -261,7 +254,7 @@ from airquality_data_pipeline_spark.operators.similarity import kmeans_step  # n
     ),
     md AS (
       SELECT bucket, dim,
-             CAST(SUM(CAST(val AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS mean_val
+             {sql_dsum("val")} / count(*) AS mean_val
       FROM dims GROUP BY bucket, dim
     ),
     nm AS (
@@ -309,14 +302,10 @@ from airquality_data_pipeline_spark.operators.similarity import (  # noqa: E402
     {ivf_probes_sql("n.vec_id < 10", 2)},
     scored AS (
       SELECT p.query_id, a.id AS neighbor_id,
-             round(list_dot_product(p.qv, a.v) / (p.qn * a.nrm), 6) AS cos_sim
+             {cosine_sql("p.qv", "p.qn", "a.v", "a.nrm")} AS cos_sim
       FROM assigned a JOIN probes p ON a.bucket = p.bucket AND a.id <> p.query_id
     )
-    SELECT query_id, neighbor_id, cos_sim, rank FROM (
-      SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id
-      ) AS rank FROM scored
-    ) WHERE rank <= 3
+    {topk_sql(3)}
     """,
 )
 def q107_ivf_multiprobe(spark, sf_dir):
@@ -358,7 +347,7 @@ from airquality_data_pipeline_spark.operators.similarity import (  # noqa: E402
         SELECT q.query_id, n.vec_id AS neighbor_id,
                ROW_NUMBER() OVER (
                  PARTITION BY q.query_id
-                 ORDER BY round(list_dot_product(q.qv, n.v) / (q.qn * n.nrm), 6) DESC,
+                 ORDER BY {cosine_sql("q.qv", "q.qn", "n.v", "n.nrm")} DESC,
                           n.vec_id
                ) AS rank
         FROM n, q WHERE n.vec_id <> q.query_id
@@ -369,7 +358,7 @@ from airquality_data_pipeline_spark.operators.similarity import (  # noqa: E402
         SELECT p.query_id, a.id AS neighbor_id,
                ROW_NUMBER() OVER (
                  PARTITION BY p.query_id
-                 ORDER BY round(list_dot_product(p.qv, a.v) / (p.qn * a.nrm), 6) DESC,
+                 ORDER BY {cosine_sql("p.qv", "p.qn", "a.v", "a.nrm")} DESC,
                           a.id
                ) AS rank
         FROM assigned a JOIN q p ON a.bucket = p.bucket AND a.id <> p.query_id
@@ -381,7 +370,7 @@ from airquality_data_pipeline_spark.operators.similarity import (  # noqa: E402
         SELECT p.query_id, a.id AS neighbor_id,
                ROW_NUMBER() OVER (
                  PARTITION BY p.query_id
-                 ORDER BY round(list_dot_product(p.qv, a.v) / (p.qn * a.nrm), 6) DESC,
+                 ORDER BY {cosine_sql("p.qv", "p.qn", "a.v", "a.nrm")} DESC,
                           a.id
                ) AS rank
         FROM assigned a JOIN probes p ON a.bucket = p.bucket AND a.id <> p.query_id
@@ -476,7 +465,7 @@ def q115_ann_recall(spark, sf_dir):
     )
     SELECT id,
            string_agg(CAST(code AS VARCHAR), ':' ORDER BY subspace) AS pq_code,
-           round(sqrt(CAST(SUM(CAST(d2 AS DECIMAL(18,6))) AS DOUBLE)), 6)
+           round(sqrt({sql_dsum("d2")}), 6)
              AS recon_err
     FROM best GROUP BY id
     """,

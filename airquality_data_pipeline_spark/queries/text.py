@@ -28,7 +28,9 @@ from airquality_data_pipeline_spark.operators.text import (
     token_counts,
 )
 from airquality_data_pipeline_spark.queries.common import (
+    dsum,
     roundq,
+    sql_dsum,
     sql_roundq,
     table,
 )
@@ -788,10 +790,7 @@ def q105_length_filter(spark, sf_dir):
       SELECT source,
              count(*) AS n_docs,
              CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
-             {sql_roundq(
-                 "CAST(SUM(CAST(quality AS DECIMAL(18,6))) AS DOUBLE)"
-                 " / count(*)"
-             )} AS mean_quality
+             {sql_roundq(sql_dsum("quality") + " / count(*)")} AS mean_quality
       FROM q GROUP BY source
     )
     SELECT source, n_docs, n_tokens, mean_quality,
@@ -816,10 +815,7 @@ def q106_source_mix(spark, sf_dir):
             F.sum("n_tokens").cast("long").alias("n_tokens"),
             # micro-unit mean and k/n share (.5-tie class): guarded
             # floor grid (r10 q225 class)
-            roundq(
-                F.sum(F.col("quality").cast("decimal(18,6)")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("mean_quality"),
+            roundq(dsum("quality") / F.count(F.lit(1))).alias("mean_quality"),
         )
     )
     share = roundq(
@@ -1277,7 +1273,7 @@ _BM25_VALUES = ", ".join(f"({qid}, '{term}')" for qid, term in BM25_QUERIES)
     q(query_id, term) AS (VALUES {_BM25_VALUES}),
     scored AS (
       SELECT q.query_id, tf.doc_id,
-             CAST(SUM(CAST({bm25_expr()} AS DECIMAL(18,6))) AS DOUBLE) AS score
+             {sql_dsum(bm25_expr())} AS score
       FROM tf
       JOIN q ON tf.term = q.term
       JOIN dfreq ON tf.term = dfreq.term

@@ -17,8 +17,7 @@ equi-joins and the per-key aggregates; scalar denominators
 (grand totals, global maxima, global averages) are single-row
 DataFrames broadcast into a crossJoin, never a second scan driven
 from the driver. Cross-engine exactness per queries/common.py:
-decimal-quantized sums (VARCHAR hop on the DuckDB side for totals
-that can exceed ~17 significant digits at sf>=0.1), BIGINT counts,
+decimal-quantized sums (dsum / sql_dsum), BIGINT counts,
 timestamps compared against `F.lit(...).cast("timestamp")` pinned to
 the UTC session. No reference analog: the reference app
 (/root/reference/app/main.py) has no analytics surface; these rows
@@ -31,7 +30,10 @@ from pyspark.sql import functions as F
 
 from airquality_data_pipeline_spark.queries.common import (
     dec,
+    dsum,
     roundq,
+    sql_double,
+    sql_dsum,
     sql_floor_ms,
     sql_roundq,
     table,
@@ -104,17 +106,15 @@ def q240_order_priority_check(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q241_important_parts",
-    oracle="""
+    oracle=f"""
     WITH v AS (
       SELECT l_partkey,
-             CAST(CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-                                AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE)
+             {sql_dsum("l_extendedprice * (1 - l_discount)")}
                AS part_value
       FROM lineitem GROUP BY 1
     ),
     t AS (
-      SELECT CAST(CAST(SUM(CAST(part_value AS DECIMAL(18,6))) AS VARCHAR)
-                  AS DOUBLE) / COUNT(*) AS avg_value
+      SELECT {sql_dsum("part_value")} / COUNT(*) AS avg_value
       FROM v
     )
     SELECT v.l_partkey AS partkey, v.part_value
@@ -127,11 +127,11 @@ def q241_important_parts(spark, sf_dir):
     v = (
         table(spark, sf_dir, "lineitem")
         .groupBy(F.col("l_partkey").alias("partkey"))
-        .agg(F.sum(dec(_rev(), 6)).cast("double").alias("part_value"))
+        .agg(dsum(_rev()).alias("part_value"))
     )
     t = v.agg(
         (
-            F.sum(dec("part_value", 6)).cast("double") / F.count(F.lit(1))
+            dsum("part_value") / F.count(F.lit(1))
         ).alias("avg_value")
     )
     return (
@@ -210,18 +210,20 @@ def q242_ship_delay_priority(spark, sf_dir):
 # computed in the SAME aggregate pass (no second scan for the
 # denominator).
 # --------------------------------------------------------------------------
+_Q243_PROMO = sql_double(
+    "SUM(CASE WHEN p.p_type = 'PROMO'"
+    " THEN CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,6))"
+    " ELSE CAST(0 AS DECIMAL(18,6)) END)"
+)
+_Q243_TOTAL = sql_dsum("l.l_extendedprice * (1 - l.l_discount)")
+
+
 @register(
     "q243_promo_revenue_share",
     oracle="""
     SELECT CAST(month(l.l_shipdate) AS BIGINT) AS ship_month,
-           CAST(CAST(SUM(CASE WHEN p.p_type = 'PROMO'
-                    THEN CAST(l.l_extendedprice * (1 - l.l_discount)
-                              AS DECIMAL(18,6))
-                    ELSE CAST(0 AS DECIMAL(18,6)) END) AS VARCHAR)
-                AS DOUBLE) AS promo_revenue,
-           CAST(CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount)
-                              AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE)
-             AS total_revenue,
+           {promo} AS promo_revenue,
+           {total} AS total_revenue,
            {pct_rq} AS promo_pct
     FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
     WHERE year(l.l_shipdate) = 1996
@@ -229,17 +231,9 @@ def q242_ship_delay_priority(spark, sf_dir):
     """.format(
         # ratio of 6-dp decimal sums is a rational (.5-tie class):
         # guarded floor grid, not round() (r10 q225 class)
-        pct_rq=sql_roundq(
-            "100.0"
-            " * CAST(CAST(SUM(CASE WHEN p.p_type = 'PROMO'"
-            " THEN CAST(l.l_extendedprice * (1 - l.l_discount)"
-            " AS DECIMAL(18,6))"
-            " ELSE CAST(0 AS DECIMAL(18,6)) END) AS VARCHAR)"
-            " AS DOUBLE)"
-            " / CAST(CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount)"
-            " AS DECIMAL(18,6))) AS VARCHAR)"
-            " AS DOUBLE)"
-        ),
+        pct_rq=sql_roundq(f"100.0 * {_Q243_PROMO} / {_Q243_TOTAL}"),
+        promo=_Q243_PROMO,
+        total=_Q243_TOTAL,
     ),
 )
 def q243_promo_revenue_share(spark, sf_dir):
@@ -258,7 +252,7 @@ def q243_promo_revenue_share(spark, sf_dir):
     promo = F.sum(
         F.when(F.col("p_type") == "PROMO", dec("rev", 6)).otherwise(zero)
     ).cast("double")
-    total = F.sum(dec("rev", 6)).cast("double")
+    total = dsum("rev")
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .groupBy("ship_month")
@@ -284,11 +278,10 @@ def q243_promo_revenue_share(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q244_top_supplier_revenue",
-    oracle="""
+    oracle=f"""
     WITH r AS (
       SELECT l_suppkey,
-             CAST(CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-                                AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE)
+             {sql_dsum("l_extendedprice * (1 - l_discount)")}
                AS total_rev
       FROM lineitem
       WHERE l_shipdate >= TIMESTAMP '1996-01-01'
@@ -313,7 +306,7 @@ def q244_top_supplier_revenue(spark, sf_dir):
             & F.col("l_suppkey").isNotNull()
         )
         .groupBy("l_suppkey")
-        .agg(F.sum(dec(_rev(), 6)).cast("double").alias("total_rev"))
+        .agg(dsum(_rev()).alias("total_rev"))
     )
     mx = r.agg(F.max("total_rev").alias("max_rev"))
     s = table(spark, sf_dir, "supplier").select(
@@ -393,10 +386,10 @@ def q245_brand_supplier_counts(spark, sf_dir):
     oracle=f"""
     WITH big AS (
       SELECT l_orderkey,
-             CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
+             {sql_dsum("l_quantity", 2)}
                AS sum_qty
       FROM lineitem GROUP BY 1
-      HAVING CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) > 250
+      HAVING {sql_dsum("l_quantity", 2)} > 250
     )
     SELECT c.c_name AS cust_name, o.o_orderkey AS orderkey,
            {sql_floor_ms("o.o_orderdate")} AS order_date_ms,
@@ -411,7 +404,7 @@ def q246_large_volume_customers(spark, sf_dir):
     big = (
         table(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
-        .agg(F.sum(dec("l_quantity", 2)).cast("double").alias("sum_qty"))
+        .agg(dsum("l_quantity", 2).alias("sum_qty"))
         .where(F.col("sum_qty") > 250)
     )
     o = table(spark, sf_dir, "orders").select(
@@ -440,10 +433,9 @@ def q246_large_volume_customers(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q247_disjunctive_revenue",
-    oracle="""
+    oracle=f"""
     SELECT CAST(count(*) AS BIGINT) AS n_lines,
-           CAST(CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount)
-                              AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE)
+           {sql_dsum("l.l_extendedprice * (1 - l.l_discount)")}
              AS revenue
     FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
     WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 15
@@ -482,7 +474,7 @@ def q247_disjunctive_revenue(spark, sf_dir):
         .where(cond)
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
-            F.sum(dec("rev", 6)).cast("double").alias("revenue"),
+            dsum("rev").alias("revenue"),
         )
     )
 
@@ -502,10 +494,10 @@ def q247_disjunctive_revenue(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q248_dominant_widget_suppliers",
-    oracle="""
+    oracle=f"""
     WITH sh AS (
       SELECT l.l_partkey, l.l_suppkey,
-             CAST(SUM(CAST(l.l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS q
+             {sql_dsum("l.l_quantity", 2)} AS q
       FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
       WHERE p.p_name LIKE '%widget'
         AND l.l_partkey IS NOT NULL AND l.l_suppkey IS NOT NULL
@@ -513,7 +505,7 @@ def q247_disjunctive_revenue(spark, sf_dir):
     ),
     t AS (
       SELECT l_partkey,
-             CAST(SUM(CAST(q AS DECIMAL(18,2))) AS DOUBLE)
+             {sql_dsum("q", 2)}
                / COUNT(*) AS mean_q
       FROM sh GROUP BY 1
     )
@@ -546,11 +538,11 @@ def q248_dominant_widget_suppliers(spark, sf_dir):
         )
         .join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("l_partkey", "l_suppkey")
-        .agg(F.sum(dec("l_quantity", 2)).cast("double").alias("q"))
+        .agg(dsum("l_quantity", 2).alias("q"))
     )
     t = sh.groupBy(F.col("l_partkey").alias("t_partkey")).agg(
         (
-            F.sum(dec("q", 2)).cast("double") / F.count(F.lit(1))
+            dsum("q", 2) / F.count(F.lit(1))
         ).alias("mean_q")
     )
     s = (
@@ -590,15 +582,15 @@ def q248_dominant_widget_suppliers(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q249_dormant_high_balance",
-    oracle="""
+    oracle=f"""
     WITH avg_bal AS (
-      SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
+      SELECT {sql_dsum("c_acctbal", 2)}
                / COUNT(c_acctbal) AS avg_positive_bal
       FROM customer WHERE c_acctbal > 0
     )
     SELECT n.n_name AS nation_name,
            CAST(count(*) AS BIGINT) AS n_customers,
-           CAST(SUM(CAST(c.c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
+           {sql_dsum("c.c_acctbal", 2)}
              AS total_balance
     FROM customer c
     JOIN nation n ON c.c_nationkey = n.n_nationkey, avg_bal a
@@ -618,7 +610,7 @@ def q249_dormant_high_balance(spark, sf_dir):
     )
     avg_bal = cust.where(F.col("c_acctbal") > 0).agg(
         (
-            F.sum(dec("c_acctbal", 2)).cast("double")
+            dsum("c_acctbal", 2)
             / F.count("c_acctbal")
         ).alias("avg_positive_bal")
     )
@@ -640,6 +632,6 @@ def q249_dormant_high_balance(spark, sf_dir):
         .groupBy("nation_name")
         .agg(
             F.count(F.lit(1)).alias("n_customers"),
-            F.sum(dec("c_acctbal", 2)).cast("double").alias("total_balance"),
+            dsum("c_acctbal", 2).alias("total_balance"),
         )
     )

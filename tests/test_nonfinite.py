@@ -29,6 +29,7 @@ from airquality_data_pipeline_spark.queries.common import (
     nonfinite_null_sql,
     sql_davg,
     sql_decq,
+    sql_double,
     sql_dsum,
     sql_finite,
 )
@@ -77,7 +78,7 @@ def test_decq_nonfinite_is_null_not_zero_or_clamp(nf_df):
 
 def test_dsum_davg_skip_nonfinite(nf_df):
     row = nf_df.agg(
-        dsum("x", "s"), davg("x", "a"), F.count("x").alias("n_raw")
+        dsum("x").alias("s"), davg("x").alias("a"), F.count("x").alias("n_raw")
     ).collect()[0]
     assert row.s == 3.75
     assert row.a == 1.875  # denominator counts FINITE values (2), not 5
@@ -86,19 +87,19 @@ def test_dsum_davg_skip_nonfinite(nf_df):
 
 def test_davg_all_nonfinite_group_is_null(spark):
     df = spark.createDataFrame([(NAN,), (INF,)], "x double")
-    row = df.agg(davg("x", "a")).collect()[0]
+    row = df.agg(davg("x").alias("a")).collect()[0]
     assert row.a is None
 
 
 def test_duckdb_twins_match(duck):
     q = (
         "SELECT "
-        + sql_dsum("x", "s")
-        + ", "
-        + sql_davg("x", "a")
-        + ", CAST(CAST(SUM("
-        + sql_decq("x")
-        + ") AS VARCHAR) AS DOUBLE) / 1000000 AS qs "
+        + sql_dsum("x")
+        + " AS s, "
+        + sql_davg("x")
+        + " AS a, "
+        + sql_double("SUM(" + sql_decq("x") + ")")
+        + " / 1000000 AS qs "
         + "FROM (VALUES (1.5::DOUBLE),(2.25::DOUBLE),('nan'::DOUBLE),"
         "('inf'::DOUBLE),('-inf'::DOUBLE),(NULL::DOUBLE)) t(x)"
     )
@@ -176,12 +177,12 @@ def test_cross_engine_parity_on_nonfinite_parquet(spark, tmp_path):
     sdf = (
         spark.read.parquet(path)
         .groupBy("k")
-        .agg(dsum("v", "s"), davg("v", "a"))
+        .agg(dsum("v").alias("s"), davg("v").alias("a"))
     )
     got = {r.k: (r.s, r.a) for r in sdf.collect()}
     con = duckdb.connect()
     oracle = nonfinite_null_sql(
-        f"SELECT k, {sql_dsum('v', 's')}, {sql_davg('v', 'a')} "
+        f"SELECT k, {sql_dsum('v')} AS s, {sql_davg('v')} AS a "
         f"FROM '{path}' GROUP BY k"
     )
     want = {k: (s, a) for k, s, a in con.execute(oracle).fetchall()}
@@ -192,6 +193,29 @@ def test_cross_engine_parity_on_nonfinite_parquet(spark, tmp_path):
                 assert g is None and w is None
             else:
                 assert not math.isnan(g) and g == w, (k, got[k], want[k])
+
+
+def test_wide_exact_sum_rounds_alike_on_both_engines(spark, duck):
+    """A DECIMAL(18,6) sum of 18 significant digits: DuckDB's direct
+    DECIMAL -> DOUBLE cast gives 150009782104.93002, Spark's (and
+    Python's) correctly rounded one 150009782104.93. The DuckDB twins
+    hop through VARCHAR, so both engines give the same double."""
+    from decimal import Decimal
+
+    rows = ["75004891052.465000", "75004891052.465001"]
+    got = (
+        spark.createDataFrame([(Decimal(x),) for x in rows], "x decimal(18,6)")
+        .agg(dsum("x").alias("s"), davg("x").alias("a"))
+        .collect()[0]
+    )
+    values = ", ".join(f"('{x}'::DECIMAL(18,6))" for x in rows)
+    want = duck.execute(
+        nonfinite_null_sql(
+            f"SELECT {sql_dsum('x')}, {sql_davg('x')} FROM (VALUES {values}) t(x)"
+        )
+    ).fetchall()[0]
+    exact = Decimal("150009782104.930001")
+    assert (got.s, got.a) == want == (float(exact), float(exact) / 2)
 
 
 def test_null_aggregate_rank_divergence_envelope(spark):

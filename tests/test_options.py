@@ -260,7 +260,13 @@ def test_driver_rows_become_frames_only_through_local_frame():
 # convention -> (owning module, its distinctive spellings). Each
 # convention both engines must agree on has one definition: a Column
 # form and a DuckDB `*_sql` twin side by side in the owning module, which
-# every operator and oracle imports. Whitespace is ignored in matching.
+# every operator and oracle imports. Whitespace is ignored in matching,
+# and so are the quotes between implicitly concatenated literals. A
+# spelling is a literal, or a compiled pattern over that flattened text
+# where a literal cannot tell a copy from a look-alike.
+_NEST = r"[^()]*"  # text with balanced parentheses, nested up to 5 deep
+for _ in range(5):
+    _NEST = rf"(?:[^()]|\({_NEST}\))*"
 CONVENTIONS = {
     "md5 integer hash": (
         "functions/strings.py",
@@ -276,20 +282,56 @@ CONVENTIONS = {
         ("UNNEST(generate_series(1, greatest(len(t) -",),
     ),
     "MinHash fold": ("operators/dedup.py", ("min((p.a * h + p.b) %",)),
+    "MinHash signature string": (
+        "operators/dedup.py",
+        ("string_agg(CAST(mh AS VARCHAR), ':' ORDER BY seed)",),
+    ),
     "sign-LSH planes": ("operators/similarity.py", ("(p.a * i + p.b) %",)),
     "normed vectors": ("operators/similarity.py", (") WHERE nrm > 0",)),
-    "IVF argmax": ("operators/similarity.py", ("list_dot_product(n.v, c.cv)",)),
+    "IVF argmax": (
+        "operators/similarity.py",
+        ('cosine_sql("n.v", "n.nrm", "c.cv", "c.cn")',),
+    ),
     "planted near-dups": ("operators/similarity.py", ("vec_id * 31 + i * 7",)),
+    # the rounded cosine; the sign projection and the squared distance
+    # also round a list_dot_product, but over computed lists, undivided
+    "rounded cosine": (
+        "operators/similarity.py",
+        (re.compile(r"round\(list_dot_product\([^()]*\)/\([^()]*\*[^()]*\),6\)"),),
+    ),
+    "top-k tail": (
+        "operators/similarity.py",
+        ("PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id",),
+    ),
+    # a decimal SUM cast back to double; a SUM that keeps its DECIMAL,
+    # or a windowed one, is not a copy
+    "exact sum": (
+        "queries/common.py",
+        (
+            re.compile(
+                rf'F\.sum\((?:dec\({_NEST}\)|{_NEST}\.cast\("decimal\(18,\d+\)"\))\)'
+                r'\.cast\("double"\)'
+            ),
+            re.compile(r"ASDECIMAL\(\d+,(?:\d+|\{scale\})\)\)\)ASDOUBLE\)"),
+        ),
+    ),
+    # DuckDB's DECIMAL/HUGEINT -> DOUBLE cast is not correctly rounded
+    "VARCHAR hop": ("queries/common.py", ("AS VARCHAR) AS DOUBLE)",)),
 }
 
 
 def _flat(text: str) -> tuple[str, list[int]]:
-    """text without whitespace, and the line number of each kept char."""
+    """text without whitespace or the quotes that join adjacent string
+    literals, and the line number of each kept char."""
     chars, lines, line = [], [], 1
     for ch in text:
         if ch == "\n":
             line += 1
         elif not ch.isspace():
+            if ch in "\"'" and chars and chars[-1] == ch:
+                chars.pop()
+                lines.pop()
+                continue
             chars.append(ch)
             lines.append(line)
     return "".join(chars), lines
@@ -302,14 +344,18 @@ def test_each_cross_engine_convention_is_spelled_once():
         flat, lines = _flat(path.read_text())
         for name, (owner, spellings) in CONVENTIONS.items():
             for spelling in spellings:
-                needle = re.escape(_flat(spelling)[0])
-                at = [m.start() for m in re.finditer(needle, flat)]
+                needle = spelling
+                if isinstance(spelling, str):
+                    needle = re.compile(re.escape(_flat(spelling)[0]))
+                else:
+                    spelling = spelling.pattern
+                at = list(needle.finditer(flat))
                 if rel == owner and not at:
                     missing.append(f"  {owner}: {spelling!r} ({name})")
                 if rel != owner:
                     stray += [
-                        f"  {rel}:{lines[i]}: {spelling!r} ({name}, owned by {owner})"
-                        for i in at
+                        f"  {rel}:{lines[m.start()]}: {m[0][:60]!r} ({name}, owned by {owner})"
+                        for m in at
                     ]
     assert not stray, (
         f"{len(stray)} hand copies of a cross-engine convention; import the "
