@@ -36,14 +36,18 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
     """Driver-side rows as a LocalRelation. They go in as an Arrow table,
     whatever the session's Arrow setting: a list of rows would become a
-    Python-RDD scan, and every action over it would start Python tasks."""
+    Python-RDD scan, and every action over it would start Python tasks.
+    `schema` is a StructType or DDL; DDL is parsed in the JVM, whose first
+    parse sets up the SQL parser (0.3-0.7 s), so a path that runs once per
+    process passes a StructType."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    schema = T.DataType.fromDDL(ddl)
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
     columns = [list(c) for c in zip(*rows)] or [[] for _ in schema.names]
     return spark.createDataFrame(pa.table(columns, schema=to_arrow_schema(schema)), schema)
 

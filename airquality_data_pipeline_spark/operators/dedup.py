@@ -199,6 +199,13 @@ MINHASH_SIG_SQL = """sig AS (
     )"""
 
 
+def minhash_sig(signatures: DataFrame) -> Column:
+    """Column twin of MINHASH_SIG_SQL: the `:`-joined signature over
+    minhash_signatures' `mh_*` columns, slots in seed order."""
+    slots = [c for c in signatures.columns if c.startswith("mh_")]
+    return F.concat_ws(":", *[F.col(c).cast("string") for c in slots])
+
+
 def minhash_candidate_pairs(
     signatures: DataFrame, num_hashes: int = 16, min_matches: int = 8
 ) -> DataFrame:

@@ -14,6 +14,8 @@
 
 from __future__ import annotations
 
+from datetime import timedelta
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -53,12 +55,12 @@ def retention_filter(
     """
     if reference_time is None:
         bound = df.agg(
-            (F.max(ts_col) - F.expr(f"INTERVAL {keep_days} DAYS")).alias("_cutoff")
+            (F.max(ts_col) - F.lit(timedelta(days=keep_days))).alias("_cutoff")
         )
         return df.crossJoin(F.broadcast(bound)).where(
             F.col(ts_col) >= F.col("_cutoff")
         ).drop("_cutoff")
     return df.where(
         F.col(ts_col)
-        >= F.lit(reference_time).cast("timestamp") - F.expr(f"INTERVAL {keep_days} DAYS")
+        >= F.lit(reference_time).cast("timestamp") - F.lit(timedelta(days=keep_days))
     )

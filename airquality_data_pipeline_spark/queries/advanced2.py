@@ -44,6 +44,7 @@ from airquality_data_pipeline_spark.queries.common import (
     dsum,
     finite,
     roundq,
+    sql_decq,
     sql_double,
     sql_dsum,
     sql_finite,
@@ -1786,12 +1787,12 @@ def q162_incremental_agg_merge(spark, sf_dir):
       -- differs between engines (common.decq docstring; seed31 catch)
       SELECT event_type,
              CAST(count(*) AS BIGINT) AS n,
-             {sql_double("SUM(CAST(floor(x * 1000000.0 + 0.5) AS HUGEINT))")}
+             {sql_double(f"SUM({sql_decq('x')})")}
                / 1000000 AS sx,
              {sql_dsum("y")} AS sy,
-             {sql_double("SUM(CAST(floor(x * x * 1000000.0 + 0.5) AS HUGEINT))")}
+             {sql_double(f"SUM({sql_decq('x * x')})")}
                / 1000000 AS sxx,
-             {sql_double("SUM(CAST(floor(x * y * 1000000.0 + 0.5) AS HUGEINT))")}
+             {sql_double(f"SUM({sql_decq('x * y')})")}
                / 1000000 AS sxy
       FROM pts GROUP BY event_type
     )
@@ -1862,9 +1863,7 @@ def q163_grouped_linear_trend(spark, sf_dir):
 # quantile for (5-1)(7-1)=24 dof in INTEGER-free double arithmetic on
 # both engines.
 # --------------------------------------------------------------------------
-_Q164_CHI2 = sql_double(
-    "SUM(CAST(floor((o - e) * (o - e) / e * 100000000.0 + 0.5) AS HUGEINT))"
-)
+_Q164_CHI2 = sql_double(f"SUM({sql_decq('(o - e) * (o - e) / e', 8)})")
 
 
 @register(
@@ -2456,9 +2455,7 @@ def q170_mom_growth(spark, sf_dir):
         ss=sql_dsum("value * value"),
         gs=sql_dsum("s"),
         gss=sql_dsum("ss"),
-        ssn=sql_double(
-            "SUM(CAST(floor(g.s * g.s / g.n * 1000000.0 + 0.5) AS HUGEINT))"
-        ),
+        ssn=sql_double(f"SUM({sql_decq('g.s * g.s / g.n')})"),
         # sums-of-squares and their ratios are micro-unit rationals
         # (.5-tie class): guarded floor grid (r10 q225 class)
         ssb_rq=sql_roundq("ssb"),
@@ -3160,8 +3157,8 @@ def q177_interevent_fit(spark, sf_dir):
            abs(sx / n) > 0.1 AS biased
     FROM s
     """.format(
-        sx=sql_double("SUM(CAST(floor(x * 100000000.0 + 0.5) AS HUGEINT))"),
-        sxx=sql_double("SUM(CAST(floor(x * x * 100000000.0 + 0.5) AS HUGEINT))"),
+        sx=sql_double(f"SUM({sql_decq('x', 8)})"),
+        sxx=sql_double(f"SUM({sql_decq('x * x', 8)})"),
         mean_rq=sql_roundq("sx / n"),
     ),
 )
@@ -3674,10 +3671,10 @@ def q183_benford_audit(spark, sf_dir):
       SELECT CAST(count(*) AS BIGINT) AS n,
              {sql_dsum("x", 8)} AS sx,
              -- floor grid for the ln-derived terms (common.decq)
-             {sql_double("SUM(CAST(floor(y * 100000000.0 + 0.5) AS HUGEINT))")}
+             {sql_double(f"SUM({sql_decq('y', 8)})")}
                / 100000000 AS sy,
              {sql_dsum("x * x", 8)} AS sxx,
-             {sql_double("SUM(CAST(floor(x * y * 100000000.0 + 0.5) AS HUGEINT))")}
+             {sql_double(f"SUM({sql_decq('x * y', 8)})")}
                / 100000000 AS sxy
       FROM pts
     )

@@ -24,6 +24,7 @@ from airquality_data_pipeline_spark.operators.dedup import (
     MINHASH_SIG_SQL,
     exact_dedup,
     minhash_candidate_pairs,
+    minhash_sig,
     minhash_signatures,
     ngram_jaccard_pairs,
     shingle_set_sizes,
@@ -184,9 +185,7 @@ def q67_signature_clusters(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
     sh = word_shingles(docs, text_col="text", id_col="doc_id", n=3)
     sigs = minhash_signatures(sh, num_hashes=_NUM_HASHES)
-    sig_key = F.concat_ws(
-        ":", *[F.col(f"mh_{i}").cast("string") for i in range(_NUM_HASHES)]
-    )
+    sig_key = minhash_sig(sigs)
     return (
         sigs.groupBy(sig_key.alias("sig"))
         .agg(F.min("id").alias("keeper_id"), F.count(F.lit(1)).alias("n_docs"))
@@ -415,9 +414,7 @@ def q96_canonical_docs(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
     sh = word_shingles(docs, text_col="text", id_col="doc_id", n=3)
     sigs = minhash_signatures(sh, num_hashes=_NUM_HASHES)
-    sig_key = F.concat_ws(
-        ":", *[F.col(f"mh_{i}").cast("string") for i in range(_NUM_HASHES)]
-    )
+    sig_key = minhash_sig(sigs)
     quality = quality_features(docs, text_col="text", id_col="doc_id").select(
         F.col("doc_id").alias("id"), "quality"
     )

@@ -46,6 +46,7 @@ from airquality_data_pipeline_spark.operators.similarity import (
 from airquality_data_pipeline_spark.queries.common import (
     decq,
     roundq,
+    sql_decq,
     sql_double,
     sql_roundq,
     table,
@@ -629,8 +630,7 @@ def q134_hll_shard_union(spark, sf_dir):
     terms AS (
       -- floor grid at 1e10: p*log2(p) is continuous (common.decq)
       SELECT counts.doc_id,
-             CAST(floor((c / n::DOUBLE) * log2(c / n::DOUBLE)
-                        * 10000000000.0 + 0.5) AS HUGEINT) AS term
+             {sql_decq("(c / n::DOUBLE) * log2(c / n::DOUBLE)", 10)} AS term
       FROM counts JOIN n ON counts.doc_id = n.doc_id
     )
     SELECT t.doc_id,

@@ -24,6 +24,7 @@ from airquality_data_pipeline_spark.operators.similarity import (
 )
 from airquality_data_pipeline_spark.queries.common import (
     roundq,
+    sql_decq,
     sql_dsum,
     sql_roundq,
     table,
@@ -265,7 +266,7 @@ from airquality_data_pipeline_spark.operators.similarity import kmeans_step  # n
              round(sqrt(CAST(SUM(m * m) AS DOUBLE) / 1000000000000.0), 6)
                AS new_centroid_norm
       FROM (SELECT bucket,
-                   CAST(floor(mean_val * 1000000.0 + 0.5) AS HUGEINT) AS m
+                   {sql_decq("mean_val")} AS m
             FROM md)
       GROUP BY bucket
     )

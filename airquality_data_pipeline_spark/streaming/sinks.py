@@ -20,6 +20,7 @@ import sqlite3
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 from airquality_data_pipeline_spark.io import local_frame
 
@@ -38,6 +39,11 @@ CREATE TABLE IF NOT EXISTS ingestion_cursors (
   PRIMARY KEY (source, station_id, pollutant)
 )
 """
+
+# the cursor rows load_cursors returns, as a StructType: no SQL text to parse
+CURSOR_SCHEMA = T.StructType(
+    [T.StructField(c, T.StringType()) for c in ("station_id", "pollutant", "last_observed_at")]
+)
 
 # Dialect-parameterized conflict SQL. The canonical target is Postgres
 # (the reference's psycopg executemany strings, app/main.py:636-644 and
@@ -145,4 +151,4 @@ def load_cursors(db_path: str, source: str, spark, connect: Callable = sqlite3.c
             "FROM ingestion_cursors WHERE source = ?",
             (source,),
         ).fetchall()
-    return local_frame(spark, rows, "station_id string, pollutant string, last_observed_at string")
+    return local_frame(spark, rows, CURSOR_SCHEMA)

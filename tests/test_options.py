@@ -284,7 +284,10 @@ CONVENTIONS = {
     "MinHash fold": ("operators/dedup.py", ("min((p.a * h + p.b) %",)),
     "MinHash signature string": (
         "operators/dedup.py",
-        ("string_agg(CAST(mh AS VARCHAR), ':' ORDER BY seed)",),
+        (
+            "string_agg(CAST(mh AS VARCHAR), ':' ORDER BY seed)",
+            re.compile(r'F\.concat_ws\(":",\*\[F\.col\('),
+        ),
     ),
     "sign-LSH planes": ("operators/similarity.py", ("(p.a * i + p.b) %",)),
     "normed vectors": ("operators/similarity.py", (") WHERE nrm > 0",)),
@@ -317,6 +320,8 @@ CONVENTIONS = {
     ),
     # DuckDB's DECIMAL/HUGEINT -> DOUBLE cast is not correctly rounded
     "VARCHAR hop": ("queries/common.py", ("AS VARCHAR) AS DOUBLE)",)),
+    # the decq floor grid as a HUGEINT scaled integer
+    "decq grid": ("queries/common.py", ("+ 0.5) AS HUGEINT)",)),
 }
 
 

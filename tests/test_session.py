@@ -48,3 +48,23 @@ def test_workers_start_with_the_package_hook(builder):
     # the directory goes first on the workers' path: it holds nothing else
     assert [n for n in os.listdir(hook) if n != "__pycache__"] == ["sitecustomize.py"]
     assert not any(c.args[0] == "spark.python.daemon.module" for c in calls)
+
+
+@pytest.mark.parametrize(
+    "gateway, before", [(None, None), (None, "/elsewhere"), (object(), "/elsewhere")]
+)
+def test_hook_leads_the_jvms_pythonpath_only_while_it_starts(builder, monkeypatch, gateway, before):
+    # Spark starts the `lookup_data_sources` planner with the JVM's own
+    # environment, which the driver's environment gives the JVM at launch;
+    # a JVM already up keeps the environment it started with
+    monkeypatch.setattr(session, "SparkContext", mock.MagicMock(_gateway=gateway))
+    if before is None:
+        monkeypatch.delenv("PYTHONPATH", raising=False)
+    else:
+        monkeypatch.setenv("PYTHONPATH", before)
+    seen = []
+    builder.getOrCreate.side_effect = lambda: seen.append(os.environ["PYTHONPATH"]) or mock.MagicMock()
+    session.get_spark()
+    launched = [session._PYTHONPATH] if gateway is None else []
+    assert seen == [os.pathsep.join(filter(None, [*launched, before]))]
+    assert os.environ.get("PYTHONPATH") == before

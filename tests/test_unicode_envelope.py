@@ -1,6 +1,12 @@
 """Unicode casing envelope: the four KNOWN engine-level divergences
-between Spark (Java full case mappings, contextual) and DuckDB
+between Spark (the JDK's full case mappings, contextual) and DuckDB
 (simple 1:1 mappings) that no shared SQL expression can bridge.
+
+`session.get_spark` turns `spark.sql.icu.caseMappings.enabled` off, so
+Spark maps case with the JDK's `String.toLowerCase`/`toUpperCase`, not
+ICU4J's (whose set-up makes the first `lower()` in a JVM take 1.7 s).
+Both give the same text on everything here and on both fixture
+vocabularies; this module checks that too.
 
 These are why the ``unicode_text`` robustness axis deliberately keeps
 special-casing code points out of its vocabulary (see
@@ -80,3 +86,31 @@ def test_agreement_floor(spark):
     ).fetchone()
     con.close()
     assert (row.e, row.c, row.w, row.s) == (d_e, d_c, d_w, d_s) == (3, 5, 3, 0)
+
+
+ICU = "spark.sql.icu.caseMappings.enabled"
+
+
+def test_sessions_map_case_without_icu(spark):
+    assert spark.conf.get(ICU) == "false"
+
+
+def test_case_mapping_same_with_and_without_icu(spark):
+    from pyspark.sql import functions as F
+
+    from airquality_data_pipeline_spark.functions.strings import tokens
+    from tests.robustness.gen_alt_fixture import UWORDS, WORDS
+
+    texts = [*UWORDS, *WORDS, *(inp for _, inp, _, _ in CASES), " ".join(UWORDS)]
+    df = spark.createDataFrame([(t,) for t in texts], "t string")
+    mapped = df.select("t", F.lower("t"), F.upper("t"), tokens("t"))
+    before = spark.conf.get(ICU)
+    try:
+        spark.conf.set(ICU, "true")
+        icu = mapped.collect()
+        spark.conf.set(ICU, "false")
+        jdk = mapped.collect()
+    finally:
+        spark.conf.set(ICU, before)
+    assert len(icu) == len(texts)
+    assert icu == jdk

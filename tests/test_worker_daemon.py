@@ -82,6 +82,52 @@ def test_a_shadowed_sitecustomize_still_runs(tmp_path):
     assert out.stdout.split() == ["ran", hook.__file__]
 
 
+def test_a_repeated_hook_directory_runs_each_sitecustomize_once(tmp_path):
+    """Workers list the hook's directory twice: from the session's
+    `spark.executorEnv.PYTHONPATH` and from the JVM's own environment.
+    `site` drops the repeat before the hook looks below itself, so the
+    lookup finds the shadowed hook, not the hook again."""
+    other = tmp_path / "other"
+    other.mkdir()
+    (other / "sitecustomize.py").write_text("print('shadowed ran')\n")
+    here = os.path.dirname(hook.__file__)
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join([here, str(other), here])}
+    out = subprocess.run(
+        [sys.executable, "-c", "import sys; print(sys.path.count(sys.argv[1]))", here],
+        env=env, capture_output=True, text=True, check=True,
+    )
+    assert (out.stdout.split("\n"), out.stderr) == (["shadowed ran", "1", ""], "")
+
+
+def test_rdd_tasks_and_datasource_reads_share_one_worker_daemon(spark):
+    """Spark keys its worker daemons by worker environment; the session
+    gives RDD tasks the variable the SQL runners set, so one daemon forks
+    the workers of both."""
+    from pyspark.sql.datasource import DataSource, DataSourceReader
+
+    class Reader(DataSourceReader):
+        def read(self, partition):
+            import os
+
+            yield (os.getppid(),)
+
+    class Source(DataSource):
+        @classmethod
+        def name(cls):
+            return "aq_daemon_probe"
+
+        def schema(self):
+            return "daemon int"
+
+        def reader(self, schema):
+            return Reader()
+
+    spark.dataSource.register(Source)
+    [(read_daemon,)] = spark.read.format("aq_daemon_probe").load().collect()
+    rdd_daemon = spark.sparkContext.parallelize([0], 1).map(lambda _: os.getppid()).collect()
+    assert rdd_daemon == [read_daemon]
+
+
 @pytest.mark.skipif(sys.version_info >= (3, 13), reason="3.13 invalidates without a re-read")
 def test_archive_reread_only_when_it_changed(tmp_path, monkeypatch):
     archive = str(tmp_path / "mods.zip")
