@@ -24,7 +24,6 @@ from airquality_data_pipeline_spark.queries.common import (
     sql_roundq,
     table,
     ts_ms,
-    utc,
 )
 from airquality_data_pipeline_spark.queries.registry import register
 
@@ -53,7 +52,6 @@ _CHUNK, _STRIDE = 200, 150
     """,
 )
 def q85_doc_chunking(spark, sf_dir):
-    utc(spark)
     docs = table(spark, sf_dir, "documents")
     n_chunks = F.floor((F.length("text") - F.lit(1)) / F.lit(_STRIDE))
     # length > 0 guard: an empty doc gives n_chunks = -1 and Spark's
@@ -99,7 +97,6 @@ def q85_doc_chunking(spark, sf_dir):
     """,
 )
 def q86_hash_split(spark, sf_dir):
-    utc(spark)
     docs = table(spark, sf_dir, "documents")
     bucket = md5_int(F.col("doc_id").cast("string"), 1, 8) % 100
     return docs.select(
@@ -145,7 +142,6 @@ def q86_hash_split(spark, sf_dir):
     """,
 )
 def q87_time_weighted_avg(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").withColumn("t", F.unix_millis("ts"))
     w = W.partitionBy("user_id").orderBy("t", "event_id")
     d = ev.select(
@@ -203,7 +199,6 @@ def q87_time_weighted_avg(spark, sf_dir):
     """,
 )
 def q88_gapfill_locf(spark, sf_dir):
-    utc(spark)
     ev = (
         table(spark, sf_dir, "events")
         .where(F.col("user_id") < 8)
@@ -265,7 +260,6 @@ def q88_gapfill_locf(spark, sf_dir):
     """,
 )
 def q92_discrete_percentiles(spark, sf_dir):
-    utc(spark)
     li = table(spark, sf_dir, "lineitem")
     counts = li.groupBy("l_returnflag", "l_quantity").agg(
         F.count(F.lit(1)).alias("cnt")
@@ -319,7 +313,6 @@ def q92_discrete_percentiles(spark, sf_dir):
     """,
 )
 def q93_snapshot_diff(spark, sf_dir):
-    utc(spark)
     cust = table(spark, sf_dir, "customer")
     old = cust.where(F.col("c_custkey") % 5 != 0).select(
         F.col("c_custkey").alias("k"), F.col("c_acctbal").alias("v")
@@ -504,7 +497,6 @@ def q98_sequence_packing(spark, sf_dir):
     ),
 )
 def q139_funnel(spark, sf_dir):
-    utc(spark)
     events = table(spark, sf_dir, "events")
     w = W.partitionBy("user_id")
     staged = (
@@ -606,7 +598,6 @@ def q139_funnel(spark, sf_dir):
     """,
 )
 def q140_cohort_retention(spark, sf_dir):
-    utc(spark)
     events = table(spark, sf_dir, "events")
     activity = events.select(
         "user_id", F.date_trunc("week", "ts").alias("wk")
@@ -674,7 +665,6 @@ def q140_cohort_retention(spark, sf_dir):
     """,
 )
 def q141_zorder_layout(spark, sf_dir):
-    utc(spark)
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     bounds = li.agg(
         F.min("l_orderkey").alias("xmin"),
@@ -753,7 +743,6 @@ def q141_zorder_layout(spark, sf_dir):
     ),
 )
 def q142_basket_lift(spark, sf_dir):
-    utc(spark)
     d = (
         table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")

@@ -44,14 +44,15 @@ from airquality_data_pipeline_spark.queries.common import (
     dsum,
     finite,
     roundq,
+    roundz,
     sql_decq,
     sql_double,
     sql_dsum,
     sql_finite,
     sql_floor_ms,
     sql_roundq,
+    sql_roundz,
     table,
-    utc,
 )
 from airquality_data_pipeline_spark.queries.registry import register
 
@@ -270,7 +271,6 @@ def q144_mixture_reweight(spark, sf_dir):
     ),
 )
 def q145_mad_outliers(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select(
         "event_type", finite(F.col("value")).alias("value")
     )
@@ -341,7 +341,6 @@ def q145_mad_outliers(spark, sf_dir):
     ),
 )
 def q146_ewma(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "value"
     )
@@ -671,7 +670,6 @@ def q149_pagerank(spark, sf_dir):
     ),
 )
 def q150_seasonal_anomaly(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select(
         "event_type", F.hour("ts").cast("long").alias("hh"), "value"
     )
@@ -742,7 +740,6 @@ def q150_seasonal_anomaly(spark, sf_dir):
     ),
 )
 def q151_markov_transitions(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "event_type"
     )
@@ -809,7 +806,6 @@ def q151_markov_transitions(spark, sf_dir):
     """,
 )
 def q152_rfm_segmentation(spark, sf_dir):
-    utc(spark)
     o = table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate", "o_totalprice"
     )
@@ -971,7 +967,6 @@ def q153_stratified_kfold(spark, sf_dir):
     ),
 )
 def q154_winsorized_scaling(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select("event_type", "value")
     fv = finite(F.col("value"))
     p = ev.groupBy("event_type").agg(
@@ -1028,7 +1023,6 @@ def q154_winsorized_scaling(spark, sf_dir):
     """,
 )
 def q155_ohlc_bars(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select(
         "event_type", "ts", "event_id", "value"
     )
@@ -1094,7 +1088,6 @@ def q155_ohlc_bars(spark, sf_dir):
     """,
 )
 def q156_scd2_intervals(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", F.col("event_type").alias("state")
     )
@@ -1329,7 +1322,6 @@ def q157_triangle_count(spark, sf_dir):
     """,
 )
 def q158_snowflake_rollup(spark, sf_dir):
-    utc(spark)
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
@@ -1462,7 +1454,6 @@ def q159_semantic_decontamination(spark, sf_dir):
     """,
 )
 def q160_entry_paths(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "event_type"
     )
@@ -1560,7 +1551,6 @@ def q160_entry_paths(spark, sf_dir):
     """,
 )
 def q161_dq_audit(spark, sf_dir):
-    utc(spark)
     li0 = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber")
     li = li0.unionByName(
         li0.where(F.col("l_orderkey") % 997 == 0).select(
@@ -1690,7 +1680,6 @@ def q161_dq_audit(spark, sf_dir):
     """,
 )
 def q162_incremental_agg_merge(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select("event_type", "ts", "value")
     anchor = ev.agg(
         (F.max("ts") - F.expr("INTERVAL 72 HOURS")).alias("cutoff")
@@ -1813,7 +1802,6 @@ def q162_incremental_agg_merge(spark, sf_dir):
     ),
 )
 def q163_grouped_linear_trend(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select("event_type", "ts", "value")
     anchor = ev.agg(F.min("ts").alias("t0"))
     pts = ev.crossJoin(F.broadcast(anchor)).select(
@@ -1896,7 +1884,6 @@ _Q164_CHI2 = sql_double(f"SUM({sql_decq('(o - e) * (o - e) / e', 8)})")
     ),
 )
 def q164_chi_square(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select("event_type", "ts")
     obs = ev.groupBy(
         "event_type", F.dayofweek("ts").cast("long").alias("dow")
@@ -1980,7 +1967,6 @@ def q164_chi_square(spark, sf_dir):
     ),
 )
 def q165_revenue_concentration(spark, sf_dir):
-    utc(spark)
     # null prices are excluded on BOTH engines (null_mass x10 catch):
     # a customer whose EVERY price is NULL gets r = NULL, which the
     # Gini rank sorts FIRST in Spark but LAST in DuckDB, shifting
@@ -2045,7 +2031,7 @@ def q165_revenue_concentration(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q166_series_correlation",
-    oracle="""
+    oracle=f"""
     WITH hourly AS (
       SELECT date_trunc('hour', ts) AS h, event_type,
              CAST(count(*) AS BIGINT) AS v
@@ -2067,15 +2053,15 @@ def q165_revenue_concentration(spark, sf_dir):
       FROM pairs GROUP BY et_a, et_b
     )
     SELECT et_a, et_b, n,
-           round((n * sxy - sx * sy)
-                 / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
-                    * sqrt(CAST(n * syy - sy * sy AS DOUBLE))), 6)
-             + 0.0 AS r
+           {sql_roundz(
+               "(n * sxy - sx * sy)"
+               " / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))"
+               " * sqrt(CAST(n * syy - sy * sy AS DOUBLE)))"
+           )} AS r
     FROM s
     """,
 )
 def q166_series_correlation(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select("event_type", "ts")
     hourly = ev.groupBy(
         F.date_trunc("hour", "ts").alias("h"), "event_type"
@@ -2104,7 +2090,7 @@ def q166_series_correlation(spark, sf_dir):
         "et_a",
         "et_b",
         "n",
-        (F.round(F.try_divide(num, denx * deny), 6) + F.lit(0.0)).alias("r"),
+        roundz(F.try_divide(num, denx * deny)).alias("r"),
     )
 
 
@@ -2144,11 +2130,7 @@ def q166_series_correlation(spark, sf_dir):
     SELECT n0, c0, n1, c1,
            {p0_rq} AS p0,
            {p1_rq} AS p1,
-           round((CAST(c0 AS DOUBLE) / n0 - CAST(c1 AS DOUBLE) / n1)
-                 / sqrt((CAST(c0 + c1 AS DOUBLE) / (n0 + n1))
-                        * (1 - CAST(c0 + c1 AS DOUBLE) / (n0 + n1))
-                        * (CAST(1 AS DOUBLE) / n0 + CAST(1 AS DOUBLE) / n1)),
-                 6) + 0.0 AS z,
+           {z_rz} AS z,
            abs((CAST(c0 AS DOUBLE) / n0 - CAST(c1 AS DOUBLE) / n1)
                / sqrt((CAST(c0 + c1 AS DOUBLE) / (n0 + n1))
                       * (1 - CAST(c0 + c1 AS DOUBLE) / (n0 + n1))
@@ -2159,13 +2141,18 @@ def q166_series_correlation(spark, sf_dir):
         h=md5_int_sql("CAST(user_id AS VARCHAR)", 1, 8),
         # conversion rates are k/n rationals (.5-tie class): guarded
         # floor grid; z's denominator is sqrt-derived — tie-free,
-        # round() + 0.0 ok (r10 q225 class)
+        # roundz ok (r10 q225 class)
         p0_rq=sql_roundq("CAST(c0 AS DOUBLE) / n0"),
         p1_rq=sql_roundq("CAST(c1 AS DOUBLE) / n1"),
+        z_rz=sql_roundz(
+            "(CAST(c0 AS DOUBLE) / n0 - CAST(c1 AS DOUBLE) / n1)"
+            " / sqrt((CAST(c0 + c1 AS DOUBLE) / (n0 + n1))"
+            " * (1 - CAST(c0 + c1 AS DOUBLE) / (n0 + n1))"
+            " * (CAST(1 AS DOUBLE) / n0 + CAST(1 AS DOUBLE) / n1))"
+        ),
     ),
 )
 def q167_ab_test(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "event_type"
     )
@@ -2211,7 +2198,7 @@ def q167_ab_test(spark, sf_dir):
         "c1",
         roundq(p0).alias("p0"),
         roundq(p1).alias("p1"),
-        (F.round(z, 6) + F.lit(0.0)).alias("z"),
+        roundz(z).alias("z"),
         (F.abs(z) < 1.96).alias("no_difference"),
     )
 
@@ -2242,7 +2229,6 @@ def q167_ab_test(spark, sf_dir):
     """,
 )
 def q168_fulfillment_latency(spark, sf_dir):
-    utc(spark)
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority"
@@ -2315,7 +2301,6 @@ def q168_fulfillment_latency(spark, sf_dir):
 def q169_bounce_rate(spark, sf_dir):
     from airquality_data_pipeline_spark.operators.windows import sessionize
 
-    utc(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "event_type"
     )
@@ -2375,7 +2360,6 @@ def q169_bounce_rate(spark, sf_dir):
     ),
 )
 def q170_mom_growth(spark, sf_dir):
-    utc(spark)
     o = table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate", "o_totalprice"
     )
@@ -2465,7 +2449,6 @@ def q170_mom_growth(spark, sf_dir):
     ),
 )
 def q171_anova_f(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select("event_type", "value")
     g = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -2803,7 +2786,6 @@ def q173_grid_nn_join(spark, sf_dir):
     """,
 )
 def q174_time_travel_lookup(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", F.col("event_type").alias("state")
     )
@@ -3069,7 +3051,6 @@ def q176_quantile_normalization(spark, sf_dir):
     ),
 )
 def q177_interevent_fit(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select(
         "event_type", "ts", "event_id"
     )
@@ -3404,7 +3385,6 @@ def q180_join_cardinality(spark, sf_dir):
     ),
 )
 def q181_theil_sen(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select("event_type", "ts")
     hourly = ev.groupBy(
         "event_type",
@@ -3475,8 +3455,8 @@ def q181_theil_sen(spark, sf_dir):
       GROUP BY 1, 2 HAVING count(*) >= 5
     )
     SELECT p.tok_a, p.tok_b, p.c_ab, ua.c AS c_a, ub.c AS c_b,
-           round(log2(CAST(p.c_ab AS DOUBLE) * t.n / (ua.c * ub.c)), 6)
-             + 0.0 AS pmi
+           {sql_roundz("log2(CAST(p.c_ab AS DOUBLE) * t.n / (ua.c * ub.c))")}
+             AS pmi
     FROM pairs p
     JOIN uni ua ON p.tok_a = ua.tok
     JOIN uni ub ON p.tok_b = ub.tok
@@ -3522,16 +3502,12 @@ def q182_token_pmi(spark, sf_dir):
             "c_ab",
             "c_a",
             "c_b",
-            (
-                F.round(
-                    F.log2(
-                        F.col("c_ab").cast("double")
-                        * F.col("n")
-                        / (F.col("c_a") * F.col("c_b"))
-                    ),
-                    6,
+            roundz(
+                F.log2(
+                    F.col("c_ab").cast("double")
+                    * F.col("n")
+                    / (F.col("c_a") * F.col("c_b"))
                 )
-                + F.lit(0.0)
             ).alias("pmi"),
         )
     )
@@ -3592,7 +3568,6 @@ _BENFORD = {
     ),
 )
 def q183_benford_audit(spark, sf_dir):
-    utc(spark)
     o = table(spark, sf_dir, "orders").select("o_totalprice")
     digit = F.substring(
         F.floor("o_totalprice").cast("long").cast("string"), 1, 1
@@ -3683,19 +3658,17 @@ def q183_benford_audit(spark, sf_dir):
            -- flat: 1/b at b ~ 1e-15 lands where doubles are spaced
            -- coarser than 4 decimals and engines disagree in the ULP
            CASE WHEN abs(decay_b) < 1e-6 THEN NULL
-                ELSE round(-0.693147 / decay_b, 4) + 0.0 END
+                ELSE {sql_roundz("-0.693147 / decay_b", 4)} END
              AS half_life_weeks
     FROM (
       SELECT n,
-             -- + 0.0 folds IEEE negative zero to +0.0
-             round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) + 0.0
+             {sql_roundz("(n * sxy - sx * sy) / (n * sxx - sx * sx)")}
                AS decay_b
       FROM s
     )
     """,
 )
 def q184_retention_halflife(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select("user_id", "ts")
     firsts = ev.groupBy("user_id").agg(
         F.date_trunc("week", F.min("ts")).alias("cohort")
@@ -3741,14 +3714,14 @@ def q184_retention_halflife(spark, sf_dir):
     b = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
         F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
     )
-    rounded = s.select("n", (F.round(b, 6) + 0.0).alias("decay_b"))
+    rounded = s.select("n", roundz(b).alias("decay_b"))
     return rounded.select(
         "n",
         "decay_b",
         F.when(
             F.abs(F.col("decay_b")) < 1e-6, F.lit(None).cast("double")
         )
-        .otherwise(F.round(F.lit(-0.693147) / F.col("decay_b"), 4) + 0.0)
+        .otherwise(roundz(F.lit(-0.693147) / F.col("decay_b"), 4))
         .alias("half_life_weeks"),
     )
 
@@ -3790,7 +3763,6 @@ def q184_retention_halflife(spark, sf_dir):
     """,
 )
 def q185_weighted_median(spark, sf_dir):
-    utc(spark)
     # null-priced orders carry no mass for a median OF PRICE — and an
     # unfiltered null sorts FIRST in Spark's cumw window but LAST in
     # DuckDB's, shifting the crossing point (null_mass axis)
@@ -3881,7 +3853,6 @@ def q185_weighted_median(spark, sf_dir):
     ),
 )
 def q186_funnel_latency(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     t1s = ev.groupBy("user_id").agg(
         F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("t1")
@@ -3970,7 +3941,6 @@ def q186_funnel_latency(spark, sf_dir):
     ),
 )
 def q187_rate_change_alert(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select("event_type", "ts")
     hourly = ev.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("h")
@@ -4053,7 +4023,6 @@ def q187_rate_change_alert(spark, sf_dir):
     ),
 )
 def q188_invoice_reconciliation(spark, sf_dir):
-    utc(spark)
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_tax", "l_discount"
     )
@@ -4110,7 +4079,6 @@ def q188_invoice_reconciliation(spark, sf_dir):
     """,
 )
 def q189_duplicate_payments(spark, sf_dir):
-    utc(spark)
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
     )

@@ -29,14 +29,15 @@ from airquality_data_pipeline_spark.queries.common import (
     dsum,
     finite,
     roundq,
+    roundz,
     spark_sql_dsum,
     sql_double,
     sql_dsum,
     sql_finite,
     sql_floor_ms,
     sql_roundq,
+    sql_roundz,
     table,
-    utc,
 )
 from airquality_data_pipeline_spark.queries.registry import register
 
@@ -94,7 +95,6 @@ from airquality_data_pipeline_spark.queries.registry import register
     ),
 )
 def q190_roc_auc(spark, sf_dir):
-    utc(spark)
     # unscored (NULL) and unrankable (NaN/inf) rows are excluded on
     # BOTH engines: an unfiltered NULL score group sorts first in
     # Spark's running-sum window but last in DuckDB's (null_mass
@@ -151,7 +151,7 @@ def q190_roc_auc(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q191_acf",
-    oracle="""
+    oracle=f"""
     WITH hourly AS (
       SELECT date_trunc('hour', ts) AS h, CAST(count(*) AS BIGINT) AS v
       FROM events GROUP BY 1
@@ -179,15 +179,15 @@ def q190_roc_auc(spark, sf_dir):
       FROM pairs GROUP BY lag
     )
     SELECT lag, n,
-           round(CAST(n * sxy - sx * sy AS DOUBLE)
-                 / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
-                    * sqrt(CAST(n * syy - sy * sy AS DOUBLE))), 6)
-             + 0.0 AS acf
+           {sql_roundz(
+               "CAST(n * sxy - sx * sy AS DOUBLE)"
+               " / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))"
+               " * sqrt(CAST(n * syy - sy * sy AS DOUBLE)))"
+           )} AS acf
     FROM m
     """,
 )
 def q191_acf(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select("ts")
     hourly = ev.groupBy(F.date_trunc("hour", "ts").alias("h")).agg(
         F.count(F.lit(1)).alias("v")
@@ -225,10 +225,7 @@ def q191_acf(spark, sf_dir):
         "n",
         # try_divide: a zero-variance tail (constant series at this lag)
         # zeroes the denominator; DuckDB's x/0 is NULL, ANSI `/` throws.
-        (
-            F.round(F.try_divide(num, F.sqrt(vx) * F.sqrt(vy)), 6)
-            + F.lit(0.0)
-        ).alias("acf"),
+        roundz(F.try_divide(num, F.sqrt(vx) * F.sqrt(vy))).alias("acf"),
     )
 
 
@@ -287,7 +284,6 @@ def q191_acf(spark, sf_dir):
     ),
 )
 def q192_cusum_changepoint(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select("event_type", "ts")
     daily = ev.groupBy(
         "event_type", F.to_date("ts").alias("d")
@@ -378,7 +374,6 @@ def q192_cusum_changepoint(spark, sf_dir):
     ),
 )
 def q193_survival_km(spark, sf_dir):
-    utc(spark)
     o = table(spark, sf_dir, "orders").select(
         "o_custkey", F.to_date("o_orderdate").alias("d")
     )
@@ -484,7 +479,6 @@ def q194_interval_union(spark, sf_dir):
         interval_union,
     )
 
-    utc(spark)
     li = table(spark, sf_dir, "lineitem").select(
         "l_suppkey",
         F.datediff(F.to_date("l_shipdate"), F.lit("1970-01-01"))
@@ -541,7 +535,6 @@ def q194_interval_union(spark, sf_dir):
     """,
 )
 def q195_activity_streaks(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select("user_id", "ts")
     days = ev.select(
         "user_id",
@@ -627,7 +620,6 @@ def q195_activity_streaks(spark, sf_dir):
     ),
 )
 def q196_decile_lift(spark, sf_dir):
-    utc(spark)
     # unscored rows are excluded on BOTH engines (null_mass axis):
     # besides the engines' opposite null sort positions, the two-phase
     # rank's equi-join on `value` below silently drops NULL keys —
@@ -726,7 +718,6 @@ def q196_decile_lift(spark, sf_dir):
     """,
 )
 def q197_last_touch_attribution(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type", "value"
     )
@@ -792,7 +783,6 @@ def q197_last_touch_attribution(spark, sf_dir):
     """,
 )
 def q198_hierarchy_rollup(spark, sf_dir):
-    utc(spark)
     li = table(spark, sf_dir, "lineitem").select(
         F.col("l_suppkey").alias("s"),
         (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("r"),
@@ -851,7 +841,6 @@ def q198_hierarchy_rollup(spark, sf_dir):
     ),
 )
 def q199_calibration_bins(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events")
     # finite(): non-finite scores behave like the pre-existing NULL
     # semantics (least skips NULL -> p = 1.0 on both engines)
@@ -972,7 +961,6 @@ def q199_calibration_bins(spark, sf_dir):
     ),
 )
 def q200_ols_two_feature(spark, sf_dir):
-    utc(spark)
     # non-finite/NULL response rows are excluded from the fit on both
     # engines (finite().isNotNull() twin of the oracle's isfinite)
     # bare isNotNull first: redundant with finite() but parquet-
@@ -1106,7 +1094,6 @@ def q200_ols_two_feature(spark, sf_dir):
     """,
 )
 def q257_ushaped_attribution(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type", "value"
     )
@@ -1239,7 +1226,6 @@ def q257_ushaped_attribution(spark, sf_dir):
     """,
 )
 def q258_offpolicy_eval(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select(
         F.col("event_type").alias("action"), F.col("value").alias("r")
     )
@@ -1382,7 +1368,6 @@ def q258_offpolicy_eval(spark, sf_dir):
     ),
 )
 def q259_psi_drift(spark, sf_dir):
-    utc(spark)
     # null feature values carry no drift signal and shift the decile
     # edges oppositely on the two engines — excluded on BOTH
     # (null_mass axis)
@@ -1543,7 +1528,6 @@ def q259_psi_drift(spark, sf_dir):
     ),
 )
 def q260_conformal_calibration(spark, sf_dir):
-    utc(spark)
     from pyspark.sql import Window as _W
 
     bucket = md5_int(F.col("event_id").cast("string"), 1, 8) % 100
@@ -1678,7 +1662,6 @@ def q260_conformal_calibration(spark, sf_dir):
     ),
 )
 def q261_fairness_audit(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select(
         (F.col("user_id") % 3).cast("long").alias("grp"),
         F.when(F.col("value") > 50, 1).otherwise(0).alias("pred"),
@@ -1782,7 +1765,7 @@ def q261_fairness_audit(spark, sf_dir):
       FROM cnt, tot
     )
     SELECT CAST(bin AS BIGINT) AS bin, n_pos, n_neg,
-           round(ln(p / q), 6) + 0.0 AS woe,
+           {sql_roundz("ln(p / q)")} AS woe,
            round((p - q) * ln(p / q), 6) AS iv_term,
            {sql_double(
                "SUM(CAST(round((p - q) * ln(p / q), 6) AS DECIMAL(18,6))) OVER ()"
@@ -1791,7 +1774,6 @@ def q261_fairness_audit(spark, sf_dir):
     """,
 )
 def q262_woe_iv(spark, sf_dir):
-    utc(spark)
     from pyspark.sql import Window as _W
 
     # unscored rows are excluded on BOTH engines — the decile edges
@@ -1847,7 +1829,7 @@ def q262_woe_iv(spark, sf_dir):
         F.col("bin").cast("long").alias("bin"),
         "n_pos",
         "n_neg",
-        (F.round(woe, 6) + F.lit(0.0)).alias("woe"),
+        roundz(woe).alias("woe"),
         term.alias("iv_term"),
         F.sum(dec(term, 6))
         .over(_W.partitionBy())
@@ -1910,7 +1892,6 @@ def q262_woe_iv(spark, sf_dir):
     ),
 )
 def q263_oof_target_encoding(spark, sf_dir):
-    utc(spark)
     fold = md5_int(F.col("event_id").cast("string"), 1, 8) % 5
     ev = table(spark, sf_dir, "events").select(
         "event_type",
@@ -2024,7 +2005,6 @@ def q263_oof_target_encoding(spark, sf_dir):
     ),
 )
 def q264_causal_estimators(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select(
         F.col("event_type").alias("x"),
         F.col("value").alias("y"),
@@ -2137,7 +2117,6 @@ def q264_causal_estimators(spark, sf_dir):
     """,
 )
 def q266_recursive_hierarchy(spark, sf_dir):
-    utc(spark)
     li = table(spark, sf_dir, "lineitem").select(
         F.col("l_suppkey").alias("s"),
         (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("r"),
@@ -2192,7 +2171,6 @@ def q266_recursive_hierarchy(spark, sf_dir):
     """,
 )
 def q267_variant_rollup(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select(
         "event_type",
         F.expr(
@@ -2261,7 +2239,6 @@ def q267_variant_rollup(spark, sf_dir):
     ),
 )
 def q268_slo_burn_rate(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select(
         F.date_trunc("hour", "ts").alias("h"),
         F.when(F.col("value") > 100, 1).otherwise(0).alias("bad"),

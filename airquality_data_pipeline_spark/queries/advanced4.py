@@ -28,13 +28,14 @@ from airquality_data_pipeline_spark.queries.common import (
     dsum,
     finite,
     roundq,
+    roundz,
     sql_double,
     sql_dsum,
     sql_finite,
     sql_floor_ms,
     sql_roundq,
+    sql_roundz,
     table,
-    utc,
 )
 from airquality_data_pipeline_spark.queries.registry import register
 
@@ -67,7 +68,6 @@ from airquality_data_pipeline_spark.queries.registry import register
     """,
 )
 def q201_nation_trade(spark, sf_dir):
-    utc(spark)
     li = table(spark, sf_dir, "lineitem").where(
         F.year("l_shipdate").isin(1996, 1997)
     ).select(
@@ -143,7 +143,6 @@ def q201_nation_trade(spark, sf_dir):
     ),
 )
 def q202_market_share(spark, sf_dir):
-    utc(spark)
     li = table(spark, sf_dir, "lineitem").select(
         "l_suppkey",
         F.year("l_shipdate").cast("long").alias("ship_year"),
@@ -202,7 +201,6 @@ def q202_market_share(spark, sf_dir):
     """,
 )
 def q203_product_profit(spark, sf_dir):
-    utc(spark)
     li = table(spark, sf_dir, "lineitem").select(
         "l_partkey",
         "l_suppkey",
@@ -288,7 +286,6 @@ def q203_product_profit(spark, sf_dir):
     """,
 )
 def q204_info_gain(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select(
         "event_type",
         F.when(F.col("value") > 100, 1).otherwise(0).alias("y"),
@@ -353,7 +350,6 @@ def q204_info_gain(spark, sf_dir):
     """,
 )
 def q205_rolling_median(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select("event_type", "ts")
     daily = ev.groupBy(
         "event_type",
@@ -414,7 +410,6 @@ def q205_rolling_median(spark, sf_dir):
     """,
 )
 def q206_khop_reachability(spark, sf_dir):
-    utc(spark)
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     a = li.alias("a")
     b = li.alias("b")
@@ -492,7 +487,6 @@ def q206_khop_reachability(spark, sf_dir):
     """,
 )
 def q207_table_profile(spark, sf_dir):
-    utc(spark)
     # 4 exact count-distincts Expand the scan 4x and the whole
     # update side fuses into the single-row-group scan task — fan out
     # so the Expand + partial aggregation run at full parallelism (r12)
@@ -565,7 +559,6 @@ def q207_table_profile(spark, sf_dir):
     """,
 )
 def q208_topn_with_other(spark, sf_dir):
-    utc(spark)
     o = table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderpriority", "o_totalprice"
     )
@@ -651,7 +644,6 @@ def q208_topn_with_other(spark, sf_dir):
     ),
 )
 def q209_binary_segmentation(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select("ts")
     daily = ev.groupBy(
         F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
@@ -730,7 +722,6 @@ def q210_pareto_frontier(spark, sf_dir):
         pareto_frontier,
     )
 
-    utc(spark)
     p = table(spark, sf_dir, "part").select(
         F.col("p_retailprice").alias("price"),
         F.col("p_size").cast("long").alias("size"),
@@ -766,7 +757,6 @@ def q210_pareto_frontier(spark, sf_dir):
     ),
 )
 def q211_robust_means(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").where(F.col("value") > 0)
     n = F.count(F.lit(1))
     return ev.groupBy("event_type").agg(
@@ -807,7 +797,6 @@ def q211_robust_means(spark, sf_dir):
     """,
 )
 def q212_survivorship(spark, sf_dir):
-    utc(spark)
     o = table(spark, sf_dir, "orders")
     g = o.groupBy("o_custkey", "o_orderdate").agg(
         F.count(F.lit(1)).alias("n_dupes"),
@@ -872,7 +861,6 @@ def q212_survivorship(spark, sf_dir):
     ),
 )
 def q213_backtest_smape(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select("event_type", "ts")
     daily = ev.groupBy(
         "event_type",
@@ -980,7 +968,6 @@ def q213_backtest_smape(spark, sf_dir):
     """,
 )
 def q220_cuped(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select("user_id", "ts", "value")
     cutoff = F.lit("2024-01-16").cast("timestamp")
     zero = F.lit(0).cast("decimal(18,6)")
@@ -1132,7 +1119,6 @@ def q220_cuped(spark, sf_dir):
     ),
 )
 def q221_diff_in_diff(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select("user_id", "ts", "value")
     cutoff = F.lit("2024-01-16").cast("timestamp")
     cells = ev.select(
@@ -1243,7 +1229,6 @@ def q221_diff_in_diff(spark, sf_dir):
     ),
 )
 def q222_poisson_bootstrap(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select("user_id", "value")
     per_user = ev.groupBy("user_id").agg(
         dsum("value").alias("y")
@@ -1352,7 +1337,6 @@ def q222_poisson_bootstrap(spark, sf_dir):
     ),
 )
 def q223_cohort_ltv(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_type", "value"
     )
@@ -1439,7 +1423,6 @@ def q224_negative_sampling(spark, sf_dir):
         cosine_topk,
     )
 
-    utc(spark)
     # NULL vectors excluded on BOTH engines (null_text axis): they can
     # be neither positives nor sampled negatives
     emb = table(spark, sf_dir, "embeddings").where(
@@ -1531,7 +1514,6 @@ def q224_negative_sampling(spark, sf_dir):
     ),
 )
 def q225_seasonal_decompose(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select("ts")
     daily = ev.groupBy(
         F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
@@ -1626,7 +1608,6 @@ def q225_seasonal_decompose(spark, sf_dir):
     """,
 )
 def q226_burst_detection(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select("event_type", "ts")
     hourly = ev.groupBy(
         "event_type",
@@ -1710,14 +1691,7 @@ def q226_burst_detection(spark, sf_dir):
     )
     SELECT nn.n, s.s_stat,
            {var_rq} AS var_s,
-           round(CASE
-             WHEN s.s_stat > 0 THEN (s.s_stat - 1)
-               / sqrt(CAST(nn.n * (nn.n - 1) * (2 * nn.n + 5)
-                           - ties.tie_term AS DOUBLE) / 18)
-             WHEN s.s_stat < 0 THEN (s.s_stat + 1)
-               / sqrt(CAST(nn.n * (nn.n - 1) * (2 * nn.n + 5)
-                           - ties.tie_term AS DOUBLE) / 18)
-             ELSE 0.0 END, 6) + 0.0 AS z,
+           {z_rz} AS z,
            CASE WHEN s.s_stat > 0 THEN 'increasing'
                 WHEN s.s_stat < 0 THEN 'decreasing'
                 ELSE 'no_trend' END AS direction
@@ -1729,10 +1703,19 @@ def q226_burst_detection(spark, sf_dir):
             "(CAST(nn.n * (nn.n - 1) * (2 * nn.n + 5)"
             " - ties.tie_term AS DOUBLE)) / 18"
         ),
+        z_rz=sql_roundz(
+            "CASE"
+            " WHEN s.s_stat > 0 THEN (s.s_stat - 1)"
+            " / sqrt(CAST(nn.n * (nn.n - 1) * (2 * nn.n + 5)"
+            " - ties.tie_term AS DOUBLE) / 18)"
+            " WHEN s.s_stat < 0 THEN (s.s_stat + 1)"
+            " / sqrt(CAST(nn.n * (nn.n - 1) * (2 * nn.n + 5)"
+            " - ties.tie_term AS DOUBLE) / 18)"
+            " ELSE 0.0 END"
+        ),
     ),
 )
 def q227_mann_kendall(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select("ts")
     daily = ev.groupBy(
         F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
@@ -1780,7 +1763,7 @@ def q227_mann_kendall(spark, sf_dir):
         "n",
         "s_stat",
         roundq(var18 / 18).alias("var_s"),
-        (F.round(z, 6) + F.lit(0.0)).alias("z"),
+        roundz(z).alias("z"),
         F.when(F.col("s_stat") > 0, "increasing")
         .when(F.col("s_stat") < 0, "decreasing")
         .otherwise("no_trend")
@@ -1825,19 +1808,20 @@ def q227_mann_kendall(spark, sf_dir):
     )
     SELECT r, n1, n2,
            {er_rq} AS expected_r,
-           round((r - (2.0 * n1 * n2 / (n1 + n2) + 1))
-                 / sqrt(2.0 * n1 * n2 * (2.0 * n1 * n2 - n1 - n2)
-                        / ((n1 + n2) * (n1 + n2) * 1.0
-                           * (n1 + n2 - 1))), 6) + 0.0 AS z
+           {z_rz} AS z
     FROM agg
     """.format(
         # expected_r = 2ab/(a+b)+1 rational (.5-tie class): guarded
         # floor grid; z is sqrt-denominated — tie-free (r10 q225)
         er_rq=sql_roundq("2.0 * n1 * n2 / (n1 + n2) + 1"),
+        z_rz=sql_roundz(
+            "(r - (2.0 * n1 * n2 / (n1 + n2) + 1))"
+            " / sqrt(2.0 * n1 * n2 * (2.0 * n1 * n2 - n1 - n2)"
+            " / ((n1 + n2) * (n1 + n2) * 1.0 * (n1 + n2 - 1)))"
+        ),
     ),
 )
 def q228_runs_test(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select("ts")
     daily = ev.groupBy(
         F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
@@ -1882,9 +1866,7 @@ def q228_runs_test(spark, sf_dir):
         "n1",
         "n2",
         roundq(er).alias("expected_r"),
-        (
-            F.round(F.try_divide(r - er, F.sqrt(vr)), 6) + F.lit(0.0)
-        ).alias("z"),
+        roundz(F.try_divide(r - er, F.sqrt(vr))).alias("z"),
     )
 
 
@@ -1927,7 +1909,6 @@ def q228_runs_test(spark, sf_dir):
     ),
 )
 def q231_srm_check(spark, sf_dir):
-    utc(spark)
     users = (
         table(spark, sf_dir, "events")
         .select("user_id")
@@ -1992,7 +1973,6 @@ def q231_srm_check(spark, sf_dir):
     ),
 )
 def q232_capping_sensitivity(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select("value")
     fv = finite(F.col("value"))
     caps = ev.agg(
@@ -2082,7 +2062,6 @@ def q232_capping_sensitivity(spark, sf_dir):
     ),
 )
 def q237_uplift_deciles(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         dsum("value").alias("score"),
@@ -2182,7 +2161,6 @@ def q237_uplift_deciles(spark, sf_dir):
     ),
 )
 def q238_watermark_lateness(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select("user_id", "event_id", "ts")
     w = (
         W.partitionBy("user_id")

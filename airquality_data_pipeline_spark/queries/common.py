@@ -98,8 +98,10 @@ def events_layout(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Column]:
       * bigint  -> nanos-as-long fixture: floor-convert to a micros
         instant (matches DuckDB's nanos->micros truncation).
       * timestamp / timestamp_ntz -> micros fixture: cast to
-        session-local timestamp (session is pinned UTC, so the wall
-        clock is preserved and matches DuckDB's naive timestamps).
+        session-local timestamp. The session is UTC (`registry.register`
+        pins it for every catalog builder; `session.get_spark` sessions,
+        which run the streams, start in it), so the wall clock is
+        preserved and matches DuckDB's naive timestamps.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = _read_parquet(spark, sf_dir, "events")
@@ -113,10 +115,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raw, ts = events_layout(spark, sf_dir)
         return raw.withColumn("ts", ts)
     return _read_parquet(spark, sf_dir, name)
-
-
-def utc(spark: SparkSession) -> None:
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
 _INF = float("inf")
@@ -264,6 +262,21 @@ def sql_roundq(expr: str, scale: int = 6) -> str:
         f"THEN floor(({expr}) * {10**scale}.0 + 0.5) / {10**scale}.0 "
         f"ELSE ({expr}) END"
     )
+
+
+def roundz(col: Column, scale: int = 6) -> Column:
+    """F.round with the signed-zero fold: a small negative value rounds
+    to -0.0 on both engines, and -0.0 and +0.0 hash apart in the
+    cross-engine value comparison; adding 0.0 turns -0.0 into +0.0 and
+    leaves every other value as it is. For values that are tie-free
+    (sqrt-, log- or ratio-of-roots-derived) and far below 2^53/10^k;
+    otherwise use roundq, whose floor grid has no -0.0 either."""
+    return F.round(col, scale) + F.lit(0.0)
+
+
+def sql_roundz(expr: str, scale: int = 6) -> str:
+    """DuckDB twin of roundz()."""
+    return f"(round({expr}, {scale}) + 0.0)"
 
 
 def dsum(col: Column | str, scale: int = 6) -> Column:
@@ -470,8 +483,8 @@ def ts_ms(col: Column | str, alias: str) -> Column:
     """Timestamp -> epoch millis bigint (instant-based, engine-agnostic).
 
     Parquet ms-timestamps arrive as TIMESTAMP_NTZ in Spark 4; with the
-    session pinned to UTC the cast preserves the wall clock, matching
-    DuckDB's epoch_ms over its naive timestamps.
+    session pinned to UTC (by `registry.register`) the cast preserves the
+    wall clock, matching DuckDB's epoch_ms over its naive timestamps.
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.unix_millis(c.cast("timestamp")).alias(alias)

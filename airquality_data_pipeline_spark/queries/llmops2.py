@@ -36,7 +36,6 @@ from airquality_data_pipeline_spark.queries.common import (
     sql_finite,
     sql_roundq,
     table,
-    utc,
 )
 from airquality_data_pipeline_spark.queries.registry import register
 
@@ -114,7 +113,6 @@ from airquality_data_pipeline_spark.queries.registry import register
     ),
 )
 def q214_epoch_capped_mixture(spark, sf_dir):
-    utc(spark)
     docs = table(spark, sf_dir, "documents").select("lang", "text")
     t = F.trim(F.col("text"))
     ws = F.when(F.length(t) == 0, F.lit(0)).otherwise(
@@ -204,7 +202,6 @@ def q214_epoch_capped_mixture(spark, sf_dir):
     """,
 )
 def q215_template_prefix(spark, sf_dir):
-    utc(spark)
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
@@ -263,7 +260,6 @@ def q215_template_prefix(spark, sf_dir):
     ),
 )
 def q216_tokenizer_fertility(spark, sf_dir):
-    utc(spark)
     docs = table(spark, sf_dir, "documents").select("lang", "text")
     t = F.trim(F.col("text"))
     words = F.when(F.length(t) == 0, F.lit(0)).otherwise(
@@ -347,7 +343,6 @@ def q216_tokenizer_fertility(spark, sf_dir):
     """,
 )
 def q217_curriculum_interleave(spark, sf_dir):
-    utc(spark)
     # docs with no difficulty proxy (NULL n_chars) can't be curriculum
     # -ranked — excluded on BOTH engines (null_text axis; the two-phase
     # rank's equi-join on n_chars would otherwise drop them on the
@@ -470,7 +465,6 @@ def q218_matryoshka_recall(spark, sf_dir):
         cosine_topk,
     )
 
-    utc(spark)
     # NULL vectors excluded on BOTH engines (null_text axis)
     emb = table(spark, sf_dir, "embeddings").where(
         F.col("embedding").isNotNull()
@@ -557,7 +551,6 @@ def q218_matryoshka_recall(spark, sf_dir):
     ),
 )
 def q219_fisher_dims(spark, sf_dir):
-    utc(spark)
     # cast to array<double> BEFORE exploding: float32 x*x is a
     # single-precision product and its DECIMAL(18,6) quantization can
     # land one quantum away from DuckDB's embedding::DOUBLE[] path
@@ -656,7 +649,6 @@ def q219_fisher_dims(spark, sf_dir):
     ),
 )
 def q233_readability_lix(spark, sf_dir):
-    utc(spark)
     docs = table(spark, sf_dir, "documents").select("lang", "text")
     ws = F.split(F.trim(F.col("text")), r"\s+")
     words = F.size(F.filter(ws, lambda w: F.length(F.trim(w)) > 0))
@@ -735,7 +727,6 @@ def q233_readability_lix(spark, sf_dir):
     """,
 )
 def q234_code_screen(spark, sf_dir):
-    utc(spark)
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
@@ -804,7 +795,6 @@ def q234_code_screen(spark, sf_dir):
     """,
 )
 def q235_dp_noisy_counts(spark, sf_dir):
-    utc(spark)
     counts = (
         table(spark, sf_dir, "events")
         .groupBy("event_type")
@@ -856,7 +846,6 @@ def q235_dp_noisy_counts(spark, sf_dir):
     ),
 )
 def q236_k_anonymity(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select("user_id", "ts")
     classes = ev.groupBy(
         F.expr("user_id div 10").alias("user_bucket"),
@@ -931,7 +920,6 @@ def q236_k_anonymity(spark, sf_dir):
     ),
 )
 def q239_compaction_plan(spark, sf_dir):
-    utc(spark)
     docs = table(spark, sf_dir, "documents").select(
         "source", "doc_id", F.length("text").alias("blen")
     )
@@ -1029,7 +1017,6 @@ def q239_compaction_plan(spark, sf_dir):
     ),
 )
 def q253_zone_map_skipping(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").select("event_id", "value")
     fv = finite(F.col("value"))
     stats = ev.agg(

@@ -25,7 +25,6 @@ from airquality_data_pipeline_spark.queries.common import (
     sql_floor_ms,
     table,
     ts_ms,
-    utc,
 )
 from airquality_data_pipeline_spark.queries.registry import register
 
@@ -85,7 +84,6 @@ _Q23_CTE = """
     """,
 )
 def q23_cursor_incremental_filter(spark, sf_dir):
-    utc(spark)
     out, _ = incremental_filter(
         _batch_with_malformed(spark, sf_dir),
         _cursors(spark, sf_dir),
@@ -108,7 +106,6 @@ def q23_cursor_incremental_filter(spark, sf_dir):
     """,
 )
 def q24_pending_cursor_updates(spark, sf_dir):
-    utc(spark)
     _, updates = incremental_filter(
         _batch_with_malformed(spark, sf_dir),
         _cursors(spark, sf_dir),
@@ -139,7 +136,6 @@ def q24_pending_cursor_updates(spark, sf_dir):
     """,
 )
 def q25_first_wins_dedup(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").withColumn(
         "minute", F.date_trunc("minute", F.col("ts"))
     )
@@ -175,7 +171,6 @@ def q25_first_wins_dedup(spark, sf_dir):
     """,
 )
 def q26_greatest_merge(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events")
     old = (
         ev.where(F.col("ts") < F.lit("2024-01-10 00:00:00").cast("timestamp"))
@@ -252,7 +247,6 @@ def q27_coalesce_merge(spark, sf_dir):
     """,
 )
 def q28_retention_filter(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events")
     return retention_filter(ev, "ts", keep_days=7).select(
         "event_id", ts_ms("ts", "ts_ms")
@@ -274,7 +268,6 @@ def q28_retention_filter(spark, sf_dir):
     """,
 )
 def q29_ragged_union(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events")
     a = ev.where(F.col("event_type") == "view").select(
         "event_id", "user_id", "value", F.lit("web").alias("src")
@@ -316,7 +309,6 @@ def q29_ragged_union(spark, sf_dir):
     """,
 )
 def q30_sessionization(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events")
     sess = sessionize(ev, key="user_id", ts_col="ts", gap_seconds=1800,
                       order_tiebreak="event_id")
@@ -344,7 +336,6 @@ def q30_sessionization(spark, sf_dir):
     """,
 )
 def q31_tumbling_window(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -399,7 +390,6 @@ def q55_salted_agg(spark, sf_dir):
     """,
 )
 def q32_sliding_window(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "2 hours", "1 hour").alias("w"))

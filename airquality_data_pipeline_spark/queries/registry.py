@@ -26,13 +26,26 @@ def register(name: str, oracle: str | None = None):
     grid convention (queries/common.py docstring). DuckDB raises on
     CAST(NaN AS DECIMAL) where Spark's twin paths yield NULL; wrapping
     at registration means the ~150 hand sites cannot drift and new
-    queries inherit the convention for free."""
+    queries inherit the convention for free.
+
+    The registered builder also owns the session time zone: it sets
+    spark.sql.session.timeZone to UTC, then calls `fn`. Casts to and
+    from timestamp, date_trunc, hour() and window() read the session
+    zone when the plan is analyzed, and the oracles compute over naive
+    timestamps, i.e. in UTC. A `__spark_entry__` caller brings its own
+    session, in any zone, so `session.get_spark` cannot pin it; pinned
+    here, no builder can forget it, and none relies on an earlier query
+    having left the session in UTC."""
     from airquality_data_pipeline_spark.queries.common import (
         nonfinite_null_sql,
     )
 
     def deco(fn):
-        QUERIES[name] = fn
+        def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+            spark.conf.set("spark.sql.session.timeZone", "UTC")
+            return fn(spark, sf_dir)
+
+        QUERIES[name] = build
         if oracle is not None:
             ORACLE[name] = nonfinite_null_sql(oracle)
         return fn

@@ -25,7 +25,6 @@ from airquality_data_pipeline_spark.queries.common import (
     sql_floor_ms,
     table,
     ts_ms,
-    utc,
 )
 from airquality_data_pipeline_spark.queries.registry import register
 
@@ -55,7 +54,6 @@ from airquality_data_pipeline_spark.queries.registry import register
     """,
 )
 def q01_pricing_summary(spark, sf_dir):
-    utc(spark)
     li = table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
@@ -138,7 +136,6 @@ def q02_filter_project(spark, sf_dir):
     """,
 )
 def q03_shipping_priority(spark, sf_dir):
-    utc(spark)
     cust = table(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
     orders = table(spark, sf_dir, "orders").where(
         F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp")
@@ -214,7 +211,6 @@ def q04_semi_join_exists(spark, sf_dir):
     """,
 )
 def q05_local_supplier_volume(spark, sf_dir):
-    utc(spark)
     cust = table(spark, sf_dir, "customer")
     orders = table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
@@ -257,7 +253,6 @@ def q05_local_supplier_volume(spark, sf_dir):
     """,
 )
 def q06_forecast_revenue(spark, sf_dir):
-    utc(spark)
     li = table(spark, sf_dir, "lineitem")
     return li.where(
         (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
@@ -287,7 +282,6 @@ def q06_forecast_revenue(spark, sf_dir):
     """,
 )
 def q07_anti_join_no_orders(spark, sf_dir):
-    utc(spark)
     cust = table(spark, sf_dir, "customer")
     early = table(spark, sf_dir, "orders").where(
         F.col("o_orderdate") < F.lit("1995-07-01 00:00:00").cast("timestamp")
@@ -414,7 +408,6 @@ def q10_topk_per_group(spark, sf_dir):
     """,
 )
 def q11_window_running(spark, sf_dir):
-    utc(spark)
     orders = table(spark, sf_dir, "orders").where(F.col("o_custkey") <= 200)
     w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return orders.select(
@@ -598,7 +591,6 @@ def q16_conditional_agg(spark, sf_dir):
     """,
 )
 def q17_datetime_tz(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").where(F.col("event_id") % 7 == 0)
     return ev.select(
         "event_id",

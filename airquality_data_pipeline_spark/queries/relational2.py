@@ -23,7 +23,6 @@ from airquality_data_pipeline_spark.queries.common import (
     sql_floor_ms,
     table,
     ts_ms,
-    utc,
 )
 from airquality_data_pipeline_spark.queries.registry import register
 
@@ -49,7 +48,6 @@ from airquality_data_pipeline_spark.queries.registry import register
     """,
 )
 def q33_asof_join(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events")
     views = (
         ev.where(F.col("event_type") == "view")
@@ -95,7 +93,6 @@ def q33_asof_join(spark, sf_dir):
     """,
 )
 def q34_range_join(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events")
     clicks = ev.where(F.col("event_type") == "click").select(
         F.col("event_id").alias("click_id"), "user_id", F.col("ts").alias("click_ts")
@@ -317,7 +314,6 @@ _Q53_REVENUE = "l_extendedprice * (1 - l_discount)"
 
 @register("q53_sql_api", oracle=_Q53_SQL.format(revenue=sql_dsum(_Q53_REVENUE)))
 def q53_sql_api(spark, sf_dir):
-    utc(spark)
     for name in ("customer", "orders", "lineitem", "nation"):
         table(spark, sf_dir, name).createOrReplaceTempView(name)
     return spark.sql(_Q53_SQL.format(revenue=spark_sql_dsum(_Q53_REVENUE)))
@@ -548,7 +544,6 @@ def q65_nullsafe_join(spark, sf_dir):
 def q77_range_frame(spark, sf_dir):
     from pyspark.sql import Window as W
 
-    utc(spark)
     ev = table(spark, sf_dir, "events").where(F.col("user_id") < 30)
     ev = ev.withColumn("ts_ms", F.unix_millis(F.col("ts")))
     w = (
@@ -668,7 +663,6 @@ def q75_edit_distance(spark, sf_dir):
     """,
 )
 def q74_date_arithmetic(spark, sf_dir):
-    utc(spark)
     li = table(spark, sf_dir, "lineitem")
     orders = table(spark, sf_dir, "orders").where(F.col("o_custkey") <= 50)
     return (

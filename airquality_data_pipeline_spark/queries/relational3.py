@@ -19,7 +19,6 @@ from airquality_data_pipeline_spark.queries.common import (
     sql_floor_ms,
     table,
     ts_ms,
-    utc,
 )
 from airquality_data_pipeline_spark.queries.registry import register
 
@@ -48,7 +47,6 @@ from airquality_data_pipeline_spark.queries.registry import register
     """,
 )
 def q78_grouping_sets(spark, sf_dir):
-    utc(spark)
     for name in ("orders", "customer", "nation"):
         table(spark, sf_dir, name).createOrReplaceTempView(name)
     return spark.sql(
@@ -102,7 +100,6 @@ _Q79_STATS = [
     """,
 )
 def q79_stat_aggs(spark, sf_dir):
-    utc(spark)
     li = table(spark, sf_dir, "lineitem")
 
     def q(c, alias):
@@ -165,7 +162,6 @@ def q79_stat_aggs(spark, sf_dir):
     """,
 )
 def q80_ignore_nulls(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").where(F.col("user_id") < 20)
     g = ev.select(
         "event_id",
@@ -209,7 +205,6 @@ def q80_ignore_nulls(spark, sf_dir):
     """,
 )
 def q81_full_outer_join(spark, sf_dir):
-    utc(spark)
     rich = (
         table(spark, sf_dir, "customer")
         .where(F.col("c_acctbal") > 9000)
@@ -244,7 +239,6 @@ _Q82_SQL = """
 
 @register("q82_lateral_topk", oracle=_Q82_SQL)
 def q82_lateral_topk(spark, sf_dir):
-    utc(spark)
     for name in ("nation", "customer"):
         table(spark, sf_dir, name).createOrReplaceTempView(name)
     return spark.sql(_Q82_SQL)
@@ -269,7 +263,6 @@ def q82_lateral_topk(spark, sf_dir):
     """,
 )
 def q83_map_functions(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").where(F.col("user_id") < 10)
     m = F.map_concat(
         F.map_from_arrays(
@@ -315,7 +308,6 @@ def q83_map_functions(spark, sf_dir):
     """,
 )
 def q84_month_spine(spark, sf_dir):
-    utc(spark)
     b = (
         table(spark, sf_dir, "orders")
         .groupBy("o_orderpriority")
@@ -357,7 +349,6 @@ def q84_month_spine(spark, sf_dir):
     """,
 )
 def q89_multiset_ops(spark, sf_dir):
-    utc(spark)
     orders = table(spark, sf_dir, "orders")
     a = orders.where(F.col("o_totalprice") > 150000).select(
         F.col("o_orderpriority").alias("p"),
@@ -390,7 +381,6 @@ def q89_multiset_ops(spark, sf_dir):
     """,
 )
 def q90_nulls_order_pagination(spark, sf_dir):
-    utc(spark)
     cust = table(spark, sf_dir, "customer").select(
         "c_custkey",
         F.when(F.col("c_acctbal") < 0, F.lit(None))
@@ -422,7 +412,6 @@ def q90_nulls_order_pagination(spark, sf_dir):
     """,
 )
 def q91_running_distinct(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").where(F.col("user_id") < 25)
     base = ev.select(
         "event_id", "user_id", "event_type", ts_ms("ts", "ts_ms")

@@ -38,7 +38,6 @@ from airquality_data_pipeline_spark.queries.common import (
     sql_roundq,
     table,
     ts_ms,
-    utc,
 )
 from airquality_data_pipeline_spark.queries.registry import register
 
@@ -72,7 +71,6 @@ def _rev() -> F.Column:
     """,
 )
 def q240_order_priority_check(spark, sf_dir):
-    utc(spark)
     lo = F.lit("1996-01-01").cast("timestamp")
     hi = F.lit("1996-04-01").cast("timestamp")
     o = (
@@ -123,7 +121,6 @@ def q240_order_priority_check(spark, sf_dir):
     """,
 )
 def q241_important_parts(spark, sf_dir):
-    utc(spark)
     v = (
         table(spark, sf_dir, "lineitem")
         .groupBy(F.col("l_partkey").alias("partkey"))
@@ -168,7 +165,6 @@ def q241_important_parts(spark, sf_dir):
     """,
 )
 def q242_ship_delay_priority(spark, sf_dir):
-    utc(spark)
     li = (
         table(spark, sf_dir, "lineitem")
         .where(F.year("l_shipdate") == 1996)
@@ -237,7 +233,6 @@ _Q243_TOTAL = sql_dsum("l.l_extendedprice * (1 - l.l_discount)")
     ),
 )
 def q243_promo_revenue_share(spark, sf_dir):
-    utc(spark)
     li = (
         table(spark, sf_dir, "lineitem")
         .where(F.year("l_shipdate") == 1996)
@@ -295,7 +290,6 @@ def q243_promo_revenue_share(spark, sf_dir):
     """,
 )
 def q244_top_supplier_revenue(spark, sf_dir):
-    utc(spark)
     lo = F.lit("1996-01-01").cast("timestamp")
     hi = F.lit("1996-04-01").cast("timestamp")
     r = (
@@ -344,7 +338,6 @@ def q244_top_supplier_revenue(spark, sf_dir):
     """,
 )
 def q245_brand_supplier_counts(spark, sf_dir):
-    utc(spark)
     li = table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     p = (
         table(spark, sf_dir, "part")
@@ -400,7 +393,6 @@ def q245_brand_supplier_counts(spark, sf_dir):
     """,
 )
 def q246_large_volume_customers(spark, sf_dir):
-    utc(spark)
     big = (
         table(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
@@ -447,7 +439,6 @@ def q246_large_volume_customers(spark, sf_dir):
     """,
 )
 def q247_disjunctive_revenue(spark, sf_dir):
-    utc(spark)
     li = table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", _rev().alias("rev")
     )
@@ -520,7 +511,6 @@ def q247_disjunctive_revenue(spark, sf_dir):
     """,
 )
 def q248_dominant_widget_suppliers(spark, sf_dir):
-    utc(spark)
     p = (
         table(spark, sf_dir, "part")
         .where(F.col("p_name").like("%widget"))
@@ -604,7 +594,6 @@ def q248_dominant_widget_suppliers(spark, sf_dir):
     """,
 )
 def q249_dormant_high_balance(spark, sf_dir):
-    utc(spark)
     cust = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_acctbal"
     )

@@ -8,7 +8,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from airquality_data_pipeline_spark.queries.common import table, utc
+from airquality_data_pipeline_spark.queries.common import table
 
 
 def test_ddl_create_insert_select(spark):
@@ -40,7 +40,6 @@ def test_ddl_create_insert_select(spark):
 def test_partitioned_write_prunes(spark, sf_dir):
     """Date-partitioned curated table: the 100 TB retention answer is a
     partition drop, and a date predicate must prune at the source."""
-    utc(spark)
     out = tempfile.mkdtemp(prefix="curated_")
     ev = table(spark, sf_dir, "events").withColumn(
         "dt", F.date_format("ts", "yyyy-MM-dd")

@@ -11,11 +11,10 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from airquality_data_pipeline_spark.queries.common import table, utc
+from airquality_data_pipeline_spark.queries.common import table
 
 
 def test_dpp_prunes_fact_partitions(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events").withColumn(
         "event_date", F.to_date("ts")
     )

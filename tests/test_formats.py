@@ -8,7 +8,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from airquality_data_pipeline_spark.queries.common import table, utc
+from airquality_data_pipeline_spark.queries.common import table
 
 
 def _canonical_events(spark, sf_dir):
@@ -38,7 +38,6 @@ def _assert_same(expected_rows, got_df):
 
 
 def test_json_csv_orc_roundtrip(spark, sf_dir):
-    utc(spark)
     src = _canonical_events(spark, sf_dir)
     expected = sorted(
         (r.event_id, r.ts_iso, r.user_id, r.event_type, r.value)

@@ -9,11 +9,10 @@ from __future__ import annotations
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
-from airquality_data_pipeline_spark.queries.common import table, utc
+from airquality_data_pipeline_spark.queries.common import table
 
 
 def test_observed_metrics_match_direct_aggregates(spark, sf_dir):
-    utc(spark)
     ev = table(spark, sf_dir, "events")
     obs = Observation("pipeline_metrics")
     observed = ev.observe(
@@ -36,7 +35,6 @@ def test_observed_metrics_match_direct_aggregates(spark, sf_dir):
 def test_observed_metrics_on_streaming_batch(spark, sf_dir):
     """observe() also instruments streaming micro-batches; check the
     batch-side contract the streaming listener consumes."""
-    utc(spark)
     ev = table(spark, sf_dir, "events")
     obs = Observation()
     _ = ev.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(

@@ -322,6 +322,11 @@ CONVENTIONS = {
     "VARCHAR hop": ("queries/common.py", ("AS VARCHAR) AS DOUBLE)",)),
     # the decq floor grid as a HUGEINT scaled integer
     "decq grid": ("queries/common.py", ("+ 0.5) AS HUGEINT)",)),
+    # a rounded value plus a double zero, which turns -0.0 into +0.0
+    "signed-zero fold": (
+        "queries/common.py",
+        (re.compile(r"\)\+(?:F\.lit\()?0\.0(?!\d)"),),
+    ),
 }
 
 

@@ -445,10 +445,13 @@ def test_catalog_wide_no_broadcast_hint_over_fact_subtree(spark, sf_dir):
 # new rational-round can't slip in unreviewed: adding one either means
 # using roundq (right 99% of the time) or consciously bumping the
 # count here WITH a tie-free justification comment at the new site.
+# common.roundz is F.round with the signed-zero fold, so each call of
+# it counts as a plain round; its own F.round is common.py's one.
 _PLAIN_ROUND_BUDGET = {
     "advanced2.py": 9,
     "advanced3.py": 5,
     "advanced4.py": 6,
+    "common.py": 1,
     "dedup.py": 2,
     "llmops.py": 2,
     "llmops2.py": 2,
@@ -467,7 +470,10 @@ def test_plain_round_sites_pinned_to_tie_free_budget():
         if not fname.endswith(".py"):
             continue
         with open(os.path.join(qdir, fname)) as fh:
-            n = len(re.findall(r"F\.round\(", fh.read()))
+            text = fh.read()
+        n = len(re.findall(r"F\.round\(", text))
+        if fname != "common.py":
+            n += len(re.findall(r"\broundz\(", text))
         if n:
             counts[fname] = n
     assert counts == _PLAIN_ROUND_BUDGET, (

@@ -10,7 +10,7 @@ import uuid
 
 from pyspark.sql import functions as F
 
-from airquality_data_pipeline_spark.queries.common import table, utc
+from airquality_data_pipeline_spark.queries.common import table
 from airquality_data_pipeline_spark.streaming.stateful import cursor_filter_stream
 from tests.conftest import run_to_memory
 
@@ -32,7 +32,6 @@ def _stage_two_batches(spark, sf_dir) -> str:
 
 
 def test_cursor_state_across_batches(spark, sf_dir):
-    utc(spark)
     src = _stage_two_batches(spark, sf_dir)
     stream = (
         spark.readStream.schema(
@@ -76,7 +75,6 @@ def test_cursor_state_survives_restart(spark, sf_dir):
     """Kill/restart with a checkpoint: batch 1 processes, the query
     stops, batch 2 lands, a NEW query with the same checkpoint resumes —
     state must carry over (no reprocessing, cursors advanced)."""
-    utc(spark)
     src = tempfile.mkdtemp(prefix="restart_src_")
     ckpt = tempfile.mkdtemp(prefix="restart_ckpt_")
     ev = table(spark, sf_dir, "events")
@@ -141,7 +139,6 @@ def test_cursor_state_on_rocksdb(spark, sf_dir):
     must prove RocksDB actually backed the state (custom rocksdb*
     metrics present) with one state row per distinct (user_id,
     event_type) key."""
-    utc(spark)
     src = _stage_two_batches(spark, sf_dir)
     rocksdb = {
         "spark.sql.streaming.stateStore.providerClass": (

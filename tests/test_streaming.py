@@ -8,7 +8,7 @@ import uuid
 
 from pyspark.sql import functions as F
 
-from airquality_data_pipeline_spark.queries.common import table, utc
+from airquality_data_pipeline_spark.queries.common import table
 from airquality_data_pipeline_spark.streaming import jobs
 from tests.conftest import run_to_memory
 
@@ -20,7 +20,6 @@ def _drain(spark, df):
 
 
 def test_stream_roundtrip_matches_batch(spark, sf_dir):
-    utc(spark)
     stream = jobs.read_events_stream(spark, sf_dir)
     got = _drain(spark, stream)
     batch = table(spark, sf_dir, "events")
@@ -28,7 +27,6 @@ def test_stream_roundtrip_matches_batch(spark, sf_dir):
 
 
 def test_watermark_dedup_bounded_by_batch_dedup(spark, sf_dir):
-    utc(spark)
     stream = jobs.read_events_stream(spark, sf_dir)
     got = _drain(spark, jobs.watermark_dedup(stream))
     batch = table(spark, sf_dir, "events").withColumn(
@@ -42,7 +40,6 @@ def test_watermark_dedup_bounded_by_batch_dedup(spark, sf_dir):
 
 
 def test_tumbling_counts_match_batch(spark, sf_dir):
-    utc(spark)
     stream = jobs.read_events_stream(spark, sf_dir)
     got = _drain(spark, jobs.tumbling_counts(stream))
     batch = (
@@ -64,7 +61,6 @@ def test_tumbling_counts_match_batch(spark, sf_dir):
 
 
 def test_kafka_shaped_payload(spark, sf_dir):
-    utc(spark)
     stream = jobs.read_events_stream(spark, sf_dir)
     got = _drain(spark, jobs.kafka_shaped(stream)).limit(5).collect()
     import json
@@ -102,13 +98,11 @@ def test_kafka_writer_config_pins_reference_producer(spark, sf_dir):
     )
 
     # wire contract: the kafka sink requires key/value (string|binary)
-    utc(spark)
     shaped = jobs.kafka_shaped(jobs.read_events_stream(spark, sf_dir))
     assert dict(shaped.dtypes) == {"key": "string", "value": "string"}
 
 
 def test_foreach_batch_commit_after_emit(spark, sf_dir):
-    utc(spark)
     stream = jobs.read_events_stream(spark, sf_dir)
     store: dict = {}
     jobs.foreach_batch_cursor_commit(stream, store)
@@ -126,7 +120,6 @@ def test_sessionize_equals_session_window(spark, sf_dir):
     session_window must produce identical sessions for a constant gap."""
     from airquality_data_pipeline_spark.operators.windows import sessionize
 
-    utc(spark)
     ev = table(spark, sf_dir, "events")
     gi = (
         sessionize(ev, key="user_id", ts_col="ts", gap_seconds=1800,

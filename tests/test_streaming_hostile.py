@@ -21,7 +21,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from airquality_data_pipeline_spark.queries.common import table, utc
+from airquality_data_pipeline_spark.queries.common import table
 from airquality_data_pipeline_spark.streaming import jobs
 from tests.conftest import run_to_memory
 from tests.robustness.gen_alt_fixture import generate
@@ -56,7 +56,6 @@ def ancient_dir(tmp_path_factory):
 
 
 def test_pre1970_watermark_envelope_tumbling(spark, ancient_dir):
-    utc(spark)
     got = _drain(spark, jobs.tumbling_counts(
         jobs.read_events_stream(spark, ancient_dir)
     ))
@@ -72,7 +71,6 @@ def test_pre1970_watermark_envelope_tumbling(spark, ancient_dir):
 
 
 def test_pre1970_watermark_envelope_dedup(spark, ancient_dir):
-    utc(spark)
     got = _drain(spark, jobs.watermark_dedup(
         jobs.read_events_stream(spark, ancient_dir)
     ))
@@ -83,7 +81,6 @@ def test_post1970_streams_unaffected_by_null_mass(spark, tmp_path_factory):
     """null_mass (NULL metric values, 2024 timestamps) must flow
     through the watermarked aggregations: sum skips NULLs identically
     to batch, counts include the null-value rows."""
-    utc(spark)
     d = str(tmp_path_factory.mktemp("nullmass_stream"))
     generate(d, seed=13, scale=1.0, axis="null_mass")
     got = _drain(spark, jobs.tumbling_counts(

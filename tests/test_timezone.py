@@ -11,6 +11,9 @@ transitions:
     queries must therefore never feed ambiguous local times through tz
     conversion (the fixture events are January-only — safe). This test
     asserts the divergence so an engine behavior change is caught.
+
+Every catalog builder runs in a UTC session whatever zone the caller's
+session is in: `registry.register` pins it.
 """
 
 from __future__ import annotations
@@ -57,3 +60,20 @@ def test_ambiguous_fallback_divergence_is_pinned(spark, duck):
         f"engine DST resolution changed: spark={s} duck={d} — revisit "
         "every oracle query that converts local timestamps"
     )
+
+
+def test_registered_builders_run_in_utc(spark):
+    from airquality_data_pipeline_spark.queries import QUERIES
+    from airquality_data_pipeline_spark.queries.registry import register
+
+    key = "spark.sql.session.timeZone"
+    seen = []
+    before = spark.conf.get(key)
+    try:
+        register("zz_zone_probe")(lambda s, _: seen.append(s.conf.get(key)))
+        spark.conf.set(key, "America/New_York")
+        QUERIES["zz_zone_probe"](spark, "unused")
+        assert seen == ["UTC"]
+    finally:
+        spark.conf.set(key, before)
+        QUERIES.pop("zz_zone_probe", None)
