@@ -18,6 +18,7 @@ from airquality_data_pipeline_spark.queries.common import (
     dec,
     dsum,
     roundq,
+    sql_dec,
     sql_double,
     sql_dsum,
     sql_floor_ms,
@@ -136,7 +137,7 @@ def q86_hash_split(spark, sf_dir):
            -- through float math and mis-round past ~17 significant
            -- digits, so wide products must never round through double;
            -- the final cast hops through VARCHAR (correctly rounded).
-           {sql_double("SUM(CAST(value AS DECIMAL(18,6)) * dur)")} / SUM(dur) AS twa
+           {sql_double(f"SUM({sql_dec('value')} * dur)")} / SUM(dur) AS twa
     FROM d WHERE dur IS NOT NULL
     GROUP BY user_id
     """,

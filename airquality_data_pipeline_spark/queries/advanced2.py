@@ -45,6 +45,7 @@ from airquality_data_pipeline_spark.queries.common import (
     finite,
     roundq,
     roundz,
+    sql_dec,
     sql_decq,
     sql_double,
     sql_dsum,
@@ -325,7 +326,7 @@ def q145_mad_outliers(spark, sf_dir):
     ),
     p AS (
       SELECT a.user_id, a.rn,
-             CAST(b.value AS DECIMAL(18,2)) AS v,
+             {v} AS v,
              CAST(pow(2, 19 - (a.rn - b.rn)) AS BIGINT) AS u
       FROM r a JOIN r b
         ON a.user_id = b.user_id
@@ -335,6 +336,7 @@ def q145_mad_outliers(spark, sf_dir):
            {ewma_rq} AS ewma
     FROM p GROUP BY user_id, rn
     """.format(
+        v=sql_dec("b.value", 2),
         # sum(2dp*2^k)/sum(2^k) is a dyadic-denominator rational —
         # exactly the .5-tie class: guarded floor grid (r10 q225 class)
         ewma_rq=sql_roundq(sql_double("SUM(v * u)") + " / CAST(SUM(u) AS DOUBLE)"),
@@ -1646,19 +1648,19 @@ def q161_dq_audit(spark, sf_dir):
     ),
     state AS (
       SELECT event_type, CAST(count(*) AS BIGINT) AS cnt,
-             SUM(CAST(value AS DECIMAL(18,6))) AS s,
+             SUM({sql_dec("value")}) AS s,
              min(value) AS mn, max(value) AS mx
       FROM events CROSS JOIN anchor WHERE ts < cutoff GROUP BY event_type
     ),
     delta AS (
       SELECT event_type, CAST(count(*) AS BIGINT) AS cnt,
-             SUM(CAST(value AS DECIMAL(18,6))) AS s,
+             SUM({sql_dec("value")}) AS s,
              min(value) AS mn, max(value) AS mx
       FROM events CROSS JOIN anchor WHERE ts >= cutoff GROUP BY event_type
     ),
     direct AS (
       SELECT event_type, CAST(count(*) AS BIGINT) AS cnt,
-             SUM(CAST(value AS DECIMAL(18,6))) AS s,
+             SUM({sql_dec("value")}) AS s,
              min(value) AS mn, max(value) AS mx
       FROM events GROUP BY event_type
     ),
@@ -1925,7 +1927,7 @@ def q164_chi_square(spark, sf_dir):
     oracle="""
     WITH rev AS (
       SELECT o_custkey,
-             SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS r
+             SUM({price}) AS r
       FROM orders
       WHERE o_totalprice IS NOT NULL AND isfinite(o_totalprice)
       GROUP BY o_custkey
@@ -1950,11 +1952,11 @@ def q164_chi_square(spark, sf_dir):
            {top20_rq} AS top20_share
     FROM g
     """.format(
+        price=sql_dec("o_totalprice", 2),
         tot=sql_double("max(tot)"),
         iw=sql_double("SUM(i * r)"),
         top_rev=sql_double(
-            "SUM(CASE WHEN i > n - n // 5 THEN r"
-            " ELSE CAST(0 AS DECIMAL(18,2)) END)"
+            f"SUM(CASE WHEN i > n - n // 5 THEN r ELSE {sql_dec('0', 2)} END)"
         ),
         # gini/top20 are rationals of 2-dp sums (.5-tie class) and tot
         # can carry magnitude at scaled sweeps: guarded floor grid
@@ -2336,7 +2338,7 @@ def q169_bounce_rate(spark, sf_dir):
     WITH rev AS (
       SELECT r.r_name,
              {sql_floor_ms("date_trunc('month', o.o_orderdate)")} AS month_ms,
-             SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS m
+             SUM({sql_dec("o.o_totalprice", 2)}) AS m
       FROM orders o
       JOIN customer c ON o.o_custkey = c.c_custkey
       JOIN nation n   ON c.c_nationkey = n.n_nationkey
@@ -3030,7 +3032,7 @@ def q176_quantile_normalization(spark, sf_dir):
              -- SQUARE reaches ~7e12 s^2 on sparse fixtures (days-long
              -- gaps) and overflows 18,6's 1e12 integer headroom
              -- (minimal-scale robustness sweep catch)
-             {sql_double("SUM(CAST(gap_s * gap_s AS DECIMAL(28,6)))")} AS sgg
+             {sql_double(f"SUM({sql_dec('gap_s * gap_s', precision=28)})")} AS sgg
       FROM gaps WHERE gap_s IS NOT NULL GROUP BY event_type
     )
     SELECT event_type, n,

@@ -31,6 +31,7 @@ from airquality_data_pipeline_spark.queries.common import (
     roundq,
     roundz,
     spark_sql_dsum,
+    sql_dec,
     sql_double,
     sql_dsum,
     sql_finite,
@@ -1357,7 +1358,7 @@ def q258_offpolicy_eval(spark, sf_dir):
     SELECT CAST(bin AS BIGINT) AS bin,
            {p_ref_rq} AS p_ref, {p_cur_rq} AS p_cur,
            term AS psi_term,
-           CAST(SUM(CAST(term AS DECIMAL(18,6))) OVER () AS DOUBLE)
+           CAST(SUM({term_dec}) OVER () AS DOUBLE)
              AS psi_total
     FROM terms
     """.format(
@@ -1365,6 +1366,7 @@ def q258_offpolicy_eval(spark, sf_dir):
         # grid; psi_term is ln-derived — tie-free (r10 q225 class)
         p_ref_rq=sql_roundq("p_ref"),
         p_cur_rq=sql_roundq("p_cur"),
+        term_dec=sql_dec("term"),
     ),
 )
 def q259_psi_drift(spark, sf_dir):
@@ -1768,7 +1770,7 @@ def q261_fairness_audit(spark, sf_dir):
            {sql_roundz("ln(p / q)")} AS woe,
            round((p - q) * ln(p / q), 6) AS iv_term,
            {sql_double(
-               "SUM(CAST(round((p - q) * ln(p / q), 6) AS DECIMAL(18,6))) OVER ()"
+               f"SUM({sql_dec('round((p - q) * ln(p / q), 6)')}) OVER ()"
            )} AS iv_total
     FROM shares
     """,
@@ -1983,12 +1985,10 @@ def q263_oof_target_encoding(spark, sf_dir):
         # rationals of exact sums (.5-tie class): guarded floor grid,
         # which also normalizes -0.0 (r10 q225 class)
         sum_y_t=sql_double(
-            "SUM(CASE WHEN t = 1 THEN CAST(y AS DECIMAL(18,6))"
-            " ELSE CAST(0 AS DECIMAL(18,6)) END)"
+            f"SUM(CASE WHEN t = 1 THEN {sql_dec('y')} ELSE {sql_dec('0')} END)"
         ),
         sum_y_c=sql_double(
-            "SUM(CASE WHEN t = 0 THEN CAST(y AS DECIMAL(18,6))"
-            " ELSE CAST(0 AS DECIMAL(18,6)) END)"
+            f"SUM(CASE WHEN t = 0 THEN {sql_dec('y')} ELSE {sql_dec('0')} END)"
         ),
         s1=sql_dsum(sql_roundq("ev.t * ev.y / e.prop")),
         s0=sql_dsum(sql_roundq("(1 - ev.t) * ev.y / (1 - e.prop)")),

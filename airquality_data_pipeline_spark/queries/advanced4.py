@@ -29,6 +29,7 @@ from airquality_data_pipeline_spark.queries.common import (
     finite,
     roundq,
     roundz,
+    sql_dec,
     sql_double,
     sql_dsum,
     sql_finite,
@@ -132,9 +133,8 @@ def q201_nation_trade(spark, sf_dir):
         share_rq=sql_roundq(
             sql_double(
                 "SUM(CASE WHEN n.n_name = 'NATION_0'"
-                " THEN CAST(l.l_extendedprice * (1 - l.l_discount)"
-                " AS DECIMAL(18,6))"
-                " ELSE CAST(0 AS DECIMAL(18,6)) END)"
+                f" THEN {sql_dec('l.l_extendedprice * (1 - l.l_discount)')}"
+                f" ELSE {sql_dec('0')} END)"
             )
             + " / "
             + sql_dsum("l.l_extendedprice * (1 - l.l_discount)")
@@ -918,12 +918,12 @@ def q213_backtest_smape(spark, sf_dir):
     WITH per_user AS (
       SELECT user_id, CAST(user_id % 2 AS BIGINT) AS variant,
              CAST(SUM(CASE WHEN ts < TIMESTAMP '2024-01-16'
-                      THEN CAST(value AS DECIMAL(18,6))
-                      ELSE CAST(0 AS DECIMAL(18,6)) END) * 1000000
+                      THEN {sql_dec("value")}
+                      ELSE {sql_dec("0")} END) * 1000000
                   AS BIGINT) AS xm,
              CAST(SUM(CASE WHEN ts >= TIMESTAMP '2024-01-16'
-                      THEN CAST(value AS DECIMAL(18,6))
-                      ELSE CAST(0 AS DECIMAL(18,6)) END) * 1000000
+                      THEN {sql_dec("value")}
+                      ELSE {sql_dec("0")} END) * 1000000
                   AS BIGINT) AS ym
       FROM events GROUP BY user_id
     ),
@@ -1495,7 +1495,7 @@ def q224_negative_sampling(spark, sf_dir):
     det AS (
       SELECT d, v, CAST(s7 AS DOUBLE) / 7 AS trend,
              d % 7 AS dow,
-             CAST(v - CAST(s7 AS DOUBLE) / 7 AS DECIMAL(18,6)) AS dt
+             {dt} AS dt
       FROM tr WHERE n7 = 7
     ),
     seas AS (
@@ -1508,6 +1508,7 @@ def q224_negative_sampling(spark, sf_dir):
            {residual_rq} AS residual
     FROM det JOIN seas s ON det.dow = s.dow
     """.format(
+        dt=sql_dec("v - CAST(s7 AS DOUBLE) / 7"),
         trend_rq=sql_roundq("det.trend"),
         seasonal_rq=sql_roundq("s.seasonal"),
         residual_rq=sql_roundq("CAST(det.dt AS DOUBLE) - s.seasonal"),

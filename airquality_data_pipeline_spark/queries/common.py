@@ -139,8 +139,9 @@ def finite(col: Column | str) -> Column:
     original column value is what passes through), so non-double
     inputs (DECIMAL, BIGINT) are safe: they can never probe true.
 
-    SQL twin: sql_finite(); oracle SQL gets the wrap mechanically via
-    registry-time rewriting (nonfinite_null_sql)."""
+    SQL twin: sql_finite(); the oracle-side grid entries sql_dec() and
+    sql_decq() apply it themselves, since DuckDB's cast raises where
+    Spark's yields NULL."""
     c = F.col(col) if isinstance(col, str) else col
     d = c.cast("double")
     return F.when(
@@ -151,8 +152,7 @@ def finite(col: Column | str) -> Column:
 def sql_finite(expr: str) -> str:
     """DuckDB twin of finite(): CASE-NULL on non-finite. isfinite(NULL)
     is NULL, so NULL input falls through to NULL output like Spark's
-    when/otherwise. The spelling is the marker nonfinite_null_sql()
-    uses to stay idempotent — keep them in sync."""
+    when/otherwise."""
     return (
         f"CASE WHEN isfinite(CAST(({expr}) AS DOUBLE)) "
         f"THEN ({expr}) END"
@@ -164,9 +164,18 @@ def dec(col: Column | str, scale: int = 6) -> Column:
     aggregate. Non-finite input yields NULL (Spark's native
     double->DECIMAL cast semantics, even under ANSI — pinned in
     tests/test_nonfinite.py), matching the finite()/sql_finite()
-    convention without a per-row probe in the hottest path."""
+    convention without a per-row probe in the hottest path.
+
+    SQL twin: sql_dec()."""
     c = F.col(col) if isinstance(col, str) else col
     return c.cast(f"decimal(18,{scale})")
+
+
+def sql_dec(expr: str, scale: int = 6, precision: int = 18) -> str:
+    """DuckDB twin of dec(), for every DECIMAL cast in oracle SQL:
+    DuckDB RAISES casting NaN/±inf to DECIMAL, so the value passes
+    sql_finite() first and non-finite input yields NULL as in Spark."""
+    return f"CAST({sql_finite(expr)} AS DECIMAL({precision},{scale}))"
 
 
 def decq(col: Column | str, scale: int = 6) -> Column:
@@ -201,8 +210,10 @@ def decq(col: Column | str, scale: int = 6) -> Column:
 
 def sql_decq(expr: str, scale: int = 6) -> str:
     """DuckDB twin of decq(): same floor(x*10^k + 0.5) grid, HUGEINT-
-    exact (sql_double() the SUM before any double use)."""
-    return f"CAST(floor(({expr}) * {10**scale}.0 + 0.5) AS HUGEINT)"
+    exact (sql_double() the SUM before any double use). floor's
+    argument passes sql_finite(), since DuckDB's HUGEINT cast raises on
+    NaN/±inf."""
+    return f"CAST(floor({sql_finite(f'({expr}) * {10**scale}.0 + 0.5')}) AS HUGEINT)"
 
 
 def roundq(col: Column, scale: int = 6) -> Column:
@@ -304,9 +315,8 @@ def spark_sql_dsum(expr: str, scale: int = 6) -> str:
 
 
 # SQL-side twins (DuckDB): keep these in sync with the column helpers
-# above. The DECIMAL casts rendered here are finite-wrapped MECHANICALLY
-# at registration (registry.py applies nonfinite_null_sql to every
-# oracle), so these stay readable and cannot drift from the convention.
+# above. Their DECIMAL casts go through sql_dec(), so non-finite input
+# is NULL here as it is in Spark; oracle SQL runs as written.
 def sql_double(expr: str) -> str:
     """A DECIMAL or HUGEINT value as the correctly rounded double:
     through VARCHAR, since DuckDB's direct cast is not (module
@@ -315,151 +325,13 @@ def sql_double(expr: str) -> str:
 
 
 def sql_dsum(expr: str, scale: int = 6) -> str:
-    return sql_double(f"SUM(CAST({expr} AS DECIMAL(18,{scale})))")
+    return sql_double(f"SUM({sql_dec(expr, scale)})")
 
 
 def sql_davg(expr: str) -> str:
     # COUNT of the DECIMAL-cast value: finite-consistent with the sum
-    # (see davg) once registration wraps both casts.
-    return f"{sql_dsum(expr)} / COUNT(CAST({expr} AS DECIMAL(18,6)))"
-
-
-_FINITE_MARK = "CASE WHEN ISFINITE("
-
-
-def _already_finite(expr: str) -> bool:
-    return expr.lstrip().upper().startswith(_FINITE_MARK)
-
-
-def _scan_cast_span(sql: str, start: int) -> int:
-    """Index just past the ')' closing the '(' at sql[start], skipping
-    single-quoted strings ('' = escaped quote) and -- comments."""
-    depth = 0
-    i = start
-    n = len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            i += 1
-            while i < n:
-                if sql[i] == "'":
-                    if i + 1 < n and sql[i + 1] == "'":
-                        i += 2
-                        continue
-                    break
-                i += 1
-        elif ch == "-" and i + 1 < n and sql[i + 1] == "-":
-            while i < n and sql[i] != "\n":
-                i += 1
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    raise ValueError(f"unbalanced parens in SQL cast at {start}: {sql[start:start+80]!r}")
-
-
-def _top_level_as(content: str) -> int:
-    """Offset of the last top-level ' AS ' keyword in a CAST body."""
-    depth = 0
-    i = 0
-    n = len(content)
-    last = -1
-    while i < n:
-        ch = content[i]
-        if ch == "'":
-            i += 1
-            while i < n and content[i] != "'":
-                i += 1
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and content[i : i + 2].upper() == "AS"
-            and (i == 0 or not (content[i - 1].isalnum() or content[i - 1] == "_"))
-            and (
-                i + 2 >= n
-                or not (content[i + 2].isalnum() or content[i + 2] == "_")
-            )
-        ):
-            last = i
-        i += 1
-    return last
-
-
-def nonfinite_null_sql(sql: str) -> str:
-    """Mechanically enforce the non-finite-as-NULL grid convention on
-    oracle SQL: every ``CAST(<e> AS DECIMAL...)`` becomes
-    ``CAST(<sql_finite(e)> AS DECIMAL...)`` and every floor-grid
-    ``CAST(floor(<e>) AS HUGEINT)`` wraps floor's argument — DuckDB
-    RAISES on casting NaN/±inf to DECIMAL/HUGEINT where Spark's twin
-    paths yield NULL under the same convention (finite()/dec()/decq()).
-
-    Applied ONCE, centrally, at registration (registry.register), so
-    the ~150 hand-written decimal-cast oracle sites cannot drift from
-    the convention and future queries inherit it for free — the same
-    one-place principle as sql_floor_ms (r10 ADVICE). Idempotent:
-    already-wrapped expressions (the sql_finite spelling) are left
-    alone, pinned by tools/audit_nonfinite.py and
-    tests/test_nonfinite.py."""
-    out = []
-    i = 0
-    n = len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        if ch == "-" and i + 1 < n and sql[i + 1] == "-":
-            j = sql.find("\n", i)
-            j = n if j < 0 else j
-            out.append(sql[i:j])
-            i = j
-            continue
-        if (
-            sql[i : i + 4].upper() == "CAST"
-            and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_"))
-        ):
-            j = i + 4
-            while j < n and sql[j].isspace():
-                j += 1
-            if j < n and sql[j] == "(":
-                end = _scan_cast_span(sql, j)
-                content = sql[j + 1 : end - 1]
-                as_pos = _top_level_as(content)
-                if as_pos >= 0:
-                    expr = nonfinite_null_sql(content[:as_pos].rstrip())
-                    target = content[as_pos + 2 :].strip()
-                    tgt_u = target.upper()
-                    if tgt_u.startswith("DECIMAL") and not _already_finite(expr):
-                        expr = sql_finite(expr)
-                    elif tgt_u.startswith("HUGEINT"):
-                        es = expr.strip()
-                        if es[:6].lower() == "floor(" and _scan_cast_span(
-                            es, 5
-                        ) == len(es):
-                            arg = es[6:-1]
-                            if not _already_finite(arg):
-                                expr = f"floor({sql_finite(arg)})"
-                    out.append(f"CAST({expr} AS {target})")
-                    i = end
-                    continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
+    # (see davg).
+    return f"{sql_dsum(expr)} / COUNT({sql_dec(expr)})"
 
 
 def sql_floor_ms(expr: str) -> str:

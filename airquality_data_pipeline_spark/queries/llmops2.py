@@ -31,6 +31,7 @@ from airquality_data_pipeline_spark.queries.common import (
     dsum,
     finite,
     roundq,
+    sql_dec,
     sql_double,
     sql_dsum,
     sql_finite,
@@ -540,10 +541,15 @@ def q218_matryoshka_recall(spark, sf_dir):
         s=sql_dsum("x"),
         ss=sql_dsum("x * x"),
         st=sql_dsum("s"),
-        within_ss=sql_double("SUM(CAST(ss - s * s / n AS DECIMAL(28,10)))"),
+        within_ss=sql_double(f"SUM({sql_dec('ss - s * s / n', 10, precision=28)})"),
         between_ss=sql_double(
-            "SUM(CAST(b.n * (b.s / b.n - d.st / d.nt)"
-            " * (b.s / b.n - d.st / d.nt) AS DECIMAL(28,10)))"
+            "SUM({})".format(
+                sql_dec(
+                    "b.n * (b.s / b.n - d.st / d.nt) * (b.s / b.n - d.st / d.nt)",
+                    10,
+                    precision=28,
+                )
+            )
         ),
         # fisher score is a rational of decimal-exact SSes, and it
         # ORDERS the top-10 rank (.5-tie class): guarded floor grid

@@ -32,6 +32,8 @@ from airquality_data_pipeline_spark.operators import fan_out
 from airquality_data_pipeline_spark.queries.common import (
     dsum,
     roundq,
+    sql_dec,
+    sql_double,
     sql_dsum,
     sql_roundq,
     table,
@@ -538,10 +540,11 @@ def _rrf_oracle() -> str:
              COALESCE(b.doc_id, t.doc_id) AS doc_id,
              (b.rank IS NOT NULL) AS in_bm25,
              (t.rank IS NOT NULL) AS in_tfidf,
-             CAST(CAST(COALESCE(round(1.0 / (60 + b.rank), 6), 0)
-                       AS DECIMAL(18,6))
-                  + CAST(COALESCE(round(1.0 / (60 + t.rank), 6), 0)
-                         AS DECIMAL(18,6)) AS DOUBLE) AS rrf_score
+             {sql_double(
+                 sql_dec("COALESCE(round(1.0 / (60 + b.rank), 6), 0)")
+                 + " + "
+                 + sql_dec("COALESCE(round(1.0 / (60 + t.rank), 6), 0)")
+             )} AS rrf_score
       FROM bm25 b
       FULL OUTER JOIN tfidf t
         ON b.query_id = t.query_id AND b.doc_id = t.doc_id

@@ -19,14 +19,7 @@ ORACLE: dict[str, str] = {}
 def register(name: str, oracle: str | None = None):
     """Decorator: add a builder (and optionally its oracle SQL) to the
     catalog. oracle=None => driver runs the weaker rows-only check.
-
-    Oracle SQL is passed through nonfinite_null_sql() here — ONCE,
-    centrally — so every DECIMAL/floor-grid cast in every oracle
-    (hand-written or helper-rendered) enforces the non-finite-as-NULL
-    grid convention (queries/common.py docstring). DuckDB raises on
-    CAST(NaN AS DECIMAL) where Spark's twin paths yield NULL; wrapping
-    at registration means the ~150 hand sites cannot drift and new
-    queries inherit the convention for free.
+    The oracle is stored as written.
 
     The registered builder also owns the session time zone: it sets
     spark.sql.session.timeZone to UTC, then calls `fn`. Casts to and
@@ -36,9 +29,6 @@ def register(name: str, oracle: str | None = None):
     session, in any zone, so `session.get_spark` cannot pin it; pinned
     here, no builder can forget it, and none relies on an earlier query
     having left the session in UTC."""
-    from airquality_data_pipeline_spark.queries.common import (
-        nonfinite_null_sql,
-    )
 
     def deco(fn):
         def build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -47,7 +37,7 @@ def register(name: str, oracle: str | None = None):
 
         QUERIES[name] = build
         if oracle is not None:
-            ORACLE[name] = nonfinite_null_sql(oracle)
+            ORACLE[name] = oracle
         return fn
 
     return deco

@@ -20,6 +20,7 @@ from airquality_data_pipeline_spark.queries.common import (
     dec,
     dsum,
     sql_davg,
+    sql_dec,
     sql_double,
     sql_dsum,
     sql_floor_ms,
@@ -396,7 +397,7 @@ def q10_topk_per_group(spark, sf_dir):
            o_totalprice,
            ROW_NUMBER() OVER w AS rn,
            {sql_double(
-               "SUM(CAST(o_totalprice AS DECIMAL(18,6))) OVER ("
+               f"SUM({sql_dec('o_totalprice')}) OVER ("
                " PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey"
                " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
            )} AS running_spend,

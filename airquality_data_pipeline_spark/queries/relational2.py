@@ -18,6 +18,7 @@ from airquality_data_pipeline_spark.queries.common import (
     dsum,
     spark_sql_dsum,
     sql_davg,
+    sql_dec,
     sql_double,
     sql_dsum,
     sql_floor_ms,
@@ -532,7 +533,7 @@ def q65_nullsafe_join(spark, sf_dir):
     oracle=f"""
     SELECT event_id, user_id, {sql_floor_ms("ts")} AS ts_ms,
            COUNT(*) OVER w AS n_last_hour,
-           {sql_double("SUM(CAST(value AS DECIMAL(18,6))) OVER w")} AS sum_last_hour
+           {sql_double(f"SUM({sql_dec('value')}) OVER w")} AS sum_last_hour
     FROM events
     WHERE user_id < 30
     WINDOW w AS (

@@ -14,6 +14,8 @@ from pyspark.sql import functions as F
 from airquality_data_pipeline_spark.queries.common import (
     finite,
     spark_sql_dsum,
+    sql_dec,
+    sql_double,
     sql_dsum,
     sql_finite,
     sql_floor_ms,
@@ -73,28 +75,25 @@ def q78_grouping_sets(spark, sf_dir):
 # (same half-up rounding of near-identical doubles on both sides).
 # --------------------------------------------------------------------------
 _Q79_STATS = [
-    ("corr_qty_price", "corr"),
-    ("sd_disc", "stddev_samp"),
-    ("sdp_disc", "stddev_pop"),
-    ("var_disc", "var_samp"),
-    ("varp_disc", "var_pop"),
-    ("cov_qty_disc", "covar_samp"),
-    ("covp_qty_disc", "covar_pop"),
+    ("corr_qty_price", f"corr({sql_finite('l_extendedprice')}, l_quantity)"),
+    ("sd_disc", "stddev_samp(l_discount)"),
+    ("sdp_disc", "stddev_pop(l_discount)"),
+    ("var_disc", "var_samp(l_discount)"),
+    ("varp_disc", "var_pop(l_discount)"),
+    ("cov_qty_disc", "covar_samp(l_discount, l_quantity)"),
+    ("covp_qty_disc", "covar_pop(l_discount, l_quantity)"),
 ]
 
 
 @register(
     "q79_stat_aggs",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag,
            COUNT(*) AS n,
-           CAST(CAST(corr(CASE WHEN isfinite(CAST((l_extendedprice) AS DOUBLE)) THEN (l_extendedprice) END, l_quantity) AS DECIMAL(18,12)) AS DOUBLE) AS corr_qty_price,
-           CAST(CAST(stddev_samp(l_discount) AS DECIMAL(18,12)) AS DOUBLE) AS sd_disc,
-           CAST(CAST(stddev_pop(l_discount) AS DECIMAL(18,12)) AS DOUBLE) AS sdp_disc,
-           CAST(CAST(var_samp(l_discount) AS DECIMAL(18,12)) AS DOUBLE) AS var_disc,
-           CAST(CAST(var_pop(l_discount) AS DECIMAL(18,12)) AS DOUBLE) AS varp_disc,
-           CAST(CAST(covar_samp(l_discount, l_quantity) AS DECIMAL(18,12)) AS DOUBLE) AS cov_qty_disc,
-           CAST(CAST(covar_pop(l_discount, l_quantity) AS DECIMAL(18,12)) AS DOUBLE) AS covp_qty_disc
+           {", ".join(
+               f"{sql_double(sql_dec(agg, 12))} AS {alias}"
+               for alias, agg in _Q79_STATS
+           )}
     FROM lineitem
     GROUP BY l_returnflag
     """,

@@ -30,6 +30,7 @@ from airquality_data_pipeline_spark.operators.text import (
 from airquality_data_pipeline_spark.queries.common import (
     dsum,
     roundq,
+    sql_dec,
     sql_dsum,
     sql_roundq,
     table,
@@ -363,9 +364,7 @@ def q99_decontamination(spark, sf_dir):
     ),
     w AS (
       SELECT *,
-             CAST(round(pow(CAST(n_tokens AS DOUBLE)
-                            / SUM(CAST(n_tokens AS DOUBLE)) OVER (),
-                            0.3), 6) AS DECIMAL(18,6)) AS pw
+             {pw} AS pw
       FROM per_lang
     )
     SELECT lang, n_docs, n_tokens,
@@ -374,6 +373,10 @@ def q99_decontamination(spark, sf_dir):
     """.format(
         # ratio of 6-dp grid weights is a rational (.5-tie class):
         # guarded floor grid (r10 q225 class)
+        pw=sql_dec(
+            "round(pow(CAST(n_tokens AS DOUBLE)"
+            " / SUM(CAST(n_tokens AS DOUBLE)) OVER (), 0.3), 6)"
+        ),
         w_rq=sql_roundq(
             "CAST(pw AS DOUBLE) / CAST(SUM(pw) OVER () AS DOUBLE)"
         ),

@@ -32,6 +32,7 @@ from airquality_data_pipeline_spark.queries.common import (
     dec,
     dsum,
     roundq,
+    sql_dec,
     sql_double,
     sql_dsum,
     sql_floor_ms,
@@ -208,8 +209,8 @@ def q242_ship_delay_priority(spark, sf_dir):
 # --------------------------------------------------------------------------
 _Q243_PROMO = sql_double(
     "SUM(CASE WHEN p.p_type = 'PROMO'"
-    " THEN CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,6))"
-    " ELSE CAST(0 AS DECIMAL(18,6)) END)"
+    f" THEN {sql_dec('l.l_extendedprice * (1 - l.l_discount)')}"
+    f" ELSE {sql_dec('0')} END)"
 )
 _Q243_TOTAL = sql_dsum("l.l_extendedprice * (1 - l.l_discount)")
 

@@ -169,7 +169,8 @@ def generate(
         silently yields 0 and ±inf clamps to ±Long.MAX; DuckDB
         RAISES casting non-finite to DECIMAL/HUGEINT). The repo
         convention is non-finite = NULL at every grid entry point
-        (queries/common.py finite()/nonfinite_null_sql); this axis
+        (queries/common.py: finite() on the Spark side; in oracle SQL
+        the twins sql_dec()/sql_decq() wrap the value); this axis
         is its catalog-wide enforcement. Comparison semantics that
         already AGREE cross-engine (NaN==NaN in grouping, NaN sorts
         last, NaN > any literal in predicates) are deliberately left

@@ -6,7 +6,8 @@ Spark's floor(NaN*1e6+0.5)->BIGINT silently yields 0 and ±inf clamps to
 ±Long.MAX, while DuckDB raises casting non-finite to DECIMAL/HUGEINT.
 The convention (queries/common.py): non-finite = NULL at every grid
 entry point, enforced by finite()/decq()/davg() on the Spark side and
-by the registry-time nonfinite_null_sql rewrite on the oracle side.
+by the `*_sql` twins on the oracle side: sql_dec() and sql_decq() wrap
+their value in sql_finite(), and oracle SQL runs as written.
 
 These tests pin each piece, plus the engine behaviors the convention
 leans on (Spark's native non-finite->NULL decimal cast; DuckDB's
@@ -16,6 +17,7 @@ a parquet file that actually contains NaN/±inf.
 from __future__ import annotations
 
 import math
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -26,7 +28,6 @@ from airquality_data_pipeline_spark.queries.common import (
     decq,
     dsum,
     finite,
-    nonfinite_null_sql,
     sql_davg,
     sql_decq,
     sql_double,
@@ -103,7 +104,7 @@ def test_duckdb_twins_match(duck):
         + "FROM (VALUES (1.5::DOUBLE),(2.25::DOUBLE),('nan'::DOUBLE),"
         "('inf'::DOUBLE),('-inf'::DOUBLE),(NULL::DOUBLE)) t(x)"
     )
-    s, a, qs = duck.execute(nonfinite_null_sql(q)).fetchall()[0]
+    s, a, qs = duck.execute(q).fetchall()[0]
     assert float(s) == 3.75
     assert float(a) == 1.875
     assert float(qs) == 3.75
@@ -117,46 +118,27 @@ def test_sql_finite_null_passthrough(duck):
     assert [r[0] for r in got] == [None, None, 7.0]
 
 
-# --- the registry-time rewrite ------------------------------------------
+# --- the oracle text ----------------------------------------------------
 
 
-def test_rewrite_wraps_decimal_and_floor_grid():
-    assert nonfinite_null_sql("CAST(v AS DECIMAL(18,6))") == (
-        "CAST(CASE WHEN isfinite(CAST((v) AS DOUBLE)) THEN (v) END "
-        "AS DECIMAL(18,6))"
-    )
-    out = nonfinite_null_sql("CAST(floor(x*1000000.0+0.5) AS HUGEINT)")
-    assert out == (
-        "CAST(floor(CASE WHEN isfinite(CAST((x*1000000.0+0.5) AS DOUBLE)) "
-        "THEN (x*1000000.0+0.5) END) AS HUGEINT)"
-    )
-
-
-def test_rewrite_leaves_other_casts_quotes_comments():
-    for s in (
-        "CAST(count(*) AS BIGINT)",
-        "CAST(CAST(s AS VARCHAR) AS DOUBLE)",
-        "SELECT 'CAST(a AS DECIMAL(18,6))' AS lit",
-        "-- CAST(a AS DECIMAL(9,9))\nSELECT 1",
-        "CAST(SUM(n) AS HUGEINT)",  # non-floor HUGEINT: integral input
-    ):
-        assert nonfinite_null_sql(s) == s
-
-
-def test_rewrite_nested_and_idempotent():
-    s = "CAST(CAST(SUM(CAST(v AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE)"
-    once = nonfinite_null_sql(s)
-    assert "isfinite(CAST((v) AS DOUBLE))" in once
-    assert once.count("isfinite") == 1
-    assert nonfinite_null_sql(once) == once
-
-
-def test_registry_oracles_are_transformed_and_idempotent():
+def test_oracle_decimal_casts_come_from_sql_dec():
+    """Oracle SQL runs as written, so every DECIMAL cast in it must
+    come from sql_dec(), whose sql_finite() CASE ends right before
+    `AS DECIMAL(`; and no DECIMAL value may be cast straight to DOUBLE
+    (DuckDB's direct cast is not correctly rounded; sql_double() hops
+    through VARCHAR)."""
     from airquality_data_pipeline_spark.queries import ORACLE
 
     assert len(ORACLE) >= 263
-    for name, sql in ORACLE.items():
-        assert nonfinite_null_sql(sql) == sql, name
+    unwrapped, direct = [], []
+    for name, sql in sorted(ORACLE.items()):
+        flat = " ".join(sql.split())
+        if flat.count(" AS DECIMAL(") != flat.count("END AS DECIMAL("):
+            unwrapped.append(name)
+        if re.search(r"DECIMAL\(\d+,\d+\)\)+ AS DOUBLE\)", flat):
+            direct.append(name)
+    assert not unwrapped, f"DECIMAL casts not from sql_dec: {unwrapped}"
+    assert not direct, f"DECIMAL cast straight to DOUBLE: {direct}"
 
 
 # --- cross-engine parity over parquet that contains NaN/±inf -------------
@@ -181,7 +163,7 @@ def test_cross_engine_parity_on_nonfinite_parquet(spark, tmp_path):
     )
     got = {r.k: (r.s, r.a) for r in sdf.collect()}
     con = duckdb.connect()
-    oracle = nonfinite_null_sql(
+    oracle = (
         f"SELECT k, {sql_dsum('v')} AS s, {sql_davg('v')} AS a "
         f"FROM '{path}' GROUP BY k"
     )
@@ -210,9 +192,7 @@ def test_wide_exact_sum_rounds_alike_on_both_engines(spark, duck):
     )
     values = ", ".join(f"('{x}'::DECIMAL(18,6))" for x in rows)
     want = duck.execute(
-        nonfinite_null_sql(
-            f"SELECT {sql_dsum('x')}, {sql_davg('x')} FROM (VALUES {values}) t(x)"
-        )
+        f"SELECT {sql_dsum('x')}, {sql_davg('x')} FROM (VALUES {values}) t(x)"
     ).fetchall()[0]
     exact = Decimal("150009782104.930001")
     assert (got.s, got.a) == want == (float(exact), float(exact) / 2)

@@ -320,8 +320,17 @@ CONVENTIONS = {
     ),
     # DuckDB's DECIMAL/HUGEINT -> DOUBLE cast is not correctly rounded
     "VARCHAR hop": ("queries/common.py", ("AS VARCHAR) AS DOUBLE)",)),
-    # the decq floor grid as a HUGEINT scaled integer
-    "decq grid": ("queries/common.py", ("+ 0.5) AS HUGEINT)",)),
+    # the decq floor grid as a HUGEINT scaled integer; the owner's
+    # `+ 0.5` closes the sql_finite argument before `AS HUGEINT)`
+    "decq grid": ("queries/common.py", (re.compile(r"\+0\.5\W*ASHUGEINT\)"),)),
+    # a DECIMAL cast in oracle SQL, zero literals too; a zero passed as
+    # an argument (q146's Spark SQL `aggregate` seed) is not one
+    "decimal cast": (
+        "queries/common.py",
+        (re.compile(r"(?<!,CAST\(0)ASDECIMAL\("),),
+    ),
+    # the non-finite-as-NULL wrap
+    "finite wrap": ("queries/common.py", ("CASE WHEN isfinite(CAST((",)),
     # a rounded value plus a double zero, which turns -0.0 into +0.0
     "signed-zero fold": (
         "queries/common.py",

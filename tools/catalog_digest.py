@@ -10,7 +10,9 @@ normalized `optimizedPlan` and `executedPlan` strings of the built (not
 executed) DataFrame, with expression, plan and RDD ids stripped, since
 those count up across a session. For each oracle it prints one `oracle`
 line: the row count and the SHA-256 of the sorted rows in DuckDB,
-normalized as the parity tests compare them (`tests/oracle_utils`).
+normalized as the parity tests compare them (`tests/oracle_utils`), then
+the SHA-256 of the oracle's text with whitespace runs collapsed, which
+shows which oracle texts a refactor moved.
 Plans are built in one local Spark session (`SPARK_GRAFT_CPUS` sizes it),
 oracles run in one in-memory DuckDB over the fixture's parquet files.
 """
@@ -74,7 +76,8 @@ def main() -> None:
     for t in FIXTURE_TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{args.sf_dir}/{t}.parquet'")
     for name in sorted(ORACLE):
-        print("oracle", name, *oracle_digest(con, ORACLE[name]))
+        sql = ORACLE[name]
+        print("oracle", name, *oracle_digest(con, sql), _sha(" ".join(sql.split())))
 
 
 if __name__ == "__main__":
