@@ -2,7 +2,7 @@
 six single-cycle modules (de/nl/pl x stations/measurements,
 README.md:15-23) plus housekeeping, each run by external orchestration.
 Here each is a function over (SparkSession, config) returning the result
-frame(s) — `spark-submit -c job=...` shells call these.
+frame(s); perfbench's producer cycle and the tests call them.
 
 Live HTTP ingestion is out of scope in this offline environment; the
 measurement jobs take a bronze frame (from the REST DataSource, a replay

@@ -5,24 +5,13 @@ shared registry. Importing this package populates it.
 
 Registration order is deliberate: the external driver checks a ~50-entry
 prefix of the catalog each round, so _PRIORITY puts the queries that
-most need a fresh CORRECTNESS row first. Since round 10 the order is
-GENERATED from the committed evidence ledger by tools/gen_priority.py
-(policy: never-driver-checked queries lead — no row at all is less
-evidence than a stale one — then queries modified after their latest
-green driver row, then ascending latest-evidence round) and pinned by
-a test — the hand-maintained-count failure mode (r8's "backlog -> 2"
-drift) is extinct. Round-10 window: the last 4 never-checked
-(q211/q212/q213/q216 — backlog hits 0), then the modified block
-newest-change-first — the 15 ancient_ts epoch-floor fixes, the ~20
-further queries whose oracles moved off DuckDB's truncating
-epoch_ms, the 19 null_text fixes, q165 + the 8 null_mass fixes, and
-the ~79 floor-grid conversions (each class's green rows predate its
-change; see ROADMAP r10) — oldest evidence beyond the window. All 263 queries are locally parity-green
-at sf0.001/0.01/0.1 under the hostile replica
-(tests/test_oracle_parity.py); the window exists purely to convert
-local evidence into driver CORRECTNESS rows. Ledger note: the green
-q121_simhash64_neardup rows map to q117's 64-bit form since r5 (the
-entry was folded in); the generator ignores ledger-only names.
+most need a fresh CORRECTNESS row first. The order is GENERATED from the
+committed evidence ledger by tools/gen_priority.py (that module states
+the policy) and pinned by a test, because a hand-kept list drifts from
+the evidence it is meant to follow. All 263 queries are locally
+parity-green at sf0.001/0.01/0.1 under the hostile replica
+(tests/test_oracle_parity.py); the order only decides which local
+evidence becomes a driver CORRECTNESS row first.
 """
 
 from __future__ import annotations

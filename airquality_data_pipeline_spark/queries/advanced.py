@@ -14,6 +14,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from airquality_data_pipeline_spark.functions.strings import md5_int, md5_int_sql
+from airquality_data_pipeline_spark.io import table
 from airquality_data_pipeline_spark.queries.common import (
     dec,
     dsum,
@@ -23,7 +24,6 @@ from airquality_data_pipeline_spark.queries.common import (
     sql_dsum,
     sql_floor_ms,
     sql_roundq,
-    table,
     ts_ms,
 )
 from airquality_data_pipeline_spark.queries.registry import register

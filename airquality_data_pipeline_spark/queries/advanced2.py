@@ -26,7 +26,7 @@ from airquality_data_pipeline_spark.functions.strings import (
     tokens,
     tokens_sql,
 )
-from airquality_data_pipeline_spark.io import local_frame
+from airquality_data_pipeline_spark.io import local_frame, table
 from airquality_data_pipeline_spark.operators.dedup import (
     shingle_array,
     word_shingles_sql,
@@ -53,7 +53,6 @@ from airquality_data_pipeline_spark.queries.common import (
     sql_floor_ms,
     sql_roundq,
     sql_roundz,
-    table,
 )
 from airquality_data_pipeline_spark.queries.registry import register
 

@@ -23,6 +23,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from airquality_data_pipeline_spark.functions.strings import md5_int, md5_int_sql
+from airquality_data_pipeline_spark.io import table
 from airquality_data_pipeline_spark.operators import fan_out
 from airquality_data_pipeline_spark.queries.common import (
     dec,
@@ -38,7 +39,6 @@ from airquality_data_pipeline_spark.queries.common import (
     sql_floor_ms,
     sql_roundq,
     sql_roundz,
-    table,
 )
 from airquality_data_pipeline_spark.queries.registry import register
 
@@ -1358,15 +1358,14 @@ def q258_offpolicy_eval(spark, sf_dir):
     SELECT CAST(bin AS BIGINT) AS bin,
            {p_ref_rq} AS p_ref, {p_cur_rq} AS p_cur,
            term AS psi_term,
-           CAST(SUM({term_dec}) OVER () AS DOUBLE)
-             AS psi_total
+           {psi_total} AS psi_total
     FROM terms
     """.format(
         # bin shares are k/n rationals (.5-tie class): guarded floor
         # grid; psi_term is ln-derived — tie-free (r10 q225 class)
         p_ref_rq=sql_roundq("p_ref"),
         p_cur_rq=sql_roundq("p_cur"),
-        term_dec=sql_dec("term"),
+        psi_total=sql_double(f"SUM({sql_dec('term')}) OVER ()"),
     ),
 )
 def q259_psi_drift(spark, sf_dir):

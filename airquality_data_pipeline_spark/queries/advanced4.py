@@ -21,6 +21,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from airquality_data_pipeline_spark.functions.strings import md5_int_sql, md5_unit
+from airquality_data_pipeline_spark.io import table
 from airquality_data_pipeline_spark.operators import fan_out
 from airquality_data_pipeline_spark.operators.similarity import cosine_sql
 from airquality_data_pipeline_spark.queries.common import (
@@ -36,7 +37,6 @@ from airquality_data_pipeline_spark.queries.common import (
     sql_floor_ms,
     sql_roundq,
     sql_roundz,
-    table,
 )
 from airquality_data_pipeline_spark.queries.registry import register
 
@@ -1500,7 +1500,7 @@ def q224_negative_sampling(spark, sf_dir):
     ),
     seas AS (
       SELECT dow,
-             CAST(SUM(dt) AS DOUBLE) / count(*) AS seasonal
+             {sum_dt} / count(*) AS seasonal
       FROM det GROUP BY dow
     )
     SELECT det.d, det.v, {trend_rq} AS trend,
@@ -1509,9 +1509,10 @@ def q224_negative_sampling(spark, sf_dir):
     FROM det JOIN seas s ON det.dow = s.dow
     """.format(
         dt=sql_dec("v - CAST(s7 AS DOUBLE) / 7"),
+        sum_dt=sql_double("SUM(dt)"),
         trend_rq=sql_roundq("det.trend"),
         seasonal_rq=sql_roundq("s.seasonal"),
-        residual_rq=sql_roundq("CAST(det.dt AS DOUBLE) - s.seasonal"),
+        residual_rq=sql_roundq(f"{sql_double('det.dt')} - s.seasonal"),
     ),
 )
 def q225_seasonal_decompose(spark, sf_dir):

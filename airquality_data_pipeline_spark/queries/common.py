@@ -30,91 +30,8 @@ the catalog:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-# Inferred-schema cache: without an explicit schema every
-# spark.read.parquet() runs a 1-task footer-read job AT PLAN BUILD,
-# which (a) makes QUERIES[name](spark, sf_dir) eager (r7 verdict:
-# plan construction must run zero Spark jobs) and (b) adds a fixed
-# per-query job to the bench loop. The key includes the file's
-# (mtime_ns, size) so an in-place fixture regeneration — e.g. the
-# events.ts TIMESTAMP(NANOS) <-> timestamp[us] flip that events_layout()
-# branches on — invalidates the entry instead of silently serving a
-# stale schema (r8 ADVICE); a local os.stat is not a Spark job, so
-# plan build stays job-free.
-_SCHEMA_CACHE: dict = {}
-
-
-def _fingerprint(path: str) -> tuple:
-    import os
-
-    try:
-        st = os.stat(path)
-        if os.path.isdir(path):
-            # Spark-written directory layout: an in-place part-file
-            # rewrite may not touch the directory's own (mtime, size),
-            # so fingerprint the newest contained file instead
-            # (r9 ADVICE). Today's fixtures are single files; this is
-            # the forward-proofing branch.
-            newest = max(
-                (os.stat(os.path.join(path, f)) for f in os.listdir(path)),
-                key=lambda s: s.st_mtime_ns,
-                default=st,
-            )
-            return (newest.st_mtime_ns, newest.st_size)
-        return (st.st_mtime_ns, st.st_size)
-    except OSError:
-        # missing/unstatable path: let spark.read raise the real error
-        return (0, 0)
-
-
-def _read_parquet(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = f"{sf_dir}/{name}.parquet"
-    key = (sf_dir, name, _fingerprint(path))
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        # evict superseded fingerprints for the same table so repeated
-        # fixture regens can't grow the cache unboundedly (r9 ADVICE)
-        for stale in [
-            k for k in _SCHEMA_CACHE if k[0] == sf_dir and k[1] == name
-        ]:
-            del _SCHEMA_CACHE[stale]
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema
-        return df
-    return spark.read.schema(schema).parquet(path)
-
-
-def events_layout(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Column]:
-    """The events fixture as stored, and the column that reads its `ts`
-    as a session timestamp — the one place that decides the layout, for
-    the batch `table()` and the file-source stream alike.
-
-    events.ts has shipped as both parquet TIMESTAMP(NANOS) (which Spark
-    4 rejects unless read as raw int64 via nanosAsLong) and plain
-    timestamp[us]. Branch on what the fixture actually holds:
-      * bigint  -> nanos-as-long fixture: floor-convert to a micros
-        instant (matches DuckDB's nanos->micros truncation).
-      * timestamp / timestamp_ntz -> micros fixture: cast to
-        session-local timestamp. The session is UTC (`registry.register`
-        pins it for every catalog builder; `session.get_spark` sessions,
-        which run the streams, start in it), so the wall clock is
-        preserved and matches DuckDB's naive timestamps.
-    """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = _read_parquet(spark, sf_dir, "events")
-    if dict(raw.dtypes)["ts"] == "bigint":
-        return raw, F.expr("timestamp_micros(ts div 1000)")
-    return raw, F.col("ts").cast("timestamp")
-
-
-def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        raw, ts = events_layout(spark, sf_dir)
-        return raw.withColumn("ts", ts)
-    return _read_parquet(spark, sf_dir, name)
 
 
 _INF = float("inf")

@@ -27,6 +27,7 @@ from airquality_data_pipeline_spark.functions.strings import (
     tokens,
     tokens_sql,
 )
+from airquality_data_pipeline_spark.io import table
 from airquality_data_pipeline_spark.operators import fan_out
 from airquality_data_pipeline_spark.operators.dedup import (
     MINHASH_SIGNATURES_SQL,
@@ -49,7 +50,6 @@ from airquality_data_pipeline_spark.queries.common import (
     sql_decq,
     sql_double,
     sql_roundq,
-    table,
 )
 from airquality_data_pipeline_spark.queries.registry import register
 

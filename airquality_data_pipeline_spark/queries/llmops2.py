@@ -26,6 +26,7 @@ from airquality_data_pipeline_spark.functions.strings import (
     md5_int_sql,
     md5_unit,
 )
+from airquality_data_pipeline_spark.io import table
 from airquality_data_pipeline_spark.operators.similarity import cosine_sql
 from airquality_data_pipeline_spark.queries.common import (
     dsum,
@@ -36,7 +37,6 @@ from airquality_data_pipeline_spark.queries.common import (
     sql_dsum,
     sql_finite,
     sql_roundq,
-    table,
 )
 from airquality_data_pipeline_spark.queries.registry import register
 

@@ -27,7 +27,7 @@ from airquality_data_pipeline_spark.functions.strings import (
     tokens,
     tokens_sql,
 )
-from airquality_data_pipeline_spark.io import local_frame
+from airquality_data_pipeline_spark.io import local_frame, table
 from airquality_data_pipeline_spark.operators import fan_out
 from airquality_data_pipeline_spark.queries.common import (
     dsum,
@@ -36,7 +36,6 @@ from airquality_data_pipeline_spark.queries.common import (
     sql_double,
     sql_dsum,
     sql_roundq,
-    table,
 )
 from airquality_data_pipeline_spark.queries.registry import register
 

@@ -10,12 +10,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.io import table
 from airquality_data_pipeline_spark.operators.multimodal import (
     extract_features,
     frame_sample,
     synthesize_corpus,
 )
-from airquality_data_pipeline_spark.queries.common import table
 from airquality_data_pipeline_spark.queries.registry import register
 
 

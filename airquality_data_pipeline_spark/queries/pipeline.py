@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.io import table
 from airquality_data_pipeline_spark.operators.cursor import (
     greatest_merge,
     incremental_filter,
@@ -23,7 +24,6 @@ from airquality_data_pipeline_spark.queries.common import (
     dsum,
     sql_dsum,
     sql_floor_ms,
-    table,
     ts_ms,
 )
 from airquality_data_pipeline_spark.queries.registry import register

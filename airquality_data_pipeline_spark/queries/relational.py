@@ -14,6 +14,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from airquality_data_pipeline_spark.functions.timeparse import local_to_utc
+from airquality_data_pipeline_spark.io import table
 from airquality_data_pipeline_spark.operators import fan_out
 from airquality_data_pipeline_spark.queries.common import (
     davg,
@@ -24,7 +25,6 @@ from airquality_data_pipeline_spark.queries.common import (
     sql_double,
     sql_dsum,
     sql_floor_ms,
-    table,
     ts_ms,
 )
 from airquality_data_pipeline_spark.queries.registry import register

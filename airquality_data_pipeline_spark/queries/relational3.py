@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.io import table
 from airquality_data_pipeline_spark.queries.common import (
     finite,
     spark_sql_dsum,
@@ -19,7 +20,6 @@ from airquality_data_pipeline_spark.queries.common import (
     sql_dsum,
     sql_finite,
     sql_floor_ms,
-    table,
     ts_ms,
 )
 from airquality_data_pipeline_spark.queries.registry import register

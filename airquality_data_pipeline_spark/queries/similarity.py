@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from airquality_data_pipeline_spark.functions.expr import materialize
+from airquality_data_pipeline_spark.io import table
 from airquality_data_pipeline_spark.operators.similarity import (
     HYPERPLANE_LSH_SQL,
     PLANTED_NEARDUP_CORPUS_SQL,
@@ -27,7 +28,6 @@ from airquality_data_pipeline_spark.queries.common import (
     sql_decq,
     sql_dsum,
     sql_roundq,
-    table,
 )
 from airquality_data_pipeline_spark.queries.registry import register
 

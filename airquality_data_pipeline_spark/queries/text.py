@@ -13,7 +13,7 @@ from airquality_data_pipeline_spark.functions.strings import (
     tokens,
     tokens_sql,
 )
-from airquality_data_pipeline_spark.io import local_frame
+from airquality_data_pipeline_spark.io import local_frame, table
 from airquality_data_pipeline_spark.operators.dedup import word_shingles_sql
 from airquality_data_pipeline_spark.operators.text import (
     LANG_MARKERS,
@@ -31,9 +31,9 @@ from airquality_data_pipeline_spark.queries.common import (
     dsum,
     roundq,
     sql_dec,
+    sql_double,
     sql_dsum,
     sql_roundq,
-    table,
 )
 from airquality_data_pipeline_spark.queries.registry import register
 
@@ -378,7 +378,7 @@ def q99_decontamination(spark, sf_dir):
             " / SUM(CAST(n_tokens AS DOUBLE)) OVER (), 0.3), 6)"
         ),
         w_rq=sql_roundq(
-            "CAST(pw AS DOUBLE) / CAST(SUM(pw) OVER () AS DOUBLE)"
+            f"{sql_double('pw')} / {sql_double('SUM(pw) OVER ()')}"
         ),
     ),
 )

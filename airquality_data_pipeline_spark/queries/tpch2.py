@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.io import table
 from airquality_data_pipeline_spark.queries.common import (
     dec,
     dsum,
@@ -37,7 +38,6 @@ from airquality_data_pipeline_spark.queries.common import (
     sql_dsum,
     sql_floor_ms,
     sql_roundq,
-    table,
     ts_ms,
 )
 from airquality_data_pipeline_spark.queries.registry import register

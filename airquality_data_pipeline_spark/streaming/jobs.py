@@ -17,47 +17,31 @@ format('kafka') with the same downstream plan.
 
 from __future__ import annotations
 
-import atexit
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.io import events_layout
+
 # events with ts stored as a timestamp, one of the two layouts
-# queries.common.events_layout accepts
+# io.events_layout accepts
 EVENTS_TS_SCHEMA = (
     "event_id long, ts timestamp_ntz, user_id long, event_type string, "
     "value double, props string"
 )
 
-_STREAM_DIRS: dict[str, str] = {}
-
-
-def _stage_dir(sf_dir: str) -> str:
-    """The file source wants a directory; stage one holding a symlink to
-    the single events parquet file (no copy)."""
-    if sf_dir not in _STREAM_DIRS:
-        d = tempfile.mkdtemp(prefix="events_stream_")
-        # removed at exit, not before: a stream reads its dir while it runs
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        os.symlink(f"{sf_dir}/events.parquet", f"{d}/events.parquet")
-        _STREAM_DIRS[sf_dir] = d
-    return _STREAM_DIRS[sf_dir]
-
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events fixture, with the stored
-    schema and `ts` conversion of `queries.common.events_layout` (the
-    schema comes from its cached read, so no footer job runs here)."""
-    from airquality_data_pipeline_spark.queries.common import events_layout
-
+    schema and `ts` conversion of `io.events_layout` (the schema comes
+    from its cached read, so no footer job runs here). The file source
+    wants a directory, so it lists `sf_dir` and keeps only the events
+    file."""
     raw, ts = events_layout(spark, sf_dir)
     return (
         spark.readStream.schema(raw.schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(_stage_dir(sf_dir))
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
         .withColumn("ts", ts)
     )
 

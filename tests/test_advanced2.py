@@ -31,7 +31,7 @@ def test_mixture_reweight_mass(spark, sf_dir):
 def test_ewma_between_min_max(spark, sf_dir):
     # EWMA is a convex combination of the last 20 values, so it must
     # lie inside the global [min, max] of the series
-    from airquality_data_pipeline_spark.queries.common import table
+    from airquality_data_pipeline_spark.io import table
 
     lo, hi = (
         table(spark, sf_dir, "events")

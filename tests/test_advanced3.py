@@ -7,8 +7,8 @@ from collections import defaultdict
 
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.io import table
 from airquality_data_pipeline_spark.queries import QUERIES
-from airquality_data_pipeline_spark.queries.common import table
 
 
 def test_roc_auc_matches_pairwise_model(spark, sf_dir):

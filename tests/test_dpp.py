@@ -11,7 +11,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from airquality_data_pipeline_spark.queries.common import table
+from airquality_data_pipeline_spark.io import table
 
 
 def test_dpp_prunes_fact_partitions(spark, sf_dir):

@@ -8,7 +8,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from airquality_data_pipeline_spark.queries.common import table
+from airquality_data_pipeline_spark.io import table
 
 
 def _canonical_events(spark, sf_dir):
@@ -73,7 +73,7 @@ def test_binaryfile_and_wholetext_sources(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from airquality_data_pipeline_spark.operators import multimodal
-    from airquality_data_pipeline_spark.queries.common import table
+    from airquality_data_pipeline_spark.io import table
 
     docs = (
         table(spark, sf_dir, "documents")

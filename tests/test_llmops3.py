@@ -11,8 +11,8 @@ from collections import Counter, defaultdict
 
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.io import table
 from airquality_data_pipeline_spark.queries import QUERIES
-from airquality_data_pipeline_spark.queries.common import table
 
 
 def _docs(spark, sf_dir):

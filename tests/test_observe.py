@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
-from airquality_data_pipeline_spark.queries.common import table
+from airquality_data_pipeline_spark.io import table
 
 
 def test_observed_metrics_match_direct_aggregates(spark, sf_dir):

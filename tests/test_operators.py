@@ -8,6 +8,7 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
+from airquality_data_pipeline_spark.io import table
 from airquality_data_pipeline_spark.operators import multimodal
 from airquality_data_pipeline_spark.operators.cursor import (
     greatest_merge,
@@ -15,7 +16,6 @@ from airquality_data_pipeline_spark.operators.cursor import (
 )
 from airquality_data_pipeline_spark.operators.dedup import word_shingles
 from airquality_data_pipeline_spark.operators.similarity import ivf_assign
-from airquality_data_pipeline_spark.queries.common import table
 
 
 def test_multimodal_extract_features(spark, sf_dir):

@@ -274,21 +274,17 @@ _EAGER_BUILD_WHITELIST = {
     "q230_band_threshold_sweep",
 }
 
-_TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
 
 def test_catalog_plan_build_runs_no_spark_jobs(spark, sf_dir):
     # Building a query must be plan CONSTRUCTION, not execution: at
     # 100 TB a driver-side count()/collect() at build time is a full
     # job before the real query starts, and it makes the catalog's
-    # build loop (bench.py, this test file, the driver) eager.
-    from airquality_data_pipeline_spark.queries.common import table
+    # build loop (bench.py, this test file, the driver) eager. The
+    # warm-up is perfbench's set-up, so this also checks that
+    # register_views fills the schema cache the catalog reads.
+    from airquality_data_pipeline_spark import io
 
-    for t in _TABLES:  # warm the parquet schema cache
-        table(spark, sf_dir, t)
+    io.register_views(spark, sf_dir)
 
     sc = spark.sparkContext
 
@@ -314,33 +310,23 @@ def test_catalog_plan_build_runs_no_spark_jobs(spark, sf_dir):
 
 
 def test_schema_cache_invalidated_on_fixture_regen(spark, tmp_path):
-    # r8 ADVICE: _SCHEMA_CACHE keyed only on (sf_dir, name) would serve
-    # a stale schema after an in-place fixture regeneration (e.g. the
-    # events.ts TIMESTAMP(NANOS) <-> timestamp[us] flip). The key now
-    # carries the file's (mtime_ns, size) fingerprint, so a rewrite is
-    # a cache miss and the new schema is re-inferred.
-    from airquality_data_pipeline_spark.queries.common import table
+    # The schema cache must not serve a stale schema after an in-place
+    # fixture regeneration (e.g. the events.ts TIMESTAMP(NANOS) <->
+    # timestamp[us] flip): the entry carries the file's (mtime_ns, size)
+    # stamp, so a rewrite re-infers the schema and overwrites the entry.
+    from airquality_data_pipeline_spark import io
 
     d = str(tmp_path)
-    spark.range(3).selectExpr("id AS a").toPandas().to_parquet(
-        f"{d}/regen.parquet"
-    )
-    assert table(spark, d, "regen").columns == ["a"]
-    os.utime(f"{d}/regen.parquet")  # ensure mtime moves even on fast fs
-    spark.range(3).selectExpr(
-        "id AS a", "CAST(id AS STRING) AS b"
-    ).toPandas().to_parquet(f"{d}/regen.parquet")
-    assert table(spark, d, "regen").columns == ["a", "b"]
-    # r9 ADVICE: superseded fingerprints for the same (sf_dir, name)
-    # are evicted on miss — repeated regens must not grow the cache
-    from airquality_data_pipeline_spark.queries.common import (
-        _SCHEMA_CACHE,
-    )
-
-    entries = [
-        k for k in _SCHEMA_CACHE if k[0] == d and k[1] == "regen"
-    ]
-    assert len(entries) == 1, entries
+    path = f"{d}/regen.parquet"
+    for cols in (["a"], ["a", "b"], ["a", "b", "c"]):  # two rewrites
+        spark.range(3).selectExpr(
+            *[f"CAST(id AS STRING) AS {c}" for c in cols]
+        ).toPandas().to_parquet(path)
+        os.utime(path)  # ensure mtime moves even on fast fs
+        assert io.table(spark, d, "regen").columns == cols
+    # one entry per path, however often the fixture is regenerated
+    assert [p for p in io._SCHEMAS if os.path.dirname(p) == d] == [path]
+    assert io._SCHEMAS[path][1].names == ["a", "b", "c"]
 
 
 def test_pagerank_iteration_join_not_forced_broadcast(spark):

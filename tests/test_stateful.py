@@ -10,7 +10,7 @@ import uuid
 
 from pyspark.sql import functions as F
 
-from airquality_data_pipeline_spark.queries.common import table
+from airquality_data_pipeline_spark.io import table
 from airquality_data_pipeline_spark.streaming.stateful import cursor_filter_stream
 from tests.conftest import run_to_memory
 

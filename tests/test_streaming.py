@@ -4,11 +4,12 @@ equivalent batch computation."""
 
 from __future__ import annotations
 
+import tempfile
 import uuid
 
 from pyspark.sql import functions as F
 
-from airquality_data_pipeline_spark.queries.common import table
+from airquality_data_pipeline_spark.io import table
 from airquality_data_pipeline_spark.streaming import jobs
 from tests.conftest import run_to_memory
 
@@ -19,11 +20,14 @@ def _drain(spark, df):
     return spark.sql(f"SELECT * FROM {name}")
 
 
-def test_stream_roundtrip_matches_batch(spark, sf_dir):
+def test_stream_roundtrip_matches_batch(spark, sf_dir, tmp_path, monkeypatch):
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     stream = jobs.read_events_stream(spark, sf_dir)
     got = _drain(spark, stream)
     batch = table(spark, sf_dir, "events")
     assert got.count() == batch.count()
+    # the file source reads the fixture dir itself: nothing is staged
+    assert not any(tmp_path.iterdir())
 
 
 def test_watermark_dedup_bounded_by_batch_dedup(spark, sf_dir):
@@ -195,22 +199,3 @@ def test_blocklist_screen_composes_with_streaming(spark, sf_dir, tmp_path):
     assert len(got) == len(batch)
     for r in got:
         assert (r.n_hits, r.verdict) == batch[r.doc_id], r.doc_id
-
-
-def test_stage_dir_removed_at_exit(tmp_path):
-    """Staged stream dirs live while the interpreter does, then go."""
-    import os
-    import subprocess
-    import sys
-    from pathlib import Path
-
-    code = (
-        "from airquality_data_pipeline_spark.streaming import jobs; "
-        f"print(jobs._stage_dir({str(tmp_path)!r}))"
-    )
-    staged = subprocess.run(
-        [sys.executable, "-c", code], cwd=Path(__file__).resolve().parents[1],
-        capture_output=True, text=True, check=True,
-    ).stdout.strip()
-    assert os.path.basename(staged).startswith("events_stream_")
-    assert not os.path.exists(staged)

@@ -21,7 +21,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from airquality_data_pipeline_spark.queries.common import table
+from airquality_data_pipeline_spark.io import table
 from airquality_data_pipeline_spark.streaming import jobs
 from tests.conftest import run_to_memory
 from tests.robustness.gen_alt_fixture import generate
