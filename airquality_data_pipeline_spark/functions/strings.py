@@ -18,11 +18,6 @@ def normalize_pollutant(col: Column | str) -> Column:
     return F.regexp_replace(F.lower(F.trim(c)), r"pm2[.,]5", "pm25")
 
 
-def is_allowed_pollutant(col: Column | str) -> Column:
-    """F4: normalized code in the allowlist (app/main.py:1051-1056)."""
-    return normalize_pollutant(col).isin(*POLLUTANTS)
-
-
 def is_automatic_station(station_type: Column | str) -> Column:
     """F2: PL automatic-station predicate (app/main.py:592-595)."""
     c = F.col(station_type) if isinstance(station_type, str) else station_type

@@ -63,14 +63,13 @@ def greatest_merge(
     cursors: DataFrame,
     updates: DataFrame,
     keys: tuple[str, ...],
-    ts_col: str = "last_observed_at",
 ) -> DataFrame:
-    """Upsert cursor rows keeping GREATEST(existing, incoming)
-    (reference app/main.py:263-267). Full-outer join + null-skipping
-    greatest — Delta MERGE shape without requiring Delta."""
-    old = cursors.select(*keys, F.col(ts_col).alias("_old_ts"))
-    new = updates.select(*keys, F.col(ts_col).alias("_new_ts"))
+    """Upsert cursor rows keeping GREATEST(existing, incoming) of
+    `last_observed_at` (reference app/main.py:263-267). Full-outer join +
+    null-skipping greatest — Delta MERGE shape without requiring Delta."""
+    old = cursors.select(*keys, F.col("last_observed_at").alias("_old_ts"))
+    new = updates.select(*keys, F.col("last_observed_at").alias("_new_ts"))
     return old.join(new, list(keys), "full_outer").select(
         *keys,
-        F.greatest(F.col("_old_ts"), F.col("_new_ts")).alias(ts_col),
+        F.greatest(F.col("_old_ts"), F.col("_new_ts")).alias("last_observed_at"),
     )

@@ -1,37 +1,25 @@
 """One-shot job entry points (SURVEY.md §3.2/§3.3): the reference ships
 six single-cycle modules (de/nl/pl x stations/measurements,
 README.md:15-23) plus housekeeping, each run by external orchestration.
-Here each is a function over (SparkSession, config) returning the result
-frame(s); perfbench's producer cycle and the tests call them.
+Here each is a function over frames returning the result frame(s);
+perfbench's producer cycle and the tests call them. The cycle's sinks
+are `streaming.sinks`: the cursor commit is `commit_cursor_batch` and
+the stations upsert `upsert_catalog_batch`.
 
 Live HTTP ingestion is out of scope in this offline environment; the
-measurement jobs take a bronze frame (from the REST DataSource, a replay
-parquet, or the synthetic source) and run the identical silver plan.
+measurement job takes a bronze frame (from the REST DataSource, a replay
+parquet, or the synthetic source) and runs the identical silver plan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
-from airquality_data_pipeline_spark.operators.merge import (
-    coalesce_merge,
-    retention_filter,
-)
+from airquality_data_pipeline_spark.operators.merge import retention_filter
 from airquality_data_pipeline_spark.plans.pipeline import (
     CycleResult,
-    kafka_payload,
     silver_measurements,
 )
-from airquality_data_pipeline_spark.sources.synthetic import synthetic_measurements
-
-
-def refresh_catalog_job(
-    current: DataFrame, incoming: DataFrame
-) -> DataFrame:
-    """Stations-catalog refresh (de/nl/pl_stations analog): COALESCE-
-    merge incoming rows into the current dimension (K2 semantics —
-    nulls never clobber)."""
-    return coalesce_merge(current, incoming, key="station_id")
 
 
 def measurements_job(
@@ -44,23 +32,9 @@ def measurements_job(
     once, here; the payload is materialized and the pending cursors are
     the max ts per key over it. The caller emits
     kafka_payload(result.payload) and, on success, commits
-    commit_cursors(cursors, result.pending_cursors) — the reference's
-    commit-after-emit ordering (app/main.py:1342-1347)."""
+    result.pending_cursors with sinks.commit_cursor_batch — the
+    reference's commit-after-emit ordering (app/main.py:1342-1347)."""
     return silver_measurements([bronze], stations, cursors)
-
-
-def synthetic_cycle_job(
-    spark: SparkSession,
-    stations: DataFrame,
-    cursors: DataFrame,
-    n: int = 100,
-) -> tuple[DataFrame, CycleResult]:
-    """PIPELINE_LIVE_API=false analog (app/main.py:1336-1338): generate
-    a synthetic batch and run the full cycle; returns (wire payload,
-    cycle result)."""
-    bronze = synthetic_measurements(spark, n=n)
-    result = silver_measurements([bronze], stations, cursors)
-    return kafka_payload(result.payload), result
 
 
 def housekeeping_job(

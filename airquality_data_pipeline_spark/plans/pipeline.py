@@ -21,13 +21,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from airquality_data_pipeline_spark.functions.strings import (
-    is_allowed_pollutant,
+    POLLUTANTS,
     normalize_pollutant,
 )
-from airquality_data_pipeline_spark.operators.cursor import (
-    greatest_merge,
-    incremental_filter,
-)
+from airquality_data_pipeline_spark.operators.cursor import incremental_filter
 from airquality_data_pipeline_spark.operators.dedup import first_wins_dedup
 
 
@@ -35,25 +32,6 @@ from airquality_data_pipeline_spark.operators.dedup import first_wins_dedup
 class CycleResult:
     payload: DataFrame          # deduped canonical records, materialized
     pending_cursors: DataFrame  # max ts per key over payload, commit post-emit
-
-
-def isolated_bronze(
-    sources: dict[str, object],
-) -> tuple[list[DataFrame], dict[str, str]]:
-    """Per-source fault isolation (reference app/main.py:1219-1248,
-    1266-1318: one country failing never kills the cycle). Each entry is
-    a zero-arg callable producing that source's bronze frame; failures
-    are collected, survivors proceed. Build-time errors (fetch, parse,
-    schema) are caught here; for action-time isolation run each source
-    as its own query/foreachBatch, which this structure permits."""
-    frames: list[DataFrame] = []
-    errors: dict[str, str] = {}
-    for name, build in sources.items():
-        try:
-            frames.append(build())
-        except Exception as exc:  # noqa: BLE001 - isolation is the point
-            errors[name] = f"{type(exc).__name__}: {exc}"
-    return frames, errors
 
 
 def canonical_union(frames: list[DataFrame]) -> DataFrame:
@@ -77,7 +55,7 @@ def silver_measurements(
     clean = (
         raw.where(F.col("value").isNotNull())
         .withColumn("pollutant", normalize_pollutant("pollutant"))
-        .where(is_allowed_pollutant("pollutant"))
+        .where(F.col("pollutant").isin(*POLLUTANTS))
     )
     # J1: broadcast station enrichment (app/main.py:651-695 lookup caches)
     dim = F.broadcast(
@@ -130,11 +108,3 @@ def kafka_payload(df: DataFrame) -> DataFrame:
         F.to_json(F.struct(*df.columns)).alias("value"),
     )
 
-
-def commit_cursors(cursors: DataFrame, pending: DataFrame) -> DataFrame:
-    """K3: GREATEST-merge commit — call only after the emit action has
-    succeeded (reference app/main.py:1342-1347 commits in the `else`
-    branch of the try/except around the Kafka send)."""
-    return greatest_merge(
-        cursors, pending, keys=("station_id", "pollutant"), ts_col="last_observed_at"
-    )

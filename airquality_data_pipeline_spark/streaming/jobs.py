@@ -75,16 +75,6 @@ def tumbling_counts(events: DataFrame) -> DataFrame:
     )
 
 
-def kafka_shaped(df: DataFrame) -> DataFrame:
-    """K1 sink projection: key/value JSON exactly as the reference emits
-    (app/main.py:285). Point .writeStream.format('kafka') at it in a
-    deployment; tests use the memory sink."""
-    return df.select(
-        F.col("user_id").cast("string").alias("key"),
-        F.to_json(F.struct(*df.columns)).alias("value"),
-    )
-
-
 def kafka_writer_config(
     topic: str,
     bootstrap_servers: str,
@@ -93,30 +83,29 @@ def kafka_writer_config(
     security_protocol: str = "SASL_SSL",
     sasl_mechanism: str = "PLAIN",
 ) -> dict[str, str]:
-    """K1: the EXACT .writeStream.format('kafka') options a deployment
-    sets — the Structured Streaming translation of the reference's
-    kafka-python producer (app/main.py:280-304):
+    """K1: the EXACT format('kafka') writer options a deployment sets —
+    the Spark Kafka sink translation of the reference's kafka-python
+    producer (app/main.py:280-304):
 
       reference KafkaProducer kwarg      -> Spark writer option
       bootstrap_servers (comma list)     -> kafka.bootstrap.servers
       security_protocol ('SASL_SSL')     -> kafka.security.protocol
       sasl_mechanism ('PLAIN')           -> kafka.sasl.mechanism
       sasl_plain_username/password       -> kafka.sasl.jaas.config
-      value_serializer=json.dumps        -> kafka_shaped() value column
+      value_serializer=json.dumps        -> kafka_payload() value column
       per-record future.get(timeout=10)  -> kafka.acks=all + task commit
                                             (app/main.py:1174-1180; Spark
                                             flushes and waits at task
                                             commit = same at-least-once)
 
-    The payload schema contract is kafka_shaped(): key string, value
-    string (JSON body). Executing this sink needs the
-    spark-sql-kafka-0-10 connector jar + a broker, neither present in
-    this environment — the options and wire format are pinned by
-    tests/test_streaming.py so a deployment only adds the jar:
+    The payload schema contract is plans.pipeline.kafka_payload(): key
+    string (station_id), value string (JSON body). Executing this sink
+    needs the spark-sql-kafka-0-10 connector jar + a broker, neither
+    present in this environment — the options and wire format are
+    pinned by tests/test_streaming.py so a deployment only adds the jar:
 
-      spark.readStream... -> kafka_shaped(df).writeStream
-        .format("kafka").options(**kafka_writer_config(...))
-        .option("checkpointLocation", ...).start()
+      kafka_payload(result.payload).write.format("kafka")
+        .options(**kafka_writer_config(...)).save()
     """
     opts = {
         "kafka.bootstrap.servers": bootstrap_servers,

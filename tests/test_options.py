@@ -58,9 +58,7 @@ KEEP = {
         "iteration bound; tests drive the not-converged warning",
     ("operators/windows.py", "global_row_number", "num_partitions"): "tests vary it",
     ("operators/windows.py", "global_ntile", "num_partitions"): "tests vary it",
-    ("plans/jobs.py", "synthetic_cycle_job", "n"): "tests vary it",
-    ("sources/synthetic.py", "synthetic_measurements", "n"):
-        "synthetic_cycle_job forwards its n",
+    ("sources/synthetic.py", "synthetic_measurements", "n"): "tests size the batch",
 }
 
 
@@ -156,21 +154,17 @@ def test_keep_lists_only_unset_parameters():
 
 
 # (module under the package, top-level name) -> why it stays unreached
-ITEM_1 = "ROADMAP item 1 wires it into the producer cycle"
 ITEM_2 = "ROADMAP item 2 wires it into the producer cycle"
 KEEP_SYMBOLS = {
-    ("plans/pipeline.py", "isolated_bronze"): ITEM_1,
-    ("plans/pipeline.py", "commit_cursors"): ITEM_1,
-    ("plans/jobs.py", "synthetic_cycle_job"): ITEM_1,
-    ("plans/jobs.py", "refresh_catalog_job"): ITEM_2,
     ("sources/parsers.py", "parse_de_measure_payload"): ITEM_2,
     ("sources/parsers.py", "parse_de_station_rows"): ITEM_2,
     ("sources/parsers.py", "parse_pl_station_rows"): ITEM_2,
     ("sources/parsers.py", "parse_nl_station_details"): ITEM_2,
     ("functions/strings.py", "is_automatic_station"): ITEM_2,
     ("sources/rest.py", "requests_transport_factory"): "deployment stand-in: live HTTP",
-    ("streaming/jobs.py", "kafka_shaped"): "deployment stand-in: Kafka sink payload",
     ("streaming/jobs.py", "kafka_writer_config"): "deployment stand-in: Kafka sink options",
+    ("sources/synthetic.py", "synthetic_measurements"):
+        "the reference's S8 offline source (PIPELINE_LIVE_API=false)",
     ("operators/similarity.py", "neardup_pairs"):
         "reference that tests compare lsh_gated_neardup against",
     ("streaming/jobs.py", "read_events_stream"):

@@ -8,6 +8,8 @@ import json
 import sqlite3
 import tempfile
 
+import pytest
+from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
 from airquality_data_pipeline_spark import io
@@ -118,6 +120,35 @@ def _logging_transport(log: str, grow: bool):
     return transport
 
 
+def _feed(spark, source: str, transport, **options):
+    """One country's replay feed through the REST source."""
+    spark.dataSource.register(rest.RestMeasurementsSource)
+    return (
+        spark.read.format("rest_measurements")
+        .option("transport_pickle", rest.transport_option(transport))
+        .option("base_url", f"replay://{source}")
+        .option("max_pages", str(PAGES))
+        .option("num_shards", "2")
+        .options(**options)
+        .load()
+        .withColumn("source", F.lit(source))
+    )
+
+
+def _bronze(spark, *feeds):
+    return pipeline.canonical_union(
+        [spark.createDataFrame([], io.MEASUREMENT_SCHEMA), *feeds]
+    )
+
+
+def _committed(db: str) -> dict[tuple[str, str], str]:
+    return {
+        (s, p): ts for s, p, ts in sqlite3.connect(db).execute(
+            "SELECT station_id, pollutant, last_observed_at FROM ingestion_cursors"
+        )
+    }
+
+
 def _rest_cycle(spark, tmp_path, grow: bool = False):
     """One producer cycle over the REST source: emit the payload to a
     parquet sink, then commit the cursors. Returns the transport calls
@@ -125,19 +156,7 @@ def _rest_cycle(spark, tmp_path, grow: bool = False):
     max timestamp per key over the written payload."""
     log, db, sink = (str(tmp_path / n) for n in ("calls.log", "state.db", "sink"))
     open(log, "w").close()
-    spark.dataSource.register(rest.RestMeasurementsSource)
-    feed = (
-        spark.read.format("rest_measurements")
-        .option("transport_pickle", rest.transport_option(_logging_transport(log, grow)))
-        .option("base_url", "replay://nl")
-        .option("max_pages", str(PAGES))
-        .option("num_shards", "2")
-        .load()
-        .withColumn("source", F.lit("nl"))
-    )
-    bronze = pipeline.canonical_union(
-        [spark.createDataFrame([], io.MEASUREMENT_SCHEMA), feed]
-    )
+    bronze = _bronze(spark, _feed(spark, "nl", _logging_transport(log, grow)))
     result = jobs.measurements_job(
         bronze, spark.createDataFrame([], io.STATION_SCHEMA),
         sinks.load_cursors(db, "nl", spark),
@@ -152,12 +171,7 @@ def _rest_cycle(spark, tmp_path, grow: bool = False):
         m = json.loads(r.value)
         key = (m["station_id"], m["pollutant"])
         emitted[key] = max(emitted.get(key, ""), m["timestamp"])
-    committed = {
-        (s, p): ts for s, p, ts in sqlite3.connect(db).execute(
-            "SELECT station_id, pollutant, last_observed_at FROM ingestion_cursors"
-        )
-    }
-    return calls_after_emit, calls_after_commit, committed, emitted
+    return calls_after_emit, calls_after_commit, _committed(db), emitted
 
 
 def test_cycle_reads_each_page_once(spark, tmp_path):
@@ -176,6 +190,34 @@ def test_committed_cursors_are_max_over_emitted_rows(spark, tmp_path):
     _, _, committed, emitted = _rest_cycle(spark, tmp_path, grow=True)
     assert len(emitted) == 2 * PAGES
     assert committed == emitted
+
+
+def test_throttled_feed_fails_the_cycle_before_any_write(spark, tmp_path):
+    """A feed whose every request is throttled fails the whole cycle at
+    the silver plan's action: the healthy feed beside it is not emitted
+    either, no sink is written and no cursor moves, so the next cycle
+    starts from the last commit. (Errors-as-rows, ROADMAP item 2, is to
+    emit the healthy feed instead.)"""
+    _, _, first, _ = _rest_cycle(spark, tmp_path)
+    db, sink = str(tmp_path / "state.db"), tmp_path / "sink2"
+
+    def throttled(url, params):
+        raise rest.RateLimited("429")
+
+    bronze = _bronze(
+        spark,
+        _feed(spark, "nl", _logging_transport(str(tmp_path / "calls2.log"), False)),
+        _feed(spark, "de", throttled, max_retries="0"),
+    )
+    with pytest.raises(PythonException, match="RateLimited"):
+        result = jobs.measurements_job(
+            bronze, spark.createDataFrame([], io.STATION_SCHEMA),
+            sinks.load_cursors(db, "nl", spark),
+        )
+        pipeline.kafka_payload(result.payload).write.parquet(str(sink))
+        sinks.commit_cursor_batch(db, result.pending_cursors, source="nl")
+    assert first and _committed(db) == first
+    assert not sink.exists()
 
 
 def test_postgres_dialect_sql_text():

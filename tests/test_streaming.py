@@ -9,7 +9,8 @@ import uuid
 
 from pyspark.sql import functions as F
 
-from airquality_data_pipeline_spark.io import table
+from airquality_data_pipeline_spark.io import MEASUREMENT_SCHEMA, table
+from airquality_data_pipeline_spark.plans.pipeline import kafka_payload
 from airquality_data_pipeline_spark.streaming import jobs
 from tests.conftest import run_to_memory
 
@@ -64,17 +65,7 @@ def test_tumbling_counts_match_batch(spark, sf_dir):
         assert batch_rows[k] == v
 
 
-def test_kafka_shaped_payload(spark, sf_dir):
-    stream = jobs.read_events_stream(spark, sf_dir)
-    got = _drain(spark, jobs.kafka_shaped(stream)).limit(5).collect()
-    import json
-
-    for r in got:
-        body = json.loads(r.value)
-        assert {"event_id", "user_id", "event_type"} <= set(body)
-
-
-def test_kafka_writer_config_pins_reference_producer(spark, sf_dir):
+def test_kafka_writer_config_pins_reference_producer(spark):
     """No connector jar/broker in this environment, so pin the exact
     production writer: every reference KafkaProducer kwarg
     (app/main.py:283-299) must map to its Spark kafka-sink option, and
@@ -102,7 +93,7 @@ def test_kafka_writer_config_pins_reference_producer(spark, sf_dir):
     )
 
     # wire contract: the kafka sink requires key/value (string|binary)
-    shaped = jobs.kafka_shaped(jobs.read_events_stream(spark, sf_dir))
+    shaped = kafka_payload(spark.createDataFrame([], MEASUREMENT_SCHEMA))
     assert dict(shaped.dtypes) == {"key": "string", "value": "string"}
 
 
