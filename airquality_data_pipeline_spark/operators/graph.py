@@ -42,12 +42,11 @@ def _warn_not_converged(fn_name: str, max_iter: int) -> None:
 def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
-    id_col: str = "id",
     max_iter: int = 20,
 ) -> DataFrame:
     """Return (id, component) with component = min node id reachable
-    over the (id_a, id_b) edges. Nodes absent from any edge form
-    singleton components."""
+    over the (id_a, id_b) edges, for the nodes(id). Nodes absent from
+    any edge form singleton components."""
     sym = (
         edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(
@@ -58,9 +57,7 @@ def connected_components(
         .distinct()
         .localCheckpoint()
     )
-    labels = nodes.select(
-        F.col(id_col).alias("id"), F.col(id_col).alias("component")
-    ).localCheckpoint()
+    labels = nodes.select("id", F.col("id").alias("component")).localCheckpoint()
 
     for _ in range(max_iter):
         msgs = sym.join(labels, sym.src == labels.id).select(
@@ -100,7 +97,6 @@ def _sym(e: DataFrame) -> DataFrame:
 def connected_components_star(
     nodes: DataFrame,
     edges: DataFrame,
-    id_col: str = "id",
     max_iter: int = 30,
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star
@@ -119,7 +115,8 @@ def connected_components_star(
     shuffles per round.
 
     Returns (id, component) with component = min node id reachable
-    over the (id_a, id_b) edges; isolated nodes are singletons.
+    over the (id_a, id_b) edges, for the nodes(id); isolated nodes are
+    singletons.
     """
     e = _sym(
         edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
@@ -157,7 +154,7 @@ def connected_components_star(
         .select(F.col("u").alias("id"), "component")
     )
     return (
-        nodes.select(F.col(id_col).alias("id"))
+        nodes.select("id")
         .join(labels, "id", "left")
         .select(
             "id", F.coalesce("component", F.col("id")).alias("component")

@@ -12,7 +12,11 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from airquality_data_pipeline_spark.functions.strings import md5_int, tokens
+from airquality_data_pipeline_spark.functions.strings import (
+    md5_int,
+    tokens,
+    tokens_sql,
+)
 from airquality_data_pipeline_spark.operators import fan_out
 
 # Stopword marker sets per language (word-boundary regexes). Deliberately
@@ -25,6 +29,14 @@ LANG_MARKERS: dict[str, str] = {
     "fr": r"\b(le|la|les|et|un|une|est|pour|dans|que)\b",
 }
 _LANG_ORDER = ("en", "es", "de", "fr")
+# the punctuation and digit classes quality_features counts
+_PUNCT = r"[.,;:!?]"
+_DIGIT = r"[0-9]"
+
+
+def regexp_count_sql(expr: str, pattern: str) -> str:
+    """DuckDB twin of F.regexp_count: the number of matches."""
+    return f"len(regexp_extract_all({expr}, '{pattern}'))"
 
 
 def lang_scores(text: Column) -> list[Column]:
@@ -73,8 +85,8 @@ def quality_features(
     n_tokens = F.size(toks)
     denom_t = F.greatest(n_tokens, F.lit(1)).cast("double")
     denom_c = F.greatest(n_chars, F.lit(1)).cast("double")
-    n_punct = F.regexp_count(t, F.lit(r"[.,;:!?]"))
-    n_digit = F.regexp_count(t, F.lit(r"[0-9]"))
+    n_punct = F.regexp_count(t, F.lit(_PUNCT))
+    n_digit = F.regexp_count(t, F.lit(_DIGIT))
     n_stop = F.regexp_count(F.lower(t), F.lit(LANG_MARKERS["en"]))
     avg_tok_len = (n_chars - (n_tokens - 1)).cast("double") / denom_t
     punct_ratio = n_punct.cast("double") / denom_c
@@ -97,6 +109,42 @@ def quality_features(
         quality.alias("quality"),
         *(keep or []),
     )
+
+
+def quality_features_sql(src: str, carry: tuple[str, ...]) -> str:
+    """DuckDB twin of quality_features: the CTE `q` over the relation
+    src(doc_id, text, *carry), with quality_features' columns and then
+    carry. The same expression tree on the same doubles, so both
+    engines score each document bit-identically."""
+    c = "".join(f", {x}" for x in carry)
+    return f"""
+    q AS (
+      SELECT doc_id, n_chars_calc, n_tokens, avg_tok_len, punct_ratio,
+             digit_ratio, stop_ratio,
+             least(CAST(n_tokens AS DOUBLE) / 50.0, 1.0) * 0.4
+               + least(stop_ratio * 5.0, 1.0) * 0.3
+               + (1.0 - least(punct_ratio * 10.0, 1.0)) * 0.2
+               + (1.0 - least(digit_ratio * 10.0, 1.0)) * 0.1 AS quality{c}
+      FROM (
+        SELECT doc_id{c}, n_chars_calc, n_tokens,
+               CAST(n_chars_calc - (n_tokens - 1) AS DOUBLE)
+                 / CAST(greatest(n_tokens, 1) AS DOUBLE) AS avg_tok_len,
+               CAST(n_punct AS DOUBLE)
+                 / CAST(greatest(n_chars_calc, 1) AS DOUBLE) AS punct_ratio,
+               CAST(n_digit AS DOUBLE)
+                 / CAST(greatest(n_chars_calc, 1) AS DOUBLE) AS digit_ratio,
+               CAST(n_stop AS DOUBLE)
+                 / CAST(greatest(n_tokens, 1) AS DOUBLE) AS stop_ratio
+        FROM (
+          SELECT doc_id{c}, length(text) AS n_chars_calc,
+                 len({tokens_sql("text")}) AS n_tokens,
+                 {regexp_count_sql("text", _PUNCT)} AS n_punct,
+                 {regexp_count_sql("text", _DIGIT)} AS n_digit,
+                 {regexp_count_sql("lower(text)", LANG_MARKERS["en"])} AS n_stop
+          FROM {src}
+        )
+      )
+    )"""
 
 
 def token_counts(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -630,6 +678,44 @@ def bm25_expr() -> str:
         f" * (tf * {BM25_K1 + 1.0!r})"
         f" / (tf + {BM25_K1!r} * (1 - {BM25_B!r} + {BM25_B!r} * dl / avgdl))"
     )
+
+
+def bm25_scores_sql(src: str) -> str:
+    """DuckDB twin of bm25_topk's statistics and scoring, before the
+    top-k: the CTEs d, toks, tf, dfreq and stats over src(doc_id, text),
+    then scored(query_id, doc_id, score) for the query relation
+    q(query_id, term), which the caller defines first. dfreq counts
+    every term, not only the query terms; over a query term it equals
+    bm25_topk's pruned count."""
+    # function-level: queries/ imports this module
+    from airquality_data_pipeline_spark.queries.common import sql_dsum
+
+    return f"""
+    d AS (
+      SELECT doc_id,
+             CASE WHEN length(trim(text)) = 0 THEN 0
+                  ELSE len({tokens_sql("text")}) END AS dl,
+             lower(trim(text)) AS t
+      FROM {src}
+    ),
+    toks AS (
+      SELECT doc_id, unnest(string_split_regex(t, '\\s+')) AS term
+      FROM d WHERE dl > 0
+    ),
+    tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY doc_id, term),
+    dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
+    stats AS (
+      SELECT count(*) AS n, CAST(SUM(dl) AS DOUBLE) / count(*) AS avgdl FROM d
+    ),
+    scored AS (
+      SELECT q.query_id, tf.doc_id, {sql_dsum(bm25_expr())} AS score
+      FROM tf
+      JOIN q ON tf.term = q.term
+      JOIN dfreq ON tf.term = dfreq.term
+      JOIN d ON tf.doc_id = d.doc_id
+      CROSS JOIN stats
+      GROUP BY q.query_id, tf.doc_id
+    )"""
 
 
 def bm25_topk(

@@ -19,11 +19,13 @@ from airquality_data_pipeline_spark.queries.common import (
     dec,
     dsum,
     roundq,
+    split_bucket,
     sql_dec,
     sql_double,
     sql_dsum,
     sql_floor_ms,
     sql_roundq,
+    sql_split_bucket,
     ts_ms,
 )
 from airquality_data_pipeline_spark.queries.registry import register
@@ -86,8 +88,7 @@ def q85_doc_chunking(spark, sf_dir):
     oracle=f"""
     WITH b AS (
       SELECT doc_id, lang,
-             {md5_int_sql("CAST(doc_id AS VARCHAR)", 1, 8)} % 100
-               AS bucket
+             {sql_split_bucket("doc_id")} AS bucket
       FROM documents
     )
     SELECT doc_id, lang, CAST(bucket AS INT) AS bucket,
@@ -99,7 +100,7 @@ def q85_doc_chunking(spark, sf_dir):
 )
 def q86_hash_split(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
-    bucket = md5_int(F.col("doc_id").cast("string"), 1, 8) % 100
+    bucket = split_bucket("doc_id")
     return docs.select(
         "doc_id",
         "lang",
@@ -352,8 +353,7 @@ def q93_snapshot_diff(spark, sf_dir):
     oracle=f"""
     WITH b AS (
       SELECT doc_id, lang,
-             {md5_int_sql("CAST(doc_id AS VARCHAR)", 1, 8)} % 100
-               AS bucket
+             {sql_split_bucket("doc_id")} AS bucket
       FROM documents
     )
     SELECT doc_id, lang, CAST(bucket AS INT) AS bucket
@@ -363,7 +363,7 @@ def q93_snapshot_diff(spark, sf_dir):
 )
 def q94_stratified_sample(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
-    bucket = md5_int(F.col("doc_id").cast("string"), 1, 8) % 100
+    bucket = split_bucket("doc_id")
     quota = F.when(F.col("lang") == "en", F.lit(20)).otherwise(F.lit(60))
     return (
         docs.select("doc_id", "lang", bucket.cast("int").alias("bucket"))

@@ -28,17 +28,21 @@ from airquality_data_pipeline_spark.operators import fan_out
 from airquality_data_pipeline_spark.queries.common import (
     dec,
     dsum,
+    epoch_day,
     finite,
     roundq,
     roundz,
     spark_sql_dsum,
+    split_bucket,
     sql_dec,
     sql_double,
     sql_dsum,
+    sql_epoch_day,
     sql_finite,
     sql_floor_ms,
     sql_roundq,
     sql_roundz,
+    sql_split_bucket,
 )
 from airquality_data_pipeline_spark.queries.registry import register
 
@@ -275,10 +279,11 @@ def q191_acf(spark, sf_dir):
       FROM s
     )
     SELECT event_type, n AS n_days,
-           date_diff('day', DATE '1970-01-01', d) AS chg_epoch_day,
+           {d_day} AS chg_epoch_day,
            {peak_rq} AS cusum_peak
     FROM r WHERE rk = 1
     """.format(
+        d_day=sql_epoch_day("d"),
         # s_t = cum - t*tot/n is an integer rational (.5-tie class):
         # guarded floor grid, which also normalizes -0.0 (r10 q225)
         peak_rq=sql_roundq("s_t"),
@@ -315,7 +320,7 @@ def q192_cusum_changepoint(spark, sf_dir):
         .select(
             "event_type",
             F.col("n").alias("n_days"),
-            F.datediff("d", F.lit("1970-01-01")).alias("chg_epoch_day"),
+            epoch_day("d").alias("chg_epoch_day"),
             roundq(F.col("s_t")).alias("cusum_peak"),
         )
     )
@@ -431,12 +436,11 @@ def q193_survival_km(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q194_interval_union",
-    oracle="""
+    oracle=f"""
     WITH iv AS (
       SELECT l_suppkey,
-             date_diff('day', DATE '1970-01-01',
-                       CAST(l_shipdate AS DATE)) AS s,
-             date_diff('day', DATE '1970-01-01', CAST(l_shipdate AS DATE))
+             {sql_epoch_day("l_shipdate")} AS s,
+             {sql_epoch_day("l_shipdate")}
                + CAST(l_quantity AS BIGINT) AS e,
              l_orderkey, l_linenumber
       FROM lineitem
@@ -482,11 +486,9 @@ def q194_interval_union(spark, sf_dir):
 
     li = table(spark, sf_dir, "lineitem").select(
         "l_suppkey",
-        F.datediff(F.to_date("l_shipdate"), F.lit("1970-01-01"))
-        .cast("long")
-        .alias("s"),
+        epoch_day("l_shipdate").cast("long").alias("s"),
         (
-            F.datediff(F.to_date("l_shipdate"), F.lit("1970-01-01"))
+            epoch_day("l_shipdate")
             + F.col("l_quantity").cast("long")
         ).alias("e"),
         "l_orderkey",
@@ -511,11 +513,10 @@ def q194_interval_union(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q195_activity_streaks",
-    oracle="""
+    oracle=f"""
     WITH days AS (
       SELECT DISTINCT user_id,
-             date_diff('day', DATE '1970-01-01',
-                       CAST(date_trunc('day', ts) AS DATE)) AS day
+             {sql_epoch_day("ts")} AS day
       FROM events
     ),
     runs AS (
@@ -539,9 +540,7 @@ def q195_activity_streaks(spark, sf_dir):
     ev = table(spark, sf_dir, "events").select("user_id", "ts")
     days = ev.select(
         "user_id",
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
-        .cast("long")
-        .alias("day"),
+        epoch_day("ts").cast("long").alias("day"),
     ).distinct()
     w = W.partitionBy("user_id").orderBy("day")
     runs = days.select(
@@ -1475,7 +1474,7 @@ def q259_psi_drift(spark, sf_dir):
     WITH ev AS (
       SELECT event_id, event_type, value,
              CAST(hour(ts) AS BIGINT) AS hr,
-             {h} % 100 AS bucket
+             {bucket} AS bucket
       FROM events WHERE value IS NOT NULL
     ),
     pred AS (
@@ -1519,7 +1518,7 @@ def q259_psi_drift(spark, sf_dir):
     FROM test t, qhat q
     GROUP BY 1, 2
     """.format(
-        h=md5_int_sql("CAST(event_id AS VARCHAR)", 1, 8),
+        bucket=sql_split_bucket("event_id"),
         sum_value=sql_dsum("value"),
         # coverage = k/n count ratio (.5-tie class): guarded floor grid
         cov_rq=sql_roundq(
@@ -1531,7 +1530,7 @@ def q259_psi_drift(spark, sf_dir):
 def q260_conformal_calibration(spark, sf_dir):
     from pyspark.sql import Window as _W
 
-    bucket = md5_int(F.col("event_id").cast("string"), 1, 8) % 100
+    bucket = split_bucket("event_id")
     # a NULL target has no residual: its rank position (Spark nulls
     # first, DuckDB nulls last) would move q_hat — excluded on BOTH
     # engines (null_mass axis)

@@ -27,12 +27,14 @@ from airquality_data_pipeline_spark.operators.similarity import cosine_sql
 from airquality_data_pipeline_spark.queries.common import (
     dec,
     dsum,
+    epoch_day,
     finite,
     roundq,
     roundz,
     sql_dec,
     sql_double,
     sql_dsum,
+    sql_epoch_day,
     sql_finite,
     sql_floor_ms,
     sql_roundq,
@@ -335,11 +337,10 @@ def q204_info_gain(spark, sf_dir):
 # --------------------------------------------------------------------------
 @register(
     "q205_rolling_median",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type,
-             date_diff('day', DATE '1970-01-01',
-                       CAST(date_trunc('day', ts) AS DATE)) AS d,
+             {sql_epoch_day("ts")} AS d,
              CAST(count(*) AS BIGINT) AS v
       FROM events GROUP BY 1, 2
     )
@@ -353,9 +354,7 @@ def q205_rolling_median(spark, sf_dir):
     ev = table(spark, sf_dir, "events").select("event_type", "ts")
     daily = ev.groupBy(
         "event_type",
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
-        .cast("long")
-        .alias("d"),
+        epoch_day("ts").cast("long").alias("d"),
     ).agg(F.count(F.lit(1)).alias("v"))
     w = (
         W.partitionBy("event_type")
@@ -604,8 +603,7 @@ def q208_topn_with_other(spark, sf_dir):
     "q209_binary_segmentation",
     oracle="""
     WITH daily AS (
-      SELECT date_diff('day', DATE '1970-01-01',
-                       CAST(date_trunc('day', ts) AS DATE)) AS d,
+      SELECT {ts_day} AS d,
              CAST(count(*) AS BIGINT) AS v
       FROM events GROUP BY 1
     ),
@@ -637,6 +635,7 @@ def q208_topn_with_other(spark, sf_dir):
       FROM sse
     ) WHERE rk = 1
     """.format(
+        ts_day=sql_epoch_day("ts"),
         # SSEs of integer counts are k/m rationals (.5-tie class):
         # guarded floor grid, not round() (r10 q225 class)
         s2_rq=sql_roundq("s2"),
@@ -646,9 +645,7 @@ def q208_topn_with_other(spark, sf_dir):
 def q209_binary_segmentation(spark, sf_dir):
     ev = table(spark, sf_dir, "events").select("ts")
     daily = ev.groupBy(
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
-        .cast("long")
-        .alias("d")
+        epoch_day("ts").cast("long").alias("d")
     ).agg(F.count(F.lit(1)).alias("v"))
     wrun = W.orderBy("d").rowsBetween(W.unboundedPreceding, 0)
     wall = W.orderBy("d").rowsBetween(
@@ -832,8 +829,7 @@ def q212_survivorship(spark, sf_dir):
     oracle="""
     WITH daily AS (
       SELECT event_type,
-             date_diff('day', DATE '1970-01-01',
-                       CAST(date_trunc('day', ts) AS DATE)) AS d,
+             {ts_day} AS d,
              CAST(count(*) AS BIGINT) AS v
       FROM events GROUP BY 1, 2
     ),
@@ -849,6 +845,7 @@ def q212_survivorship(spark, sf_dir):
     FROM fc WHERE f IS NOT NULL
     GROUP BY event_type
     """.format(
+        ts_day=sql_epoch_day("ts"),
         # all three error means are rationals over integer counts
         # (.5-tie class): guarded floor grid (r10 q225 class)
         mae_rq=sql_roundq("CAST(SUM(abs(v - f)) AS DOUBLE) / count(*)"),
@@ -864,9 +861,7 @@ def q213_backtest_smape(spark, sf_dir):
     ev = table(spark, sf_dir, "events").select("event_type", "ts")
     daily = ev.groupBy(
         "event_type",
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
-        .cast("long")
-        .alias("d"),
+        epoch_day("ts").cast("long").alias("d"),
     ).agg(F.count(F.lit(1)).alias("v"))
     w = W.partitionBy("event_type").orderBy("d")
     fc = daily.withColumn("f", F.lag("v", 7).over(w)).where(
@@ -1300,18 +1295,13 @@ def q222_poisson_bootstrap(spark, sf_dir):
       -- toward zero, so pre-1970 days (negative) land one week late
       -- vs Spark's floor (ancient_ts axis)
       SELECT user_id,
-             min(CAST(floor(date_diff('day', DATE '1970-01-01',
-                            CAST(date_trunc('day', ts) AS DATE)) / 7.0)
-                      AS BIGINT))
-               AS cohort_wk
+             min(CAST(floor({ts_day} / 7.0) AS BIGINT)) AS cohort_wk
       FROM events GROUP BY user_id
     ),
     rev AS (
       SELECT e.user_id,
-             CAST(floor(date_diff('day', DATE '1970-01-01',
-                        CAST(date_trunc('day', e.ts) AS DATE)) / 7.0)
-                  AS BIGINT)
-               - f.cohort_wk AS offset_wk,
+             CAST(floor({e_ts_day} / 7.0) AS BIGINT) - f.cohort_wk
+               AS offset_wk,
              f.cohort_wk,
              CAST({cents_rq} AS BIGINT) AS cents
       FROM events e JOIN firsts f ON e.user_id = f.user_id
@@ -1328,6 +1318,8 @@ def q222_poisson_bootstrap(spark, sf_dir):
              AS BIGINT) AS cum_revenue_cents
     FROM cell
     """.format(
+        ts_day=sql_epoch_day("ts"),
+        e_ts_day=sql_epoch_day("e.ts"),
         # value*100 sits ON half-cent boundaries when value carries a
         # third decimal: guarded floor grid at scale 0 (r10 q225
         # class). sql_finite: a non-finite purchase amount is NULL
@@ -1340,9 +1332,7 @@ def q223_cohort_ltv(spark, sf_dir):
     ev = table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_type", "value"
     )
-    wk = F.floor(
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01")) / 7
-    ).cast("long")
+    wk = F.floor(epoch_day("ts") / 7).cast("long")
     firsts = ev.groupBy("user_id").agg(F.min(wk).alias("cohort_wk"))
     rev = (
         ev.where(F.col("event_type") == "purchase")
@@ -1480,8 +1470,7 @@ def q224_negative_sampling(spark, sf_dir):
     "q225_seasonal_decompose",
     oracle="""
     WITH daily AS (
-      SELECT date_diff('day', DATE '1970-01-01',
-                       CAST(date_trunc('day', ts) AS DATE)) AS d,
+      SELECT {ts_day} AS d,
              CAST(count(*) AS BIGINT) AS v
       FROM events GROUP BY 1
     ),
@@ -1508,6 +1497,7 @@ def q224_negative_sampling(spark, sf_dir):
            {residual_rq} AS residual
     FROM det JOIN seas s ON det.dow = s.dow
     """.format(
+        ts_day=sql_epoch_day("ts"),
         dt=sql_dec("v - CAST(s7 AS DOUBLE) / 7"),
         sum_dt=sql_double("SUM(dt)"),
         trend_rq=sql_roundq("det.trend"),
@@ -1518,9 +1508,7 @@ def q224_negative_sampling(spark, sf_dir):
 def q225_seasonal_decompose(spark, sf_dir):
     ev = table(spark, sf_dir, "events").select("ts")
     daily = ev.groupBy(
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
-        .cast("long")
-        .alias("d")
+        epoch_day("ts").cast("long").alias("d")
     ).agg(F.count(F.lit(1)).alias("v"))
     w = W.orderBy("d").rowsBetween(-3, 3)
     tr = daily.select(
@@ -1673,8 +1661,7 @@ def q226_burst_detection(spark, sf_dir):
     "q227_mann_kendall",
     oracle="""
     WITH daily AS (
-      SELECT date_diff('day', DATE '1970-01-01',
-                       CAST(date_trunc('day', ts) AS DATE)) AS d,
+      SELECT {ts_day} AS d,
              CAST(count(*) AS BIGINT) AS v
       FROM events GROUP BY 1
     ),
@@ -1699,6 +1686,7 @@ def q226_burst_detection(spark, sf_dir):
                 ELSE 'no_trend' END AS direction
     FROM s, nn, ties
     """.format(
+        ts_day=sql_epoch_day("ts"),
         # var_s = integer/18 rational (.5-tie class): guarded floor
         # grid; z's denominator is sqrt-derived — tie-free (r10 q225)
         var_rq=sql_roundq(
@@ -1720,9 +1708,7 @@ def q226_burst_detection(spark, sf_dir):
 def q227_mann_kendall(spark, sf_dir):
     ev = table(spark, sf_dir, "events").select("ts")
     daily = ev.groupBy(
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
-        .cast("long")
-        .alias("d")
+        epoch_day("ts").cast("long").alias("d")
     ).agg(F.count(F.lit(1)).alias("v"))
     a = daily.alias("a")
     b = daily.alias("b")
@@ -1785,8 +1771,7 @@ def q227_mann_kendall(spark, sf_dir):
     "q228_runs_test",
     oracle="""
     WITH daily AS (
-      SELECT date_diff('day', DATE '1970-01-01',
-                       CAST(date_trunc('day', ts) AS DATE)) AS d,
+      SELECT {ts_day} AS d,
              CAST(count(*) AS BIGINT) AS v
       FROM events GROUP BY 1
     ),
@@ -1813,6 +1798,7 @@ def q227_mann_kendall(spark, sf_dir):
            {z_rz} AS z
     FROM agg
     """.format(
+        ts_day=sql_epoch_day("ts"),
         # expected_r = 2ab/(a+b)+1 rational (.5-tie class): guarded
         # floor grid; z is sqrt-denominated — tie-free (r10 q225)
         er_rq=sql_roundq("2.0 * n1 * n2 / (n1 + n2) + 1"),
@@ -1826,9 +1812,7 @@ def q227_mann_kendall(spark, sf_dir):
 def q228_runs_test(spark, sf_dir):
     ev = table(spark, sf_dir, "events").select("ts")
     daily = ev.groupBy(
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
-        .cast("long")
-        .alias("d")
+        epoch_day("ts").cast("long").alias("d")
     ).agg(F.count(F.lit(1)).alias("v"))
     med = daily.agg(F.expr("percentile(v, 0.5)").alias("m"))
     signs = (

@@ -26,12 +26,18 @@ the catalog:
   * Timestamps in outputs become epoch-millis bigints
     (Spark unix_millis == DuckDB epoch_ms; both instant-based).
   * Every computed column is aliased identically on both sides.
+
+It also owns two derivations many queries share, each a Column form
+and a DuckDB twin: the hash-split bucket (split_bucket) and the epoch
+day (epoch_day).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from airquality_data_pipeline_spark.functions.strings import md5_int, md5_int_sql
 
 
 _INF = float("inf")
@@ -277,3 +283,31 @@ def ts_ms(col: Column | str, alias: str) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.unix_millis(c.cast("timestamp")).alias(alias)
+
+
+def split_bucket(col: str) -> Column:
+    """The hash-split bucket of key `col` in [0, 100): the first 8 md5
+    hex digits of its string form, mod 100. Train/val/test splits
+    threshold it, so every split of one key agrees across queries.
+
+    SQL twin: sql_split_bucket()."""
+    return md5_int(F.col(col).cast("string"), 1, 8) % 100
+
+
+def sql_split_bucket(expr: str) -> str:
+    """DuckDB twin of split_bucket()."""
+    return f"{md5_int_sql(f'CAST({expr} AS VARCHAR)', 1, 8)} % 100"
+
+
+def epoch_day(col: Column | str) -> Column:
+    """Days from 1970-01-01 to the calendar date of a timestamp or
+    date, negative before 1970 on both engines; weekly forms divide it
+    by 7.
+
+    SQL twin: sql_epoch_day()."""
+    return F.datediff(F.to_date(col), F.lit("1970-01-01"))
+
+
+def sql_epoch_day(expr: str) -> str:
+    """DuckDB twin of epoch_day()."""
+    return f"date_diff('day', DATE '1970-01-01', CAST({expr} AS DATE))"

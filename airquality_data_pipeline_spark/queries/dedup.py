@@ -32,10 +32,19 @@ from airquality_data_pipeline_spark.operators.dedup import (
     word_shingles,
     word_shingles_sql,
 )
-from airquality_data_pipeline_spark.operators.graph import connected_components
+from airquality_data_pipeline_spark.operators.graph import (
+    connected_components,
+    connected_components_star,
+)
+from airquality_data_pipeline_spark.operators.text import (
+    quality_features,
+    quality_features_sql,
+)
 from airquality_data_pipeline_spark.queries.common import (
     roundq,
+    split_bucket,
     sql_roundq,
+    sql_split_bucket,
 )
 from airquality_data_pipeline_spark.queries.registry import register
 
@@ -199,7 +208,23 @@ def q67_signature_clusters(spark, sf_dir):
 # the closure). Iterative min-label propagation on the Spark side; the
 # oracle computes the same closure with a recursive CTE.
 # --------------------------------------------------------------------------
-_EDGES_CTE = f"""
+def _neardup_components(docs, components):
+    """(doc_id, component): the closure of q41's MinHash candidate
+    edges (>= 6 of 16 signature values agree) over every document of
+    docs(doc_id, text); `components` is the connected-components
+    operator that computes it. SQL twin: _NEARDUP_COMPONENTS_SQL."""
+    sh = word_shingles(docs, text_col="text", id_col="doc_id", n=3)
+    sigs = minhash_signatures(sh, num_hashes=_NUM_HASHES)
+    edges = minhash_candidate_pairs(sigs, num_hashes=_NUM_HASHES, min_matches=6)
+    nodes = docs.select(F.col("doc_id").alias("id"))
+    return components(nodes, edges).select(
+        F.col("id").alias("doc_id"), "component"
+    )
+
+
+# the CTEs through comp(doc_id, component), after WITH RECURSIVE
+_NEARDUP_COMPONENTS_SQL = f"""
+    {word_shingles_sql("documents", 3, ())},
     {MINHASH_SIGNATURES_SQL},
     cand AS (
       SELECT a.id AS id_a, b.id AS id_b
@@ -209,32 +234,25 @@ _EDGES_CTE = f"""
     sym AS (
       SELECT id_a AS src, id_b AS dst FROM cand
       UNION SELECT id_b, id_a FROM cand
-    )
-"""
+    ),
+    reach(a, b) AS (
+      SELECT doc_id, doc_id FROM documents
+      UNION
+      SELECT r.a, s.dst FROM reach r JOIN sym s ON r.b = s.src
+    ),
+    comp AS (SELECT a AS doc_id, min(b) AS component FROM reach GROUP BY a)"""
 
 
 @register(
     "q71_neardup_components",
     oracle=f"""
-    WITH RECURSIVE {word_shingles_sql("documents", 3, ())},
-    {_EDGES_CTE},
-    reach(a, b) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT r.a, s.dst FROM reach r JOIN sym s ON r.b = s.src
-    )
-    SELECT a AS doc_id, min(b) AS component FROM reach GROUP BY a
+    WITH RECURSIVE {_NEARDUP_COMPONENTS_SQL}
+    SELECT doc_id, component FROM comp
     """,
 )
 def q71_neardup_components(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
-    sh = word_shingles(docs, text_col="text", id_col="doc_id", n=3)
-    sigs = minhash_signatures(sh, num_hashes=_NUM_HASHES)
-    edges = minhash_candidate_pairs(sigs, num_hashes=_NUM_HASHES, min_matches=6)
-    comps = connected_components(
-        docs.select(F.col("doc_id")), edges, id_col="doc_id"
-    )
-    return comps.select(F.col("id").alias("doc_id"), "component")
+    return _neardup_components(docs, connected_components)
 
 
 # --------------------------------------------------------------------------
@@ -376,29 +394,13 @@ def q63_ml_minhash_lsh(spark, sf_dir):
 # argmax via max(struct(quality, -id)): one extra broadcast-sized join
 # against the quality features, same single groupBy as q67.
 # --------------------------------------------------------------------------
-_QUALITY_SQL = f"""
-    q AS (
-      SELECT doc_id,
-             least(CAST(len({tokens_sql("text")}) AS DOUBLE) / 50.0, 1.0) * 0.4
-             + least((CAST(len(regexp_extract_all(lower(text), '\\b(the|and|of|to|a|in|is|it|that|for)\\b')) AS DOUBLE)
-                      / CAST(greatest(len({tokens_sql("text")}), 1) AS DOUBLE)) * 5.0, 1.0) * 0.3
-             + (1.0 - least((CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE)
-                             / CAST(greatest(length(text), 1) AS DOUBLE)) * 10.0, 1.0)) * 0.2
-             + (1.0 - least((CAST(len(regexp_extract_all(text, '[0-9]')) AS DOUBLE)
-                             / CAST(greatest(length(text), 1) AS DOUBLE)) * 10.0, 1.0)) * 0.1
-               AS quality
-      FROM documents
-    )
-"""
-
-
 @register(
     "q96_canonical_docs",
     oracle=f"""
     WITH {word_shingles_sql("documents", 3, ())},
     {MINHASH_SIGNATURES_SQL},
     {MINHASH_SIG_SQL},
-    {_QUALITY_SQL}
+    {quality_features_sql("documents", ())}
     SELECT (max(struct_pack(qq := quality, nid := -id))).nid * -1 AS canonical_id,
            count(*) AS n_docs,
            {sql_roundq("(max(struct_pack(qq := quality, nid := -id))).qq")}
@@ -408,8 +410,6 @@ _QUALITY_SQL = f"""
     """,
 )
 def q96_canonical_docs(spark, sf_dir):
-    from airquality_data_pipeline_spark.operators.text import quality_features
-
     docs = table(spark, sf_dir, "documents")
     sh = word_shingles(docs, text_col="text", id_col="doc_id", n=3)
     sigs = minhash_signatures(sh, num_hashes=_NUM_HASHES)
@@ -650,15 +650,8 @@ def q117_simhash_neardup(spark, sf_dir):
 @register(
     "q120_dedup_pipeline",
     oracle=f"""
-    WITH RECURSIVE {word_shingles_sql("documents", 3, ())},
-    {_EDGES_CTE},
-    reach(a, b) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT r.a, s.dst FROM reach r JOIN sym s ON r.b = s.src
-    ),
-    comp AS (SELECT a AS doc_id, min(b) AS component FROM reach GROUP BY a),
-    {_QUALITY_SQL},
+    WITH RECURSIVE {_NEARDUP_COMPONENTS_SQL},
+    {quality_features_sql("documents", ())},
     agg AS (
       SELECT component,
              count(*) AS n_docs,
@@ -673,15 +666,8 @@ def q117_simhash_neardup(spark, sf_dir):
     """,
 )
 def q120_dedup_pipeline(spark, sf_dir):
-    from airquality_data_pipeline_spark.operators.text import quality_features
-
     docs = table(spark, sf_dir, "documents")
-    sh = word_shingles(docs, text_col="text", id_col="doc_id", n=3)
-    sigs = minhash_signatures(sh, num_hashes=_NUM_HASHES)
-    edges = minhash_candidate_pairs(sigs, num_hashes=_NUM_HASHES, min_matches=6)
-    comps = connected_components(
-        docs.select(F.col("doc_id")), edges, id_col="doc_id"
-    ).select(F.col("id").alias("doc_id"), "component")
+    comps = _neardup_components(docs, connected_components)
     quality = quality_features(docs, text_col="text", id_col="doc_id").select(
         "doc_id", "quality"
     )
@@ -724,37 +710,22 @@ def q120_dedup_pipeline(spark, sf_dir):
 @register(
     "q124_leakage_free_split",
     oracle=f"""
-    WITH RECURSIVE {word_shingles_sql("documents", 3, ())},
-    {_EDGES_CTE},
-    reach(a, b) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT r.a, s.dst FROM reach r JOIN sym s ON r.b = s.src
-    ),
-    comp AS (SELECT a AS doc_id, min(b) AS component FROM reach GROUP BY a)
-    SELECT doc_id, component,
-           {md5_int_sql("CAST(component AS VARCHAR)", 1, 8)} % 100
-             AS bucket,
-           CASE WHEN {md5_int_sql("CAST(component AS VARCHAR)", 1, 8)} % 100 < 90 THEN 'train'
-                WHEN {md5_int_sql("CAST(component AS VARCHAR)", 1, 8)} % 100 < 95 THEN 'val'
+    WITH RECURSIVE {_NEARDUP_COMPONENTS_SQL}
+    SELECT doc_id, component, bucket,
+           CASE WHEN bucket < 90 THEN 'train'
+                WHEN bucket < 95 THEN 'val'
                 ELSE 'test'
            END AS split
-    FROM comp
+    FROM (
+      SELECT doc_id, component, {sql_split_bucket("component")} AS bucket
+      FROM comp
+    )
     """,
 )
 def q124_leakage_free_split(spark, sf_dir):
-    from airquality_data_pipeline_spark.operators.graph import (
-        connected_components_star,
-    )
-
     docs = table(spark, sf_dir, "documents")
-    sh = word_shingles(docs, text_col="text", id_col="doc_id", n=3)
-    sigs = minhash_signatures(sh, num_hashes=_NUM_HASHES)
-    edges = minhash_candidate_pairs(sigs, num_hashes=_NUM_HASHES, min_matches=6)
-    comps = connected_components_star(
-        docs.select(F.col("doc_id")), edges, id_col="doc_id"
-    ).select(F.col("id").alias("doc_id"), "component")
-    bucket = md5_int(F.col("component").cast("string"), 1, 8) % 100
+    comps = _neardup_components(docs, connected_components_star)
+    bucket = split_bucket("component")
     return comps.select(
         "doc_id",
         "component",
@@ -777,10 +748,29 @@ def q124_leakage_free_split(spark, sf_dir):
 # Jaccard >= 0.5. Deterministic md5 hash family => both engines agree
 # on every candidate, so the metrics are exactly reproducible.
 # --------------------------------------------------------------------------
-@register(
-    "q229_dedup_pr_harness",
-    oracle=f"""
-    WITH corpus AS (
+def _planted_variants(docs):
+    """(corpus, planted): docs(doc_id, text) plus a near-dup variant of
+    every 9th doc of >= 20 words, with every 17th word dropped, under
+    id + 700000; and the planted (id_a, id_b) pairs. SQL twin:
+    _PLANTED_VARIANTS_SQL."""
+    words = F.split(F.trim(F.col("text")), r"\s+")
+    eligible = (F.col("doc_id") % 9 == 0) & (F.size(words) >= 20)
+    variant = docs.where(eligible).select(
+        (F.col("doc_id") + 700000).alias("doc_id"),
+        F.array_join(
+            F.filter(words, lambda w, i: (i + 1) % 17 != 0), " "
+        ).alias("text"),
+    )
+    planted = docs.where(eligible).select(
+        F.col("doc_id").alias("id_a"),
+        (F.col("doc_id") + 700000).alias("id_b"),
+    )
+    return docs.unionByName(variant), planted
+
+
+# the CTEs corpus(doc_id, text) and planted(id_a, id_b)
+_PLANTED_VARIANTS_SQL = """
+    corpus AS (
       SELECT doc_id, text FROM documents
       UNION ALL
       SELECT doc_id + 700000,
@@ -791,6 +781,18 @@ def q124_leakage_free_split(spark, sf_dir):
       WHERE doc_id % 9 = 0
         AND len(string_split_regex(trim(text), '\\s+')) >= 20
     ),
+    planted AS (
+      SELECT doc_id AS id_a, doc_id + 700000 AS id_b
+      FROM documents
+      WHERE doc_id % 9 = 0
+        AND len(string_split_regex(trim(text), '\\s+')) >= 20
+    )"""
+
+
+@register(
+    "q229_dedup_pr_harness",
+    oracle=f"""
+    WITH {_PLANTED_VARIANTS_SQL},
     {word_shingles_sql("corpus", 3, ())},
     {MINHASH_SIGNATURES_SQL},
     cand AS (
@@ -798,12 +800,6 @@ def q124_leakage_free_split(spark, sf_dir):
       FROM mh a JOIN mh b ON a.seed = b.seed AND a.mh = b.mh AND a.id < b.id
       GROUP BY a.id, b.id
       HAVING count(*) >= 6
-    ),
-    planted AS (
-      SELECT doc_id AS id_a, doc_id + 700000 AS id_b
-      FROM documents
-      WHERE doc_id % 9 = 0
-        AND len(string_split_regex(trim(text), '\\s+')) >= 20
     ),
     h15 AS (
       SELECT id, {md5_int_sql("shingle", 1, 15)} AS s15
@@ -842,24 +838,12 @@ def q124_leakage_free_split(spark, sf_dir):
 )
 def q229_dedup_pr_harness(spark, sf_dir):
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    words = F.split(F.trim(F.col("text")), r"\s+")
-    eligible = (F.col("doc_id") % 9 == 0) & (F.size(words) >= 20)
-    variant = docs.where(eligible).select(
-        (F.col("doc_id") + 700000).alias("doc_id"),
-        F.array_join(
-            F.filter(words, lambda w, i: (i + 1) % 17 != 0), " "
-        ).alias("text"),
-    )
-    corpus = docs.unionByName(variant)
+    corpus, planted = _planted_variants(docs)
     sh = word_shingles(corpus, text_col="text", id_col="doc_id", n=3)
     sigs = minhash_signatures(sh, num_hashes=_NUM_HASHES)
     cand = minhash_candidate_pairs(
         sigs, num_hashes=_NUM_HASHES, min_matches=6
     ).select("id_a", "id_b")
-    planted = docs.where(eligible).select(
-        F.col("doc_id").alias("id_a"),
-        (F.col("doc_id") + 700000).alias("id_b"),
-    )
     sz = shingle_set_sizes(corpus, text_col="text", id_col="doc_id", n=3)
     verified = (
         ngram_jaccard_pairs(sh, threshold=0.5, sizes=sz)
@@ -908,17 +892,7 @@ def q229_dedup_pr_harness(spark, sf_dir):
 @register(
     "q230_band_threshold_sweep",
     oracle=f"""
-    WITH corpus AS (
-      SELECT doc_id, text FROM documents
-      UNION ALL
-      SELECT doc_id + 700000,
-             array_to_string(list_filter(
-               string_split_regex(trim(text), '\\s+'),
-               (w, i) -> i % 17 <> 0), ' ')
-      FROM documents
-      WHERE doc_id % 9 = 0
-        AND len(string_split_regex(trim(text), '\\s+')) >= 20
-    ),
+    WITH {_PLANTED_VARIANTS_SQL},
     {word_shingles_sql("corpus", 3, ())},
     {MINHASH_SIGNATURES_SQL},
     pairs AS (
@@ -927,12 +901,6 @@ def q229_dedup_pr_harness(spark, sf_dir):
       FROM mh a JOIN mh b ON a.seed = b.seed AND a.mh = b.mh AND a.id < b.id
       GROUP BY a.id, b.id
       HAVING count(*) >= 4
-    ),
-    planted AS (
-      SELECT doc_id AS id_a, doc_id + 700000 AS id_b
-      FROM documents
-      WHERE doc_id % 9 = 0
-        AND len(string_split_regex(trim(text), '\\s+')) >= 20
     ),
     h15 AS (
       SELECT id, {md5_int_sql("shingle", 1, 15)} AS s15
@@ -980,25 +948,13 @@ def q229_dedup_pr_harness(spark, sf_dir):
 )
 def q230_band_threshold_sweep(spark, sf_dir):
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    words = F.split(F.trim(F.col("text")), r"\s+")
-    eligible = (F.col("doc_id") % 9 == 0) & (F.size(words) >= 20)
-    variant = docs.where(eligible).select(
-        (F.col("doc_id") + 700000).alias("doc_id"),
-        F.array_join(
-            F.filter(words, lambda w, i: (i + 1) % 17 != 0), " "
-        ).alias("text"),
-    )
-    corpus = docs.unionByName(variant)
+    corpus, planted = _planted_variants(docs)
     sh = word_shingles(corpus, text_col="text", id_col="doc_id", n=3)
     sigs = minhash_signatures(sh, num_hashes=_NUM_HASHES)
     pairs = minhash_candidate_pairs(
         sigs, num_hashes=_NUM_HASHES, min_matches=4
     )
-    planted = docs.where(eligible).select(
-        F.col("doc_id").alias("id_a"),
-        (F.col("doc_id") + 700000).alias("id_b"),
-        F.lit(1).alias("is_planted"),
-    )
+    planted = planted.withColumn("is_planted", F.lit(1))
     sz = shingle_set_sizes(corpus, text_col="text", id_col="doc_id", n=3)
     true_pairs = (
         ngram_jaccard_pairs(sh, threshold=0.5, sizes=sz)

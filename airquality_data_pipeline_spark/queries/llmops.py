@@ -21,7 +21,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from airquality_data_pipeline_spark.functions.strings import (
-    md5_int,
     md5_int_sql,
     md5_unit,
     tokens,
@@ -47,17 +46,13 @@ from airquality_data_pipeline_spark.operators.similarity import (
 from airquality_data_pipeline_spark.queries.common import (
     decq,
     roundq,
+    split_bucket,
     sql_decq,
     sql_double,
     sql_roundq,
+    sql_split_bucket,
 )
 from airquality_data_pipeline_spark.queries.registry import register
-
-# containment = k/min(sz) count rational (.5-tie class, e.g. odd/128):
-# guarded floor grid, not round() (r10 q225 class) — shared by
-# q129/q138's oracle SELECTs
-_CONTAINMENT_RQ = sql_roundq("n_inter / least(x.sz, y.sz)::DOUBLE")
-
 
 # --------------------------------------------------------------------------
 # q127: weighted sampling without replacement, k per stratum — the
@@ -122,14 +117,11 @@ def q127_weighted_sample(spark, sf_dir):
 # Nothing in the plan scales with corpus^2, and the model side of the
 # join is vocabulary-bounded.
 # --------------------------------------------------------------------------
-_BUCKET_SQL = f"{md5_int_sql('CAST(doc_id AS VARCHAR)', 1, 8)} % 100"
-
-
 @register(
     "q128_unigram_crossentropy",
     oracle=f"""
     WITH split AS (
-      SELECT doc_id, lower(trim(text)) AS text, {_BUCKET_SQL} AS bucket
+      SELECT doc_id, lower(trim(text)) AS text, {sql_split_bucket("doc_id")} AS bucket
       FROM documents
     ),
     train_toks AS (
@@ -158,7 +150,7 @@ _BUCKET_SQL = f"{md5_int_sql('CAST(doc_id AS VARCHAR)', 1, 8)} % 100"
 )
 def q128_unigram_crossentropy(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
-    bucket = md5_int(F.col("doc_id").cast("string"), 1, 8) % 100
+    bucket = split_bucket("doc_id")
     toks = docs.select(
         "doc_id",
         bucket.alias("bucket"),
@@ -203,35 +195,10 @@ def q128_unigram_crossentropy(spark, sf_dir):
 # exactly 1.0. Candidates come from the shingle equi-join (q42's
 # shape); no all-pairs stage.
 # --------------------------------------------------------------------------
-@register(
-    "q129_containment",
-    oracle=f"""
-    WITH corpus AS (
-      SELECT doc_id, text FROM documents
-      UNION ALL
-      SELECT doc_id + 300000, array_to_string(t[1:len(t) // 2], ' ')
-      FROM (SELECT doc_id, {tokens_sql("text")} AS t FROM documents)
-      WHERE doc_id % 10 = 7
-    ),
-    {word_shingles_sql("corpus", 3, ())},
-    sz AS (SELECT id, count(*) AS sz FROM sh GROUP BY id),
-    inter AS (
-      SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.id < b.id
-      GROUP BY a.id, b.id
-    )
-    SELECT id_a, id_b, n_inter,
-           {_CONTAINMENT_RQ} AS containment
-    FROM inter
-    JOIN sz x ON inter.id_a = x.id
-    JOIN sz y ON inter.id_b = y.id
-    WHERE n_inter / least(x.sz, y.sz)::DOUBLE >= 0.8
-    """,
-)
-def q129_containment(spark, sf_dir):
-    from airquality_data_pipeline_spark.operators.dedup import word_shingles
-
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+def _excerpt_corpus(docs):
+    """docs(doc_id, text) plus the half-length token-prefix excerpt of
+    every doc_id % 10 == 7 under id + 300000. SQL twin:
+    _EXCERPT_CORPUS_SQL."""
     toks = tokens("text")
     excerpts = (
         docs.where(F.col("doc_id") % 10 == 7)
@@ -242,8 +209,24 @@ def q129_containment(spark, sf_dir):
             ).alias("text"),
         )
     )
-    corpus = docs.unionByName(excerpts)
-    sh = word_shingles(corpus, text_col="text", id_col="doc_id", n=3)
+    return docs.unionByName(excerpts)
+
+
+# the CTE corpus(doc_id, text)
+_EXCERPT_CORPUS_SQL = f"""
+    corpus AS (
+      SELECT doc_id, text FROM documents
+      UNION ALL
+      SELECT doc_id + 300000, array_to_string(t[1:len(t) // 2], ' ')
+      FROM (SELECT doc_id, {tokens_sql("text")} AS t FROM documents)
+      WHERE doc_id % 10 = 7
+    )"""
+
+
+def _containment_pairs(sh):
+    """(id_a, id_b, n_inter, containment) over the shingle sets of
+    sh(id, shingle): the pairs whose containment |A∩B| / min(|A|,|B|)
+    is >= 0.8, from the shingle equi-join. SQL twin: _containment_sql."""
     sz = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     inter = (
         sh.alias("a")
@@ -257,11 +240,54 @@ def q129_containment(spark, sf_dir):
     )
     c = F.col("n_inter") / F.least("sz_a", "sz_b").cast("double")
     return (
-        inter.join(sz.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a")), "id_a")
-        .join(sz.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b")), "id_b")
+        inter.join(
+            sz.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a")),
+            "id_a",
+        )
+        .join(
+            sz.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b")),
+            "id_b",
+        )
         .where(c >= 0.8)
         .select("id_a", "id_b", "n_inter", roundq(c).alias("containment"))
     )
+
+
+def _containment_sql(src: str) -> str:
+    """The CTEs sz and inter over the relation src(id, shingle), then
+    the SELECT of _containment_pairs."""
+    # containment = k/min(sz) count rational (.5-tie class, e.g.
+    # odd/128): guarded floor grid, not round() (r10 q225 class)
+    return f"""
+    sz AS (SELECT id, count(*) AS sz FROM {src} GROUP BY id),
+    inter AS (
+      SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
+      FROM {src} a JOIN {src} b ON a.shingle = b.shingle AND a.id < b.id
+      GROUP BY a.id, b.id
+    )
+    SELECT id_a, id_b, n_inter,
+           {sql_roundq("n_inter / least(x.sz, y.sz)::DOUBLE")} AS containment
+    FROM inter
+    JOIN sz x ON inter.id_a = x.id
+    JOIN sz y ON inter.id_b = y.id
+    WHERE n_inter / least(x.sz, y.sz)::DOUBLE >= 0.8"""
+
+
+@register(
+    "q129_containment",
+    oracle=f"""
+    WITH {_EXCERPT_CORPUS_SQL},
+    {word_shingles_sql("corpus", 3, ())},
+    {_containment_sql("sh")}
+    """,
+)
+def q129_containment(spark, sf_dir):
+    from airquality_data_pipeline_spark.operators.dedup import word_shingles
+
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    corpus = _excerpt_corpus(docs)
+    sh = word_shingles(corpus, text_col="text", id_col="doc_id", n=3)
+    return _containment_pairs(sh)
 
 
 # --------------------------------------------------------------------------
@@ -436,7 +462,7 @@ def q131_cms_heavy_hitters(spark, sf_dir):
     oracle=f"""
     WITH corpus AS (
       SELECT doc_id, text,
-             CASE WHEN {md5_int_sql("CAST(doc_id AS VARCHAR)", 1, 8)} % 100 < 50
+             CASE WHEN {sql_split_bucket("doc_id")} < 50
                   THEN 'seen' ELSE 'incoming' END AS grp
       FROM documents
       UNION ALL
@@ -478,7 +504,7 @@ def q132_incremental_dedup(spark, sf_dir):
     # out so it runs at full parallelism (guide §2.5) — scale-guarded,
     # no-op at 100 TB
     docs = fan_out(docs)
-    bucket = md5_int(F.col("doc_id").cast("string"), 1, 8) % 100
+    bucket = split_bucket("doc_id")
     base = docs.select(
         "doc_id",
         "text",
@@ -710,7 +736,7 @@ _LAMBDA = 0.7
     oracle=f"""
     WITH split AS (
       SELECT doc_id, {tokens_sql("text")} AS t,
-             {_BUCKET_SQL} AS bucket
+             {sql_split_bucket("doc_id")} AS bucket
       FROM documents
     ),
     train_uni AS (
@@ -746,7 +772,7 @@ _LAMBDA = 0.7
 )
 def q136_bigram_crossentropy(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
-    bucket = md5_int(F.col("doc_id").cast("string"), 1, 8) % 100
+    bucket = split_bucket("doc_id")
     toks = tokens("text")
     base = docs.select("doc_id", bucket.alias("bucket"), toks.alias("t"))
     uni_toks = base.where(F.col("bucket") < 80).select(
@@ -816,8 +842,8 @@ def q136_bigram_crossentropy(spark, sf_dir):
     oracle=f"""
     WITH labeled AS (
       SELECT doc_id, text,
-             CASE WHEN {_BUCKET_SQL} < 80 THEN 'train'
-                  WHEN {_BUCKET_SQL} < 90 THEN 'val'
+             CASE WHEN {sql_split_bucket("doc_id")} < 80 THEN 'train'
+                  WHEN {sql_split_bucket("doc_id")} < 90 THEN 'val'
                   ELSE 'test' END AS split
       FROM documents
       UNION ALL
@@ -844,7 +870,7 @@ def q136_bigram_crossentropy(spark, sf_dir):
 )
 def q137_split_ngram_leakage(spark, sf_dir):
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    bucket = md5_int(F.col("doc_id").cast("string"), 1, 8) % 100
+    bucket = split_bucket("doc_id")
     base = docs.select(
         "doc_id",
         "text",
@@ -926,48 +952,21 @@ def q137_split_ngram_leakage(spark, sf_dir):
 @register(
     "q138_containment_capped",
     oracle=f"""
-    WITH corpus AS (
-      SELECT doc_id, text FROM documents
-      UNION ALL
-      SELECT doc_id + 300000, array_to_string(t[1:len(t) // 2], ' ')
-      FROM (SELECT doc_id, {tokens_sql("text")} AS t FROM documents)
-      WHERE doc_id % 10 = 7
-    ),
+    WITH {_EXCERPT_CORPUS_SQL},
     {word_shingles_sql("corpus", 3, ())},
     df AS (SELECT shingle, count(*) AS df FROM sh GROUP BY shingle),
     capped AS (
       SELECT sh.id, sh.shingle FROM sh
       JOIN df ON sh.shingle = df.shingle WHERE df.df <= 64
     ),
-    sz AS (SELECT id, count(*) AS sz FROM capped GROUP BY id),
-    inter AS (
-      SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
-      FROM capped a JOIN capped b ON a.shingle = b.shingle AND a.id < b.id
-      GROUP BY a.id, b.id
-    )
-    SELECT id_a, id_b, n_inter,
-           {_CONTAINMENT_RQ} AS containment
-    FROM inter
-    JOIN sz x ON inter.id_a = x.id
-    JOIN sz y ON inter.id_b = y.id
-    WHERE n_inter / least(x.sz, y.sz)::DOUBLE >= 0.8
+    {_containment_sql("capped")}
     """,
 )
 def q138_containment_capped(spark, sf_dir):
     from airquality_data_pipeline_spark.operators.dedup import word_shingles
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = tokens("text")
-    excerpts = (
-        docs.where(F.col("doc_id") % 10 == 7)
-        .select(
-            (F.col("doc_id") + 300000).alias("doc_id"),
-            F.array_join(
-                F.slice(toks, F.lit(1), (F.size(toks) / 2).cast("int")), " "
-            ).alias("text"),
-        )
-    )
-    corpus = docs.unionByName(excerpts)
+    corpus = _excerpt_corpus(docs)
     # sh0 feeds both the df computation and the cap filter; the capped
     # sh feeds sizes and BOTH sides of the intersection self-join —
     # materialize each once instead of re-evaluating the
@@ -982,27 +981,4 @@ def q138_containment_capped(spark, sf_dir):
         .select("id", "shingle")
         .localCheckpoint()
     )
-    sz = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    inter = (
-        sh.alias("a")
-        .join(
-            sh.alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    c = F.col("n_inter") / F.least("sz_a", "sz_b").cast("double")
-    return (
-        inter.join(
-            sz.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a")),
-            "id_a",
-        )
-        .join(
-            sz.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b")),
-            "id_b",
-        )
-        .where(c >= 0.8)
-        .select("id_a", "id_b", "n_inter", roundq(c).alias("containment"))
-    )
+    return _containment_pairs(sh)

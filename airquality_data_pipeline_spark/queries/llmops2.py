@@ -30,11 +30,13 @@ from airquality_data_pipeline_spark.io import table
 from airquality_data_pipeline_spark.operators.similarity import cosine_sql
 from airquality_data_pipeline_spark.queries.common import (
     dsum,
+    epoch_day,
     finite,
     roundq,
     sql_dec,
     sql_double,
     sql_dsum,
+    sql_epoch_day,
     sql_finite,
     sql_roundq,
 )
@@ -830,8 +832,7 @@ def q235_dp_noisy_counts(spark, sf_dir):
     oracle="""
     WITH classes AS (
       SELECT user_id // 10 AS user_bucket,
-             date_diff('day', DATE '1970-01-01',
-                       CAST(date_trunc('day', ts) AS DATE)) AS day,
+             {ts_day} AS day,
              CAST(count(*) AS BIGINT) AS class_size
       FROM events GROUP BY 1, 2
     )
@@ -844,6 +845,7 @@ def q235_dp_noisy_counts(spark, sf_dir):
            {risk_rq} AS risk_share
     FROM classes
     """.format(
+        ts_day=sql_epoch_day("ts"),
         # k/n count ratio (.5-tie class): guarded floor grid (r10 q225)
         risk_rq=sql_roundq(
             "CAST(SUM(CASE WHEN class_size < 5 THEN class_size"
@@ -855,7 +857,7 @@ def q236_k_anonymity(spark, sf_dir):
     ev = table(spark, sf_dir, "events").select("user_id", "ts")
     classes = ev.groupBy(
         F.expr("user_id div 10").alias("user_bucket"),
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01")).alias("day"),
+        epoch_day("ts").alias("day"),
     ).agg(F.count(F.lit(1)).alias("class_size"))
     below = F.when(F.col("class_size") < 5, F.col("class_size")).otherwise(
         0

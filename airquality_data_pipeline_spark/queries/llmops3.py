@@ -32,18 +32,17 @@ from airquality_data_pipeline_spark.operators import fan_out
 from airquality_data_pipeline_spark.queries.common import (
     dsum,
     roundq,
+    split_bucket,
     sql_dec,
     sql_double,
     sql_dsum,
     sql_roundq,
+    sql_split_bucket,
 )
 from airquality_data_pipeline_spark.queries.registry import register
 
 # Hashed feature bucket (token -> [0, 1024)): first 8 md5 hex digits.
 _TOK_BUCKET_SQL = f"{md5_int_sql('tok', 1, 8)} % 1024"
-_DOC_BUCKET_SQL = (
-    f"{md5_int_sql('CAST(doc_id AS VARCHAR)', 1, 8)} % 100"
-)
 
 
 def _tok_bucket() -> F.Column:
@@ -158,7 +157,7 @@ def q250_dsir_selection(spark, sf_dir):
     oracle=f"""
     WITH split AS (
       SELECT doc_id, lang, n_chars, lower(trim(text)) AS text,
-             {_DOC_BUCKET_SQL} AS bucket
+             {sql_split_bucket("doc_id")} AS bucket
       FROM documents
     ),
     train_toks AS (
@@ -199,7 +198,7 @@ def q250_dsir_selection(spark, sf_dir):
 )
 def q251_perplexity_terciles(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
-    bucket = md5_int(F.col("doc_id").cast("string"), 1, 8) % 100
+    bucket = split_bucket("doc_id")
     toks = docs.select(
         "doc_id",
         "lang",
@@ -330,43 +329,14 @@ def q252_bpe_pair_stats(spark, sf_dir):
 # emit NULL ndcg. The label table is 3 rows and broadcasts.
 # --------------------------------------------------------------------------
 def _ndcg_oracle() -> str:
-    from airquality_data_pipeline_spark.operators.text import bm25_expr
+    from airquality_data_pipeline_spark.operators.text import bm25_scores_sql
     from airquality_data_pipeline_spark.queries.text import _BM25_VALUES
 
     return f"""
-    WITH d AS (
-      SELECT doc_id,
-             CASE WHEN length(trim(text)) = 0 THEN 0
-                  ELSE len({tokens_sql("text")})
-             END AS dl,
-             lower(trim(text)) AS t
-      FROM documents
-    ),
-    toks AS (
-      SELECT doc_id, unnest(string_split_regex(t, '\\s+')) AS term
-      FROM d WHERE dl > 0
-    ),
-    tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
-           GROUP BY doc_id, term),
-    dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-    stats AS (
-      SELECT count(*) AS n, CAST(SUM(dl) AS DOUBLE) / count(*) AS avgdl
-      FROM d
-    ),
-    q(query_id, term) AS (VALUES {_BM25_VALUES}),
+    WITH q(query_id, term) AS (VALUES {_BM25_VALUES}),
+    {bm25_scores_sql("documents")},
     qsrc(query_id, rel_source) AS
       (VALUES (1, 'src1'), (2, 'src2'), (3, 'src3')),
-    scored AS (
-      SELECT q.query_id, tf.doc_id,
-             {sql_dsum(bm25_expr())}
-               AS score
-      FROM tf
-      JOIN q ON tf.term = q.term
-      JOIN dfreq ON tf.term = dfreq.term
-      JOIN d ON tf.doc_id = d.doc_id
-      CROSS JOIN stats
-      GROUP BY q.query_id, tf.doc_id
-    ),
     top10 AS (
       SELECT query_id, doc_id, rank FROM (
         SELECT *, ROW_NUMBER() OVER (
@@ -479,43 +449,19 @@ def q254_ndcg_at_10(spark, sf_dir):
 # aggregate; the fusion join is bounded at 2 x k rows per query.
 # --------------------------------------------------------------------------
 def _rrf_oracle() -> str:
-    from airquality_data_pipeline_spark.operators.text import bm25_expr
+    from airquality_data_pipeline_spark.operators.text import bm25_scores_sql
     from airquality_data_pipeline_spark.queries.text import _BM25_VALUES
 
     return f"""
-    WITH d AS (
-      SELECT doc_id,
-             CASE WHEN length(trim(text)) = 0 THEN 0
-                  ELSE len({tokens_sql("text")})
-             END AS dl,
-             lower(trim(text)) AS t
-      FROM documents
-    ),
-    toks AS (
-      SELECT doc_id, unnest(string_split_regex(t, '\\s+')) AS term
-      FROM d WHERE dl > 0
-    ),
-    tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
-           GROUP BY doc_id, term),
-    dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-    stats AS (
-      SELECT count(*) AS n, CAST(SUM(dl) AS DOUBLE) / count(*) AS avgdl
-      FROM d
-    ),
-    q(query_id, term) AS (VALUES {_BM25_VALUES}),
+    WITH q(query_id, term) AS (VALUES {_BM25_VALUES}),
+    {bm25_scores_sql("documents")},
     bm25 AS (
       SELECT query_id, doc_id, rank FROM (
-        SELECT q.query_id, tf.doc_id,
+        SELECT query_id, doc_id,
                ROW_NUMBER() OVER (
-                 PARTITION BY q.query_id
-                 ORDER BY {sql_dsum(bm25_expr())} DESC, tf.doc_id
+                 PARTITION BY query_id ORDER BY score DESC, doc_id
                ) AS rank
-        FROM tf
-        JOIN q ON tf.term = q.term
-        JOIN dfreq ON tf.term = dfreq.term
-        JOIN d ON tf.doc_id = d.doc_id
-        CROSS JOIN stats
-        GROUP BY q.query_id, tf.doc_id
+        FROM scored
       ) WHERE rank <= 20
     ),
     tfidf AS (

@@ -8,7 +8,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from airquality_data_pipeline_spark.functions.strings import (
-    md5_int,
     md5_int_sql,
     tokens,
     tokens_sql,
@@ -17,11 +16,14 @@ from airquality_data_pipeline_spark.io import local_frame, table
 from airquality_data_pipeline_spark.operators.dedup import word_shingles_sql
 from airquality_data_pipeline_spark.operators.text import (
     LANG_MARKERS,
+    bm25_scores_sql,
     boilerplate_ngram_stats,
     fingerprint,
     language_id,
     ngram_contamination,
     quality_features,
+    quality_features_sql,
+    regexp_count_sql,
     repetition_features,
     term_stats,
     tfidf_vectors,
@@ -30,24 +32,21 @@ from airquality_data_pipeline_spark.operators.text import (
 from airquality_data_pipeline_spark.queries.common import (
     dsum,
     roundq,
+    split_bucket,
     sql_dec,
     sql_double,
     sql_dsum,
     sql_roundq,
+    sql_split_bucket,
 )
 from airquality_data_pipeline_spark.queries.registry import register
-
-# DuckDB regexp_count equivalent: len(regexp_extract_all(...))
-def _rc(expr: str, pattern: str) -> str:
-    return f"len(regexp_extract_all({expr}, '{pattern}'))"
-
 
 # --------------------------------------------------------------------------
 # q48: heuristic language ID — per-language stopword-marker counts,
 # argmax with fixed priority tiebreak ('und' when all zero).
 # --------------------------------------------------------------------------
 _LANG_SCORES_SQL = ",\n           ".join(
-    f"{_rc('lower(text)', LANG_MARKERS[lang])} AS score_{lang}"
+    f"{regexp_count_sql('lower(text)', LANG_MARKERS[lang])} AS score_{lang}"
     for lang in ("en", "es", "de", "fr")
 )
 
@@ -82,27 +81,8 @@ def q48_language_id(spark, sf_dir):
 @register(
     "q49_quality_score",
     oracle=f"""
-    WITH m AS (
-      SELECT doc_id,
-             length(text) AS n_chars_calc,
-             len({tokens_sql("text")}) AS n_tokens,
-             {_rc('text', '[.,;:!?]')} AS n_punct,
-             {_rc('text', '[0-9]')} AS n_digit,
-             {_rc('lower(text)', LANG_MARKERS['en'])} AS n_stop
-      FROM documents
-    )
-    SELECT doc_id, n_chars_calc, n_tokens,
-           CAST(n_chars_calc - (n_tokens - 1) AS DOUBLE)
-             / CAST(greatest(n_tokens, 1) AS DOUBLE) AS avg_tok_len,
-           CAST(n_punct AS DOUBLE) / CAST(greatest(n_chars_calc, 1) AS DOUBLE) AS punct_ratio,
-           CAST(n_digit AS DOUBLE) / CAST(greatest(n_chars_calc, 1) AS DOUBLE) AS digit_ratio,
-           CAST(n_stop AS DOUBLE) / CAST(greatest(n_tokens, 1) AS DOUBLE) AS stop_ratio,
-           least(CAST(n_tokens AS DOUBLE) / 50.0, 1.0) * 0.4
-             + least((CAST(n_stop AS DOUBLE) / CAST(greatest(n_tokens, 1) AS DOUBLE)) * 5.0, 1.0) * 0.3
-             + (1.0 - least((CAST(n_punct AS DOUBLE) / CAST(greatest(n_chars_calc, 1) AS DOUBLE)) * 10.0, 1.0)) * 0.2
-             + (1.0 - least((CAST(n_digit AS DOUBLE) / CAST(greatest(n_chars_calc, 1) AS DOUBLE)) * 10.0, 1.0)) * 0.1
-             AS quality
-    FROM m
+    WITH {quality_features_sql("documents", ())}
+    SELECT * FROM q
     """,
 )
 def q49_quality_score(spark, sf_dir):
@@ -114,7 +94,7 @@ def q49_quality_score(spark, sf_dir):
 # q50: token counting — whitespace tokens + BPE-ish subword proxy
 # (alpha runs / single digits / single punctuation).
 # --------------------------------------------------------------------------
-_BPE_COUNT = _rc("lower(text)", "[a-z]+|[0-9]|[^a-z0-9\\s]")
+_BPE_COUNT = regexp_count_sql("lower(text)", "[a-z]+|[0-9]|[^a-z0-9\\s]")
 
 @register(
     "q50_token_counts",
@@ -309,8 +289,7 @@ def q97_boilerplate_ngrams(spark, sf_dir):
     oracle=f"""
     WITH b AS (
       SELECT doc_id, text,
-             {md5_int_sql("CAST(doc_id AS VARCHAR)", 1, 8)} % 100
-               AS bucket
+             {sql_split_bucket("doc_id")} AS bucket
       FROM documents
     ),
     {word_shingles_sql("b", 8, ("bucket",))},
@@ -334,7 +313,7 @@ def q97_boilerplate_ngrams(spark, sf_dir):
 )
 def q99_decontamination(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
-    bucket = md5_int(F.col("doc_id").cast("string"), 1, 8) % 100
+    bucket = split_bucket("doc_id")
     tagged = docs.withColumn("_bucket", bucket)
     train = tagged.where(F.col("_bucket") < 80)
     bench = tagged.where(F.col("_bucket") >= 90)
@@ -567,29 +546,11 @@ def q102_chunk_fingerprints(spark, sf_dir):
     oracle=f"""
     WITH b AS (
       SELECT doc_id, text,
-             {md5_int_sql("CAST(doc_id AS VARCHAR)", 1, 8)} % 100
-               AS bucket
+             {sql_split_bucket("doc_id")} AS bucket
       FROM documents
     ),
     train AS (SELECT doc_id, text FROM b WHERE bucket < 95),
-    m AS (
-      SELECT doc_id,
-             length(text) AS nc,
-             len({tokens_sql("text")}) AS n_tokens,
-             len(regexp_extract_all(text, '[.,;:!?]')) AS np,
-             len(regexp_extract_all(text, '[0-9]')) AS ndg,
-             len(regexp_extract_all(lower(text), '{LANG_MARKERS["en"]}')) AS ns
-      FROM train
-    ),
-    qual AS (
-      SELECT doc_id, n_tokens,
-             least(CAST(n_tokens AS DOUBLE) / 50.0, 1.0) * 0.4
-               + least((CAST(ns AS DOUBLE) / CAST(greatest(n_tokens, 1) AS DOUBLE)) * 5.0, 1.0) * 0.3
-               + (1.0 - least((CAST(np AS DOUBLE) / CAST(greatest(nc, 1) AS DOUBLE)) * 10.0, 1.0)) * 0.2
-               + (1.0 - least((CAST(ndg AS DOUBLE) / CAST(greatest(nc, 1) AS DOUBLE)) * 10.0, 1.0)) * 0.1
-               AS quality
-      FROM m
-    ),
+    {quality_features_sql("train", ())},
     rep AS (
       SELECT doc_id,
              CASE WHEN len(sh) > 0
@@ -632,7 +593,7 @@ def q102_chunk_fingerprints(spark, sf_dir):
                   WHEN q.quality < 0.6 THEN 'low_quality'
                   WHEN coalesce(cont.contaminated, false) THEN 'contaminated'
                   ELSE 'kept' END AS verdict
-      FROM qual q
+      FROM q
       JOIN rep r USING (doc_id)
       JOIN rk USING (doc_id)
       LEFT JOIN cont USING (doc_id)
@@ -643,7 +604,7 @@ def q103_curation_pipeline(spark, sf_dir):
     from pyspark.sql import Window
 
     docs = table(spark, sf_dir, "documents")
-    bucket = md5_int(F.col("doc_id").cast("string"), 1, 8) % 100
+    bucket = split_bucket("doc_id")
     tagged = docs.withColumn("_bucket", bucket)
     train = tagged.where(F.col("_bucket") < 95)
     bench = tagged.where(F.col("_bucket") >= 95)
@@ -771,24 +732,7 @@ def q105_length_filter(spark, sf_dir):
 @register(
     "q106_source_mix",
     oracle=f"""
-    WITH m AS (
-      SELECT doc_id, source,
-             length(text) AS nc,
-             len({tokens_sql("text")}) AS n_tokens,
-             len(regexp_extract_all(text, '[.,;:!?]')) AS np,
-             len(regexp_extract_all(text, '[0-9]')) AS ndg,
-             len(regexp_extract_all(lower(text), '{LANG_MARKERS["en"]}')) AS ns
-      FROM documents
-    ),
-    q AS (
-      SELECT source, n_tokens,
-             least(CAST(n_tokens AS DOUBLE) / 50.0, 1.0) * 0.4
-               + least((CAST(ns AS DOUBLE) / CAST(greatest(n_tokens, 1) AS DOUBLE)) * 5.0, 1.0) * 0.3
-               + (1.0 - least((CAST(np AS DOUBLE) / CAST(greatest(nc, 1) AS DOUBLE)) * 10.0, 1.0)) * 0.2
-               + (1.0 - least((CAST(ndg AS DOUBLE) / CAST(greatest(nc, 1) AS DOUBLE)) * 10.0, 1.0)) * 0.1
-               AS quality
-      FROM m
-    ),
+    WITH {quality_features_sql("documents", ("source",))},
     agg AS (
       SELECT source,
              count(*) AS n_docs,
@@ -1072,8 +1016,7 @@ from airquality_data_pipeline_spark.operators.text import (  # noqa: E402
     oracle=f"""
     WITH b AS (
       SELECT doc_id, text,
-             {md5_int_sql("CAST(doc_id AS VARCHAR)", 1, 8)} % 100
-               AS bucket
+             {sql_split_bucket("doc_id")} AS bucket
       FROM documents
     ),
     {word_shingles_sql("b", 8, ("bucket",))},
@@ -1108,7 +1051,7 @@ from airquality_data_pipeline_spark.operators.text import (  # noqa: E402
 )
 def q113_bloom_decontamination(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
-    bucket = md5_int(F.col("doc_id").cast("string"), 1, 8) % 100
+    bucket = split_bucket("doc_id")
     tagged = docs.withColumn("_bucket", bucket)
     train = tagged.where(F.col("_bucket") < 95)
     bench = tagged.where(F.col("_bucket") >= 95)
@@ -1249,7 +1192,6 @@ BM25_QUERIES: list[tuple[int, str]] = [
     (2, "table"), (2, "scan"), (2, "fast"),
     (3, "vector"), (3, "batch"), (3, "merge"),
 ]
-from airquality_data_pipeline_spark.operators.text import bm25_expr  # noqa: E402
 
 _BM25_VALUES = ", ".join(f"({qid}, '{term}')" for qid, term in BM25_QUERIES)
 
@@ -1257,33 +1199,8 @@ _BM25_VALUES = ", ".join(f"({qid}, '{term}')" for qid, term in BM25_QUERIES)
 @register(
     "q119_bm25_topk",
     oracle=f"""
-    WITH d AS (
-      SELECT doc_id,
-             CASE WHEN length(trim(text)) = 0 THEN 0
-                  ELSE len({tokens_sql("text")}) END AS dl,
-             lower(trim(text)) AS t
-      FROM documents
-    ),
-    toks AS (
-      SELECT doc_id, unnest(string_split_regex(t, '\\s+')) AS term
-      FROM d WHERE dl > 0
-    ),
-    tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY doc_id, term),
-    dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-    stats AS (
-      SELECT count(*) AS n, CAST(SUM(dl) AS DOUBLE) / count(*) AS avgdl FROM d
-    ),
-    q(query_id, term) AS (VALUES {_BM25_VALUES}),
-    scored AS (
-      SELECT q.query_id, tf.doc_id,
-             {sql_dsum(bm25_expr())} AS score
-      FROM tf
-      JOIN q ON tf.term = q.term
-      JOIN dfreq ON tf.term = dfreq.term
-      JOIN d ON tf.doc_id = d.doc_id
-      CROSS JOIN stats
-      GROUP BY q.query_id, tf.doc_id
-    )
+    WITH q(query_id, term) AS (VALUES {_BM25_VALUES}),
+    {bm25_scores_sql("documents")}
     SELECT query_id, doc_id, score, rank FROM (
       SELECT *, ROW_NUMBER() OVER (
         PARTITION BY query_id ORDER BY score DESC, doc_id
@@ -1344,25 +1261,18 @@ def q122_vocab_coverage(spark, sf_dir):
 # (cume_dist, tie-inclusive on both engines over identical doubles),
 # keep = top 60% per source. One source-keyed window — scale-safe.
 # --------------------------------------------------------------------------
-from airquality_data_pipeline_spark.queries.dedup import (  # noqa: E402
-    _QUALITY_SQL,
-)
-
-
 @register(
     "q123_source_calibration",
     oracle=f"""
-    WITH {_QUALITY_SQL}
+    WITH {quality_features_sql("documents", ("source",))}
     SELECT doc_id, source,
            {sql_roundq("quality")} AS quality,
            {sql_roundq("q_pct")} AS q_pct,
            q_pct >= 0.4 AS keep
     FROM (
-      SELECT q.doc_id, d.source, q.quality,
-             cume_dist() OVER (
-               PARTITION BY d.source ORDER BY q.quality
-             ) AS q_pct
-      FROM q JOIN documents d ON q.doc_id = d.doc_id
+      SELECT doc_id, source, quality,
+             cume_dist() OVER (PARTITION BY source ORDER BY quality) AS q_pct
+      FROM q
     )
     """,
 )
@@ -1398,14 +1308,7 @@ def q123_source_calibration(spark, sf_dir):
 @register(
     "q125_token_budget_selection",
     oracle=f"""
-    WITH {_QUALITY_SQL},
-    m AS (
-      -- plain split length, matching quality_features' n_tokens
-      -- exactly (an empty doc counts 1 — the split yields [''])
-      SELECT q.doc_id, d.source, q.quality,
-             len({tokens_sql("d.text")}) AS n_tokens
-      FROM q JOIN documents d ON q.doc_id = d.doc_id
-    ),
+    WITH {quality_features_sql("documents", ("source",))},
     r AS (
       SELECT doc_id, source, n_tokens,
              ROW_NUMBER() OVER (
@@ -1415,7 +1318,7 @@ def q123_source_calibration(spark, sf_dir):
                PARTITION BY source ORDER BY quality DESC, doc_id
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
              ) AS BIGINT) AS cum_tokens
-      FROM m
+      FROM q
     )
     SELECT doc_id, source, CAST(n_tokens AS BIGINT) AS n_tokens,
            rank, cum_tokens, cum_tokens <= 2000 AS selected
@@ -1462,8 +1365,7 @@ def q125_token_budget_selection(spark, sf_dir):
     oracle="""
     WITH b AS (
       SELECT doc_id, text,
-             {h} % 100
-               AS bucket
+             {bucket} AS bucket
       FROM documents
     ),
     toks AS (
@@ -1494,7 +1396,7 @@ def q125_token_budget_selection(spark, sf_dir):
     SELECT term, cnt_train, cnt_held, rate_train, rate_held, rate_diff
     FROM scored ORDER BY rate_diff DESC, term LIMIT 20
     """.format(
-        h=md5_int_sql("CAST(doc_id AS VARCHAR)", 1, 8),
+        bucket=sql_split_bucket("doc_id"),
         toks=tokens_sql("text"),
         # k/n rates and their gaps are rationals (.5-tie class), and
         # rate_diff ORDERS the top-20: guarded floor grid (r10 q225)
@@ -1507,7 +1409,7 @@ def q125_token_budget_selection(spark, sf_dir):
 )
 def q126_token_drift(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
-    bucket = md5_int(F.col("doc_id").cast("string"), 1, 8) % 100
+    bucket = split_bucket("doc_id")
     toks = docs.select(
         bucket.alias("bucket"),
         F.explode(tokens("text")).alias("term"),

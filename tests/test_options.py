@@ -154,13 +154,13 @@ def test_keep_lists_only_unset_parameters():
 
 
 # (module under the package, top-level name) -> why it stays unreached
-ITEM_2 = "ROADMAP item 2 wires it into the producer cycle"
+ITEM_3 = "ROADMAP item 3 parses the national payload shapes in the producer cycle"
 KEEP_SYMBOLS = {
-    ("sources/parsers.py", "parse_de_measure_payload"): ITEM_2,
-    ("sources/parsers.py", "parse_de_station_rows"): ITEM_2,
-    ("sources/parsers.py", "parse_pl_station_rows"): ITEM_2,
-    ("sources/parsers.py", "parse_nl_station_details"): ITEM_2,
-    ("functions/strings.py", "is_automatic_station"): ITEM_2,
+    ("sources/parsers.py", "parse_de_measure_payload"): ITEM_3,
+    ("sources/parsers.py", "parse_de_station_rows"): ITEM_3,
+    ("sources/parsers.py", "parse_pl_station_rows"): ITEM_3,
+    ("sources/parsers.py", "parse_nl_station_details"): ITEM_3,
+    ("functions/strings.py", "is_automatic_station"): ITEM_3,
     ("sources/rest.py", "requests_transport_factory"): "deployment stand-in: live HTTP",
     ("streaming/jobs.py", "kafka_writer_config"): "deployment stand-in: Kafka sink options",
     ("sources/synthetic.py", "synthetic_measurements"):
@@ -256,7 +256,8 @@ def test_driver_rows_become_frames_only_through_local_frame():
 # form and a DuckDB `*_sql` twin side by side in the owning module, which
 # every operator and oracle imports. Whitespace is ignored in matching,
 # and so are the quotes between implicitly concatenated literals. A
-# spelling is a literal, or a compiled pattern over that flattened text
+# spelling is a literal, which occurs once in the package, in its
+# owner's definition; or a compiled pattern over that flattened text
 # where a literal cannot tell a copy from a look-alike.
 _NEST = r"[^()]*"  # text with balanced parentheses, nested up to 5 deep
 for _ in range(5):
@@ -330,6 +331,58 @@ CONVENTIONS = {
         "queries/common.py",
         (re.compile(r"\)\+(?:F\.lit\()?0\.0(?!\d)"),),
     ),
+    # the composite score, and LANG_MARKERS["en"] written out
+    "quality score": (
+        "operators/text.py",
+        (
+            "/ 50.0, 1.0) * 0.4",
+            "F.lit(50.0), F.lit(1.0)) * F.lit(0.4)",
+            "(the|and|of|to|a|in|is|it|that|for)",
+        ),
+    ),
+    "BM25 statistics": (
+        "operators/text.py",
+        (
+            "CAST(SUM(dl) AS DOUBLE) / count(*) AS avgdl",
+            "JOIN d ON tf.doc_id = d.doc_id",
+        ),
+    ),
+    # md5 of the key as a string, mod 100: a call plus the modulus,
+    # also through a `{h}` placeholder
+    "split bucket": (
+        "queries/common.py",
+        (
+            re.compile(r"md5_int\(F\.col\([\"']?\w+[\"']?\)\.cast\([\"']string[\"']\),1,8\)%100(?!\d)"),
+            re.compile(
+                r"(?:md5_int_sql\(f?[\"']CAST\([\w{}]+ASVARCHAR\)[\"'],1,8\)\}?|\{h\})%100(?!\d)"
+            ),
+        ),
+    ),
+    "epoch day": (
+        "queries/common.py",
+        ("date_diff('day', DATE '1970-01-01'", ', F.lit("1970-01-01"))'),
+    ),
+    "near-dup closure": (
+        "queries/dedup.py",
+        (
+            "SELECT r.a, s.dst FROM reach r JOIN sym s ON r.b = s.src",
+            "components(nodes, edges)",
+        ),
+    ),
+    # the planted corpora, one entry per owning module
+    "planted near-dup variants": (
+        "queries/dedup.py",
+        ("(w, i) -> i % 17 <> 0", "lambda w, i: (i + 1) % 17 != 0"),
+    ),
+    "planted excerpts and their containment": (
+        "queries/llmops.py",
+        (
+            "array_to_string(t[1:len(t) // 2], ' ')",
+            'F.slice(toks, F.lit(1), (F.size(toks) / 2).cast("int"))',
+            "JOIN sz x ON inter.id_a = x.id",
+            'F.least("sz_a", "sz_b")',
+        ),
+    ),
 }
 
 
@@ -357,19 +410,18 @@ def test_each_cross_engine_convention_is_spelled_once():
         flat, lines = _flat(path.read_text())
         for name, (owner, spellings) in CONVENTIONS.items():
             for spelling in spellings:
-                needle = spelling
-                if isinstance(spelling, str):
-                    needle = re.compile(re.escape(_flat(spelling)[0]))
-                else:
-                    spelling = spelling.pattern
+                literal = isinstance(spelling, str)
+                needle = re.compile(re.escape(_flat(spelling)[0])) if literal else spelling
                 at = list(needle.finditer(flat))
-                if rel == owner and not at:
-                    missing.append(f"  {owner}: {spelling!r} ({name})")
-                if rel != owner:
-                    stray += [
-                        f"  {rel}:{lines[m.start()]}: {m[0][:60]!r} ({name}, owned by {owner})"
-                        for m in at
-                    ]
+                if rel == owner:
+                    if not at:
+                        missing.append(f"  {owner}: {needle.pattern!r} ({name})")
+                    # a literal's first occurrence in its owner is the definition
+                    at = at[1:] if literal else []
+                stray += [
+                    f"  {rel}:{lines[m.start()]}: {m[0][:60]!r} ({name}, owned by {owner})"
+                    for m in at
+                ]
     assert not stray, (
         f"{len(stray)} hand copies of a cross-engine convention; import the "
         "owning module's Column form or `*_sql` twin instead:\n" + "\n".join(stray)
